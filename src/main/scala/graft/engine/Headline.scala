@@ -174,10 +174,6 @@ object Headline {
   private def h3Parent4(h3: Column): Column =
     graft.sql.GraftFunctions.h3_parent_col(h3, 9, 4)
 
-  /** The timed job. Returns the zonal row count (forces evaluation). */
-  def job(s: SparkSession, trees: Map[(Int, Int), Cart.Tree]): Long =
-    plan(s, trees).count()
-
   /** Plan over input slice `slice` of `nSlices` (slice directories, so
     * the filter is pure partition pruning). slice 0 of 1 = the full
     * table; the executor-fleet scaling run gives each of the 4N-level
@@ -213,10 +209,8 @@ object Headline {
       .select(col("cell_id"), bandCol(0).as("loss"))
 
   /** The headline plan over a given tile table (parquet scan or a
-    * cached/cluster-local source). `covered = false` keeps the
-    * all-pixels ray-cast variant for A/B measurement. */
-  def planFrom(tiles: DataFrame, trees: Map[(Int, Int), Cart.Tree],
-      covered: Boolean = true): DataFrame = {
+    * cached/cluster-local source). */
+  def planFrom(tiles: DataFrame, trees: Map[(Int, Int), Cart.Tree]): DataFrame = {
     val cfg = Pipeline.Config()
     val forest = Cart.PackedForest(trees, spec.nRegions, Pipeline.NumDrivers)
     // ONE projection: the PIP runs exactly once per pixel, inside
@@ -229,14 +223,9 @@ object Headline {
     val classed = fusedCells(tiles)
       .select(col("cell_id"),
         grid_h3(col("cell_id"), spec.rows, spec.cols, H3Res).as("h3"),
-        (if (covered)
-          driver_classify_at_covered(col("bytes"), col("p"), pxCol, pyCol,
-            polys, forest, cover.const, cover.nbx, CoverB, spec.pixPerTile,
-            cfg.lossFloor, cfg.confidenceFloor)
-        else
-          driver_classify_at(col("bytes"), col("p"), pxCol, pyCol, polys,
-            forest, spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor))
-          .as("class"),
+        driver_classify_at_covered(col("bytes"), col("p"), pxCol, pyCol,
+          polys, forest, cover.const, cover.nbx, CoverB, spec.pixPerTile,
+          cfg.lossFloor, cfg.confidenceFloor).as("class"),
         bandCol(0).as("loss"))
     val inRegion = col("class") >= 0
     Salted.aggregate(classed,

@@ -563,6 +563,14 @@ object TextOps {
   // the replication factor of the banded frame is exactly B. --------------
   private val NdBands = 24
   private val NdPlanes = 2 // per band
+  // sig packs each band's NdPlanes-bit key into a 2-bit field of one
+  // long, and the first-band gate below reads those fields through
+  // ndEvenBits: a retune past either width would drop bands silently
+  require(NdPlanes <= 2 && 2 * NdBands <= 62,
+    s"q59 sig cannot pack $NdBands bands of $NdPlanes planes")
+  /** Bit 2b set for every band b: the even bit of each 2-bit sig field. */
+  private val ndEvenBits =
+    (0 until NdBands).map(b => 1L << (2 * b)).reduce(_ | _)
 
   /** Deterministic hyperplane (band b, plane j) from the Murmur3
     * 64-bit finalizer — NOT the linear Knuth formula the oracles mirror:
@@ -623,7 +631,7 @@ object TextOps {
     // the distinct() output) are IDENTICAL — skewJoin produces each
     // (l, r) pair exactly once per band, and the kept band always
     // exists. The q49 brute oracle pins this independently.
-    val evenBits = lit(0x555555555555L)
+    val evenBits = lit(ndEvenBits)
     val x = col("siga").bitwiseXOR(col("sigb"))
     val y = x.bitwiseOR(shiftright(x, 1)).bitwiseAND(evenBits)
     val coll = bitwise_not(y).bitwiseAND(evenBits)
@@ -776,8 +784,9 @@ object TextOps {
     * literal routes through DuckDB's DECIMAL, whose ->DOUBLE conversion
     * double-rounds (1-ulp drift); VARCHAR->DOUBLE is the correctly-
     * rounded parse that round-trips exactly (the q29 finding). */
-  /** Pre-fit placeholder, shared with tools.DumpSql so it can detect a
-    * fit-dependent oracle and run the query before dumping. */
+  /** Pre-fit placeholder, shared with tools.Probe so its `sql`
+    * subcommand can detect a fit-dependent oracle and run the query
+    * before printing. */
   private[graft] val PreFitSentinel =
     "SELECT 'q52 oracle needs the query to run first (IvfFit)' AS err"
 

@@ -148,7 +148,10 @@ case class FloatAt(left: Expression, right: Expression)
 /** The driver-class vote (per-pixel CART packed-forest walk + argmax +
   * confidence/loss floors, Cart.PackedForest.classify) fused with the
   * region lookup: children are (bytes, pixel, px, py); the expression
-  * ray-casts the point against the packed polygon set ONCE and either
+  * resolves the point's region ONCE — from the block cover
+  * (`blockConst`, Covering.Blocks.const, `nbx` blocks wide, `blockB`
+  * grid units per block) when its block is region-constant, else by an
+  * exact ray-cast against the packed polygon set — and either
   * classifies (0..nDrivers) or returns -1 for points outside every
   * polygon. The fused form exists because the natural
   * `withColumn("region_id", region_of(...)).filter(isNotNull)` shape
@@ -159,23 +162,16 @@ case class FloatAt(left: Expression, right: Expression)
 case class DriverClassifyAt(first: Expression, second: Expression,
     third: Expression, fourth: Expression, polys: Array[Polygon],
     forest: Cart.PackedForest, nPix: Int, lossFloor: Double,
-    confFloor: Double, blockConst: Array[Int] = null, nbx: Int = 0,
-    blockB: Int = 0)
+    confFloor: Double, blockConst: Array[Int], nbx: Int, blockB: Int)
   extends QuaternaryExpression {
 
   override def dataType: DataType = LongType
 
   override def nullSafeEval(bytes: Any, p: Any, px: Any, py: Any): Any =
-    if (blockConst == null)
-      Cart.PackedForest.classifyAt(forest, polys,
-        bytes.asInstanceOf[Array[Byte]], p.asInstanceOf[Int],
-        px.asInstanceOf[Double], py.asInstanceOf[Double], nPix, lossFloor,
-        confFloor)
-    else
-      Cart.PackedForest.classifyAtCovered(forest, polys, blockConst, nbx,
-        blockB, bytes.asInstanceOf[Array[Byte]], p.asInstanceOf[Int],
-        px.asInstanceOf[Double], py.asInstanceOf[Double], nPix, lossFloor,
-        confFloor)
+    Cart.PackedForest.classifyAtCovered(forest, polys, blockConst, nbx,
+      blockB, bytes.asInstanceOf[Array[Byte]], p.asInstanceOf[Int],
+      px.asInstanceOf[Double], py.asInstanceOf[Double], nPix, lossFloor,
+      confFloor)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val pfRef = ctx.addReferenceObj("forest", forest,
@@ -183,17 +179,11 @@ case class DriverClassifyAt(first: Expression, second: Expression,
     val polysRef = ctx.addReferenceObj("polys", polys,
       classOf[Polygon].getName + "[]")
     val cls = Cart.PackedForest.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    if (blockConst == null)
-      nullSafeCodeGen(ctx, ev, (bytes, p, px, py) =>
-        s"${ev.value} = $cls.classifyAt($pfRef, $polysRef, $bytes, $p, $px, " +
-          s"$py, $nPix, $lossFloor, $confFloor);")
-    else {
-      val bcRef = ctx.addReferenceObj("blockConst", blockConst, "int[]")
-      nullSafeCodeGen(ctx, ev, (bytes, p, px, py) =>
-        s"${ev.value} = $cls.classifyAtCovered($pfRef, $polysRef, $bcRef, " +
-          s"$nbx, $blockB, $bytes, $p, $px, $py, $nPix, $lossFloor, " +
-          s"$confFloor);")
-    }
+    val bcRef = ctx.addReferenceObj("blockConst", blockConst, "int[]")
+    nullSafeCodeGen(ctx, ev, (bytes, p, px, py) =>
+      s"${ev.value} = $cls.classifyAtCovered($pfRef, $polysRef, $bcRef, " +
+        s"$nbx, $blockB, $bytes, $p, $px, $py, $nPix, $lossFloor, " +
+        s"$confFloor);")
   }
 
   override protected def withNewChildrenInternal(newFirst: Expression,
@@ -3184,19 +3174,11 @@ object GraftFunctions {
   def audio_fingerprint(bytes: Column, winSize: Int, nWin: Int): Column =
     column(AudioFingerprint(expression(bytes), winSize, nWin))
 
-  /** Per-pixel driver-class vote with the region PIP folded in: one
-    * ray-cast per pixel, -1 for points outside every polygon. */
-  def driver_classify_at(bytes: Column, p: Column, px: Column, py: Column,
-      polys: Array[Polygon], forest: Cart.PackedForest, nPix: Int,
-      lossFloor: Double, confFloor: Double): Column =
-    column(DriverClassifyAt(expression(bytes), expression(p),
-      expression(px), expression(py), polys, forest, nPix, lossFloor,
-      confFloor))
-
-  /** driver_classify_at with the block-covering short circuit: points
-    * in region-constant blocks skip the ray-cast entirely (the q72
-    * scale path fused into the vote; bit-equal by Covering's parity
-    * argument). */
+  /** Per-pixel driver-class vote with the region PIP folded in, -1 for
+    * points outside every polygon. Points in region-constant blocks of
+    * the cover skip the ray-cast entirely (the q72 scale path fused
+    * into the vote; bit-equal to an exact PIP by Covering's parity
+    * argument); the rest pay one ray-cast. */
   def driver_classify_at_covered(bytes: Column, p: Column, px: Column,
       py: Column, polys: Array[Polygon], forest: Cart.PackedForest,
       blockConst: Array[Int], nbx: Int, blockB: Int, nPix: Int,

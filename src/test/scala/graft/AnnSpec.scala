@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 /** q89 IVF-PQ quality: the driver oracle proves the SDC/re-rank chain
   * is computed exactly as specified; this spec measures that the
@@ -15,16 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * it (the approximation can only lose candidates, never mis-rank the
   * survivors).
   */
-class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-ann-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AnnSpec extends SparkSpec {
 
   /** Deterministic clustered vectors: 8 hash-built anchors, each
     * vector = its anchor + a small hash perturbation — the shape real

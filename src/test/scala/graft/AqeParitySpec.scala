@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 /** AQE-on vs AQE-off result parity for the queries whose operator
   * internals round 6 touched (D8Pick, Components union-find seeding,
@@ -13,16 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * would ship green in one surface and wrong in the other. Rows are
   * compared as multisets at sf0.001.
   */
-class AqeParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-aqe-parity-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AqeParitySpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -32,7 +20,8 @@ class AqeParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     "q30_expand_fixpoint", "q115_pagerank")
 
   /** The 10 most shuffle-intensive UNTOUCHED queries by Exchange
-    * mentions in PLANS.md (q89 34, q121 34, q124 32, q52 22, q45 22,
+    * mentions in their round-6 formatted plans (`Probe plan <name>`
+    * prints one; q89 34, q121 34, q124 32, q52 22, q45 22,
     * q180 22, q125 22, q190 20, q103 20, q54 18), plus q59 whose
     * first-colliding-band gate this round added — VERDICT r05 next #4
     * asked for AQE parity over exactly this set. */

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Codec
 import graft.engine.Multimodal
 import graft.world.World
@@ -11,16 +8,7 @@ import graft.world.World
   * a direct recompute, resample round-trip byte layout, and the
   * codegen plan guards for q81/q82.
   */
-class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-audio-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AudioSpec extends SparkSpec {
 
   test("s16le codec round-trips including boundary values") {
     val samples = Array[Short](0, 1, -1, 255, -256, 32767, -32768, 1234,

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Bloom
 import graft.sql.{BloomMightContain, GraftFunctions}
 
@@ -15,16 +12,7 @@ import graft.sql.{BloomMightContain, GraftFunctions}
   * false negatives), the probe filter runs BELOW the fact side's
   * shuffle, and the false-positive rate matches the sizing math.
   */
-class BloomSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-bloom-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BloomSpec extends SparkSpec {
 
   test("sizeFor: power-of-two bit counts, sane k, 8 GiB guard") {
     val (w1, k1) = Bloom.sizeFor(1000, 0.01)

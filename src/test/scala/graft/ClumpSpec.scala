@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.world.World
 
@@ -17,16 +14,7 @@ import graft.world.World
   * and compared BIT-EXACTLY — the float-determinism contract the query
   * comment claims.
   */
-class ClumpSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-clump-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ClumpSpec extends SparkSpec {
 
   private val spec = World.tiny
   private val C = spec.cols

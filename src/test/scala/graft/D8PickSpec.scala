@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins sql/Exprs.D8Pick (the compact codegen D8 steepest-descent
   * expression) bit-for-bit against the ORIGINAL Column composition it
@@ -12,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * grid. The Column form is what the DuckDB oracles mirror, so green
   * here + green oracles means the swap cannot have changed q126/q127/
   * q128 results. */
-class D8PickSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-d8pick-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class D8PickSpec extends SparkSpec {
 
   test("D8Pick equals the original Column composition on every cell") {
     val spec = graft.world.World.tiny

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.world.World
 
 /** q93 focal halo exchange: brute-force parity on a PADDED non-dyadic
@@ -11,16 +8,7 @@ import graft.world.World
   * contract: exactly one data shuffle (the dest-tile aggregation) plus
   * the presentation sort — the stencil never becomes a per-pixel join.
   */
-class FocalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-focal-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class FocalSpec extends SparkSpec {
 
   /** 50x72 @ tile 16: right AND bottom partial edge tiles. */
   private val padded = graft.world.WorldSpec(rows = 50, cols = 72,

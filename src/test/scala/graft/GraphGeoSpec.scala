@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.world.World
 
@@ -15,16 +12,7 @@ import graft.world.World
   * (the point of the integer fixed-point scheme) and the bounded
   * floor-leak mass inequality.
   */
-class GraphGeoSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-graphgeo-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraphGeoSpec extends SparkSpec {
 
   private val K = World.Knuth
   private val M = World.M32

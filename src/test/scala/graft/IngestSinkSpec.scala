@@ -1,26 +1,14 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Igh, Polygon}
 import graft.sinks.Kml
 import graft.sources.Ingest
 
 /** Ingest (S1 typed CSV + alias map, S2 manifest discovery) and sink
   * (K4 KML + CRS reprojection) coverage. */
-class IngestSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-ingest-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class IngestSinkSpec extends SparkSpec {
 
   private val lossSchema = StructType(Seq(
     StructField("cell_id", LongType),

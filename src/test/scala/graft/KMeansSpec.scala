@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.world.World
 
@@ -12,16 +9,7 @@ import graft.world.World
   * deterministic), recover the generator's planted clusters, and be
   * converged within the contract rounds.
   */
-class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-kmeans-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KMeansSpec extends SparkSpec {
 
   // scalar replica of the q132 fixture + integer Lloyd
   private val n = 2000

@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Layout
 
 /** engine/Layout: Morton interleave round-trips, the codegen
@@ -13,16 +10,7 @@ import graft.engine.Layout
   * per-partition curve ranges (what parquet min/max pruning needs) and
   * the locality win over a row-major layout.
   */
-class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-layout-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LayoutSpec extends SparkSpec {
 
   test("z interleave/deinterleave round-trips across the full 32-bit " +
     "range, and orders quadrants before cells") {

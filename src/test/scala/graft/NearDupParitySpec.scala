@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 /** q59's banded near-dup is licensed to return EXACTLY q49's brute
   * pairs (the DuckDB oracle for q59 is q49's SQL). This spec pins the
@@ -10,16 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * replaced the per-band duplicate verify + distinct(): every pair must
   * appear exactly once (no distinct() remains in the plan to hide a
   * double emission from the salted join). */
-class NearDupParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-neardup-parity-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class NearDupParitySpec extends SparkSpec {
 
   for (sf <- Seq("sf0.001", "sf0.01")) {
     test(s"q59 banded pairs == q49 brute pairs, no duplicates ($sf)") {

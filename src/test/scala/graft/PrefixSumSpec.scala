@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.PrefixSum
 
 /** engine/PrefixSum: the two-phase distributed exclusive running sum
@@ -11,16 +8,7 @@ import graft.engine.PrefixSum
   * deliberately shuffled, multi-partition input, and the plan
   * contract: the only single-partition stage is the window over the
   * per-partition TOTALS, never the data. */
-class PrefixSumSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-prefixsum-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PrefixSumSpec extends SparkSpec {
 
   test("exclusive prefix sum over a shuffled 10k-row frame equals the " +
     "sequential scan; first row gets 0") {

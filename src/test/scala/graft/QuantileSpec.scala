@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Quantile
 
 /** engine/Quantile: exact distributed selection by histogram
@@ -12,16 +9,7 @@ import graft.engine.Quantile
   * duplicates, negatives, NaN/null exclusion, and parameter +
   * partitioning invariance.
   */
-class QuantileSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-quantile-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class QuantileSpec extends SparkSpec {
 
   /** Deterministic pseudo-random doubles in a wide range, with a
     * negative tail. */

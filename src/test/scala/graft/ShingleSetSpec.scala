@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The r06 verify-join kernels (Sh3Set / SortedInterSize) must be
   * drop-in replacements for the string-list formulation the DuckDB
@@ -12,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * size(array_intersect). Checked against the naive column composition
   * on texts with duplicates, multi-byte code points, and short/edge
   * lengths. */
-class ShingleSetSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-shingle-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ShingleSetSpec extends SparkSpec {
 
   private val texts = Seq(
     "the quick brown fox jumps over the lazy dog the quick brown fox",

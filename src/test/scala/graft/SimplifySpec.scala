@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.world.World
 
@@ -16,16 +13,7 @@ import graft.world.World
   * that the fixture actually exercises both rules (interpolated
   * vertices dropped, lattice kinks kept).
   */
-class SimplifySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-simplify-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimplifySpec extends SparkSpec {
 
   private val Lines = 12
   private val Verts = 33

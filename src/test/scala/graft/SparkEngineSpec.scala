@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Cart, Codec, Geom}
-import graft.engine.{Checkpoint, Expand, Pipeline, Rasterize, Salted}
+import graft.engine.{Checkpoint, Covering, Expand, Pipeline, Rasterize, Salted}
 import graft.world.World
 
 /** End-to-end Spark tests: the golden oracle (a plain-Scala
@@ -16,24 +14,13 @@ import graft.world.World
   * BASELINE.json input_hint); salted aggregation correctness on skew;
   * checkpoint/resume with partition lineage.
   */
-class SparkEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SparkEngineSpec extends SparkSpec {
 
   private val spec = World.tiny
   /** Non-dyadic, non-tile-divisible mini grid: partial edge tiles, the
     * reference's true-1737x4008 shape at test scale. */
   private val padded = graft.world.WorldSpec(rows = 50, cols = 72,
     tile = 16, nRegions = 3)
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir",
-      graft.util.TempDirs.create("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
-
   // ---- the plain-Scala golden oracle (R:191-411 semantics) --------------
 
   /** (cell_id -> (region, class, confidence)) for loss-bearing cells. */
@@ -362,6 +349,13 @@ class SparkEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.sql.GraftFunctions._
     val cfg = Pipeline.Config()
     val polys = World.densify(World.polygons(spec), 8)
+    // 8x8 blocks (the headline's block size) over the tiny grid: pixels
+    // in both region-constant blocks (cover lookup) and boundary blocks
+    // (exact ray-cast) go through the expression
+    val B = 8
+    val blocks = Covering.build(polys, spec.rows, spec.cols, B)
+    assert(blocks.nConst > 0 && blocks.nBoundary > 0,
+      s"${blocks.nConst} constant / ${blocks.nBoundary} boundary blocks")
     val training = (1L to spec.nCells).flatMap { id =>
       val r = Geom.regionOf(polys, World.px(spec, id), World.py(spec, id))
       if (r < 0) None
@@ -385,8 +379,9 @@ class SparkEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val px = ((col("cell_id") - 1) % C).cast("double") + 0.5
     val py = floor((col("cell_id") - 1) / C).cast("double") + 0.5
     val got = fused.select(col("cell_id"),
-        driver_classify_at(col("bytes"), col("p"), px, py, polys, pf,
-          spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor).as("c"))
+        driver_classify_at_covered(col("bytes"), col("p"), px, py, polys, pf,
+          blocks.const, blocks.nbx, B, spec.pixPerTile, cfg.lossFloor,
+          cfg.confidenceFloor).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (1L to spec.nCells).foreach { id =>
       val r = Geom.regionOf(polys, World.px(spec, id), World.py(spec, id))

@@ -1,11 +1,8 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, min, when}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamDedup
 import graft.streaming.StreamDedup.Doc
 
@@ -43,16 +40,7 @@ case class KeyEv(key: Long, ts: Timestamp)
   * state that PERSISTS ACROSS MICRO-BATCHES, and watermarked quality
   * windows — all driven through MemoryStream micro-batches.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-streaming-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingSpec extends SparkSpec {
 
   // offset from a modern base: the initial watermark is epoch 0, and a
   // row whose event time IS the watermark is treated as late

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.TopK
 
 /** engine/TopK: bounded per-group top-k via a size-k min-heap buffer.
@@ -11,16 +9,7 @@ import graft.engine.TopK
   * and the q95 plan contract: partial aggregation BELOW the exchange
   * (only k-sized buffers shuffle — the reason this beats the window
   * formulation on a skewed domain). */
-class TopKSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-topk-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TopKSpec extends SparkSpec {
 
   /** Hermetic documents.parquet (the shape q95 reads) — specs never
     * depend on the machine-local /root/testdata. */

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Codec
 import graft.engine.Multimodal
 import graft.world.World
@@ -14,16 +11,7 @@ import graft.world.World
   * split that exercises both sides of the cutoff, zero cross-tile
   * accidents).
   */
-class VideoSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-video-test")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class VideoSpec extends SparkSpec {
 
   private val spec = World.tiny
   private val nf = Multimodal.VideoFrames
