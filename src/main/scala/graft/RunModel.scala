@@ -28,8 +28,10 @@ object RunModel {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_model_run")
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.parquet.columnarReaderBatchSize", "32")
       .config("spark.sql.columnVector.offheap.enabled", "true")
@@ -46,6 +48,7 @@ object RunModel {
     report ++= s"World: ${spec.rows} x ${spec.cols} = ${spec.nCells} cells, "
     report ++= s"${spec.nBands} bands, ${spec.nTiles} tiles of "
     report ++= s"${spec.tile}x${spec.tile} (true reference grid, R:54,117).\n\n"
+    report ++= s"Session: local[$cores] (one JVM), 32 shuffle partitions.\n\n"
     report ++= "| stage | status | rows | seconds |\n|---|---|---|---|\n"
 
     def timed(name: String)(f: => DataFrame): DataFrame = {
@@ -92,7 +95,8 @@ object RunModel {
     }
 
     // Stage D — per-class loss masks: dedup loss by cell, join final
-    // class, six CSVs + six rasters in one shuffle (R:510-551).
+    // class, then the six CSVs in one write (one shuffle on the class)
+    // and the six rasters from a second pass over `joined` (R:510-551).
     val fpMask = Checkpoint.fingerprint("loss_masks", fpExp, "gtiff")
     timed("loss_masks") {
       store.stage("loss_masks", fpMask, Seq("expanded")) {

@@ -1,9 +1,12 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.GraftSparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** Stage-level checkpoint/resume with per-partition lineage + metrics
   * (north_rule: "resumable from checkpoint with per-partition lineage
@@ -20,7 +23,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * operator can later audit exactly which partition wrote what.
   *
   * The meta records are themselves stored as single-row JSON datasets
-  * (read/written by Spark), avoiding any bespoke JSON parsing.
+  * (JSON lines in Spark's format, read back by Spark), avoiding any
+  * bespoke JSON parsing. Beyond the stage body's own jobs, a computed
+  * stage launches exactly one Spark job: the snapshot write.
   */
 object Checkpoint {
 
@@ -48,9 +53,21 @@ object Checkpoint {
             .schema)
           .json(metaPath(name)).as[StageMeta].head()).toOption
 
-    private def writeMeta(meta: StageMeta): Unit =
-      Seq(meta).toDS().coalesce(1).write.mode("overwrite")
-        .json(metaPath(meta.name))
+    /** The meta record as one JSON line in Spark's format (`to_json`
+      * over the local one-row Dataset is evaluated locally, no job),
+      * written with a `_SUCCESS` marker straight through the Hadoop
+      * FileSystem: the same bytes `write.json` produced, which
+      * `readMeta` still reads. */
+    private def writeMeta(meta: StageMeta): Unit = {
+      val json = Seq(meta).toDS().select(to_json(struct(col("*"))))
+        .as[String].head()
+      val out = new Path(metaPath(meta.name))
+      val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(out, true)
+      val w = fs.create(new Path(out, "part-00000.json"))
+      try w.write(s"$json\n".getBytes(UTF_8)) finally w.close()
+      fs.create(new Path(out, "_SUCCESS")).close()
+    }
 
     /** Load stage `name` if its fingerprint matches the stored
       * snapshot; otherwise compute, snapshot, and record lineage. */
@@ -88,7 +105,8 @@ object Checkpoint {
         writeMeta(StageMeta(name, fingerprint, inputs,
           parts.map(_.records).sum, parts))
         log += name -> "computed"
-        spark.read.parquet(dataPath(name))
+        // the computed schema spares the read its schema-inference job
+        spark.read.schema(df.schema).parquet(dataPath(name))
       }
     }
 

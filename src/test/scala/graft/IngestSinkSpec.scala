@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import graft.core.{Igh, Polygon}
 import graft.sinks.Kml
@@ -308,9 +310,32 @@ class IngestSinkSpec extends SparkSpec {
     }
   }
 
+  /** The loss-mask fan-out as it was before it became one pass — one
+    * globally sorted single-file write per class — kept as the byte
+    * reference for `Csv.writeClassMasks`. */
+  private def perClassMasks(df: DataFrame, dir: String,
+      classes: Seq[Int]): Unit = classes.foreach { k =>
+    df.filter(col("final_class") === k).select("cell_id", "loss_mean")
+      .sort("cell_id").coalesce(1).write.mode("overwrite")
+      .option("header", "true").csv(s"$dir/LossMask_class$k.csv")
+  }
+
+  /** Visible entries of a directory (Hadoop's `.crc` companions aside). */
+  private def visible(dir: String): Set[String] =
+    new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet
+
+  /** The bytes of a class mask's one part file, after checking the
+    * directory holds exactly that part file and a `_SUCCESS` marker. */
+  private def maskBytes(dir: String, k: Int): Seq[Byte] = {
+    val d = s"$dir/LossMask_class$k.csv"
+    val parts = visible(d).filter(_.endsWith(".csv"))
+    assert(parts.size == 1 && visible(d) == parts + "_SUCCESS",
+      s"$d holds ${visible(d)}")
+    Files.readAllBytes(java.nio.file.Paths.get(d, parts.head)).toSeq
+  }
+
   test("K1: CSV sink round-trips per-class loss masks (R:524-550)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val df = (1L to 100L).map { id =>
       (id, (id % 4).toInt, id.toDouble / 16.0)
     }.toDF("cell_id", "final_class", "loss_mean")
@@ -327,15 +352,56 @@ class IngestSinkSpec extends SparkSpec {
         .map(id => (id, id.toDouble / 16.0))
       assert(back == want, s"class $k")
       // exactly one part file (the reference's one-CSV-per-report shape)
-      val parts = new java.io.File(s"$dir/LossMask_class$k.csv")
-        .listFiles().count(_.getName.endsWith(".csv"))
-      assert(parts == 1)
+      maskBytes(dir, k)
     }
     // non-single mode keeps partitioning (scale path) but same rows
     graft.sinks.Csv.write(df, s"$dir/all.csv", Seq("cell_id"), single = false)
     assert(spark.read.option("header", "true")
       .schema("cell_id LONG, final_class INT, loss_mean DOUBLE")
       .csv(s"$dir/all.csv").count() == 100)
+  }
+
+  test("K1: the one-pass class fan-out writes the per-class writes' bytes, " +
+    "line order included, with AQE on and off") {
+    import spark.implicits._
+    // rows in scrambled order over several partitions; classes 2, 4 and 5
+    // have no rows, class 7 is not asked for
+    val rnd = new scala.util.Random(11)
+    val rows = rnd.shuffle((1L to 600L).map { id =>
+      val k = Seq(0, 1, 3, 7)((id % 4).toInt)
+      (id, k.toLong, if (id % 9 == 0) 0.0 else rnd.nextDouble() * id)
+    })
+    val df = rows.toDF("cell_id", "final_class", "loss_mean").repartition(5)
+    val classes = 0 to 5
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try for (on <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      val dir = graft.util.TempDirs.create("graft_csv_fan").toString
+      val got = s"$dir/got"
+      for ((frame, pass) <- Seq(df, df.filter($"cell_id" % 3 === 0))
+          .zipWithIndex) {
+        // the second pass overwrites `got` with fewer rows per class
+        val want = s"$dir/want$pass"
+        perClassMasks(frame, want, classes)
+        graft.sinks.Csv.writeClassMasks(frame, got, "final_class",
+          "loss_mean", classes)
+        assert(visible(got) == classes.map(k => s"LossMask_class$k.csv")
+          .toSet, s"aqe=$on pass $pass: no temp dir, no class 7")
+        classes.foreach { k =>
+          assert(maskBytes(got, k) == maskBytes(want, k),
+            s"aqe=$on pass $pass class $k")
+        }
+        val lines = new String(maskBytes(got, 0).toArray, "UTF-8")
+          .split("\n").toSeq
+        val ids = lines.tail.map(_.split(",")(0).toLong)
+        assert(lines.head == "cell_id,loss_mean" && ids.nonEmpty)
+        assert(ids == ids.sorted && ids.toSet == frame
+          .filter($"final_class" === 0).select("cell_id").as[Long]
+          .collect().toSet, "class 0 holds its rows in cell_id order")
+      }
+      assert(new String(maskBytes(got, 2).toArray, "UTF-8") ==
+        "cell_id,loss_mean\n", "an empty class is a header-only file")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("K4: KML export reprojects through the Goode inverse and closes rings") {

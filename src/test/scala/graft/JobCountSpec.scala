@@ -1,0 +1,64 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import graft.engine.Checkpoint
+
+/** Listener-counted Spark jobs of the model's output writers, AQE off
+  * (with AQE on every shuffle stage is a job of its own): the class
+  * fan-out is one write whatever the class count, and a computed
+  * checkpoint stage adds only its snapshot write to its body's jobs. */
+class JobCountSpec extends SparkSpec {
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+  }
+
+  /** Jobs started while `body` runs. */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    GraftSparkBridge.waitListenerEmpty(sc)
+    sc.addSparkListener(l)
+    try { body; GraftSparkBridge.waitListenerEmpty(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  private def masks(nClasses: Int): DataFrame = {
+    import spark.implicits._
+    (1L to 400L).map(id => (id, id % nClasses, id * 0.5))
+      .toDF("cell_id", "final_class", "loss_mean").repartition(3)
+  }
+
+  test("Csv.writeClassMasks runs the same few jobs for 4 and 6 classes") {
+    val counts = Seq(4, 6).map { n =>
+      val dir = graft.util.TempDirs.create("graft_jobs_csv").toString
+      jobs(graft.sinks.Csv.writeClassMasks(masks(n), dir, "final_class",
+        "loss_mean", classes = 0 until n))
+    }
+    assert(counts(0) == counts(1) && counts(0) <= 2, counts.toString)
+  }
+
+  test("a computed Checkpoint.stage adds only the snapshot write to its " +
+    "body's jobs") {
+    val body = () => {
+      val n = spark.range(0, 50).filter("id % 7 = 0").count()
+      spark.range(0, 1000).selectExpr("id AS cell_id", s"id % $n AS k")
+    }
+    val bodyJobs = jobs(body())
+    val store = new Checkpoint.Store(spark,
+      graft.util.TempDirs.create("graft_jobs_ckpt").toString)
+    val stageJobs = jobs(store.stage("s", "fp")(body()))
+    assert(store.log.toList == List("s" -> "computed"))
+    assert(bodyJobs == 1 && stageJobs == bodyJobs + 1,
+      s"body $bodyJobs, stage $stageJobs")
+  }
+}

@@ -226,10 +226,55 @@ class SparkEngineSpec extends SparkSpec {
     assert(meta.rows ==
       spark.read.parquet(s"$dir/stages/scored").count())
 
+    // each meta record reads back exactly as written: re-serialized by
+    // Spark's JSON writer it gives the stored bytes
+    import spark.implicits._
+    def metaLine(d: String): String = {
+      val parts = new java.io.File(d).listFiles()
+        .filter(f => f.getName.endsWith(".json") && !f.getName.startsWith("."))
+      assert(parts.length == 1 &&
+        new java.io.File(d, "_SUCCESS").exists(), d)
+      new String(java.nio.file.Files.readAllBytes(parts.head.toPath), "UTF-8")
+    }
+    store1.log.foreach { case (name, _) =>
+      val m = store1.meta(name).get
+      assert(m.name == name && m.partitions.map(_.records).sum == m.rows)
+      Seq(m).toDS().coalesce(1).write.json(s"$dir/respelled/$name")
+      assert(metaLine(s"$dir/meta/$name") ==
+        metaLine(s"$dir/respelled/$name"), name)
+    }
+
+    // a computed stage returns its snapshot's schema: the pipeline's
+    // result, and each public stage body through a fresh store
+    assert(out1.schema == spark.read.parquet(s"$dir/stages/expanded").schema)
+    val direct = new Checkpoint.Store(spark, s"$dir/direct")
+    Seq[(String, () => DataFrame)](
+      "cells" -> (() => Pipeline.decodedCells(spark, spec)),
+      "features" -> (() => Pipeline.featuresWithRegion(spark, spec)),
+      "scored" -> (() => Pipeline.fitPredictVote(spark, spec)),
+      "rasterized" -> (() => Rasterize(spec, out1, "final_class")),
+      "loss_masks" -> (() => Rasterize.byClass(spec,
+        out1.withColumn("loss_mean", lit(0.5)), "loss_mean", "final_class"))
+    ).foreach { case (name, body) =>
+      val got = direct.stage(name, "fp")(body())
+      assert(direct.log.last == name -> "computed")
+      assert(got.schema ==
+        spark.read.parquet(s"$dir/direct/stages/$name").schema, name)
+    }
+
     // resume: everything loads, nothing recomputes, same answer
     val (out2, store2) = Pipeline.runCheckpointed(spark, spec, dir)
     assert(store2.log.forall(_._2 == "loaded"), store2.log.toString)
     assert(out2.orderBy("cell_id").collect().toSeq == result1)
+
+    // meta dirs written by Spark's JSON writer (older runs) still resume
+    store1.log.foreach { case (name, _) =>
+      Seq(store1.meta(name).get).toDS().coalesce(1).write.mode("overwrite")
+        .json(s"$dir/meta/$name")
+    }
+    val (out2b, store2b) = Pipeline.runCheckpointed(spark, spec, dir)
+    assert(store2b.log.forall(_._2 == "loaded"), store2b.log.toString)
+    assert(out2b.orderBy("cell_id").collect().toSeq == result1)
 
     // the deliverable stage (R:510-551) wrote the six per-class CSVs
     (0 to 5).foreach { k =>
