@@ -4,8 +4,8 @@ package graft.core
   * pruning — the reference's `rpart(..., method="anova")` +
   * `prune(fit, cp=.02)` (`Supplemental_Data_1.R:312-313`), fitted
   * per (region, driver) on a few hundred training rows, so fitting is a
-  * driver-side concern (SURVEY.md §2.9 M1-M2); inference compiles to a
-  * Catalyst `when`-chain (M3).
+  * driver-side concern (SURVEY.md §2.9 M1-M2); inference walks the
+  * packed forest below inside one codegen'd expression (M3).
   *
   * Semantics implemented (matching rpart's documented ANOVA method):
   *  - node deviance R(t) = sum of squared errors about the node mean;
@@ -55,8 +55,8 @@ object Cart {
     }
   }
   /** The 7x5 tree matrix flattened to primitive arrays for branch-walk
-    * inference. The when-chain `Column` compilation (Pipeline.treeColumn)
-    * is correct but generates code proportional to total node count x
+    * inference. Compiling each tree into a `when`-chain `Column` is
+    * correct but generates code proportional to total node count x
     * region count; at 35 trees x 85 features the generated method blows
     * past the JIT's huge-method limit and the job degrades to contended
     * interpreted bytecode (measured: throughput DECREASED with added
@@ -113,16 +113,24 @@ object Cart {
       val base = (region - 1) * pf.nDrivers
       var d = 0
       while (d < pf.nDrivers) {
-        var node = pf.offsets(base + d)
-        while (pf.feat(node) >= 0) {
-          val f = Codec.floatAt(bytes, p + (pf.feat(node) + 1) * nPix).toDouble
-          node = if (f < pf.thr(node)) pf.left(node) else pf.right(node)
-        }
-        val prob = pf.value(node)
+        val prob = leaf(pf, pf.offsets(base + d), bytes, p, nPix)
         if (prob > best) { best = prob; bestD = d + 1 }
         d += 1
       }
       if (best < confFloor) 0L else bestD.toLong
+    }
+
+    /** The single-tree walk: leaf value of the tree rooted at node
+      * `root` for pixel p, reading band feat+1 lazily from the payload
+      * (~tree-depth nodes visited). */
+    def leaf(pf: PackedForest, root: Int, bytes: Array[Byte], p: Int,
+        nPix: Int): Double = {
+      var node = root
+      while (pf.feat(node) >= 0) {
+        val f = Codec.floatAt(bytes, p + (pf.feat(node) + 1) * nPix).toDouble
+        node = if (f < pf.thr(node)) pf.left(node) else pf.right(node)
+      }
+      pf.value(node)
     }
 
     /** classify() with the region lookup FOLDED IN: one ray-cast PIP per

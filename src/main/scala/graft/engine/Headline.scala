@@ -56,11 +56,8 @@ object Headline {
     * region assignment to the coarse strips (dyadic densification). */
   val polys: Array[graft.core.Polygon] =
     World.densify(World.polygons(spec), 256)
-  /** Block size (grid units) of the PIP covering. At B=8 on the real
-    * geometry the boundary fraction is a few percent (~perimeter*B/area),
-    * so nearly every pixel resolves its region from the block map in
-    * O(1) and the ray-cast survives only along region boundaries. */
-  val CoverB = 8
+  /** Block size (grid units) of the PIP covering (Pipeline.CoverB). */
+  val CoverB = Pipeline.CoverB
   /** Block covering of the densified region layer (engine/Covering —
     * bit-equal to the exact ray-cast, proven by q72's oracle and
     * re-asserted over this exact geometry in CoreSpec). Built once per
@@ -96,34 +93,6 @@ object Headline {
     }
   }
 
-  /** Fused pixel frame: (cell_id, bytes, p) — band values are NOT
-    * decoded here; consumers read them lazily via bandCol. The in-grid
-    * guard (two integer compares, trivial beside the ray-cast) drops
-    * the NaN padding of partial edge tiles. */
-  private def fusedCells(tiles: DataFrame): DataFrame = {
-    val T = spec.tile
-    val TX = spec.tilesX
-    val C = spec.cols
-    val gr = floor(col("tile_id") / TX) * T + floor(col("p") / T)
-    val gc = (col("tile_id") % TX) * T + col("p") % T
-    val exploded = tiles.select(col("tile_id"), col("bytes"),
-      explode(sequence(lit(0), lit(spec.pixPerTile - 1))).as("p"))
-    val inGrid = if (!spec.padded) exploded
-      else exploded.filter(gr < spec.rows && gc < spec.cols)
-    inGrid.select((gr * C + gc + 1).cast("long").as("cell_id"),
-      col("bytes"), col("p"))
-  }
-
-  /** Band b of the current pixel, read straight from the payload. */
-  private def bandCol(b: Int): Column =
-    float_at(col("bytes"), col("p") + lit(b * spec.pixPerTile))
-      .cast("double")
-
-  private def pxCol: Column = ((col("cell_id") - 1) % spec.cols)
-    .cast("double") + 0.5
-  private def pyCol: Column = floor((col("cell_id") - 1) / spec.cols)
-    .cast("double") + 0.5
-
   private val treesPath = s"$tilesPath.trees.bin"
 
   /** Fitted trees, cached to disk so repeated bench workers skip the
@@ -135,36 +104,14 @@ object Headline {
       try in.readObject().asInstanceOf[Map[(Int, Int), Cart.Tree]]
       finally in.close()
     } else {
-      val trees = fitTrees(s)
+      // the ~1/37 tile sample: prep, not part of the timed job
+      val trees = Pipeline.fit(
+        s.read.parquet(tilesPath).filter(col("tile_id") % 37 === 0), spec,
+        polys, Pipeline.Config())
       val out = new java.io.ObjectOutputStream(new java.io.FileOutputStream(f))
       try out.writeObject(trees) finally out.close()
       trees
     }
-  }
-
-  /** Fit the 7x5 tree matrix on a ~1/37 tile sample (driver-side fit on
-    * the collected labeled cells, SURVEY.md §2.9 M1) — prep, not part of
-    * the timed job. */
-  def fitTrees(s: SparkSession): Map[(Int, Int), Cart.Tree] = {
-    val cells = fusedCells(
-      s.read.parquet(tilesPath).filter(col("tile_id") % 37 === 0))
-    val trainLabel =
-      when((((col("cell_id") * 13) * World.Knuth) % World.M32) % 64 < 4,
-        ((((col("cell_id") * 13 + 1) * World.Knuth) % World.M32) % 7)
-          .cast("int") + 1).otherwise(0)
-    val cfg = Pipeline.Config()
-    val nf = spec.nBands - 1
-    val training = cells
-      .select(col("*"), region_explode(pxCol, pyCol, polys).as("region_id"))
-      .withColumn("tclass", trainLabel)
-      .filter(col("tclass") > 0 &&
-        !col("tclass").isInCollection(cfg.dropClasses))
-      .select(col("region_id") +: col("tclass") +:
-        (1 to nf).map(b => bandCol(b).as(s"b$b")): _*)
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1),
-        (2 until 2 + nf).map(r.getDouble).toArray))
-    Pipeline.fitTrees(training, spec.nRegions, cfg)
   }
 
   /** H3 res-4 parent of a res-9 H3-lite id: pure bit arithmetic,
@@ -191,22 +138,13 @@ object Headline {
     * — the reference's NA cells, absent from its rasters) — the input
     * to the Expand stage of the full model run. Same fused
     * single-ray-cast projection as the benchmark plan. */
-  def cellClasses(s: SparkSession, trees: Map[(Int, Int), Cart.Tree]): DataFrame = {
-    val cfg = Pipeline.Config()
-    val forest = Cart.PackedForest(trees, spec.nRegions, Pipeline.NumDrivers)
-    fusedCells(s.read.parquet(tilesPath))
-      .select(col("cell_id"),
-        when(bandCol(0) <= 0.0, -1L)
-          .otherwise(driver_classify_at_covered(col("bytes"), col("p"),
-            pxCol, pyCol, polys, forest, cover.const, cover.nbx, CoverB,
-            spec.pixPerTile, cfg.lossFloor,
-            cfg.confidenceFloor)).as("final_class"))
-  }
+  def cellClasses(s: SparkSession, trees: Map[(Int, Int), Cart.Tree]): DataFrame =
+    Pipeline.classes(s.read.parquet(tilesPath), spec, polys, cover, trees,
+      Pipeline.Config())
 
   /** Per-cell loss (band 0) from the tile table. */
   def cellLoss(s: SparkSession): DataFrame =
-    fusedCells(s.read.parquet(tilesPath))
-      .select(col("cell_id"), bandCol(0).as("loss"))
+    Pipeline.cellBands(s.read.parquet(tilesPath), spec)
 
   /** The headline plan over a given tile table (parquet scan or a
     * cached/cluster-local source). */
@@ -220,13 +158,14 @@ object Headline {
     // no-region rows are instead excluded by gating every aggregate
     // input on class >= 0 and dropping all-padding zones post-agg
     // (a filter on tiny final-aggregate output).
-    val classed = fusedCells(tiles)
+    val classed = Pipeline.cells(tiles, spec)
       .select(col("cell_id"),
         grid_h3(col("cell_id"), spec.rows, spec.cols, H3Res).as("h3"),
-        driver_classify_at_covered(col("bytes"), col("p"), pxCol, pyCol,
-          polys, forest, cover.const, cover.nbx, CoverB, spec.pixPerTile,
-          cfg.lossFloor, cfg.confidenceFloor).as("class"),
-        bandCol(0).as("loss"))
+        driver_classify_at_covered(col("bytes"), col("p"),
+          Pipeline.px(spec), Pipeline.py(spec), polys, forest, cover.const,
+          cover.nbx, CoverB, spec.pixPerTile, cfg.lossFloor,
+          cfg.confidenceFloor).as("class"),
+        Pipeline.band(spec, 0).as("loss"))
     val inRegion = col("class") >= 0
     Salted.aggregate(classed,
       keys = Seq("h3r4" -> h3Parent4(col("h3"))),

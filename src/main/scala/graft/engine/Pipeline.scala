@@ -2,25 +2,26 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Cart
+import graft.core.{Cart, Polygon}
 import graft.sql.GraftFunctions._
 import graft.world.{World, WorldSpec}
 
-/** The model pipeline core (SURVEY.md §3.1 stages 4-9): build the wide
-  * feature table from the tile scan, fit per-(region, driver) CART
-  * trees on the collected training slice, and score every loss-bearing
-  * cell with the vote.
+/** The model pipeline (SURVEY.md §3.1 stages 4-13) over a tile table:
+  * fit per-(region, driver) CART trees on the collected training
+  * slice, score cells with the packed-forest vote, then Expand,
+  * rasterize and write the per-class loss masks as checkpointed stages.
   *
   * Architecture notes (vs the reference):
-  *  - the 85-fold join chain (R:209-228/249-269) is ONE decode+explode
-  *    pass producing all feature columns — no join at all;
+  *  - the 85-fold join chain (R:209-228/249-269) is ONE pixel-index
+  *    explode per tile (`cells`); every band is read lazily from the
+  *    tile payload (`band`) — no join, no band arrays, no wide rows;
   *  - training is ~5k rows (R:204-205): collected to the driver and fit
-  *    there (SURVEY.md §2.9 M1); the 35 fitted trees ship back inside
-  *    closed-form `when`-chain Catalyst expressions (M3), so inference
-  *    is whole-stage-codegen'd and needs no UDF, no broadcast variable,
-  *    and no extra shuffle: the region dispatch + 5 probability columns
-  *    + argmax vote evaluate in a single projection over the feature
-  *    frame;
+  *    there (SURVEY.md §2.9 M1); the 35 fitted trees ship back as one
+  *    `Cart.PackedForest` referenced by a single codegen'd expression
+  *    (M3), so inference needs no UDF, no broadcast variable and no
+  *    extra shuffle, and the generated code does not grow with the
+  *    trees: the region lookup, the tree walks and the argmax vote
+  *    evaluate in one projection over the cell frame;
   *  - classes 6 and 7 are dropped from training by default (notebook
   *    cell 36 intent; the R script only drops 7 at R:204 — configurable
   *    via `dropClasses`).
@@ -28,6 +29,12 @@ import graft.world.{World, WorldSpec}
 object Pipeline {
 
   val NumDrivers = 5
+  /** Block size (grid units) of the PIP covering behind `classes`. At
+    * B=8 on the real geometry the boundary fraction is a few percent
+    * (~perimeter*B/area), so nearly every pixel resolves its region
+    * from the block map in O(1) and the ray-cast survives only along
+    * region boundaries. */
+  val CoverB = 8
 
   final case class Config(
       dropClasses: Set[Int] = Set(6, 7),
@@ -36,53 +43,42 @@ object Pipeline {
       cartParams: Cart.Params = Cart.Params(),
       pruneCp: Double = 0.02) // R:313
 
-  /** Decoded per-cell frame: (cell_id, loss, b1..b5) from the tile
-    * table — the raster->vector scan (S3). */
-  def decodedCells(s: SparkSession, spec: WorldSpec): DataFrame =
-    decodedCellsFrom(World.tilesDF(s, spec), spec)
-
-  /** Same, from an already-loaded tile table (e.g. a parquet scan).
-    * Partial edge tiles (padded specs) contribute only their in-grid
-    * pixels — the NaN padding is dropped by a cheap arithmetic guard. */
-  def decodedCellsFrom(tiles: DataFrame, spec: WorldSpec): DataFrame = {
-    val nb = spec.nBands
-    val zipped = arrays_zip((0 until nb).map(b =>
-      decode_band(col("bytes"), col("fmt"), spec.pixPerTile, b).as(s"b$b")): _*)
-    val C = spec.cols
+  /** The fused cell frame: (cell_id, bytes, p), one row per in-grid
+    * pixel of `tiles`. Band values are NOT decoded here; consumers read
+    * them lazily via `band`. The in-grid guard (two integer compares,
+    * trivial beside the ray-cast) drops the NaN padding of partial edge
+    * tiles. */
+  def cells(tiles: DataFrame, spec: WorldSpec): DataFrame = {
     val T = spec.tile
     val TX = spec.tilesX
+    val C = spec.cols
     val gr = floor(col("tile_id") / TX) * T + floor(col("p") / T)
     val gc = (col("tile_id") % TX) * T + col("p") % T
-    val exploded = tiles
-      .select(col("tile_id"), posexplode(zipped).as(Seq("p", "v")))
+    val exploded = tiles.select(col("tile_id"), col("bytes"),
+      explode(sequence(lit(0), lit(spec.pixPerTile - 1))).as("p"))
     val inGrid = if (!spec.padded) exploded
       else exploded.filter(gr < spec.rows && gc < spec.cols)
-    inGrid.select(
-        ((gr * C + gc + 1).cast("long").as("cell_id") +:
-          col("v.b0").cast("double").as("loss") +:
-          (1 until nb).map(b => col(s"v.b$b").cast("double").as(s"b$b"))): _*)
+    inGrid.select((gr * C + gc + 1).cast("long").as("cell_id"),
+      col("bytes"), col("p"))
   }
 
-  /** Feature frame with region attached via the PIP expression; rows
-    * outside every polygon are dropped (R:273-274). region_explode
-    * evaluates the ray-cast once per row AND drops the misses in the
-    * same Generate — the withColumn+filter shape would evaluate the PIP
-    * twice (pushed Filter + Project). */
-  def featuresWithRegion(s: SparkSession, spec: WorldSpec): DataFrame = {
-    val px = ((col("cell_id") - 1) % spec.cols).cast("double") + 0.5
-    val py = floor((col("cell_id") - 1) / spec.cols).cast("double") + 0.5
-    decodedCells(s, spec)
-      .select(col("*"),
-        region_explode(px, py, World.polygons(spec)).as("region_id"))
-  }
+  /** Band b of the current `cells` pixel, read straight from the payload. */
+  def band(spec: WorldSpec, b: Int): Column =
+    float_at(col("bytes"), col("p") + lit(b * spec.pixPerTile))
+      .cast("double")
 
-  /** Compile a fitted tree into a when-chain Column over feature cols. */
-  def treeColumn(t: Cart.Tree, feats: IndexedSeq[Column]): Column = t match {
-    case Cart.Leaf(v, _, _) => lit(v)
-    case Cart.Split(f, thr, lo, hi, _, _, _) =>
-      when(feats(f) < thr, treeColumn(lo, feats))
-        .otherwise(treeColumn(hi, feats))
-  }
+  /** Centroid of the `cell_id` column's cell (World.px / World.py). */
+  def px(spec: WorldSpec): Column = ((col("cell_id") - 1) % spec.cols)
+    .cast("double") + 0.5
+  def py(spec: WorldSpec): Column = floor((col("cell_id") - 1) / spec.cols)
+    .cast("double") + 0.5
+
+  /** `cells` with bands read out as doubles: (cell_id, loss, b<k> for
+    * each k in `bands`) — the raster->vector scan (S3). */
+  def cellBands(tiles: DataFrame, spec: WorldSpec,
+      bands: Seq[Int] = Nil): DataFrame =
+    cells(tiles, spec).select(col("cell_id") +: band(spec, 0).as("loss") +:
+      bands.map(b => band(spec, b).as(s"b$b")): _*)
 
   /** Fit the (region x driver) tree matrix from the collected training
     * slice. Key: (region_id, driver) -> pruned tree. */
@@ -101,116 +97,131 @@ object Pipeline {
     }.toMap
   }
 
-  /** Full fit-predict-vote over the synthetic world: returns
-    * (cell_id, region_id, class, confidence) for loss-bearing cells.
-    * Matches reference stages 4-9 (R:191-411). */
-  def fitPredictVote(s: SparkSession, spec: WorldSpec,
-      cfg: Config = Config()): DataFrame =
-    voteFromFeatures(s, spec, featuresWithRegion(s, spec), cfg)
-
-  /** Fit + vote over an already-built feature frame (cell_id, loss,
-    * b1..bK, region_id) — the checkpointable core of stages 6-9. */
-  def voteFromFeatures(s: SparkSession, spec: WorldSpec, feats: DataFrame,
-      cfg: Config = Config()): DataFrame = {
-
-    // training slice: labeled cells, excluded classes dropped (R:204-205
-    // vs nb cell 36), collected driver-side.
-    val trainLabel =
-      when((((col("cell_id") * 13) * World.Knuth) % World.M32) % 64 < 4,
-        ((((col("cell_id") * 13 + 1) * World.Knuth) % World.M32) % 7)
-          .cast("int") + 1).otherwise(0)
-    val nb = spec.nBands
-    val featCols = (1 until nb).map(b => col(s"b$b"))
-    val training = feats
-      .withColumn("tclass", trainLabel)
+  /** Fit the tree matrix on the labeled cells of `tiles` (R:191-319):
+    * region first (cells outside every polygon drop, R:273-274), label
+    * from the training hash, excluded classes dropped (R:204-205 vs nb
+    * cell 36); the slice is collected driver-side. */
+  def fit(tiles: DataFrame, spec: WorldSpec, polys: Array[Polygon],
+      cfg: Config): Map[(Int, Int), Cart.Tree] = {
+    val nf = spec.nBands - 1
+    val training = cells(tiles, spec)
+      .select(col("*"),
+        region_explode(px(spec), py(spec), polys).as("region_id"))
+      .withColumn("tclass", World.trainingClassCol(col("cell_id")))
       .filter(col("tclass") > 0 &&
         !col("tclass").isInCollection(cfg.dropClasses))
-      .select(col("region_id") +: col("tclass") +: featCols: _*)
+      .select(col("region_id") +: col("tclass") +:
+        (1 to nf).map(b => band(spec, b).as(s"b$b")): _*)
       .collect()
       .map(r => (r.getInt(0), r.getInt(1),
-        (2 until 2 + (nb - 1)).map(r.getDouble).toArray))
-
-    val trees = fitTrees(training, spec.nRegions, cfg)
-
-    // single-projection inference: per driver, region-dispatched tree
-    // expression; then the vote.
-    val probCols = (1 to NumDrivers).map { d =>
-      (1 to spec.nRegions).foldLeft(lit(0.0)) { (acc, r) =>
-        when(col("region_id") === r,
-          treeColumn(trees((r, d)), featCols.toIndexedSeq)).otherwise(acc)
-      }.as(s"p$d")
-    }
-    val scored = feats.filter(col("loss") > 0) // predict loss-bearing cells
-      .select(col("cell_id") +: col("region_id") +: col("loss") +: probCols: _*)
-    val ps = (1 to NumDrivers).map(d => col(s"p$d"))
-    val mx = greatest(ps: _*)
-    scored.select(col("cell_id"), col("region_id"),
-        when(col("loss") < cfg.lossFloor, 0L)
-          .otherwise(when(mx < cfg.confidenceFloor, 0L)
-            .otherwise(array_position(array(ps: _*), mx))).as("class"),
-        mx.as("confidence"))
+        (2 until 2 + nf).map(r.getDouble).toArray))
+    fitTrees(training, spec.nRegions, cfg)
   }
 
+  /** Fit + vote over the synthetic world `spec` (stages 4-9,
+    * R:191-411): (cell_id, region_id, class, confidence) for every
+    * loss-bearing in-region cell, with the trees `fit` on every tile.
+    * region_explode ray-casts once per cell and drops the no-region
+    * cells; one ForestVote expression then yields class and confidence. */
+  def fitPredictVote(s: SparkSession, spec: WorldSpec,
+      cfg: Config = Config()): DataFrame = {
+    val tiles = World.tilesDF(s, spec)
+    val polys = World.polygons(spec)
+    val forest = Cart.PackedForest(fit(tiles, spec, polys, cfg),
+      spec.nRegions, NumDrivers)
+    cells(tiles, spec)
+      .select(col("cell_id"), col("bytes"), col("p"),
+        region_explode(px(spec), py(spec), polys).as("region_id"))
+      .filter(band(spec, 0) > 0)
+      .select(col("cell_id"), col("region_id"),
+        forest_vote(col("bytes"), col("p"), col("region_id"), forest,
+          spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor).as("vote"))
+      .select(col("cell_id"), col("region_id"), col("vote.class"),
+        col("vote.confidence"))
+  }
+
+  /** Per-cell class frame over every in-grid cell of `tiles`: (cell_id,
+    * final_class) with -1 = NoData (zero loss, or outside every region
+    * — the reference's NA cells, absent from its rasters). One
+    * DriverClassifyAt per cell resolves the region from `cover` or by
+    * one exact ray-cast, then votes. */
+  def classes(tiles: DataFrame, spec: WorldSpec, polys: Array[Polygon],
+      cover: Covering.Blocks, trees: Map[(Int, Int), Cart.Tree],
+      cfg: Config): DataFrame = {
+    val forest = Cart.PackedForest(trees, spec.nRegions, NumDrivers)
+    cells(tiles, spec)
+      .select(col("cell_id"),
+        when(band(spec, 0) <= 0.0, -1L)
+          .otherwise(driver_classify_at_covered(col("bytes"), col("p"),
+            px(spec), py(spec), polys, forest, cover.const, cover.nbx,
+            cover.b, spec.pixPerTile, cfg.lossFloor,
+            cfg.confidenceFloor)).as("final_class"))
+  }
+
+  /** One stage of a model run: its snapshot and its wall seconds. */
+  final case class StageRun(name: String, df: DataFrame, seconds: Double)
+
   /** The full model pipeline (stages 4-13 of SURVEY.md §3.1) as
-    * RESUMABLE checkpointed stages: decode -> PIP features -> fit+vote
-    * -> expand -> rasterize. Each stage snapshots to parquet under
-    * `dir` keyed by a fingerprint of its upstream + config; rerunning
-    * after a kill reloads finished stages and recomputes only the rest
-    * (see store.log). Returns (expanded class frame, store). */
-  def runCheckpointed(s: SparkSession, spec: WorldSpec, dir: String,
-      cfg: Config = Config(), expandIters: Int = 8)
-      : (DataFrame, Checkpoint.Store) = {
+    * RESUMABLE checkpointed stages under `dir`:
+    *  - classified: `classes` (-1 = NoData);
+    *  - expanded: exactly `expandIters` Expand rings (the ArcGIS
+    *    analog's NumberCells, R:445-454); NoData stays untouched;
+    *  - class_gtiff: the class map as georeferenced GeoTIFF tiles
+    *    (rastOut, R:425-441);
+    *  - loss_masks: the reference's deliverable (R:510-551) — loss
+    *    deduped by cell (group/mean, R:516-520) joined to the final
+    *    class (R:521), then the six per-class CSVs under `dir`/csv in
+    *    one write and the six rasters.
+    * Each stage snapshots to parquet keyed by a fingerprint of its
+    * upstream and its own configuration (classified: grid, polygons,
+    * trees and `cfg`); rerunning after a kill reloads finished stages
+    * and recomputes only the rest (see store.log). */
+  def runModel(s: SparkSession, spec: WorldSpec, tiles: DataFrame,
+      polys: Array[Polygon], trees: Map[(Int, Int), Cart.Tree], cfg: Config,
+      dir: String, expandIters: Int = 8): (Checkpoint.Store, Seq[StageRun]) = {
     val store = new Checkpoint.Store(s, dir)
-    val fpCells = Checkpoint.fingerprint("cells", spec)
-    val cells = store.stage("cells", fpCells)(decodedCells(s, spec))
-
-    val fpFeat = Checkpoint.fingerprint("features", fpCells, spec.nRegions)
-    val features = store.stage("features", fpFeat, Seq("cells")) {
-      val px = ((col("cell_id") - 1) % spec.cols).cast("double") + 0.5
-      val py = floor((col("cell_id") - 1) / spec.cols).cast("double") + 0.5
-      cells.select(col("*"),
-        region_explode(px, py, World.polygons(spec)).as("region_id"))
+    val runs = Seq.newBuilder[StageRun]
+    def stage(name: String, fp: String, inputs: String*)(
+        body: => DataFrame): DataFrame = {
+      val t0 = System.nanoTime()
+      val df = store.stage(name, fp, inputs)(body)
+      runs += StageRun(name, df, (System.nanoTime() - t0) / 1e9)
+      df
     }
 
-    val fpScored = Checkpoint.fingerprint("scored", fpFeat, cfg)
-    val scored = store.stage("scored", fpScored, Seq("features")) {
-      voteFromFeatures(s, spec, features, cfg)
+    val fpCls = Checkpoint.fingerprint("classified", spec,
+      polys.toSeq.map(p => (p.regionId, p.xs.toSeq, p.ys.toSeq,
+        p.ringStarts.toSeq)),
+      trees.toSeq.sortBy(_._1), cfg)
+    val classified = stage("classified", fpCls) {
+      classes(tiles, spec, polys,
+        Covering.build(polys, spec.rows, spec.cols, CoverB), trees, cfg)
     }
 
-    val fpExpanded =
-      Checkpoint.fingerprint("expanded", fpScored, expandIters)
-    val expanded = store.stage("expanded", fpExpanded, Seq("scored")) {
-      // Expand runs over the full grid: absent cells are uncertain (0).
-      val full = s.range(1, spec.nCells + 1).toDF("cell_id")
-        .join(scored.select(col("cell_id"), col("class")), Seq("cell_id"),
-          "left")
-        .select(col("cell_id"),
-          coalesce(col("class"), lit(0L)).as("final_class"))
-      // the ArcGIS-Expand analog is distance-bounded (its NumberCells
-      // argument): exactly expandIters rings, documented — not a cap
-      Expand.run(s, spec, full, maxIters = expandIters,
+    val fpExp = Checkpoint.fingerprint("expanded", fpCls, expandIters)
+    val expanded = stage("expanded", fpExp, "classified") {
+      Expand.run(s, spec, classified, maxIters = expandIters,
         requireConvergence = false)
     }
 
-    val fpRaster = Checkpoint.fingerprint("rasterized", fpExpanded)
-    store.stage("rasterized", fpRaster, Seq("expanded")) {
-      Rasterize(spec, expanded, "final_class")
+    stage("class_gtiff", Checkpoint.fingerprint("class_gtiff", fpExp),
+        "expanded") {
+      Rasterize(spec, expanded.filter(col("final_class") >= 0),
+        "final_class", fmt = "gtiff")
     }
 
-    // Stage 13 — the reference's actual DELIVERABLE (R:510-551): dedup
-    // the loss observations by cell (group/mean, R:516-520), join the
-    // final class (R:521), then fan out per class: one CSV (R:524-549,
-    // the K1 sink) and one raster (the six rastOut calls) per class.
-    val fpMasks = Checkpoint.fingerprint("loss_masks", fpExpanded)
-    store.stage("loss_masks", fpMasks, Seq("expanded")) {
-      val lossMean = cells.select(col("cell_id"), col("loss"))
+    stage("loss_masks", Checkpoint.fingerprint("loss_masks", fpExp, "gtiff"),
+        "expanded") {
+      val loss = cellBands(tiles, spec)
         .groupBy("cell_id").agg(avg("loss").as("loss_mean"))
-      val joined = lossMean
-        .join(expanded.select("cell_id", "final_class"), Seq("cell_id"))
+      val joined = loss.join(
+        expanded.select("cell_id", "final_class"), Seq("cell_id"))
+        .filter(col("final_class") >= 0)
       graft.sinks.Csv.writeClassMasks(joined, s"$dir/csv", "final_class",
         "loss_mean", classes = 0 to 5)
-      Rasterize.byClass(spec, joined, "loss_mean", "final_class")
+      Rasterize.byClass(spec, joined, "loss_mean", "final_class",
+        fmt = "gtiff")
     }
-    (expanded, store)
+    (store, runs.result())
   }
 }

@@ -148,9 +148,6 @@ object Spatial {
     (hc(id * 7 + b) % 256).cast("double")
   private def probCol(id: Column, cls: Int): Column =
     (hc(id * 11 + cls) % 64).cast("double") / 64.0
-  private def trainCol(id: Column): Column =
-    when(hc(id * 13) % 64 < 4, (hc(id * 13 + 1) % 7).cast("int") + 1)
-      .otherwise(0)
 
   private def rowCol(id: Column): Column = floor((id - 1) / C).cast("long") + 1
   private def colCol(id: Column): Column = (id - 1) % C + 1
@@ -262,22 +259,6 @@ object Spatial {
       region_explode(pxCol(cellCol), pyCol(cellCol), World.polygons(spec))
         .as("region_id"))
 
-  /** Decoded long-format pixels: (cell_id, loss, b1..b5) from the tile
-    * table — decode expression + posexplode + key derivation at decode
-    * time (replaces the reference's positional zip, R:221-225). */
-  private def decodedCells(s: SparkSession, bands: Seq[Int]): DataFrame = {
-    val tiles = World.tilesDF(s, spec)
-    val zipped = arrays_zip(
-      (0 +: bands).map(b =>
-        decode_band(col("bytes"), col("fmt"), spec.pixPerTile, b).as(s"b$b")): _*)
-    tiles.select(col("tile_id"), posexplode(zipped).as(Seq("p", "v")))
-      .select(
-        (((floor(col("tile_id") / TX) * T + floor(col("p") / T)) * C +
-          (col("tile_id") % TX) * T + col("p") % T + 1).cast("long").as("cell_id") +:
-          col("v.b0").cast("double").as("loss") +:
-          bands.map(b => col(s"v.b$b").cast("double").as(s"b$b"))): _*)
-  }
-
   // ---- q20: grid indexing (G1): id <-> row/col/tile/centroid ------------
   private def q20(s: SparkSession, dir: String): DataFrame =
     spine(s).select(cellCol,
@@ -304,7 +285,7 @@ object Spatial {
 
   // ---- q22: decode -> explode -> zonal aggregation (S3/G5/A6) ------------
   private def q22(s: SparkSession, dir: String): DataFrame =
-    decodedCells(s, Seq(1))
+    graft.engine.Pipeline.cellBands(World.tilesDF(s, spec), spec, Seq(1))
       .groupBy(tileCol(cellCol).as("tile_id"))
       .agg(
         sum(when(col("loss") > 0, 1).otherwise(0)).as("n_loss_cells"),
@@ -426,10 +407,11 @@ object Spatial {
   // join chain R:209-228; mask-by-loss first R:236-242; NA->0 R:247;
   // region join + drop-null R:270-274) ------------------------------------
   private def q25(s: SparkSession, dir: String): DataFrame = {
-    val cells = decodedCells(s, Seq(1, 2))
+    val cells = graft.engine.Pipeline
+      .cellBands(World.tilesDF(s, spec), spec, Seq(1, 2))
       .filter(col("loss") > 0)
     val training = spine(s)
-      .select(cellCol, trainCol(cellCol).as("tclass"))
+      .select(cellCol, World.trainingClassCol(cellCol).as("tclass"))
       .filter(col("tclass") > 0)
     cells
       .join(training, Seq("cell_id"), "left")
@@ -519,8 +501,9 @@ object Spatial {
   }
 
   /** q29: fit-and-predict (M1-M3): per (region, driver) CART trees on
-    * the synthetic training cells, inference as codegen when-chains.
-    * Oracled: the fit is deterministic from the world, so the registry
+    * the synthetic training cells, inference as one packed-forest vote
+    * expression over the fused cell frame (Pipeline.fitPredictVote:
+    * region_explode -> loss > 0 -> ForestVote). Oracled: the fit is deterministic from the world, so the registry
     * fits the same trees at oracle-build time (pure Scala, no Spark —
     * `tinyTrees`) and emits them as CASE chains in q29Sql, putting
     * fit AND predict under the driver's DuckDB compare end to end. */
@@ -3022,7 +3005,7 @@ object Spatial {
 
   private def q134(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tr = spine(s).select(cellCol, trainCol(cellCol).as("cls"))
+    val tr = spine(s).select(cellCol, World.trainingClassCol(cellCol).as("cls"))
       .filter(col("cls") > 0)
     val counts = tr
       .select(col("cls"),
@@ -6447,7 +6430,7 @@ object Spatial {
         graft.engine.Pipeline.Config(confidenceFloor = 0.0, lossFloor = 0.0))
       .select(col("cell_id"), col("region_id"), col("class"))
     val labels = spine(s)
-      .select(cellCol, trainCol(cellCol).as("label"))
+      .select(cellCol, World.trainingClassCol(cellCol).as("label"))
       .filter(col("label") > 0 && !col("label").isin(6, 7))
     preds.join(labels, Seq("cell_id"))
       .groupBy("region_id", "label", "class")

@@ -193,6 +193,64 @@ case class DriverClassifyAt(first: Expression, second: Expression,
       fourth = newFourth)
 }
 
+/** The driver-class vote over an already-resolved region: children are
+  * (bytes, pixel, region); walks the region's nDrivers packed trees
+  * (Cart.PackedForest.leaf) and returns struct(class, confidence) —
+  * class is the first-max argmax (which.max, R:370), 0 under the
+  * strict confidence floor (R:382) or the loss floor (R:407);
+  * confidence is the maximum leaf probability, reported for every
+  * scored cell, floors or not. The registry's fit-and-predict surface
+  * (q29, q192) scores with it after region_explode has dropped the
+  * no-region cells. */
+case class ForestVote(first: Expression, second: Expression,
+    third: Expression, forest: Cart.PackedForest, nPix: Int,
+    lossFloor: Double, confFloor: Double)
+  extends TernaryExpression {
+
+  override def dataType: DataType = ForestVote.schema
+
+  override def nullSafeEval(bytes: Any, p: Any, region: Any): Any =
+    ForestVote.eval(forest, bytes.asInstanceOf[Array[Byte]],
+      p.asInstanceOf[Int], region.asInstanceOf[Int], nPix, lossFloor,
+      confFloor)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val pfRef = ctx.addReferenceObj("forest", forest,
+      classOf[Cart.PackedForest].getName)
+    val cls = ForestVote.getClass.getName.stripSuffix("$") + "$.MODULE$"
+    nullSafeCodeGen(ctx, ev, (bytes, p, region) =>
+      s"${ev.value} = $cls.eval($pfRef, $bytes, $p, $region, $nPix, " +
+        s"$lossFloor, $confFloor);")
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object ForestVote {
+  val schema: StructType = StructType(Seq(
+    StructField("class", LongType, nullable = false),
+    StructField("confidence", DoubleType, nullable = false)))
+
+  def eval(pf: Cart.PackedForest, bytes: Array[Byte], p: Int, region: Int,
+      nPix: Int, lossFloor: Double, confFloor: Double): InternalRow = {
+    val base = (region - 1) * pf.nDrivers
+    var best = Double.NegativeInfinity
+    var bestD = 0
+    var d = 0
+    while (d < pf.nDrivers) {
+      val prob = Cart.PackedForest.leaf(pf, pf.offsets(base + d), bytes, p,
+        nPix)
+      if (prob > best) { best = prob; bestD = d + 1 }
+      d += 1
+    }
+    val loss = Codec.floatAt(bytes, p).toDouble
+    val cls = if (loss < lossFloor || best < confFloor) 0L else bestD.toLong
+    new GenericInternalRow(Array[Any](cls, best))
+  }
+}
+
 /** One-pass media feature extraction over a binary payload: decode
   * band 0 in its ACTUAL format (f32/png16/gtiff via Codec) and emit
   * struct(mean_px, max_px, thumb_hash, n_frames) without materializing
@@ -3186,6 +3244,14 @@ object GraftFunctions {
     column(DriverClassifyAt(expression(bytes), expression(p),
       expression(px), expression(py), polys, forest, nPix, lossFloor,
       confFloor, blockConst, nbx, blockB))
+
+  /** struct(class, confidence) of the packed-forest vote at pixel `p`
+    * of an f32 payload, for a cell already known to lie in `region`. */
+  def forest_vote(bytes: Column, p: Column, region: Column,
+      forest: Cart.PackedForest, nPix: Int, lossFloor: Double,
+      confFloor: Double): Column =
+    column(ForestVote(expression(bytes), expression(p), expression(region),
+      forest, nPix, lossFloor, confFloor))
 
   /** Encode sparse in-tile (pixel, value) pairs to a tile payload
     * (NaN-filled f32 or georeferenced LZW GeoTIFF). */

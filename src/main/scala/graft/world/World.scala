@@ -170,6 +170,15 @@ object World {
   def trainingClass(id: Long): Option[Int] =
     if (h(id * 13) % 64 < 4) Some(1 + (h(id * 13 + 1) % 7).toInt) else None
 
+  /** `trainingClass` as a Spark Column over a cell-id column: the class
+    * 1..7, or 0 for an unlabeled cell. */
+  def trainingClassCol(
+      id: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.when
+    when(hCol(id * 13) % 64 < 4, (hCol(id * 13 + 1) % 7).cast("int") + 1)
+      .otherwise(0)
+  }
+
   /** Region polygons: nRegions vertical strips with inward-slanting
     * right edges. All non-axis edges have power-of-two y-extent so the
     * ray-cast intersection arithmetic is exactly dyadic (identical in

@@ -8,11 +8,12 @@ import graft.world.World
 
 /** End-to-end Spark tests: the golden oracle (a plain-Scala
   * transcription of the reference semantics, R:191-441, over in-memory
-  * collections) vs the engine; determinism across partitionings;
-  * PackedForest vs when-chain inference equality; input-table
-  * invariants (caption equality, phash recompute, PSNR >= 40 dB per
-  * BASELINE.json input_hint); salted aggregation correctness on skew;
-  * checkpoint/resume with partition lineage.
+  * collections) vs the engine's fused fit-and-vote, on the dyadic and
+  * the padded grid; PackedForest.classify vs the oracle's class;
+  * determinism across partitionings; input-table invariants (caption
+  * equality, phash recompute, PSNR >= 40 dB per BASELINE.json
+  * input_hint); salted aggregation correctness on skew; the model
+  * pipeline's checkpoint/resume with partition lineage.
   */
 class SparkEngineSpec extends SparkSpec {
 
@@ -35,7 +36,7 @@ class SparkEngineSpec extends SparkSpec {
 
     val training = (1L to spec.nCells).flatMap { id =>
       val r = region(id)
-      // mirrors featuresWithRegion: region first, label from the hash
+      // mirrors Pipeline.fit: region first, label from the hash
       if (r < 0) None
       else World.trainingClass(id) match {
         case Some(c) if c > 0 && !cfg.dropClasses(c) =>
@@ -65,16 +66,20 @@ class SparkEngineSpec extends SparkSpec {
   }
 
   test("golden: fitPredictVote matches the plain-Scala oracle exactly") {
-    val cfg = Pipeline.Config()
-    val engine = Pipeline.fitPredictVote(spark, spec, cfg).collect()
-      .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getDouble(3))))
-      .toMap
-    val oracle = oracleVote(spec, cfg)
-    assert(engine.keySet == oracle.keySet, "cell coverage differs")
-    val diffs = oracle.collect {
-      case (id, o) if engine(id) != o => (id, o, engine(id))
+    // no tiny-world cell has 0 < loss < 0.005, so the raised floor is
+    // what puts scored cells under the loss floor: their confidence
+    // must still be the maximum leaf probability
+    for (cfg <- Seq(Pipeline.Config(), Pipeline.Config(lossFloor = 0.5))) {
+      val engine = Pipeline.fitPredictVote(spark, spec, cfg).collect()
+        .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getDouble(3))))
+        .toMap
+      val oracle = oracleVote(spec, cfg)
+      assert(engine.keySet == oracle.keySet, "cell coverage differs")
+      val diffs = oracle.collect {
+        case (id, o) if engine(id) != o => (id, o, engine(id))
+      }
+      assert(diffs.isEmpty, s"$cfg first diffs: ${diffs.take(5)}")
     }
-    assert(diffs.isEmpty, s"first diffs: ${diffs.take(5)}")
   }
 
   test("golden on the padded grid (partial edge tiles, true-reference " +
@@ -93,7 +98,7 @@ class SparkEngineSpec extends SparkSpec {
     assert(diffs.isEmpty, s"first diffs: ${diffs.take(5)}")
   }
 
-  test("PackedForest.classify equals the when-chain vote per tile") {
+  test("PackedForest.classify equals the oracleVote class per tile") {
     val cfg = Pipeline.Config()
     // trees from the oracle path (same fit as the engine)
     val polys = World.polygons(spec)
@@ -127,8 +132,10 @@ class SparkEngineSpec extends SparkSpec {
   }
 
   test("determinism: identical results under different partitionings") {
-    val a = Pipeline.decodedCells(spark, spec).repartition(3)
-    val b = Pipeline.decodedCells(spark, spec).repartition(13)
+    def decoded = Pipeline.cellBands(World.tilesDF(spark, spec), spec,
+      1 until spec.nBands)
+    val a = decoded.repartition(3)
+    val b = decoded.repartition(13)
     val fp = (df: DataFrame) => df.orderBy("cell_id").collect().toSeq
     assert(fp(a) == fp(b))
   }
@@ -215,16 +222,47 @@ class SparkEngineSpec extends SparkSpec {
   test("checkpoint/resume: second run loads, invalidation recomputes " +
     "downstream only, partition lineage recorded") {
     val dir = graft.util.TempDirs.create("graft_ckpt").toString
-    val (out1, store1) = Pipeline.runCheckpointed(spark, spec, dir)
+    val cfg = Pipeline.Config()
+    val tiles = World.tilesDF(spark, spec)
+    val polys = World.polygons(spec)
+    val trees = Pipeline.fit(tiles, spec, polys, cfg)
+    val stages = Seq("classified", "expanded", "class_gtiff", "loss_masks")
+    def run(cfg: Pipeline.Config = cfg,
+        trees: Map[(Int, Int), Cart.Tree] = trees, iters: Int = 8)
+        : (DataFrame, Checkpoint.Store) = {
+      val (store, runs) = Pipeline.runModel(spark, spec, tiles, polys, trees,
+        cfg, dir, iters)
+      assert(runs.map(_.name) == stages && store.log.map(_._1) == stages)
+      (runs(1).df, store)
+    }
+    def all(store: Checkpoint.Store, how: String): Boolean =
+      store.log.forall(_._2 == how)
+    val (out1, store1) = run()
     val result1 = out1.orderBy("cell_id").collect().toSeq
-    assert(store1.log.forall(_._2 == "computed"), store1.log.toString)
+    assert(all(store1, "computed"), store1.log.toString)
+
+    // NoData as in the reference: zero-loss and no-region cells are -1
+    // in `classified` and stay -1 through Expand; every other cell
+    // carries the oracle's vote
+    val oracle = oracleVote(spec, cfg)
+    val classified = spark.read.parquet(s"$dir/stages/classified")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(classified.keySet == (1L to spec.nCells).toSet)
+    classified.foreach { case (id, c) =>
+      assert(c == oracle.get(id).fold(-1L)(_._2), s"cell $id")
+    }
+    result1.foreach { r =>
+      val id = r.getAs[Long]("cell_id")
+      assert((r.getAs[Long]("final_class") == -1L) == !oracle.contains(id),
+        s"cell $id")
+    }
 
     // lineage: per-stage partition metrics sum to the stage row count
-    val meta = store1.meta("scored").get
+    val meta = store1.meta("classified").get
     assert(meta.partitions.nonEmpty)
     assert(meta.partitions.map(_.records).sum == meta.rows)
     assert(meta.rows ==
-      spark.read.parquet(s"$dir/stages/scored").count())
+      spark.read.parquet(s"$dir/stages/classified").count())
 
     // each meta record reads back exactly as written: re-serialized by
     // Spark's JSON writer it gives the stored bytes
@@ -249,9 +287,11 @@ class SparkEngineSpec extends SparkSpec {
     assert(out1.schema == spark.read.parquet(s"$dir/stages/expanded").schema)
     val direct = new Checkpoint.Store(spark, s"$dir/direct")
     Seq[(String, () => DataFrame)](
-      "cells" -> (() => Pipeline.decodedCells(spark, spec)),
-      "features" -> (() => Pipeline.featuresWithRegion(spark, spec)),
-      "scored" -> (() => Pipeline.fitPredictVote(spark, spec)),
+      "cells" -> (() => Pipeline.cellBands(tiles, spec, 1 until spec.nBands)),
+      "classified" -> (() => Pipeline.classes(tiles, spec, polys,
+        Covering.build(polys, spec.rows, spec.cols, Pipeline.CoverB), trees,
+        cfg)),
+      "scored" -> (() => Pipeline.fitPredictVote(spark, spec, cfg)),
       "rasterized" -> (() => Rasterize(spec, out1, "final_class")),
       "loss_masks" -> (() => Rasterize.byClass(spec,
         out1.withColumn("loss_mean", lit(0.5)), "loss_mean", "final_class"))
@@ -263,8 +303,8 @@ class SparkEngineSpec extends SparkSpec {
     }
 
     // resume: everything loads, nothing recomputes, same answer
-    val (out2, store2) = Pipeline.runCheckpointed(spark, spec, dir)
-    assert(store2.log.forall(_._2 == "loaded"), store2.log.toString)
+    val (out2, store2) = run()
+    assert(all(store2, "loaded"), store2.log.toString)
     assert(out2.orderBy("cell_id").collect().toSeq == result1)
 
     // meta dirs written by Spark's JSON writer (older runs) still resume
@@ -272,8 +312,8 @@ class SparkEngineSpec extends SparkSpec {
       Seq(store1.meta(name).get).toDS().coalesce(1).write.mode("overwrite")
         .json(s"$dir/meta/$name")
     }
-    val (out2b, store2b) = Pipeline.runCheckpointed(spark, spec, dir)
-    assert(store2b.log.forall(_._2 == "loaded"), store2b.log.toString)
+    val (out2b, store2b) = run()
+    assert(all(store2b, "loaded"), store2b.log.toString)
     assert(out2b.orderBy("cell_id").collect().toSeq == result1)
 
     // the deliverable stage (R:510-551) wrote the six per-class CSVs
@@ -283,22 +323,31 @@ class SparkEngineSpec extends SparkSpec {
         .csv(s"$dir/csv/LossMask_class$k.csv")
       assert(csv.columns.toSeq == Seq("cell_id", "loss_mean"))
     }
-    // raster fan-out covers exactly the classes the expanded frame holds
-    // (the tiny fixture's CART vote can legitimately leave all cells
-    // uncertain — the per-class spread is pinned by q35/q37's oracle
-    // fixture instead, whose synthetic probabilities span classes 0-5)
+    // raster fan-out covers exactly the non-NoData classes the expanded
+    // frame holds (the tiny fixture's CART vote can legitimately leave
+    // all cells uncertain — the per-class spread is pinned by q35/q37's
+    // oracle fixture instead, whose synthetic probabilities span 0-5)
     val wantClasses = out1.select("final_class").distinct()
-      .collect().map(_.getLong(0)).toSet
+      .collect().map(_.getLong(0)).filter(_ >= 0).toSet
     val gotClasses = spark.read.parquet(s"$dir/stages/loss_masks")
       .select("class").distinct().collect().map(_.getLong(0)).toSet
     assert(gotClasses == wantClasses)
 
-    // config change invalidates scored + downstream, not the scan/PIP
-    val (_, store3) = Pipeline.runCheckpointed(spark, spec, dir,
-      Pipeline.Config(lossFloor = 0.01))
-    val m = store3.log.toMap
-    assert(m("cells") == "loaded" && m("features") == "loaded")
-    assert(m("scored") == "computed" && m("expanded") == "computed")
+    // the classify fingerprint covers the config and the trees: a floor
+    // change, then a refit alone, each recompute every stage
+    val floorCfg = cfg.copy(lossFloor = 0.01)
+    val (_, store3) = run(cfg = floorCfg)
+    assert(all(store3, "computed"), store3.log.toString)
+    val refit = trees.updated((1, 1), Cart.Leaf(0.75, 1, 0.0))
+    assert(refit != trees)
+    val (_, store4) = run(cfg = floorCfg, trees = refit)
+    assert(all(store4, "computed"), store4.log.toString)
+    // only the Expand ring count changed: classified loads, the rest
+    // recomputes
+    val (_, store5) = run(cfg = floorCfg, trees = refit, iters = 4)
+    assert(store5.log.toMap == Map("classified" -> "loaded",
+      "expanded" -> "computed", "class_gtiff" -> "computed",
+      "loss_masks" -> "computed"), store5.log.toString)
   }
 
   test("expand fixpoint: no uncertain cell with a classified neighbor " +
@@ -333,7 +382,7 @@ class SparkEngineSpec extends SparkSpec {
 
   test("rasterize inverts the decode scan (vector -> raster, K2)") {
     for (sp <- Seq(spec, padded)) {
-      val loss = Pipeline.decodedCells(spark, sp).select("cell_id", "loss")
+      val loss = Pipeline.cellBands(World.tilesDF(spark, sp), sp)
       // the encode is a codegen'd expression, not a ScalaUDF
       assert(!Rasterize(sp, loss, "loss").queryExecution.executedPlan
         .toString.contains("ScalaUDF"), "TileEncode must not be a UDF")
@@ -352,7 +401,7 @@ class SparkEngineSpec extends SparkSpec {
 
   test("Rasterize.byClass (one shuffle) equals per-class filter + " +
     "rasterize (six shuffles) byte-for-byte") {
-    val cls = Pipeline.decodedCells(spark, spec)
+    val cls = Pipeline.cellBands(World.tilesDF(spark, spec), spec)
       .select(col("cell_id"), col("loss"),
         (col("cell_id") % 4).as("final_class"))
     val got = Rasterize.byClass(spec, cls, "loss", "final_class")
@@ -371,7 +420,7 @@ class SparkEngineSpec extends SparkSpec {
   test("rasterize fmt=gtiff emits real georeferenced GeoTIFF tiles " +
     "(rastOut's GTiff write, R:70-71)") {
     import graft.core.GeoTiff
-    val loss = Pipeline.decodedCells(spark, spec).select("cell_id", "loss")
+    val loss = Pipeline.cellBands(World.tilesDF(spark, spec), spec)
     val tiles = Rasterize(spec, loss, "loss", fmt = "gtiff").collect()
     assert(tiles.length == spec.nTiles)
     tiles.foreach { r =>
@@ -413,20 +462,12 @@ class SparkEngineSpec extends SparkSpec {
     }.toArray
     val pf = Cart.PackedForest(Pipeline.fitTrees(training, spec.nRegions, cfg),
       spec.nRegions, Pipeline.NumDrivers)
-    val T = spec.tile; val TX = spec.tilesX; val C = spec.cols
-    val fused = World.tilesDF(spark, spec)
-      .select(col("tile_id"), col("bytes"),
-        explode(sequence(lit(0), lit(spec.pixPerTile - 1))).as("p"))
-      .select(
-        ((floor(col("tile_id") / TX) * T + floor(col("p") / T)) * C +
-          (col("tile_id") % TX) * T + col("p") % T + 1).cast("long")
-          .as("cell_id"), col("bytes"), col("p"))
-    val px = ((col("cell_id") - 1) % C).cast("double") + 0.5
-    val py = floor((col("cell_id") - 1) / C).cast("double") + 0.5
-    val got = fused.select(col("cell_id"),
-        driver_classify_at_covered(col("bytes"), col("p"), px, py, polys, pf,
-          blocks.const, blocks.nbx, B, spec.pixPerTile, cfg.lossFloor,
-          cfg.confidenceFloor).as("c"))
+    val T = spec.tile; val C = spec.cols
+    val got = Pipeline.cells(World.tilesDF(spark, spec), spec)
+      .select(col("cell_id"),
+        driver_classify_at_covered(col("bytes"), col("p"), Pipeline.px(spec),
+          Pipeline.py(spec), polys, pf, blocks.const, blocks.nbx, B,
+          spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (1L to spec.nCells).foreach { id =>
       val r = Geom.regionOf(polys, World.px(spec, id), World.py(spec, id))
@@ -641,12 +682,15 @@ class SparkEngineSpec extends SparkSpec {
       .filter(col("region_id").isNotNull)
     assert(q21Like.orderBy("cell_id").collect().toSeq ==
       reference.orderBy("cell_id").collect().toSeq)
-    // the features-stage shape: decoded cells -> region rows, downstream
-    // filter on another column must not re-introduce a second ray-cast
-    val feats = Pipeline.featuresWithRegion(spark, spec)
-      .filter(col("loss") > 0)
-    assert(countRegionof(feats) == 1,
-      s"one ray-cast per row:\n${feats.queryExecution.executedPlan}")
+    // the q29 scoring shape: fused cells -> region rows -> loss > 0 ->
+    // vote; the loss filter must not re-introduce a second ray-cast, and
+    // the forest is one expression, not a CASE WHEN chain per tree
+    val scored = Pipeline.fitPredictVote(spark, spec)
+    val plan = scored.queryExecution.executedPlan.toString
+    assert(countRegionof(scored) == 1, s"one ray-cast per row:\n$plan")
+    assert(plan.sliding("forestvote(".length).count(_ == "forestvote(") == 1,
+      s"one forest expression:\n$plan")
+    assert(!plan.contains("CASE WHEN"), s"no when-chain trees:\n$plan")
   }
 
   test("SQL function surface: GraftExtensions registers the engine " +
