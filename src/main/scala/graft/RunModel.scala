@@ -42,7 +42,7 @@ object RunModel {
     Headline.ensureTiles(s)
     val trees = Headline.loadOrFitTrees(s)
     val (store, stages) = Pipeline.runModel(s, spec,
-      s.read.parquet(Headline.tilesPath), Headline.polys, trees,
+      Headline.readTiles(s), Headline.polys, trees,
       Pipeline.Config(), dir)
     val report = new StringBuilder
     report ++= "# RUNMODEL — full pipeline at reference scale\n\n"

@@ -70,7 +70,11 @@ object Cart {
     * the root of tree (region, driver d+1). */
   final case class PackedForest(nDrivers: Int, offsets: Array[Int],
       feat: Array[Int], thr: Array[Double], left: Array[Int],
-      right: Array[Int], value: Array[Double])
+      right: Array[Int], value: Array[Double]) {
+    /** True when some tree has a split: only then does the walk read a
+      * predictor band, so only then is the band payload an input. */
+    def hasSplit: Boolean = feat.exists(_ >= 0)
+  }
 
   object PackedForest {
     def apply(trees: Map[(Int, Int), Tree], nRegions: Int,
@@ -105,9 +109,16 @@ object Cart {
       * (which.max semantics, R:370), strict <confFloor -> 0 (R:382),
       * loss (band 0) < lossFloor -> 0 (R:407). */
     def classify(pf: PackedForest, bytes: Array[Byte], p: Int, region: Int,
-        nPix: Int, lossFloor: Double, confFloor: Double): Long = {
-      val loss = Codec.floatAt(bytes, p).toDouble
-      if (loss < lossFloor) return 0L
+        nPix: Int, lossFloor: Double, confFloor: Double): Long =
+      classify(pf, bytes, bytes, p, region, nPix, lossFloor, confFloor)
+
+    /** classify() with the loss read from `loss`, an f32 payload whose
+      * element p is pixel p's loss (the tile table's `loss` column, or
+      * the band payload itself, whose band 0 comes first). */
+    def classify(pf: PackedForest, loss: Array[Byte], bytes: Array[Byte],
+        p: Int, region: Int, nPix: Int, lossFloor: Double,
+        confFloor: Double): Long = {
+      if (Codec.floatAt(loss, p).toDouble < lossFloor) return 0L
       var best = Double.NegativeInfinity
       var bestD = 0
       val base = (region - 1) * pf.nDrivers
@@ -158,11 +169,20 @@ object Cart {
     def classifyAtCovered(pf: PackedForest, polys: Array[Polygon],
         blockConst: Array[Int], nbx: Int, b: Int,
         bytes: Array[Byte], p: Int, px: Double, py: Double, nPix: Int,
+        lossFloor: Double, confFloor: Double): Long =
+      classifyAtCovered(pf, polys, blockConst, nbx, b, bytes, bytes, p, px,
+        py, nPix, lossFloor, confFloor)
+
+    /** classifyAtCovered() with the loss read from `loss` (see the
+      * loss-payload classify). */
+    def classifyAtCovered(pf: PackedForest, polys: Array[Polygon],
+        blockConst: Array[Int], nbx: Int, b: Int, loss: Array[Byte],
+        bytes: Array[Byte], p: Int, px: Double, py: Double, nPix: Int,
         lossFloor: Double, confFloor: Double): Long = {
       val c = blockConst((py / b).toInt * nbx + (px / b).toInt)
       val r = if (c != Int.MinValue) c else Geom.regionOf(polys, px, py)
       if (r < 0) -1L
-      else classify(pf, bytes, p, r, nPix, lossFloor, confFloor)
+      else classify(pf, loss, bytes, p, r, nPix, lossFloor, confFloor)
     }
   }
 

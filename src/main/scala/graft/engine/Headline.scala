@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.core.Cart
 import graft.sql.GraftFunctions._
 import graft.world.{World, WorldSpec}
@@ -20,14 +21,19 @@ import graft.world.{World, WorldSpec}
   * columnar scan.
   *
   * The timed pipeline is FUSED: only the pixel index is exploded; every
-  * band value is read lazily from the tile's binary payload with the
+  * band value is read lazily from a binary payload with the
   * zero-allocation FloatAt expression. Within the single whole-stage-
-  * codegen stage the payload stays one byte[] reference per tile — no
+  * codegen stage each payload stays one byte[] reference per tile — no
   * band arrays, no per-cell structs, no 86-field rows are ever
   * materialized (the naive arrays_zip + posexplode formulation was
   * measured GC-bound and scaled at ~0.5 efficiency; this shape is
-  * compute-bound). Stages:
-  *   scan (parquet; column pruning reads only tile_id + bytes)
+  * compute-bound). The loss band has its own payload column (`loss`,
+  * 16 KB a tile) beside the 86-band `bytes` (1.41 MB): the plan reads
+  * `bytes` only when the forest has a split, so for a split-free
+  * forest the scan neither decompresses nor copies the band payload.
+  * Stages:
+  *   scan (parquet; column pruning reads only tile_id + loss, and
+  *      bytes when the forest has a split)
   *   -> explode pixel index (in-grid guard drops edge padding)
   *   -> GridH3 (Goode inverse projection + hierarchical encode)
   *   -> DriverClassifyAt: block-covered PIP (97% of 8x8 blocks are
@@ -71,9 +77,25 @@ object Headline {
     * slice measured raw scaling 0.71; granularity is the cheap half of
     * that gap, the rest is the shared-DRAM ceiling). */
   val Files = 256
-  /** Spec-keyed path so a spec change invalidates the materialization. */
-  val tilesPath: String =
-    s"/tmp/graft_bench_tiles_${spec.rows}x${spec.cols}x${spec.nBands}_f$Files"
+  /** Tag of the table's column layout (World.tileSchema): a table
+    * written with another layout sits at another path, so it is rebuilt,
+    * never read. */
+  val Layout = "loss"
+  /** Spec- and layout-keyed path so a spec or schema change invalidates
+    * the materialization. */
+  val tilesPath: String = s"/tmp/graft_bench_tiles_${spec.rows}x" +
+    s"${spec.cols}x${spec.nBands}_f${Files}_$Layout"
+
+  /** Schema of the materialized table: the tile columns plus the
+    * `slice` partition column. */
+  val tableSchema: StructType =
+    World.tileSchema.add(StructField("slice", IntegerType))
+
+  /** The materialized tile table at `path`, read with its known schema
+    * (no schema-inference job). A table without slice directories (a
+    * cut-out of the full one) reads `slice` as null. */
+  def readTiles(s: SparkSession, path: String = tilesPath): DataFrame =
+    s.read.schema(tableSchema).parquet(path)
 
   /** Materialize the tile table to parquet once. */
   def ensureTiles(s: SparkSession): Unit = {
@@ -106,7 +128,7 @@ object Headline {
     } else {
       // the ~1/37 tile sample: prep, not part of the timed job
       val trees = Pipeline.fit(
-        s.read.parquet(tilesPath).filter(col("tile_id") % 37 === 0), spec,
+        readTiles(s).filter(col("tile_id") % 37 === 0), spec,
         polys, Pipeline.Config())
       val out = new java.io.ObjectOutputStream(new java.io.FileOutputStream(f))
       try out.writeObject(trees) finally out.close()
@@ -128,7 +150,7 @@ object Headline {
   def plan(s: SparkSession, trees: Map[(Int, Int), Cart.Tree],
       slice: Int = 0, nSlices: Int = 1): DataFrame = {
     require(nSlices == 1 || nSlices == Slices, s"nSlices must be 1 or $Slices")
-    val tiles = s.read.parquet(tilesPath)
+    val tiles = readTiles(s)
     planFrom(if (nSlices == 1) tiles
       else tiles.filter(col("slice") === slice), trees)
   }
@@ -139,12 +161,12 @@ object Headline {
     * to the Expand stage of the full model run. Same fused
     * single-ray-cast projection as the benchmark plan. */
   def cellClasses(s: SparkSession, trees: Map[(Int, Int), Cart.Tree]): DataFrame =
-    Pipeline.classes(s.read.parquet(tilesPath), spec, polys, cover, trees,
+    Pipeline.classes(readTiles(s), spec, polys, cover, trees,
       Pipeline.Config())
 
-  /** Per-cell loss (band 0) from the tile table. */
+  /** Per-cell loss (band 0) from the tile table's `loss` column. */
   def cellLoss(s: SparkSession): DataFrame =
-    Pipeline.cellBands(s.read.parquet(tilesPath), spec)
+    Pipeline.cellBands(readTiles(s), spec)
 
   /** The headline plan over a given tile table (parquet scan or a
     * cached/cluster-local source). */
@@ -161,7 +183,7 @@ object Headline {
     val classed = Pipeline.cells(tiles, spec)
       .select(col("cell_id"),
         grid_h3(col("cell_id"), spec.rows, spec.cols, H3Res).as("h3"),
-        driver_classify_at_covered(col("bytes"), col("p"),
+        driver_classify_at_covered(col("loss"), col("bytes"), col("p"),
           Pipeline.px(spec), Pipeline.py(spec), polys, forest, cover.const,
           cover.nbx, CoverB, spec.pixPerTile, cfg.lossFloor,
           cfg.confidenceFloor).as("class"),

@@ -35,7 +35,7 @@ object Multimodal {
   def syntheticMedia(s: SparkSession): DataFrame = {
     import s.implicits._
     val spec = World.tiny
-    val base = World.tilesDF(s, spec).drop("tile_id")
+    val base = World.tilesDF(s, spec).drop("tile_id", "loss")
     val reEncoded = s.range(0, spec.nTiles).flatMap { t =>
       val ti = t.toInt
       val bands = World.tileBands(spec, ti)

@@ -14,7 +14,9 @@ import graft.world.{World, WorldSpec}
   * Architecture notes (vs the reference):
   *  - the 85-fold join chain (R:209-228/249-269) is ONE pixel-index
   *    explode per tile (`cells`); every band is read lazily from the
-  *    tile payload (`band`) — no join, no band arrays, no wide rows;
+  *    tile payload (`band`) — no join, no band arrays, no wide rows.
+  *    The loss band has its own payload column (`loss`), so a plan
+  *    that needs only the loss never scans the 86-band `bytes`;
   *  - training is ~5k rows (R:204-205): collected to the driver and fit
   *    there (SURVEY.md §2.9 M1); the 35 fitted trees ship back as one
   *    `Cart.PackedForest` referenced by a single codegen'd expression
@@ -43,28 +45,31 @@ object Pipeline {
       cartParams: Cart.Params = Cart.Params(),
       pruneCp: Double = 0.02) // R:313
 
-  /** The fused cell frame: (cell_id, bytes, p), one row per in-grid
-    * pixel of `tiles`. Band values are NOT decoded here; consumers read
-    * them lazily via `band`. The in-grid guard (two integer compares,
-    * trivial beside the ray-cast) drops the NaN padding of partial edge
-    * tiles. */
+  /** The fused cell frame: (cell_id, bytes, loss, p), one row per
+    * in-grid pixel of `tiles`. Band values are NOT decoded here;
+    * consumers read them lazily via `band`, and a plan that reads only
+    * band 0 leaves `bytes` unreferenced, so the scan drops it. The
+    * in-grid guard (two integer compares, trivial beside the ray-cast)
+    * drops the NaN padding of partial edge tiles. */
   def cells(tiles: DataFrame, spec: WorldSpec): DataFrame = {
     val T = spec.tile
     val TX = spec.tilesX
     val C = spec.cols
     val gr = floor(col("tile_id") / TX) * T + floor(col("p") / T)
     val gc = (col("tile_id") % TX) * T + col("p") % T
-    val exploded = tiles.select(col("tile_id"), col("bytes"),
+    val exploded = tiles.select(col("tile_id"), col("bytes"), col("loss"),
       explode(sequence(lit(0), lit(spec.pixPerTile - 1))).as("p"))
     val inGrid = if (!spec.padded) exploded
       else exploded.filter(gr < spec.rows && gc < spec.cols)
     inGrid.select((gr * C + gc + 1).cast("long").as("cell_id"),
-      col("bytes"), col("p"))
+      col("bytes"), col("loss"), col("p"))
   }
 
-  /** Band b of the current `cells` pixel, read straight from the payload. */
+  /** Band b of the current `cells` pixel, read straight from its
+    * payload: band 0 (the loss) from `loss`, bands >= 1 from `bytes`. */
   def band(spec: WorldSpec, b: Int): Column =
-    float_at(col("bytes"), col("p") + lit(b * spec.pixPerTile))
+    if (b == 0) float_at(col("loss"), col("p")).cast("double")
+    else float_at(col("bytes"), col("p") + lit(b * spec.pixPerTile))
       .cast("double")
 
   /** Centroid of the `cell_id` column's cell (World.px / World.py). */
@@ -130,12 +135,13 @@ object Pipeline {
     val forest = Cart.PackedForest(fit(tiles, spec, polys, cfg),
       spec.nRegions, NumDrivers)
     cells(tiles, spec)
-      .select(col("cell_id"), col("bytes"), col("p"),
+      .select(col("cell_id"), col("bytes"), col("loss"), col("p"),
         region_explode(px(spec), py(spec), polys).as("region_id"))
       .filter(band(spec, 0) > 0)
       .select(col("cell_id"), col("region_id"),
-        forest_vote(col("bytes"), col("p"), col("region_id"), forest,
-          spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor).as("vote"))
+        forest_vote(col("loss"), col("bytes"), col("p"), col("region_id"),
+          forest, spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor)
+          .as("vote"))
       .select(col("cell_id"), col("region_id"), col("vote.class"),
         col("vote.confidence"))
   }
@@ -144,7 +150,8 @@ object Pipeline {
     * final_class) with -1 = NoData (zero loss, or outside every region
     * — the reference's NA cells, absent from its rasters). One
     * DriverClassifyAt per cell resolves the region from `cover` or by
-    * one exact ray-cast, then votes. */
+    * one exact ray-cast, then votes; it reads `bytes` only when the
+    * forest has a split. */
   def classes(tiles: DataFrame, spec: WorldSpec, polys: Array[Polygon],
       cover: Covering.Blocks, trees: Map[(Int, Int), Cart.Tree],
       cfg: Config): DataFrame = {
@@ -152,9 +159,9 @@ object Pipeline {
     cells(tiles, spec)
       .select(col("cell_id"),
         when(band(spec, 0) <= 0.0, -1L)
-          .otherwise(driver_classify_at_covered(col("bytes"), col("p"),
-            px(spec), py(spec), polys, forest, cover.const, cover.nbx,
-            cover.b, spec.pixPerTile, cfg.lossFloor,
+          .otherwise(driver_classify_at_covered(col("loss"), col("bytes"),
+            col("p"), px(spec), py(spec), polys, forest, cover.const,
+            cover.nbx, cover.b, spec.pixPerTile, cfg.lossFloor,
             cfg.confidenceFloor)).as("final_class"))
   }
 

@@ -147,8 +147,11 @@ case class FloatAt(left: Expression, right: Expression)
 
 /** The driver-class vote (per-pixel CART packed-forest walk + argmax +
   * confidence/loss floors, Cart.PackedForest.classify) fused with the
-  * region lookup: children are (bytes, pixel, px, py); the expression
-  * resolves the point's region ONCE — from the block cover
+  * region lookup: children are (loss, bytes, pixel, px, py), where
+  * `loss` is an f32 payload holding pixel p's loss at element p (the
+  * tile table's `loss` column, or the band payload itself) and `bytes`
+  * the band payload the tree walk reads its predictors from. The
+  * expression resolves the point's region ONCE — from the block cover
   * (`blockConst`, Covering.Blocks.const, `nbx` blocks wide, `blockB`
   * grid units per block) when its block is region-constant, else by an
   * exact ray-cast against the packed polygon set — and either
@@ -159,19 +162,21 @@ case class FloatAt(left: Expression, right: Expression)
   * pushed-down Filter, once in the collapsed Project) — with 1280-edge
   * polygons the PIP is the compute core of the headline metric, so the
   * double evaluation halves throughput. */
-case class DriverClassifyAt(first: Expression, second: Expression,
-    third: Expression, fourth: Expression, polys: Array[Polygon],
+case class DriverClassifyAt(loss: Expression, bytes: Expression,
+    p: Expression, px: Expression, py: Expression, polys: Array[Polygon],
     forest: Cart.PackedForest, nPix: Int, lossFloor: Double,
     confFloor: Double, blockConst: Array[Int], nbx: Int, blockB: Int)
-  extends QuaternaryExpression {
+  extends QuinaryExpression {
 
+  override def children: Seq[Expression] = Seq(loss, bytes, p, px, py)
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(bytes: Any, p: Any, px: Any, py: Any): Any =
+  override def nullSafeEval(loss: Any, bytes: Any, p: Any, px: Any,
+      py: Any): Any =
     Cart.PackedForest.classifyAtCovered(forest, polys, blockConst, nbx,
-      blockB, bytes.asInstanceOf[Array[Byte]], p.asInstanceOf[Int],
-      px.asInstanceOf[Double], py.asInstanceOf[Double], nPix, lossFloor,
-      confFloor)
+      blockB, loss.asInstanceOf[Array[Byte]], bytes.asInstanceOf[Array[Byte]],
+      p.asInstanceOf[Int], px.asInstanceOf[Double], py.asInstanceOf[Double],
+      nPix, lossFloor, confFloor)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val pfRef = ctx.addReferenceObj("forest", forest,
@@ -180,10 +185,47 @@ case class DriverClassifyAt(first: Expression, second: Expression,
       classOf[Polygon].getName + "[]")
     val cls = Cart.PackedForest.getClass.getName.stripSuffix("$") + "$.MODULE$"
     val bcRef = ctx.addReferenceObj("blockConst", blockConst, "int[]")
-    nullSafeCodeGen(ctx, ev, (bytes, p, px, py) =>
+    nullSafeCodeGen(ctx, ev, (loss, bytes, p, px, py) =>
       s"${ev.value} = $cls.classifyAtCovered($pfRef, $polysRef, $bcRef, " +
-        s"$nbx, $blockB, $bytes, $p, $px, $py, $nPix, $lossFloor, " +
+        s"$nbx, $blockB, $loss, $bytes, $p, $px, $py, $nPix, $lossFloor, " +
         s"$confFloor);")
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): Expression =
+    copy(loss = c(0), bytes = c(1), p = c(2), px = c(3), py = c(4))
+}
+
+/** The driver-class vote over an already-resolved region: children are
+  * (loss, bytes, pixel, region), `loss` and `bytes` as in
+  * DriverClassifyAt; walks the region's nDrivers packed trees
+  * (Cart.PackedForest.leaf) and returns struct(class, confidence) —
+  * class is the first-max argmax (which.max, R:370), 0 under the
+  * strict confidence floor (R:382) or the loss floor (R:407);
+  * confidence is the maximum leaf probability, reported for every
+  * scored cell, floors or not. The registry's fit-and-predict surface
+  * (q29, q192) scores with it after region_explode has dropped the
+  * no-region cells. */
+case class ForestVote(first: Expression, second: Expression,
+    third: Expression, fourth: Expression, forest: Cart.PackedForest,
+    nPix: Int, lossFloor: Double, confFloor: Double)
+  extends QuaternaryExpression {
+
+  override def dataType: DataType = ForestVote.schema
+
+  override def nullSafeEval(loss: Any, bytes: Any, p: Any,
+      region: Any): Any =
+    ForestVote.eval(forest, loss.asInstanceOf[Array[Byte]],
+      bytes.asInstanceOf[Array[Byte]], p.asInstanceOf[Int],
+      region.asInstanceOf[Int], nPix, lossFloor, confFloor)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val pfRef = ctx.addReferenceObj("forest", forest,
+      classOf[Cart.PackedForest].getName)
+    val cls = ForestVote.getClass.getName.stripSuffix("$") + "$.MODULE$"
+    nullSafeCodeGen(ctx, ev, (loss, bytes, p, region) =>
+      s"${ev.value} = $cls.eval($pfRef, $loss, $bytes, $p, $region, " +
+        s"$nPix, $lossFloor, $confFloor);")
   }
 
   override protected def withNewChildrenInternal(newFirst: Expression,
@@ -193,48 +235,14 @@ case class DriverClassifyAt(first: Expression, second: Expression,
       fourth = newFourth)
 }
 
-/** The driver-class vote over an already-resolved region: children are
-  * (bytes, pixel, region); walks the region's nDrivers packed trees
-  * (Cart.PackedForest.leaf) and returns struct(class, confidence) —
-  * class is the first-max argmax (which.max, R:370), 0 under the
-  * strict confidence floor (R:382) or the loss floor (R:407);
-  * confidence is the maximum leaf probability, reported for every
-  * scored cell, floors or not. The registry's fit-and-predict surface
-  * (q29, q192) scores with it after region_explode has dropped the
-  * no-region cells. */
-case class ForestVote(first: Expression, second: Expression,
-    third: Expression, forest: Cart.PackedForest, nPix: Int,
-    lossFloor: Double, confFloor: Double)
-  extends TernaryExpression {
-
-  override def dataType: DataType = ForestVote.schema
-
-  override def nullSafeEval(bytes: Any, p: Any, region: Any): Any =
-    ForestVote.eval(forest, bytes.asInstanceOf[Array[Byte]],
-      p.asInstanceOf[Int], region.asInstanceOf[Int], nPix, lossFloor,
-      confFloor)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pfRef = ctx.addReferenceObj("forest", forest,
-      classOf[Cart.PackedForest].getName)
-    val cls = ForestVote.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, p, region) =>
-      s"${ev.value} = $cls.eval($pfRef, $bytes, $p, $region, $nPix, " +
-        s"$lossFloor, $confFloor);")
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object ForestVote {
   val schema: StructType = StructType(Seq(
     StructField("class", LongType, nullable = false),
     StructField("confidence", DoubleType, nullable = false)))
 
-  def eval(pf: Cart.PackedForest, bytes: Array[Byte], p: Int, region: Int,
-      nPix: Int, lossFloor: Double, confFloor: Double): InternalRow = {
+  def eval(pf: Cart.PackedForest, loss: Array[Byte], bytes: Array[Byte],
+      p: Int, region: Int, nPix: Int, lossFloor: Double,
+      confFloor: Double): InternalRow = {
     val base = (region - 1) * pf.nDrivers
     var best = Double.NegativeInfinity
     var bestD = 0
@@ -245,8 +253,8 @@ object ForestVote {
       if (prob > best) { best = prob; bestD = d + 1 }
       d += 1
     }
-    val loss = Codec.floatAt(bytes, p).toDouble
-    val cls = if (loss < lossFloor || best < confFloor) 0L else bestD.toLong
+    val cls = if (Codec.floatAt(loss, p).toDouble < lossFloor ||
+      best < confFloor) 0L else bestD.toLong
     new GenericInternalRow(Array[Any](cls, best))
   }
 }
@@ -3198,12 +3206,14 @@ object GraftFunctions {
     * folded into a Generate instead: explode(array_remove(array(r), -1))
     * references the expression once and emits 0 or 1 rows. */
   def region_explode(px: Column, py: Column, polys: Array[Polygon]): Column = {
-    import org.apache.spark.sql.functions.{array, array_compact, array_remove, explode, lit}
-    // array_compact: null coordinates (possible when px/py come from
-    // nullable source columns) count as no-region and emit no row,
-    // like the -1 sentinel, instead of a null region row
-    explode(array_compact(array_remove(array(region_of_neg1(px, py, polys)),
-      lit(-1))))
+    import org.apache.spark.sql.functions.{array, array_remove, coalesce, explode, lit}
+    // coalesce: null coordinates (possible when px/py come from nullable
+    // source columns) count as no-region and emit no row, like the -1
+    // sentinel, instead of a null region row. Every function here has
+    // generated code (array_compact would lower to a filter lambda,
+    // which runs the whole Generate, ray-cast included, interpreted).
+    explode(array_remove(array(coalesce(region_of_neg1(px, py, polys),
+      lit(-1))), lit(-1)))
   }
 
   /** Sequential-order dot product of two array<double> columns. */
@@ -3233,25 +3243,49 @@ object GraftFunctions {
     column(AudioFingerprint(expression(bytes), winSize, nWin))
 
   /** Per-pixel driver-class vote with the region PIP folded in, -1 for
-    * points outside every polygon. Points in region-constant blocks of
-    * the cover skip the ray-cast entirely (the q72 scale path fused
-    * into the vote; bit-equal to an exact PIP by Covering's parity
-    * argument); the rest pay one ray-cast. */
+    * points outside every polygon, over an f32 band payload whose band 0
+    * is the loss. Points in region-constant blocks of the cover skip the
+    * ray-cast entirely (the q72 scale path fused into the vote;
+    * bit-equal to an exact PIP by Covering's parity argument); the rest
+    * pay one ray-cast. */
   def driver_classify_at_covered(bytes: Column, p: Column, px: Column,
       py: Column, polys: Array[Polygon], forest: Cart.PackedForest,
       blockConst: Array[Int], nbx: Int, blockB: Int, nPix: Int,
       lossFloor: Double, confFloor: Double): Column =
-    column(DriverClassifyAt(expression(bytes), expression(p),
-      expression(px), expression(py), polys, forest, nPix, lossFloor,
-      confFloor, blockConst, nbx, blockB))
+    column(DriverClassifyAt(expression(bytes), expression(bytes),
+      expression(p), expression(px), expression(py), polys, forest, nPix,
+      lossFloor, confFloor, blockConst, nbx, blockB))
 
-  /** struct(class, confidence) of the packed-forest vote at pixel `p`
-    * of an f32 payload, for a cell already known to lie in `region`. */
-  def forest_vote(bytes: Column, p: Column, region: Column,
+  /** driver_classify_at_covered() with the loss read from its own f32
+    * payload `loss` (element p = pixel p's loss). The band payload
+    * `bytes` is an input only when the forest has a split: a split-free
+    * forest reads no predictor band, so the plan does not reference
+    * `bytes` and column pruning can drop it from the scan. */
+  def driver_classify_at_covered(loss: Column, bytes: Column, p: Column,
+      px: Column, py: Column, polys: Array[Polygon],
+      forest: Cart.PackedForest, blockConst: Array[Int], nbx: Int,
+      blockB: Int, nPix: Int, lossFloor: Double, confFloor: Double): Column =
+    column(DriverClassifyAt(expression(loss),
+      expression(predictors(bytes, forest)), expression(p), expression(px),
+      expression(py), polys, forest, nPix, lossFloor, confFloor, blockConst,
+      nbx, blockB))
+
+  /** struct(class, confidence) of the packed-forest vote at pixel `p`,
+    * for a cell already known to lie in `region`: loss from the f32
+    * payload `loss`, predictor bands from `bytes` (an input only when
+    * the forest has a split, as in driver_classify_at_covered). */
+  def forest_vote(loss: Column, bytes: Column, p: Column, region: Column,
       forest: Cart.PackedForest, nPix: Int, lossFloor: Double,
       confFloor: Double): Column =
-    column(ForestVote(expression(bytes), expression(p), expression(region),
-      forest, nPix, lossFloor, confFloor))
+    column(ForestVote(expression(loss),
+      expression(predictors(bytes, forest)), expression(p),
+      expression(region), forest, nPix, lossFloor, confFloor))
+
+  /** The band payload the forest walk reads: `bytes`, or an empty
+    * literal when no tree has a split (the walk then reads no band). */
+  private def predictors(bytes: Column, forest: Cart.PackedForest): Column =
+    if (forest.hasSplit) bytes
+    else org.apache.spark.sql.functions.lit(Array.emptyByteArray)
 
   /** Encode sparse in-tile (pixel, value) pairs to a tile payload
     * (NaN-filled f32 or georeferenced LZW GeoTIFF). */

@@ -16,7 +16,8 @@ import graft.core.{Codec, GridSpec, Polygon}
   *    driver's oracle compare full coverage of the decode -> index ->
   *    join -> aggregate path with bit-exact floats.
   *
-  * Bands (stored band-major as f32 in the tile payload):
+  * Bands (stored band-major as f32 in the tile payload `bytes`; band 0
+  * is also stored alone in the `loss` column):
   *   band 0      = loss fraction in [0,1), ~37% zeros, dyadic /1024
   *                 (LossMaskFull analog, R:116; floor rule R:407)
   *   bands 1..5  = predictor variables, small integers 0..255
@@ -281,10 +282,15 @@ object World {
     StructField("fmt", StringType, nullable = false),
     StructField("caption", StringType, nullable = false),
     StructField("phash", LongType, nullable = false),
-    StructField("tile_id", IntegerType, nullable = false)))
+    StructField("tile_id", IntegerType, nullable = false),
+    StructField("loss", BinaryType, nullable = false)))
 
   /** The Iceberg-shaped image+caption table (BASELINE.json input_hint):
-    * one row per tile, bytes = band-major f32 payload, generated
+    * one row per tile, bytes = band-major f32 payload of all nBands
+    * bands, loss = band 0 again as its own f32 payload of pixPerTile
+    * floats (the reference keeps the loss mask apart from its predictor
+    * rasters, R:116 vs R:142-166). A loss-only reader then scans the
+    * small `loss` column and column pruning drops `bytes`. Generated
     * distributed (one task per range partition, rows reproducible in
     * isolation). */
   def tilesDF(spark: SparkSession, spec: WorldSpec): DataFrame = {
@@ -298,7 +304,8 @@ object World {
         val col0 = (ti % spec.tilesX) * spec.tile
         Row(f"tile_$ti%05d", bytes, spec.tile, spec.tile, "f32",
           s"tile r$row0 c$col0 ${spec.tile}x${spec.tile} bands=${spec.nBands}",
-          Codec.phash(bands(0), spec.tile, spec.tile), ti)
+          Codec.phash(bands(0), spec.tile, spec.tile), ti,
+          Codec.encodeF32(Array(bands(0))))
       }
     spark.createDataFrame(rdd, tileSchema)
   }

@@ -4,12 +4,14 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.GraftSparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import graft.engine.Checkpoint
+import org.apache.spark.sql.functions.col
+import graft.engine.{Checkpoint, Headline}
+import graft.world.World
 
-/** Listener-counted Spark jobs of the model's output writers, AQE off
-  * (with AQE on every shuffle stage is a job of its own): the class
-  * fan-out is one write whatever the class count, and a computed
-  * checkpoint stage adds only its snapshot write to its body's jobs. */
+/** Listener-counted Spark jobs, AQE off (with AQE on every shuffle
+  * stage is a job of its own): the class fan-out is one write whatever
+  * the class count, a computed checkpoint stage adds only its snapshot
+  * write to its body's jobs, and reading the tile table runs none. */
 class JobCountSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
@@ -60,5 +62,30 @@ class JobCountSpec extends SparkSpec {
     assert(store.log.toList == List("s" -> "computed"))
     assert(bodyJobs == 1 && stageJobs == bodyJobs + 1,
       s"body $bodyJobs, stage $stageJobs")
+  }
+
+  test("Headline.readTiles runs no schema-inference job, on the sliced " +
+    "table and on a cut-out without slice directories") {
+    val spec = World.tiny
+    val sliced = graft.util.TempDirs.create("graft_jobs_tiles").toString
+    World.tilesDF(spark, spec)
+      .withColumn("slice", (col("tile_id") * 4 / spec.nTiles).cast("int"))
+      .write.mode("overwrite").partitionBy("slice").parquet(sliced)
+    val cut = graft.util.TempDirs.create("graft_jobs_cut").toString
+    spark.read.parquet(sliced).filter(col("tile_id") < 5).drop("slice")
+      .write.mode("overwrite").parquet(cut)
+    // the inferring read is what the known schema saves
+    assert(jobs(spark.read.parquet(sliced)) >= 1)
+    var tiles, cutTiles: DataFrame = null
+    assert(jobs { tiles = Headline.readTiles(spark, sliced) } == 0)
+    assert(jobs { cutTiles = Headline.readTiles(spark, cut) } == 0)
+    assert(tiles.schema.fieldNames.toSeq == Headline.tableSchema.fieldNames.toSeq)
+    assert(tiles.filter(col("slice") === 1).count() == spec.nTiles / 4)
+    assert(cutTiles.filter(col("slice").isNull).count() == 5)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).toSet
+    assert(rows(tiles.drop("slice")) == rows(World.tilesDF(spark, spec)))
   }
 }

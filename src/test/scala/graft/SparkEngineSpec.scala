@@ -24,8 +24,10 @@ class SparkEngineSpec extends SparkSpec {
     tile = 16, nRegions = 3)
   // ---- the plain-Scala golden oracle (R:191-411 semantics) --------------
 
-  /** (cell_id -> (region, class, confidence)) for loss-bearing cells. */
-  private def oracleVote(spec: graft.world.WorldSpec, cfg: Pipeline.Config)
+  /** (cell_id -> (region, class, confidence)) for loss-bearing cells,
+    * voted by `given` trees, or by trees fitted as Pipeline.fit does. */
+  private def oracleVote(spec: graft.world.WorldSpec, cfg: Pipeline.Config,
+      given: Option[Map[(Int, Int), Cart.Tree]] = None)
       : Map[Long, (Int, Long, Double)] = {
     val polys = World.polygons(spec)
     def region(id: Long): Int =
@@ -44,7 +46,7 @@ class SparkEngineSpec extends SparkSpec {
         case _ => None
       }
     }.toArray
-    val trees = Pipeline.fitTrees(training, spec.nRegions, cfg)
+    val trees = given.getOrElse(Pipeline.fitTrees(training, spec.nRegions, cfg))
 
     (1L to spec.nCells).flatMap { id =>
       val r = region(id)
@@ -118,7 +120,9 @@ class SparkEngineSpec extends SparkSpec {
     }
     val pf = Cart.PackedForest(trees, spec.nRegions, Pipeline.NumDrivers)
     (0 until spec.nTiles).foreach { t =>
-      val bytes = Codec.encodeF32(World.tileBands(spec, t))
+      val bands = World.tileBands(spec, t)
+      val bytes = Codec.encodeF32(bands)
+      val loss = Codec.encodeF32(Array(bands(0)))
       (0 until spec.pixPerTile).foreach { p =>
         val id = spec.cellId(t, p)
         val r = Geom.regionOf(polys, World.px(spec, id), World.py(spec, id))
@@ -126,9 +130,100 @@ class SparkEngineSpec extends SparkSpec {
           val got = Cart.PackedForest.classify(pf, bytes, p, r,
             spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor)
           assert(got == oracle(id)._2, s"cell $id tile $t pix $p")
+          // the loss-payload overload reads the same loss
+          assert(Cart.PackedForest.classify(pf, loss, bytes, p, r,
+            spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor) == got)
         }
       }
     }
+  }
+
+  test("tile table: the loss column is band 0 of bytes, byte for byte") {
+    for (sp <- Seq(spec, padded)) {
+      val rows = World.tilesDF(spark, sp).collect()
+      assert(rows.length == sp.nTiles)
+      rows.foreach { r =>
+        val bytes = r.getAs[Array[Byte]]("bytes")
+        val loss = r.getAs[Array[Byte]]("loss")
+        assert(loss.length == 4 * sp.pixPerTile)
+        assert(java.util.Arrays.equals(loss,
+          java.util.Arrays.copyOfRange(bytes, 0, 4 * sp.pixPerTile)),
+          s"tile ${r.getAs[Int]("tile_id")} of $sp")
+      }
+    }
+  }
+
+  /** The 7x5 headline-shaped forest: every tree a 0.3 leaf, except that
+    * with `split` the (1, 2) tree splits on band 1 at 128. */
+  private def forest7x5(split: Boolean): Map[(Int, Int), Cart.Tree] =
+    (for (r <- 1 to 7; d <- 1 to 5) yield {
+      val t: Cart.Tree =
+        if (split && (r, d) == (1, 2))
+          Cart.Split(0, 128.0, Cart.Leaf(0.9, 1, 0.0), Cart.Leaf(0.1, 1, 0.0),
+            0.5, 2, 0.0)
+        else Cart.Leaf(0.3, 1, 0.0)
+      (r, d) -> t
+    }).toMap
+
+  /** The parquet scan's ReadSchema line of an executed plan. */
+  private def readSchema(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString.linesIterator
+      .flatMap(l => "ReadSchema: struct<[^>]*>".r.findFirstIn(l)).toSeq
+      .distinct match {
+        case Seq(one) => one
+        case other => fail(s"expected one scan schema, got $other")
+      }
+
+  test("headline scan reads the loss column, and bytes only when the " +
+    "forest has a split") {
+    val dir = graft.util.TempDirs.create("graft_tiles").toString
+    World.tilesDF(spark, spec).write.mode("overwrite").parquet(dir)
+    def scan(split: Boolean) = readSchema(graft.engine.Headline.planFrom(
+      spark.read.parquet(dir), forest7x5(split)))
+    val splitFree = scan(split = false)
+    assert(splitFree.contains("loss:binary") && !splitFree.contains("bytes"),
+      splitFree)
+    val withSplit = scan(split = true)
+    assert(withSplit.contains("loss:binary") &&
+      withSplit.contains("bytes:binary"), withSplit)
+    // the loss-only readers never scan the band payload
+    val lossOnly = readSchema(Pipeline.cellBands(spark.read.parquet(dir), spec))
+    assert(!lossOnly.contains("bytes"), lossOnly)
+  }
+
+  test("classes from the loss column equal oracleVote for a forest with " +
+    "splits, under a loss floor that bites") {
+    // the default 0.005 floor scores no tiny-world cell (no loss lies in
+    // (0, 0.005)); about half the loss-bearing cells fall under this
+    // one, and some carry exactly its value, so `<` and `<=` differ
+    val cfg = Pipeline.Config(lossFloor = 518.0 / 1024)
+    val trees = (for (r <- 1 to spec.nRegions; d <- 1 to 5) yield {
+      val t: Cart.Tree = d match {
+        case 2 => Cart.Split(0, 128.0, Cart.Leaf(0.9, 1, 0.0),
+          Cart.Leaf(0.1, 1, 0.0), 0.5, 2, 0.0)
+        case 3 => Cart.Split(1, 100.0, Cart.Leaf(0.2, 1, 0.0),
+          Cart.Leaf(0.7, 1, 0.0), 0.5, 2, 0.0)
+        case _ => Cart.Leaf(0.3, 1, 0.0)
+      }
+      (r, d) -> t
+    }).toMap
+    val polys = World.polygons(spec)
+    val df = Pipeline.classes(World.tilesDF(spark, spec), spec, polys,
+      Covering.build(polys, spec.rows, spec.cols, Pipeline.CoverB), trees,
+      cfg)
+    assert(df.queryExecution.executedPlan.toString.contains("bytes"),
+      "a forest with splits reads its predictors from bytes")
+    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val oracle = oracleVote(spec, cfg, Some(trees))
+    assert(got.keySet == (1L to spec.nCells).toSet)
+    got.foreach { case (id, c) =>
+      assert(c == oracle.get(id).fold(-1L)(_._2), s"cell $id")
+    }
+    val byClass = got.values.groupBy(identity).map { case (k, v) => k -> v.size }
+    assert(Seq(0L, 2L, 3L).forall(byClass.contains), byClass.toString)
+    assert(oracle.values.exists { case (_, c, mx) => c == 0 && mx >= 0.5 },
+      "some cell must be held at 0 by the loss floor alone")
+    assert(oracle.keys.exists(id => World.loss(id) == cfg.lossFloor))
   }
 
   test("determinism: identical results under different partitionings") {
@@ -467,8 +562,15 @@ class SparkEngineSpec extends SparkSpec {
       .select(col("cell_id"),
         driver_classify_at_covered(col("bytes"), col("p"), Pipeline.px(spec),
           Pipeline.py(spec), polys, pf, blocks.const, blocks.nbx, B,
-          spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor).as("c"),
+        driver_classify_at_covered(col("loss"), col("bytes"), col("p"),
+          Pipeline.px(spec), Pipeline.py(spec), polys, pf, blocks.const,
+          blocks.nbx, B, spec.pixPerTile, cfg.lossFloor,
+          cfg.confidenceFloor).as("c_loss"))
+      .collect().map { r =>
+        assert(r.getLong(1) == r.getLong(2), s"cell ${r.getLong(0)}")
+        r.getLong(0) -> r.getLong(1)
+      }.toMap
     (1L to spec.nCells).foreach { id =>
       val r = Geom.regionOf(polys, World.px(spec, id), World.py(spec, id))
       val want =
@@ -691,6 +793,28 @@ class SparkEngineSpec extends SparkSpec {
     assert(plan.sliding("forestvote(".length).count(_ == "forestvote(") == 1,
       s"one forest expression:\n$plan")
     assert(!plan.contains("CASE WHEN"), s"no when-chain trees:\n$plan")
+  }
+
+  test("region_explode's Generate stays in whole-stage codegen (q29): " +
+    "the ray-cast is not evaluated interpreted") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = graft.SparkEntry.queries("q29_tree_fit_predict")(spark,
+        "ignored").queryExecution.executedPlan.toString
+      val generate = plan.linesIterator
+        .filter(l => l.contains("Generate ") && l.contains("regionof(")).toSeq
+      assert(generate.size == 1, s"one region explode:\n$plan")
+      assert(generate.head.contains("*("),
+        s"Generate fell out of whole-stage codegen:\n${generate.head}")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    // null coordinates count as no-region: no row, never a null region
+    import graft.sql.GraftFunctions.region_explode
+    val rows = spark.range(0, 4).select(col("id"),
+      region_explode(when(col("id") === 1, 1.5), lit(0.5),
+        World.polygons(spec)).as("r")).collect()
+    assert(rows.map(r => (r.getLong(0), r.getInt(1))).toSeq == Seq((1L, 1)),
+      rows.toSeq.toString)
   }
 
   test("SQL function surface: GraftExtensions registers the engine " +
