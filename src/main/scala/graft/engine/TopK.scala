@@ -32,9 +32,7 @@ object TopK {
     * 0 <= id < 2^32) are guarded per row by `assert_true` — two
     * comparisons riding the same codegen projection as the pack — so
     * an out-of-range input fails the job loudly instead of silently
-    * borrowing into the score bits and corrupting the ordering. The
-    * single pack/unpack definition is shared by batch q95 and the
-    * streaming domainCapByWindow so the two shapes cannot diverge. */
+    * borrowing into the score bits and corrupting the ordering. */
   def packDescSmallerId(score: Column, id: Column): Column = {
     val ok = assert_true(
       score >= 0 && score < (1L << 31) && id >= 0 && id <= 0xFFFFFFFFL,

@@ -204,8 +204,7 @@ object Relational {
     // ts alone is a total order on THIS fixture (strictly increasing
     // per entity), but the op is a general CDC primitive: (op, value)
     // tie-breaks pin duplicate-timestamp logs to one deterministic
-    // history — deletes fold before upserts, upserts by ascending
-    // value — the same order the streaming twin (scd2ByEntity) sorts by
+    // history — deletes fold before upserts, upserts by ascending value
     val w = Window.partitionBy("entity_id").orderBy("ts", "op", "value")
     log.select(col("entity_id"), col("ts"), col("op"), col("value"),
         lead("ts", 1).over(w).as("nxt"))
@@ -1032,8 +1031,8 @@ object Relational {
       |    ORDER BY s_acctbal DESC, s_suppkey) AS rk FROM supplier)
       |WHERE rk <= 2 ORDER BY 1, 2""".stripMargin
 
-  // --- q15: event-time window aggregation (batch analog of the streaming
-  // surface; reference has no streaming — SURVEY.md §2.10) -----------------
+  // --- q15: event-time window aggregation (batch analog of a streaming
+  // window; reference has no streaming — SURVEY.md §2.10) ------------------
   private def q15(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))

@@ -1731,11 +1731,9 @@ object TextOps {
   // (`qsketchEstimate`) is a driver-side fold, golden-tested against
   // exact per-group quantiles within the bucket bound. -------------------
   /** Log-linear sketch bucket of a positive integral column: 8 × bit
-    * length + the 3 bits after the leading 1. Shared by batch q110 and
-    * the streaming twin (`StreamDedup.qsketchByWindow`) so both
-    * surfaces address identical registers. bin()/conv() keep the bit
+    * length + the 3 bits after the leading 1. bin()/conv() keep the bit
     * arithmetic libm-free (no log2), hence oracle-bit-exact. */
-  private[graft] def qsketchBucket(v: Column): Column = {
+  private def qsketchBucket(v: Column): Column = {
     val b = bin(v)
     (length(b) * 8 +
       conv(substring(rpad(b, 4, "0"), 2, 3), 2, 10).cast("int"))
@@ -1868,8 +1866,8 @@ object TextOps {
   // undercount — golden-tested beside hllEstimate; heavy-hitter
   // screening (est >= threshold has NO false negatives) rides that
   // guarantee deterministically. ------------------------------------
-  private[graft] val CmDepth = 4
-  private[graft] val CmWidth = 64
+  private val CmDepth = 4
+  private val CmWidth = 64
 
   private def q91(s: SparkSession, dir: String): DataFrame = {
     val cells = (0 until CmDepth).map { r =>
@@ -1917,11 +1915,10 @@ object TextOps {
   // task's rows into a size-K heap BEFORE the exchange, and only
   // K-sized buffers cross the wire: shuffle bytes O(tasks * K * 8),
   // per-task state O(K), the hot domain's cost spread over all its
-  // input tasks. Packing contract (TopK.packDescSmallerId, shared with
-  // the streaming domain cap): n_chars in the high 32 bits,
-  // 0xFFFFFFFF - doc_id in the low 32 so the SMALLER id wins ties;
-  // the bounds (0 <= n_chars < 2^31, 0 <= doc_id < 2^32) are guarded
-  // per row by an assert_true riding the pack projection. -------------------
+  // input tasks. Packing contract (TopK.packDescSmallerId): n_chars in
+  // the high 32 bits, 0xFFFFFFFF - doc_id in the low 32 so the SMALLER
+  // id wins ties; the bounds (0 <= n_chars < 2^31, 0 <= doc_id < 2^32)
+  // are guarded per row by an assert_true riding the pack projection. ---
   private val DomainCapK = 12
 
   private def q95(s: SparkSession, dir: String): DataFrame = {

@@ -145,6 +145,7 @@ object Probe {
       groups.remove("probe marker")
       val (g, best) = passes.minBy(_._2)
       val jobs = groups.toArray.count(_ == g)
+      groups.clear() // a repeated name reuses the same pass groups
       println(f"[probe] $n: $best%.3f s, $jobs jobs")
     }
   }

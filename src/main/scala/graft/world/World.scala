@@ -92,12 +92,12 @@ object World {
   def hCol(k: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (k * Knuth) % M32
 
-  /** `h2` as a Spark Column — THE definition shared by batch q91 and
-    * streaming cmSketchByWindow so sketch addressing and the
-    * `cmEstimate` scalar path can never drift (the one-sided
-    * never-undercount guarantee depends on all three agreeing
-    * bit-for-bit). `h(k) >> 16` on a value < 2^32 equals the floor
-    * divide, and the divide-by-2^16 is exact in double. */
+  /** `h2` as a Spark Column, bit-identical to the scalar form: q91's
+    * sketch addresses its registers with this column and `cmEstimate`
+    * with the scalar, and the one-sided never-undercount guarantee
+    * depends on the two agreeing bit-for-bit. `h(k) >> 16` on a value
+    * < 2^32 equals the floor divide, and the divide-by-2^16 is exact
+    * in double. */
   def h2Col(k: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.floor
     hCol(floor(hCol(k) / 65536L).cast("long"))

@@ -56,11 +56,13 @@ class ProbeSpec extends SparkSpec {
   }
 
   test("time prints best-of-3 seconds and the best pass's job count") {
-    val (code, out, _) =
-      probe("time", "spark.sql.adaptive.enabled=false", "q01_agg_sum")
+    val (code, out, _) = probe("time", "spark.sql.adaptive.enabled=false",
+      "q01_agg_sum", "q01_agg_sum")
     assert(code == 0)
     val line = """\[probe\] q01_agg_sum: [0-9.]+ s, (\d+) jobs""".r
-    assert(line.findFirstMatchIn(out).exists(_.group(1).toInt >= 1), out)
+    val jobs = line.findAllMatchIn(out).map(_.group(1).toInt).toSeq
+    // a repeated name counts only its own passes' jobs
+    assert(jobs.size == 2 && jobs.head >= 1 && jobs.distinct.size == 1, out)
   }
 
   test("an unknown subcommand or query name exits 2 with the usage list " +
