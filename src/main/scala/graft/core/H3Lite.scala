@@ -68,8 +68,8 @@ object H3Lite {
   private val gridCache = new java.util.concurrent.ConcurrentHashMap[
     (Int, Int, Int), (Array[Long], Array[Igh.RowInv])]()
 
-  /** Resolve the row table once (plan time for codegen callers: GridH3
-    * embeds the arrays via addReferenceObj so the per-pixel hot path
+  /** Resolve the row table once (plan time for codegen callers: grid_h3
+    * carries the arrays as plan literals so the per-pixel hot path
     * never touches this map — a boxed-tuple ConcurrentHashMap lookup
     * per pixel was measurable). */
   def table(rows: Int, cols: Int, res: Int)
@@ -104,8 +104,8 @@ object H3Lite {
   }
 
   /** The per-cell hot path with the row table already in hand — the
-    * static call GridH3's generated code makes (tables embedded as
-    * references, no map lookup per pixel). */
+    * static call grid_h3's generated code makes (tables carried as
+    * plan literals, no map lookup per pixel). */
   def encodeFromTable(id: Long, cols: Int, res: Int, packed: Array[Long],
       inv: Array[Igh.RowInv]): Long = {
     val col0 = (id - 1) % cols

@@ -30,10 +30,11 @@ import org.apache.spark.sql.functions._
   *    Catalyst's partial aggregation means each task ORs its keys into
   *    a task-local bitmap and only bitmaps cross the wire — the build
   *    shuffles O(partitions * m/8) bytes, never the keys;
-  *  - the probe is a codegen scalar expression (`BloomMightContain`)
-  *    carrying the bitmap as a plan reference object; Spark broadcasts
-  *    the serialized task binary (TorrentBroadcast) once per executor,
-  *    so the bits are shipped with broadcast economics, not per task.
+  *  - the probe is one codegen'd call of `mightContain`
+  *    (`bloom_might_contain`) with the bitmap as a plan literal; Spark
+  *    broadcasts the serialized task binary (TorrentBroadcast) once per
+  *    executor, so the bits are shipped with broadcast economics, not
+  *    per task.
   *
   * Sizing: m = -n ln(fpp) / (ln 2)^2 bits rounded up to a power of
   * two, k = round(m/n * ln 2). 10^8 dim keys at 1% fpp is ~2^30 bits

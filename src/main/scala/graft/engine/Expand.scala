@@ -73,22 +73,26 @@ object Expand {
     // also contains; over-counting can inflate the magnitude, never
     // turn an empty round nonzero.
     val adoptAcc = s.sparkContext.longAccumulator("expand_adopted")
-    while (iters < maxIters && !converged) {
-      val uncertain = cur.filter(col("final_class") === 0)
+    // (cell_id, nbr_id, nbr_class): every uncertain cell of `frame` with
+    // each in-grid 8-neighbor that already has a class — one round's
+    // adoption candidates
+    def candidates(frame: DataFrame): DataFrame =
+      frame.filter(col("final_class") === 0)
         .select(col("cell_id"),
           (floor((col("cell_id") - 1) / C) + 1).as("row"),
           ((col("cell_id") - 1) % C + 1).as("col"))
-      val nbr = uncertain.crossJoin(offDF)
+        .crossJoin(offDF)
         .filter((col("row") + col("dr")).between(1, spec.rows) &&
           (col("col") + col("dc")).between(1, C))
         .select(col("cell_id"),
           ((col("row") + col("dr") - 1) * C + col("col") + col("dc"))
             .cast("long").as("nbr_id"))
-      val adopted = nbr
-        .join(cur.filter(col("final_class") > 0)
+        .join(frame.filter(col("final_class") > 0)
             .select(col("cell_id").as("nbr_id"),
               col("final_class").as("nbr_class")),
           Seq("nbr_id"))
+    while (iters < maxIters && !converged) {
+      val adopted = candidates(cur)
         .groupBy("cell_id").agg(min("nbr_class").as("adopted"))
       val before = adoptAcc.value
       val counted = adopted.mapPartitions { it =>
@@ -117,18 +121,7 @@ object Expand {
       // landed exactly on the fixed point" from "still adopting"; the
       // loop above already exits with converged=true in the former case
       // only when a zero-adoption round ran, so probe explicitly.
-      val uncertain = cur.filter(col("final_class") === 0)
-        .select(col("cell_id"),
-          (floor((col("cell_id") - 1) / C) + 1).as("row"),
-          ((col("cell_id") - 1) % C + 1).as("col"))
-      val nbr = uncertain.crossJoin(offDF)
-        .filter((col("row") + col("dr")).between(1, spec.rows) &&
-          (col("col") + col("dc")).between(1, C))
-        .select(((col("row") + col("dr") - 1) * C + col("col") + col("dc"))
-          .cast("long").as("nbr_id"))
-      val wouldAdopt = nbr.join(cur.filter(col("final_class") > 0)
-          .select(col("cell_id").as("nbr_id")), Seq("nbr_id"))
-        .limit(1).count()
+      val wouldAdopt = candidates(cur).limit(1).count()
       require(wouldAdopt == 0,
         s"Expand did not reach its fixed point within maxIters=$maxIters " +
           "rounds (cells would still adopt); raise the budget or use " +

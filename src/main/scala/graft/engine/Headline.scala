@@ -22,7 +22,7 @@ import graft.world.{World, WorldSpec}
   *
   * The timed pipeline is FUSED: only the pixel index is exploded; every
   * band value is read lazily from a binary payload with the
-  * zero-allocation FloatAt expression. Within the single whole-stage-
+  * zero-allocation `float_at` kernel. Within the single whole-stage-
   * codegen stage each payload stays one byte[] reference per tile — no
   * band arrays, no per-cell structs, no 86-field rows are ever
   * materialized (the naive arrays_zip + posexplode formulation was
@@ -35,13 +35,13 @@ import graft.world.{World, WorldSpec}
   *   scan (parquet; column pruning reads only tile_id + loss, and
   *      bytes when the forest has a split)
   *   -> explode pixel index (in-grid guard drops edge padding)
-  *   -> GridH3 (Goode inverse projection + hierarchical encode)
+  *   -> grid_h3 (Goode inverse projection + hierarchical encode)
   *   -> DriverClassifyAt: block-covered PIP (97% of 8x8 blocks are
   *      region-constant on this geometry, resolved by one broadcast
   *      array read; boundary blocks pay the exact banded ray-cast,
   *      ONCE per pixel) + packed 7x5 CART forest walk + vote (argmax,
-  *      0.5 confidence, 0.005 loss floor, R:362-411) in one
-  *      expression; -1 = outside every region
+  *      0.5 confidence, 0.005 loss floor, R:362-411) in one kernel
+  *      call; -1 = outside every region
   *   -> salted zonal aggregation by H3 res-4 parent (Salted), agg
   *      inputs gated on class >= 0 so no Filter re-evaluates the PIP
   *      (Catalyst pushes filter conditions through projections, which
@@ -67,8 +67,8 @@ object Headline {
   /** Block covering of the densified region layer (engine/Covering —
     * bit-equal to the exact ray-cast, proven by q72's oracle and
     * re-asserted over this exact geometry in CoreSpec). Built once per
-    * JVM, plan-time; ~rows*cols/B^2 ints, broadcast into the generated
-    * code via addReferenceObj like the polygons themselves. */
+    * JVM, plan-time; ~rows*cols/B^2 ints, carried by the plan as a
+    * literal like the polygons themselves. */
   lazy val cover: Covering.Blocks =
     Covering.build(polys, spec.rows, spec.cols, CoverB)
   /** Files in the materialized table: fine-grained input splits (64 per

@@ -175,10 +175,11 @@ object Pipeline {
     *    analog's NumberCells, R:445-454); NoData stays untouched;
     *  - class_gtiff: the class map as georeferenced GeoTIFF tiles
     *    (rastOut, R:425-441);
-    *  - loss_masks: the reference's deliverable (R:510-551) — loss
-    *    deduped by cell (group/mean, R:516-520) joined to the final
-    *    class (R:521), then the six per-class CSVs under `dir`/csv in
-    *    one write and the six rasters.
+    *  - loss_masks: the reference's deliverable (R:510-551) — each
+    *    cell's loss joined to its final class (R:521), then the six
+    *    per-class CSVs under `dir`/csv in one write and the six
+    *    rasters. `cellBands` has one row per cell, so the reference's
+    *    group/mean dedupe (R:516-520) is the identity and is skipped.
     * Each stage snapshots to parquet keyed by a fingerprint of its
     * upstream and its own configuration (classified: grid, polygons,
     * trees and `cfg`); rerunning after a kill reloads finished stages
@@ -220,7 +221,7 @@ object Pipeline {
     stage("loss_masks", Checkpoint.fingerprint("loss_masks", fpExp, "gtiff"),
         "expanded") {
       val loss = cellBands(tiles, spec)
-        .groupBy("cell_id").agg(avg("loss").as("loss_mean"))
+        .select(col("cell_id"), col("loss").as("loss_mean"))
       val joined = loss.join(
         expanded.select("cell_id", "final_class"), Seq("cell_id"))
         .filter(col("final_class") >= 0)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sql.GraftFunctions.dot_f64
+import graft.sql.MinHashSigs.{Params => mhParams, Prime => MersennePrime}
 
 /** Training-data pipeline operators over the `documents` and
   * `embeddings` tables: deduplication (exact, MinHash+LSH, SimHash,
@@ -357,10 +358,6 @@ object TextOps {
   }
 
   // --- q44: MinHash signatures over distinct 3-gram shingles --------------
-  private val mhParams = Seq((1103515245L, 12345L), (69069L, 362437L),
-    (1664525L, 1013904223L), (22695477L, 7777L))
-  private val MersennePrime = 2147483647L
-
   private def q44(s: SparkSession, dir: String): DataFrame = {
     val sig = graft.sql.GraftFunctions
       .minhash_sigs(col("text"), mhParams, MersennePrime)

@@ -6,8 +6,8 @@ import graft.core.{Igh, Polygon}
   * reference's commented tail reprojects the region shapefile from
   * `+proj=igh` to lon/lat and writes KML (`Supplemental_Data_1.R:884-912`,
   * `spTransform` + `writeOGR(driver="KML")`). Here the transform is the
-  * engine's own Goode inverse (pure math, the same code the GridH3
-  * expression uses) and the sink is a direct serializer — no GDAL.
+  * engine's own Goode inverse (pure math, the same code `grid_h3`
+  * calls) and the sink is a direct serializer — no GDAL.
   */
 object Kml {
 

@@ -4,46 +4,29 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{Cart, Codec, Geom, H3Lite, Polygon}
 
-/** Custom Catalyst expressions for the operators Spark lacks
-  * (SURVEY.md §2.11): tile decode (image bytes -> pixel array) and
-  * ray-cast point-in-polygon. Both are stateless scalar expressions so
-  * they live inside the Tungsten row pipeline; PIP additionally
-  * generates Java code (the hot path of the spatial join).
+/** The engine's per-row kernels for the operators Spark lacks
+  * (SURVEY.md §2.11): tile decode and encode, point-in-polygon, the
+  * forest vote, stencils, and the media and text one-pass stats. Each
+  * kernel is a top-level object whose `eval` works on Catalyst's
+  * internal values (byte[], UTF8String, ArrayData, InternalRow);
+  * GraftFunctions turns a kernel into a Column by Spark's own
+  * StaticInvoke, so generated code calls `eval` as a static method and
+  * the interpreted path reflects the same method. Only DotF64 is a
+  * hand-written expression: its codegen inlines the loop.
   */
 
 /** Decode one band of a tile payload to array<float>.
-  * Children: (bytes: binary, fmt: string). nPixels/band are plan-time
+  * Inputs: (bytes: binary, fmt: string). nPixels/band are plan-time
   * constants. The reference's eager raster-to-vector read is
   * `Supplemental_Data_1.R:211,216-218`; here decoding happens per tile
   * row inside the scan projection so it pipelines into posexplode
   * without materializing whole rasters. */
-case class DecodeBand(left: Expression, right: Expression,
-    nPixels: Int, band: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullSafeEval(bytes: Any, fmt: Any): Any =
-    DecodeBand.eval(bytes.asInstanceOf[Array[Byte]],
-      fmt.asInstanceOf[UTF8String], nPixels, band)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // one static call so the decode stays inside whole-stage codegen
-    // instead of dropping the span to the interpreted fallback
-    val cls = DecodeBand.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $band);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object DecodeBand {
   def eval(bytes: Array[Byte], fmt: UTF8String, nPixels: Int,
       band: Int): ArrayData =
@@ -52,153 +35,46 @@ object DecodeBand {
 }
 
 /** Ray-cast point-in-polygon region lookup over a broadcast-style packed
-  * polygon set (SURVEY.md §2.8 G3). Returns the lowest containing
-  * region id, or null when no polygon contains the point (the reference
-  * then drops the row, R:273-274).
-  *
-  * Generates branch-free-ish Java: polygons are embedded as static
-  * primitive arrays referenced from the generated class, so the eval
-  * loop stays inside whole-stage codegen.
-  */
-case class RegionOf(left: Expression, right: Expression, polys: Array[Polygon],
-    nullOnMiss: Boolean = true)
-  extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  // nullOnMiss=false still must stay nullable when a CHILD is nullable:
-  // claiming non-nullable would make codegen skip the child null guards
-  // and silently ray-cast (0.0, 0.0) for null coordinates
-  override def nullable: Boolean =
-    nullOnMiss || left.nullable || right.nullable
-
-  override def nullSafeEval(px: Any, py: Any): Any = {
-    val r = Geom.regionOf(polys,
-      px.asInstanceOf[Double], py.asInstanceOf[Double])
-    if (r < 0 && nullOnMiss) null else r
+  * polygon set (SURVEY.md §2.8 G3): the lowest containing region id, or
+  * null when no polygon contains the point (the reference then drops the
+  * row, R:273-274). Boxed so the miss can be null; region ids are small,
+  * so Integer.valueOf hands back cached boxes and a hit allocates
+  * nothing. */
+object RegionOf {
+  def eval(polys: Array[Polygon], px: Double, py: Double): Integer = {
+    val r = Geom.regionOf(polys, px, py)
+    if (r < 0) null else Integer.valueOf(r)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val polysRef = ctx.addReferenceObj("polys", polys,
-      classOf[Polygon].getName + "[]")
-    val geom = Geom.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (px, py) => {
-      if (nullOnMiss)
-        s"""
-           |int r = $geom.regionOf($polysRef, $px, $py);
-           |if (r < 0) { ${ev.isNull} = true; } else { ${ev.value} = r; }
-         """.stripMargin
-      else
-        s"${ev.value} = $geom.regionOf($polysRef, $px, $py);"
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Region lookup under the NONZERO (winding-number) fill rule — the
-  * q194 dual of RegionOf's even-odd parity (Geom.windRegionOf): -1
-  * when every polygon's winding is zero. Same broadcast-polys,
-  * codegen-call shape as RegionOf. */
-case class WindRegion(left: Expression, right: Expression,
-    polys: Array[Polygon])
-  extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(px: Any, py: Any): Any =
-    Geom.windRegionOf(polys, px.asInstanceOf[Double], py.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val polysRef = ctx.addReferenceObj("polys", polys,
-      classOf[Polygon].getName + "[]")
-    val geom = Geom.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (px, py) =>
-      s"${ev.value} = $geom.windRegionOf($polysRef, $px, $py);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Random access into an f32 tile payload: float element at flat index
-  * (band * nPixels + pixel). Pairs with an exploded pixel index to give
-  * the fused scan->decode->classify pipeline zero per-cell allocation:
-  * band arrays and per-cell structs are never materialized. */
-case class FloatAt(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = FloatType
-  override def nullSafeEval(bytes: Any, idx: Any): Any =
-    Codec.floatAt(bytes.asInstanceOf[Array[Byte]], idx.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val codec = Codec.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, idx) =>
-      s"${ev.value} = $codec.floatAt($bytes, $idx);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** The driver-class vote (per-pixel CART packed-forest walk + argmax +
   * confidence/loss floors, Cart.PackedForest.classify) fused with the
-  * region lookup: children are (loss, bytes, pixel, px, py), where
-  * `loss` is an f32 payload holding pixel p's loss at element p (the
-  * tile table's `loss` column, or the band payload itself) and `bytes`
-  * the band payload the tree walk reads its predictors from. The
-  * expression resolves the point's region ONCE — from the block cover
-  * (`blockConst`, Covering.Blocks.const, `nbx` blocks wide, `blockB`
-  * grid units per block) when its block is region-constant, else by an
-  * exact ray-cast against the packed polygon set — and either
-  * classifies (0..nDrivers) or returns -1 for points outside every
-  * polygon. The fused form exists because the natural
+  * region lookup, over `loss`, an f32 payload holding pixel p's loss at
+  * element p (the tile table's `loss` column, or the band payload
+  * itself), and `bytes`, the band payload the tree walk reads its
+  * predictors from. Resolves the point's region ONCE — from the block
+  * cover (`blockConst`, Covering.Blocks.const, `nbx` blocks wide,
+  * `blockB` grid units per block) when its block is region-constant,
+  * else by an exact ray-cast against the packed polygon set — and
+  * either classifies (0..nDrivers) or returns -1 for points outside
+  * every polygon. The fused form exists because the natural
   * `withColumn("region_id", region_of(...)).filter(isNotNull)` shape
   * makes Catalyst evaluate the ray-cast twice per pixel (once in the
   * pushed-down Filter, once in the collapsed Project) — with 1280-edge
   * polygons the PIP is the compute core of the headline metric, so the
-  * double evaluation halves throughput. */
-case class DriverClassifyAt(loss: Expression, bytes: Expression,
-    p: Expression, px: Expression, py: Expression, polys: Array[Polygon],
-    forest: Cart.PackedForest, nPix: Int, lossFloor: Double,
-    confFloor: Double, blockConst: Array[Int], nbx: Int, blockB: Int)
-  extends QuinaryExpression {
-
-  override def children: Seq[Expression] = Seq(loss, bytes, p, px, py)
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(loss: Any, bytes: Any, p: Any, px: Any,
-      py: Any): Any =
+  * double evaluation halves throughput. A top-level forwarder, because
+  * a call needs a static method and Cart.PackedForest is nested. */
+object DriverClassifyAt {
+  def eval(loss: Array[Byte], bytes: Array[Byte], p: Int, px: Double,
+      py: Double, polys: Array[Polygon], forest: Cart.PackedForest,
+      nPix: Int, lossFloor: Double, confFloor: Double,
+      blockConst: Array[Int], nbx: Int, blockB: Int): Long =
     Cart.PackedForest.classifyAtCovered(forest, polys, blockConst, nbx,
-      blockB, loss.asInstanceOf[Array[Byte]], bytes.asInstanceOf[Array[Byte]],
-      p.asInstanceOf[Int], px.asInstanceOf[Double], py.asInstanceOf[Double],
-      nPix, lossFloor, confFloor)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pfRef = ctx.addReferenceObj("forest", forest,
-      classOf[Cart.PackedForest].getName)
-    val polysRef = ctx.addReferenceObj("polys", polys,
-      classOf[Polygon].getName + "[]")
-    val cls = Cart.PackedForest.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val bcRef = ctx.addReferenceObj("blockConst", blockConst, "int[]")
-    nullSafeCodeGen(ctx, ev, (loss, bytes, p, px, py) =>
-      s"${ev.value} = $cls.classifyAtCovered($pfRef, $polysRef, $bcRef, " +
-        s"$nbx, $blockB, $loss, $bytes, $p, $px, $py, $nPix, $lossFloor, " +
-        s"$confFloor);")
-  }
-
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Expression =
-    copy(loss = c(0), bytes = c(1), p = c(2), px = c(3), py = c(4))
+      blockB, loss, bytes, p, px, py, nPix, lossFloor, confFloor)
 }
 
-/** The driver-class vote over an already-resolved region: children are
-  * (loss, bytes, pixel, region), `loss` and `bytes` as in
-  * DriverClassifyAt; walks the region's nDrivers packed trees
+/** The driver-class vote over an already-resolved region: (loss,
+  * bytes, pixel, region), `loss` and `bytes` as in DriverClassifyAt; walks the region's nDrivers packed trees
   * (Cart.PackedForest.leaf) and returns struct(class, confidence) —
   * class is the first-max argmax (which.max, R:370), 0 under the
   * strict confidence floor (R:382) or the loss floor (R:407);
@@ -206,40 +82,7 @@ case class DriverClassifyAt(loss: Expression, bytes: Expression,
   * scored cell, floors or not. The registry's fit-and-predict surface
   * (q29, q192) scores with it after region_explode has dropped the
   * no-region cells. */
-case class ForestVote(first: Expression, second: Expression,
-    third: Expression, fourth: Expression, forest: Cart.PackedForest,
-    nPix: Int, lossFloor: Double, confFloor: Double)
-  extends QuaternaryExpression {
-
-  override def dataType: DataType = ForestVote.schema
-
-  override def nullSafeEval(loss: Any, bytes: Any, p: Any,
-      region: Any): Any =
-    ForestVote.eval(forest, loss.asInstanceOf[Array[Byte]],
-      bytes.asInstanceOf[Array[Byte]], p.asInstanceOf[Int],
-      region.asInstanceOf[Int], nPix, lossFloor, confFloor)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pfRef = ctx.addReferenceObj("forest", forest,
-      classOf[Cart.PackedForest].getName)
-    val cls = ForestVote.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (loss, bytes, p, region) =>
-      s"${ev.value} = $cls.eval($pfRef, $loss, $bytes, $p, $region, " +
-        s"$nPix, $lossFloor, $confFloor);")
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression,
-      newFourth: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird,
-      fourth = newFourth)
-}
-
 object ForestVote {
-  val schema: StructType = StructType(Seq(
-    StructField("class", LongType, nullable = false),
-    StructField("confidence", DoubleType, nullable = false)))
-
   def eval(pf: Cart.PackedForest, loss: Array[Byte], bytes: Array[Byte],
       p: Int, region: Int, nPix: Int, lossFloor: Double,
       confFloor: Double): InternalRow = {
@@ -264,36 +107,8 @@ object ForestVote {
   * struct(mean_px, max_px, thumb_hash, n_frames) without materializing
   * the pixel array as a column — the per-row feature math lives in one
   * codegen'd expression (the batched mapPartitions variant remains for
-  * model-server-style ops; see Multimodal). Children: (bytes, fmt, w,
+  * model-server-style ops; see Multimodal). Inputs: (bytes, fmt, w,
   * h); `frameK` is the frame-sampling stride. */
-case class MediaStats(first: Expression, second: Expression,
-    third: Expression, fourth: Expression, frameK: Int)
-  extends QuaternaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("mean_px", DoubleType, nullable = false),
-    StructField("max_px", DoubleType, nullable = false),
-    StructField("thumb_hash", LongType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false)))
-
-  override def nullSafeEval(bytes: Any, fmt: Any, w: Any, h: Any): Any =
-    MediaStats.eval(bytes.asInstanceOf[Array[Byte]],
-      fmt.asInstanceOf[UTF8String], w.asInstanceOf[Int],
-      h.asInstanceOf[Int], frameK)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = MediaStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt, w, h) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $w, $h, $frameK);")
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression,
-      newFourth: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird,
-      fourth = newFourth)
-}
-
 object MediaStats {
   def eval(bytes: Array[Byte], fmt: UTF8String, w: Int, h: Int,
       frameK: Int): InternalRow = {
@@ -319,31 +134,7 @@ object MediaStats {
   * frame-sample pays ~1/k of the per-payload decode work; wsum =
   * SUM((p+1)*v) is the position-weighted term that pins within-frame
   * pixel order under permutation-invariant aggregates (q73 pattern).
-  * Children: (bytes, fmt); nPixels/frame are plan-time constants. */
-case class FrameStats(left: Expression, right: Expression,
-    nPixels: Int, frame: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("mean_px", DoubleType, nullable = false),
-    StructField("max_px", DoubleType, nullable = false),
-    StructField("wsum", DoubleType, nullable = false)))
-
-  override def nullSafeEval(bytes: Any, fmt: Any): Any =
-    FrameStats.eval(bytes.asInstanceOf[Array[Byte]],
-      fmt.asInstanceOf[UTF8String], nPixels, frame)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = FrameStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $frame);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
+  * Inputs: (bytes, fmt); nPixels/frame are plan-time constants. */
 object FrameStats {
   def eval(bytes: Array[Byte], fmt: UTF8String, nPixels: Int,
       frame: Int): InternalRow = {
@@ -369,140 +160,19 @@ object FrameStats {
   * video near-dup share one signature definition). One codegen'd
   * static call per sampled frame; pairs with the pigeonhole-banding
   * matcher for frame-aligned video near-dup (q85).
-  * Children: (bytes, fmt); nPixels/frame/w/h are plan-time constants. */
-case class FramePhash(left: Expression, right: Expression,
-    nPixels: Int, frame: Int, w: Int, h: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(bytes: Any, fmt: Any): Any =
-    FramePhash.eval(bytes.asInstanceOf[Array[Byte]],
-      fmt.asInstanceOf[UTF8String], nPixels, frame, w, h)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = FramePhash.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $frame, $w, $h);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
+  * Inputs: (bytes, fmt); nPixels/frame/w/h are plan-time constants. */
 object FramePhash {
   def eval(bytes: Array[Byte], fmt: UTF8String, nPixels: Int,
       frame: Int, w: Int, h: Int): Long =
     Codec.phash(Codec.decodeBand(fmt.toString, bytes, nPixels, frame), w, h)
 }
 
-/** Morton z-value of two integer coordinates (engine/Layout): bit
-  * interleave with x on even bits, y on odd — the curve key behind
-  * z-order write clustering. Pure bit twiddling, codegen'd, and
-  * integer-exact in SQL (q87's oracle re-derives it bit-by-bit). */
-case class ZInterleave(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(x: Any, y: Any): Any =
-    graft.engine.Layout.zInterleave(x.asInstanceOf[Long], y.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val layout = graft.engine.Layout.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = $layout.zInterleave($x, $y);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Bloom-filter membership probe (engine/Bloom semi-join prune): true
-  * iff all k double-hashed probe bits of the child — which MUST be the
-  * same `xxhash64(key)` column the filter was fitted on — are set in
-  * the fitted bitmap. The bitmap rides the plan as a reference object,
-  * so Spark's TorrentBroadcast of the task binary ships it once per
-  * executor; the probe itself is k integer bit tests inside
-  * whole-stage codegen. No false negatives ever, so a pruned join is
-  * row-identical to the unpruned join (q86's oracle relies on this). */
-case class BloomMightContain(child: Expression, bits: Array[Long], k: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override def nullSafeEval(hash: Any): Any =
-    graft.engine.Bloom.mightContain(bits, hash.asInstanceOf[Long], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bitsRef = ctx.addReferenceObj("bloomBits", bits, "long[]")
-    val bloom = graft.engine.Bloom.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, hash =>
-      s"${ev.value} = $bloom.mightContain($bitsRef, $hash, $k);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Grid cell id -> H3-lite cell id at `res` (SURVEY.md §2.8 G1): cell
-  * centroid in the Goode extent, inverse-projected through the
-  * interrupted homolosine, then hierarchically encoded. Codegens to a
-  * single static call so the projection math stays inside whole-stage
-  * codegen; the per-row Goode-inverse tables are resolved ONCE at plan
-  * time and embedded as generated-class references, so the per-pixel
-  * path is pure arithmetic + table reads (no cache lookup). */
-case class GridH3(child: Expression, rows: Int, cols: Int, res: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(id: Any): Any =
-    H3Lite.gridCellToH3(id.asInstanceOf[Long], rows, cols, res)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (packed, inv) = H3Lite.table(rows, cols, res)
-    val packedRef = ctx.addReferenceObj("h3Packed", packed, "long[]")
-    val invRef = ctx.addReferenceObj("h3Inv", inv,
-      classOf[graft.core.Igh.RowInv].getName + "[]")
-    val h3 = H3Lite.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = $h3.encodeFromTable($id, $cols, $res, $packedRef, " +
-        s"$invRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** (clamped lat, wrapped lng) degrees of a grid cell centroid through
   * the interrupted-Goode inverse (H3Lite.gridCellToLatLng) — the
-  * geodetic midpoint of the GridH3 chain as a first-class column, so
+  * geodetic midpoint of the grid_h3 chain as a first-class column, so
   * the projection math itself sits under the driver's DuckDB oracle
   * (q75) instead of only inside the opaque id encode. One static call;
   * stays in whole-stage codegen. */
-case class GridLatLng(child: Expression, rows: Int, cols: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("lat", DoubleType, nullable = false),
-    StructField("lng", DoubleType, nullable = false)))
-
-  override def nullSafeEval(id: Any): Any =
-    GridLatLng.eval(id.asInstanceOf[Long], rows, cols)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = GridLatLng.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = $cls.eval($id, $rows, $cols);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object GridLatLng {
   def eval(id: Long, rows: Int, cols: Int): InternalRow = {
     val (lat, lng) = H3Lite.gridCellToLatLng(id, rows, cols)
@@ -510,58 +180,11 @@ object GridLatLng {
   }
 }
 
-/** S2 cell id of a (lat, lng) point at plan-time `level` — the second
-  * half of the north rule's "H3/S2 index" (SURVEY.md §2.8 G1), backed
-  * by the from-scratch S2 scheme in core/S2Lite.scala (cube face +
-  * quadratic ST + Hilbert order). Stateless scalar, one static call so
-  * the encode stays inside whole-stage codegen. Children: (lat: double,
-  * lng: double), both degrees. */
-case class S2Cell(left: Expression, right: Expression, level: Int)
-  extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] =
-    Seq(DoubleType, DoubleType)
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(lat: Any, lng: Any): Any =
-    graft.core.S2Lite.encode(lat.asInstanceOf[Double],
-      lng.asInstanceOf[Double], level)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val s2 = graft.core.S2Lite.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (lat, lng) =>
-      s"${ev.value} = $s2.encode($lat, $lng, $level);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** The four edge-adjacent S2 cells of an id at its own level, crossing
   * cube-face boundaries (core/S2Lite.edgeNeighbors) — the S2 side of
-  * the tile-neighbor join (G4), like GridH3 + H3Lite.kRing on the H3
+  * the tile-neighbor join (G4), like grid_h3 + H3Lite.kRing on the H3
   * side. Emits array<long> of length 4 in (down, right, up, left)
   * order. */
-case class S2Neighbors(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] =
-    Seq(LongType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(id: Any): Any =
-    S2Neighbors.eval(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = S2Neighbors.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, id => s"${ev.value} = $cls.eval($id);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object S2Neighbors {
   def eval(id: Long): ArrayData =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
@@ -573,34 +196,6 @@ object S2Neighbors {
   * shuffle key). One static call of guarded bit math per row (eval and
   * codegen share S2Parent.eval, which throws on ids coarser than the
   * target level instead of emitting plausible garbage). */
-case class S2Parent(child: Expression, level: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  require(level >= 0 && level <= graft.core.S2Lite.MaxLevel,
-    s"s2_parent level $level out of [0, ${graft.core.S2Lite.MaxLevel}]")
-
-  override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] =
-    Seq(LongType)
-  override def dataType: DataType = LongType
-
-  // one AND per row guards the silent-garbage case (an id COARSER than
-  // `level`: its marker would be kept as a position bit); eval and
-  // codegen share the check and the bit math exactly
-  override def nullSafeEval(id: Any): Any =
-    S2Parent.eval(id.asInstanceOf[Long],
-      graft.core.S2Lite.lsbForLevel(level), level)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = S2Parent.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val lsb = graft.core.S2Lite.lsbForLevel(level)
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = $cls.eval($id, ${lsb}L, $level);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object S2Parent {
   /** `lsb` is lsbForLevel(level), passed as a plan-time constant. */
   def eval(id: Long, lsb: Long, level: Int): Long = {
@@ -616,34 +211,10 @@ object S2Parent {
   * (rastOut, `Supplemental_Data_1.R:53-72`): sparse in-tile (pixel,
   * value) pairs -> a full tile payload with NaN for missing pixels
   * (R's NA), as raw f32 or a georeferenced LZW GeoTIFF stamped with the
-  * tile's ModelPixelScale/Tiepoint. Children: (tile_id: int,
+  * tile's ModelPixelScale/Tiepoint. Inputs: (tile_id: int,
   * pix: array<int>, v: array<double>); layout constants are plan-time.
   * Exists so the sink's byte-packing stays a codegen'd expression
   * instead of a ScalaUDF (opaque to Catalyst, boxes its inputs). */
-case class TileEncode(first: Expression, second: Expression,
-    third: Expression, nPix: Int, tile: Int, tilesX: Int, gtiff: Boolean,
-    cellSize: Double, xMin: Double, yMax: Double)
-  extends TernaryExpression {
-
-  override def dataType: DataType = BinaryType
-
-  override def nullSafeEval(t: Any, pixs: Any, vs: Any): Any =
-    TileEncode.eval(t.asInstanceOf[Int], pixs.asInstanceOf[ArrayData],
-      vs.asInstanceOf[ArrayData], nPix, tile, tilesX, gtiff, cellSize,
-      xMin, yMax)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = TileEncode.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (t, pixs, vs) =>
-      s"${ev.value} = $cls.eval($t, $pixs, $vs, $nPix, $tile, $tilesX, " +
-        s"$gtiff, ${cellSize}D, ${xMin}D, ${yMax}D);")
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object TileEncode {
   def eval(t: Int, pixs: ArrayData, vs: ArrayData, nPix: Int, tile: Int,
       tilesX: Int, gtiff: Boolean, cellSize: Double, xMin: Double,
@@ -675,26 +246,6 @@ object TileEncode {
   * out of whole-stage codegen), this is one static call that stays in
   * the generated code, with one float[] per tile instead of a lambda
   * frame per output pixel. */
-case class Resize2x(child: Expression, w: Int, h: Int)
-  extends UnaryExpression {
-
-  require(w % 2 == 0 && h % 2 == 0, s"Resize2x needs even dims, got ${w}x$h")
-
-  override def dataType: DataType = BinaryType
-
-  override def nullSafeEval(bytes: Any): Any =
-    Resize2x.eval(bytes.asInstanceOf[Array[Byte]], w, h)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Resize2x.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Resize2x {
   def eval(bytes: Array[Byte], w: Int, h: Int): Array[Byte] = {
     val w2 = w / 2
@@ -728,24 +279,6 @@ object Resize2x {
   * compares bit-for-bit with no ordering caveat. One static call per
   * tile inside whole-stage codegen (the q74-verdict lesson: a real
   * doGenCode expression, not a CodegenFallback transform lambda). */
-case class Upsample2x(child: Expression, w: Int, h: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-
-  override def nullSafeEval(bytes: Any): Any =
-    Upsample2x.eval(bytes.asInstanceOf[Array[Byte]], w, h)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Upsample2x.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Upsample2x {
   def eval(bytes: Array[Byte], w: Int, h: Int): Array[Byte] = {
     val w2 = w * 2
@@ -789,26 +322,6 @@ object Upsample2x {
   * (no arithmetic at all) and the per-pixel oracle is just the source
   * formula read at the permuted index. One static call inside
   * whole-stage codegen, one float[] per tile. */
-case class Mirror(child: Expression, w: Int, h: Int, mode: Int)
-  extends UnaryExpression {
-
-  require(mode >= 0 && mode <= 2, s"Mirror mode must be 0|1|2, got $mode")
-
-  override def dataType: DataType = BinaryType
-
-  override def nullSafeEval(bytes: Any): Any =
-    Mirror.eval(bytes.asInstanceOf[Array[Byte]], w, h, mode)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Mirror.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h, $mode);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Mirror {
   def eval(bytes: Array[Byte], w: Int, h: Int, mode: Int): Array[Byte] = {
     val out = new Array[Float](w * h)
@@ -838,24 +351,6 @@ object Mirror {
   * `==`, so a NaN-bearing line is never constant (NaN != NaN) — the
   * conservative reading for a detector. One pass per edge with early
   * exit, one static call inside whole-stage codegen. */
-case class BorderStats(child: Expression, w: Int, h: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullSafeEval(bytes: Any): Any =
-    BorderStats.eval(bytes.asInstanceOf[Array[Byte]], w, h)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = BorderStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BorderStats {
   def eval(bytes: Array[Byte], w: Int, h: Int): ArrayData = {
     @inline def px(r: Int, c: Int): Float = Codec.floatAt(bytes, r * w + c)
@@ -889,24 +384,6 @@ object BorderStats {
   * EMPTY payload (zero bytes; the derived-length decode then yields
   * zero pixels), the honest reading of "nothing to keep". One static
   * call inside whole-stage codegen, one float[] per image. */
-case class AutoCrop(child: Expression, w: Int, h: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-
-  override def nullSafeEval(bytes: Any): Any =
-    AutoCrop.eval(bytes.asInstanceOf[Array[Byte]], w, h)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = AutoCrop.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $w, $h);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object AutoCrop {
   def eval(bytes: Array[Byte], w: Int, h: Int): Array[Byte] = {
     val b = BorderStats.eval(bytes, w, h).toIntArray
@@ -925,47 +402,6 @@ object AutoCrop {
     }
     Codec.encodeF32(Array(out))
   }
-}
-
-/** 3x3 focal (stencil) statistics over ONE tile's halo-padded patch —
-  * the per-tile compute half of distributed focal map algebra (the
-  * raster `focal()` family the reference's toolchain applies around
-  * the driver maps; here slope/hotspot-style neighborhood ops become
-  * a Spark pattern: tiles exchange 1-pixel halos keyed by destination
-  * tile, then every tile computes its stencil locally — ONE shuffle at
-  * ~(1+2/T)^2 of the pixel count instead of a 9x-replicated per-pixel
-  * self-join).
-  *
-  * Children: the (pos, value) pairs of the padded (tile+2)^2 patch as
-  * two parallel arrays (pos ascending — the U2 sort-inside-agg
-  * pattern; order is irrelevant here but pinned for free by the shared
-  * shape). Values are small non-negative integers carried as doubles
-  * (band pixels); absent positions (outside the world) count as no
-  * neighbor. Returns tile*tile packed longs, one per core pixel, in
-  * row-major order: (fsum << 5) | (ncnt << 1) | peak, where fsum =
-  * integer sum of the in-grid 3x3 window (self included), ncnt = its
-  * size (<= 9, 4 bits), peak = value strictly above every in-grid
-  * neighbor. -1 marks a core position absent from the patch (edge-tile
-  * padding) — callers filter those. All-integer outputs so the DuckDB
-  * oracle compare is bit-exact. */
-case class Focal3x3(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    Focal3x3.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
-      tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Focal3x3.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Shared sparse-patch densifier for the stencil expressions: scatters
@@ -987,6 +423,27 @@ private[sql] object PatchGrid {
   }
 }
 
+/** 3x3 focal (stencil) statistics over ONE tile's halo-padded patch —
+  * the per-tile compute half of distributed focal map algebra (the
+  * raster `focal()` family the reference's toolchain applies around
+  * the driver maps; here slope/hotspot-style neighborhood ops become
+  * a Spark pattern: tiles exchange 1-pixel halos keyed by destination
+  * tile, then every tile computes its stencil locally — ONE shuffle at
+  * ~(1+2/T)^2 of the pixel count instead of a 9x-replicated per-pixel
+  * self-join).
+  *
+  * Inputs: the (pos, value) pairs of the padded (tile+2)^2 patch as
+  * two parallel arrays (pos ascending — the U2 sort-inside-agg
+  * pattern; order is irrelevant here but pinned for free by the shared
+  * shape). Values are small non-negative integers carried as doubles
+  * (band pixels); absent positions (outside the world) count as no
+  * neighbor. Returns tile*tile packed longs, one per core pixel, in
+  * row-major order: (fsum << 5) | (ncnt << 1) | peak, where fsum =
+  * integer sum of the in-grid 3x3 window (self included), ncnt = its
+  * size (<= 9, 4 bits), peak = value strictly above every in-grid
+  * neighbor. -1 marks a core position absent from the patch (edge-tile
+  * padding) — callers filter those. All-integer outputs so the DuckDB
+  * oracle compare is bit-exact. */
 object Focal3x3 {
   def eval(pixs: ArrayData, vs: ArrayData, tile: Int): ArrayData = {
     val p = tile + 2
@@ -1035,26 +492,6 @@ object Focal3x3 {
   * stencils. Band values are 0..255 integers, so gx,gy in [-1020,1020]
   * and the bias-pack is lossless; all-integer output keeps the DuckDB
   * oracle compare bit-exact. Same patch contract as [[Focal3x3]]. */
-case class Sobel3x3(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    Sobel3x3.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
-      tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Sobel3x3.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Sobel3x3 {
   def eval(pixs: ArrayData, vs: ArrayData, tile: Int): ArrayData = {
     val p = tile + 2
@@ -1098,26 +535,6 @@ object Sobel3x3 {
   * world support is incomplete (world edges, edge-tile padding) —
   * callers filter those. Same patch contract as [[Focal3x3]] but with
   * pad 2. */
-case class Harris5x5(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    Harris5x5.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
-      tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Harris5x5.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Harris5x5 {
   val Absent: Long = Long.MinValue
 
@@ -1197,26 +614,6 @@ object Harris5x5 {
   * One long per core pixel row-major; Long.MinValue where the 5x5
   * world support is incomplete (the q98/Harris interior rule). Same
   * patch contract as [[Harris5x5]]. */
-case class Gauss5x5(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    Gauss5x5.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
-      tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Gauss5x5.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Gauss5x5 {
   val Absent: Long = Long.MinValue
   private val K = Array(1L, 4L, 6L, 4L, 1L)
@@ -1261,30 +658,6 @@ object Gauss5x5 {
   * ey): valid right/down pair counts and their differing-class counts
   * — O(tiles) output rows, the LapStats shape. Same patch contract as
   * [[Focal3x3]] (pad 1). */
-case class EdgeStats(left: Expression, right: Expression, tile: Int,
-    thr: Int) extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("nx", IntegerType, nullable = false),
-    StructField("ex", IntegerType, nullable = false),
-    StructField("ny", IntegerType, nullable = false),
-    StructField("ey", IntegerType, nullable = false)))
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    EdgeStats.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
-      tile, thr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = EdgeStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile, $thr);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object EdgeStats {
   def eval(pixs: ArrayData, vs: ArrayData, tile: Int, thr: Int): InternalRow = {
     val p = tile + 2
@@ -1323,26 +696,6 @@ object EdgeStats {
   * -1 where the core pixel is absent (edge-tile padding). The <=9
   * samples are selected by insertion sort into a stack array — no
   * allocation per pixel. Same patch contract as [[Focal3x3]]. */
-case class Median3x3(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    Median3x3.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
-      tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Median3x3.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Median3x3 {
   def eval(pixs: ArrayData, vs: ArrayData, tile: Int): ArrayData = {
     val p = tile + 2
@@ -1390,26 +743,6 @@ object Median3x3 {
   * go to the SMALLER level — the same first-max determinism the
   * reference's which.max vote pins (W1). Counting is pairwise over the
   * <=9 present samples (no per-pixel histogram allocation). */
-case class Mode3x3(left: Expression, right: Expression, tile: Int, div: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    Mode3x3.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
-      tile, div)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Mode3x3.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile, $div);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Mode3x3 {
   def eval(pixs: ArrayData, vs: ArrayData, tile: Int, div: Int): ArrayData = {
     val p = tile + 2
@@ -1468,31 +801,6 @@ object Mode3x3 {
   * intersection vertex and shoelace term is an exact double, so the
   * DuckDB oracle (the same clip as four chained window-CTE passes)
   * matches bit for bit. Returns struct(area, nv). */
-case class RectClipArea(left: Expression, right: Expression,
-    polys: Array[Polygon], tile: Int, tilesX: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("area", DoubleType, nullable = false),
-    StructField("nv", IntegerType, nullable = false)))
-
-  override def nullSafeEval(tileId: Any, regionId: Any): Any =
-    RectClipArea.eval(polys, tileId.asInstanceOf[Long],
-      regionId.asInstanceOf[Int], tile, tilesX)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val polysRef = ctx.addReferenceObj("polys", polys,
-      classOf[Polygon].getName + "[]")
-    val cls = RectClipArea.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (tid, rid) =>
-      s"${ev.value} = $cls.eval($polysRef, $tid, $rid, $tile, $tilesX);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object RectClipArea {
   private[sql] def polyOf(polys: Array[Polygon], regionId: Int): Polygon = {
     var i = 0
@@ -1519,31 +827,6 @@ object RectClipArea {
   * Tabulate-Intersection primitive between two vector layers. Same
   * clip core, same exactness argument (slope-form intersections stay
   * exact dyadics for any integer clip bound). */
-case class PaClipArea(left: Expression, right: Expression,
-    polys: Array[Polygon], cols: Int, rows: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("area", DoubleType, nullable = false),
-    StructField("nv", IntegerType, nullable = false)))
-
-  override def nullSafeEval(paId: Any, regionId: Any): Any =
-    PaClipArea.eval(polys, paId.asInstanceOf[Long],
-      regionId.asInstanceOf[Int], cols, rows)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val polysRef = ctx.addReferenceObj("polys", polys,
-      classOf[Polygon].getName + "[]")
-    val cls = PaClipArea.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pid, rid) =>
-      s"${ev.value} = $cls.eval($polysRef, $pid, $rid, $cols, $rows);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object PaClipArea {
   def eval(polys: Array[Polygon], paId: Long, regionId: Int,
       cols: Int, rows: Int): InternalRow = {
@@ -1565,29 +848,6 @@ object PaClipArea {
   * fragmentation triple (RLE rasters, boustrophedon coverage, FRAGSTATS
   * edge metrics all start here). All integers; one call per tile, so
   * the counting loop is amortized exactly like ClumpLocal's union-find. */
-case class RunStats(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_runs", IntegerType, nullable = false),
-    StructField("max_run", IntegerType, nullable = false),
-    StructField("n_vruns", IntegerType, nullable = false)))
-
-  override def nullSafeEval(pixs: Any, clss: Any): Any =
-    RunStats.eval(pixs.asInstanceOf[ArrayData], clss.asInstanceOf[ArrayData],
-      tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = RunStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, clss) =>
-      s"${ev.value} = $cls.eval($pixs, $clss, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object RunStats {
   def eval(pixs: ArrayData, clss: ArrayData, tile: Int): InternalRow = {
     val nCells = tile * tile
@@ -1656,33 +916,6 @@ object RunStats {
   * complete blocks (a block with any NaN sample — edge-tile padding —
   * is skipped and not counted). One pass over the payload fused with
   * the decode, zero shuffle beyond the tile scan. */
-case class HaarStats(left: Expression, right: Expression, nPixels: Int,
-    band: Int, tile: Int)
-  extends BinaryExpression {
-  require(tile % 2 == 0, s"HaarStats needs an even tile, got $tile")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("ll_sum", LongType, nullable = false),
-    StructField("lh_abs", LongType, nullable = false),
-    StructField("hl_abs", LongType, nullable = false),
-    StructField("hh_abs", LongType, nullable = false),
-    StructField("n_blocks", IntegerType, nullable = false)))
-
-  override def nullSafeEval(bytes: Any, fmt: Any): Any =
-    HaarStats.eval(bytes.asInstanceOf[Array[Byte]],
-      fmt.asInstanceOf[UTF8String], nPixels, band, tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HaarStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $band, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object HaarStats {
   def eval(bytes: Array[Byte], fmt: UTF8String, nPixels: Int, band: Int,
       tile: Int): InternalRow = {
@@ -1727,25 +960,6 @@ object HaarStats {
   * both levels of the two-level distributed shape (per-partition
   * partial hulls, then the hull of their tiny union). Input must be
   * distinct (collect_set) but need not be sorted. */
-case class ConvexHull(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("area2", LongType, nullable = false),
-    StructField("verts", ArrayType(LongType, containsNull = false),
-      nullable = false)))
-
-  override def nullSafeEval(ps: Any): Any =
-    ConvexHull.eval(ps.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = ConvexHull.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, ps => s"${ev.value} = $cls.eval($ps);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ConvexHull {
   @inline private def cross(ox: Long, oy: Long, ax: Long, ay: Long,
       bx: Long, by: Long): Long =
@@ -1809,25 +1023,6 @@ object ConvexHull {
   * positions, the same contract every stencil rider shares);
   * out-of-grid cores come back -1 and are filtered. One call per tile
   * patch over the q93 halo-exchange frame. */
-case class Lbp(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    Lbp.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData], tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Lbp.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Lbp {
   // clockwise from top-left; bit k = neighbor k >= center
   private val Order: Array[(Int, Int)] = Array(
@@ -1875,26 +1070,6 @@ object Lbp {
   * comparisons are exact long cross-multiplications (numerators <
   * 2^41, denominators <= 2·tile) — no float anywhere, so ties at
   * equidistant parabola crossings are deterministic. */
-case class Edt(left: Expression, right: Expression, tile: Int, thresh: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    Edt.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
-      tile, thresh)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Edt.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile, $thresh);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Edt {
   private val Inf = 1L << 20 // > any in-tile distance; Inf² fits a long
 
@@ -1985,25 +1160,6 @@ object Edt {
   * chained-CTE CASE cascade) is bit-exact. One call per IMAGE: the
   * O(kept·n) loop is amortized like ClumpLocal's union-find, and n is
   * proposal-count-sized (hundreds), never corpus-sized. */
-case class GreedyNms(child: Expression, thrNum: Int, thrDen: Int)
-  extends UnaryExpression {
-  require(thrNum > 0 && thrDen > 0, "NMS threshold must be positive")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(boxes: Any): Any =
-    GreedyNms.eval(boxes.asInstanceOf[ArrayData], thrNum, thrDen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = GreedyNms.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, boxes =>
-      s"${ev.value} = $cls.eval($boxes, $thrNum, $thrDen);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object GreedyNms {
   def eval(boxes: ArrayData, thrNum: Int, thrDen: Int): ArrayData = {
     val n = boxes.numElements()
@@ -2051,25 +1207,6 @@ object GreedyNms {
   * are 0..255 ints carried as double, so SAT ≤ tile²·255 — exact in a
   * long at any real tile size, and the DuckDB oracle recomputes the
   * same table by a DIFFERENT algorithm (two chained window cumsums). */
-case class Sat(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    Sat.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData], tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Sat.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Sat {
   def eval(pixs: ArrayData, vs: ArrayData, tile: Int): ArrayData = {
     val v = new Array[Long](tile * tile)
@@ -2113,28 +1250,6 @@ object Sat {
   * level two's job: only fragments
   * touching a tile border can join a neighboring tile's fragment, which
   * is what makes the clump's global phase perimeter-sized. */
-case class ClumpLocal(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-  require(tile.toLong * tile <= (1L << 20),
-    s"ClumpLocal supports tiles up to 1024x1024, got $tile")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(pixs: Any, clss: Any): Any =
-    ClumpLocal.eval(pixs.asInstanceOf[ArrayData],
-      clss.asInstanceOf[ArrayData], tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = ClumpLocal.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, clss) =>
-      s"${ev.value} = $cls.eval($pixs, $clss, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object ClumpLocal {
   def eval(pixs: ArrayData, clss: ArrayData, tile: Int): ArrayData = {
     val nCells = tile * tile
@@ -2210,29 +1325,6 @@ object ClumpLocal {
   * variance NUMERATOR n·lsumsq − lsum² (still integer, so the DuckDB
   * oracle compare is bit-exact) and divide by n² only for display.
   * Same patch contract as [[Focal3x3]]. */
-case class LapStats(left: Expression, right: Expression, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", IntegerType, nullable = false),
-    StructField("lsum", LongType, nullable = false),
-    StructField("lsumsq", LongType, nullable = false)))
-
-  override def nullSafeEval(pixs: Any, vs: Any): Any =
-    LapStats.eval(pixs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData],
-      tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = LapStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (pixs, vs) =>
-      s"${ev.value} = $cls.eval($pixs, $vs, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object LapStats {
   def eval(pixs: ArrayData, vs: ArrayData, tile: Int): InternalRow = {
     val p = tile + 2
@@ -2279,31 +1371,7 @@ object LapStats {
   * oracle (a per-tile RANGE-frame window count) compares bit-exact.
   * Band values must be integral in [0, 255] — anything else fails
   * loudly rather than silently mis-binning.
-  * Children: (bytes, fmt); nPixels/band are plan-time constants. */
-case class HistEqStats(left: Expression, right: Expression,
-    nPixels: Int, band: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", IntegerType, nullable = false),
-    StructField("esum", LongType, nullable = false),
-    StructField("ewsum", LongType, nullable = false)))
-
-  override def nullSafeEval(bytes: Any, fmt: Any): Any =
-    HistEqStats.eval(bytes.asInstanceOf[Array[Byte]],
-      fmt.asInstanceOf[UTF8String], nPixels, band)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HistEqStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $band);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
+  * Inputs: (bytes, fmt); nPixels/band are plan-time constants. */
 object HistEqStats {
   def eval(bytes: Array[Byte], fmt: UTF8String, nPixels: Int,
       band: Int): InternalRow = {
@@ -2354,27 +1422,6 @@ object HistEqStats {
   * whole-scene viewshed is a different algorithm class (R2/R3 sweeps)
   * with cross-tile dependencies; per tile the op is embarrassingly
   * parallel and needs no halo. Output: tile² longs, row-major. */
-case class Viewshed(left: Expression, right: Expression, nPixels: Int,
-    band: Int, tile: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(bytes: Any, fmt: Any): Any =
-    Viewshed.eval(bytes.asInstanceOf[Array[Byte]],
-      fmt.asInstanceOf[UTF8String], nPixels, band, tile)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Viewshed.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (bytes, fmt) =>
-      s"${ev.value} = $cls.eval($bytes, $fmt, $nPixels, $band, $tile);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Viewshed {
   /** is a/sqrt(da2) < b/sqrt(db2)? Exact: sign cases + squared
     * cross-multiplication (da2, db2 > 0). */
@@ -2447,27 +1494,6 @@ object Viewshed {
   * flips between CONSECUTIVE samples of the window (zeros break a
   * flip), a window-local definition so windows are independently
   * computable in any order. */
-case class AudioWindowStats(child: Expression, win: Int, winSize: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("sum_sq", LongType, nullable = false),
-    StructField("peak", IntegerType, nullable = false),
-    StructField("zero_cross", IntegerType, nullable = false)))
-
-  override def nullSafeEval(bytes: Any): Any =
-    AudioWindowStats.eval(bytes.asInstanceOf[Array[Byte]], win, winSize)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = AudioWindowStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $win, $winSize);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object AudioWindowStats {
   def eval(bytes: Array[Byte], win: Int, winSize: Int): InternalRow = {
     val off = win * winSize
@@ -2493,26 +1519,6 @@ object AudioWindowStats {
   * audio resample op; a production resampler swaps the inner kernel
   * for a windowed-sinc but keeps this exact shape: per-row, linear,
   * no shuffle, output length n/k). */
-case class DecimateS16(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  require(k > 0, s"decimation factor must be positive, got $k")
-
-  override def dataType: DataType = BinaryType
-
-  override def nullSafeEval(bytes: Any): Any =
-    DecimateS16.eval(bytes.asInstanceOf[Array[Byte]], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = DecimateS16.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $k);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object DecimateS16 {
   def eval(bytes: Array[Byte], k: Int): Array[Byte] = {
     val n = bytes.length / 2
@@ -2533,27 +1539,6 @@ object DecimateS16 {
   * AND sample order (the q73 round-trip trick), so composing it over
   * DecimateS16 pins the re-encoded payload bit-for-bit under the SQL
   * oracle. */
-case class ClipStatsS16(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", IntegerType, nullable = false),
-    StructField("sum_v", LongType, nullable = false),
-    StructField("peak", IntegerType, nullable = false),
-    StructField("wsum", LongType, nullable = false)))
-
-  override def nullSafeEval(bytes: Any): Any =
-    ClipStatsS16.eval(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = ClipStatsS16.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ClipStatsS16 {
   def eval(bytes: Array[Byte]): InternalRow = {
     val n = bytes.length / 2
@@ -2582,26 +1567,6 @@ object ClipStatsS16 {
   * larger), so near-identical clips land within a few hamming bits and
   * the pigeonhole-banded matcher (hammingPairs) finds them with exact
   * recall. All-integer, so the DuckDB oracle rebuilds it bit-for-bit. */
-case class AudioFingerprint(child: Expression, winSize: Int, nWin: Int)
-  extends UnaryExpression {
-
-  require(nWin > 0 && nWin <= 64, s"fingerprint needs 1..64 windows, got $nWin")
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(bytes: Any): Any =
-    AudioFingerprint.eval(bytes.asInstanceOf[Array[Byte]], winSize, nWin)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = AudioFingerprint.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = $cls.eval($bytes, $winSize, $nWin);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object AudioFingerprint {
   def eval(bytes: Array[Byte], winSize: Int, nWin: Int): Long = {
     val e = new Array[Long](nWin)
@@ -2637,35 +1602,16 @@ object AudioFingerprint {
   * zero per-shingle allocation instead of one UTF8String per window
   * per signature. Null for texts shorter than one window (no shingles),
   * matching list_min(empty) = NULL. */
-case class MinHashSigs(child: Expression, as: Array[Long], bs: Array[Long],
-    prime: Long)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(t: Any): Any =
-    MinHashSigs.eval(t.asInstanceOf[UTF8String], as, bs, prime)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val asRef = ctx.addReferenceObj("mhAs", as, "long[]")
-    val bsRef = ctx.addReferenceObj("mhBs", bs, "long[]")
-    val cls = MinHashSigs.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, t => {
-      val r = ctx.freshName("mhSigs")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  $cls.eval($t, $asRef, $bsRef, ${prime}L);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashSigs {
+  /** The canonical 4-signature (a_j, b_j) set of the engine's MinHash
+    * queries and of graft_minhash_sigs, mirrored by their oracles (LCG
+    * multiplier/increment constants, the classic public ones —
+    * Knuth/Numerical Recipes lineage), and its Mersenne prime. */
+  val Params: Seq[(Long, Long)] = Seq(
+    (1103515245L, 12345L), (69069L, 362437L),
+    (1664525L, 1013904223L), (22695477L, 7777L))
+  val Prime: Long = 2147483647L
+
   /** Iterates CODE POINTS, not UTF-16 units: the oracle's substr/ascii
     * and the sibling shingles()/code3 columns count characters, so a
     * charAt walk would diverge on non-BMP text (and window counts would
@@ -2707,29 +1653,6 @@ object MinHashSigs {
   * in place. Sorted ascending so [[SortedInterSize]] can merge-count
   * pairs without building a per-pair hash set. Null for texts shorter
   * than one window, matching MinHashSigs (no shingles exist). */
-case class Sh3Set(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(t: Any): Any =
-    Sh3Set.eval(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Sh3Set.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, t => {
-      val r = ctx.freshName("shSet")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r = $cls.eval($t);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Sh3Set {
   /** Code-point walk (not charAt), the MinHashSigs discipline. */
   def eval(t: UTF8String): ArrayData = {
@@ -2765,23 +1688,6 @@ object Sh3Set {
   * (guide §1.2 "per-task work"). Inputs MUST be sorted ascending and
   * duplicate-free ([[Sh3Set]] emits exactly that); violating either
   * undercounts, so the only producers are the sorted-set expressions. */
-case class SortedInterSize(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedInterSize.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = SortedInterSize.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $cls.eval($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
 object SortedInterSize {
   def eval(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()
@@ -2809,23 +1715,6 @@ object SortedInterSize {
   * Token semantics match split(text, ' ') with limit -1: consecutive /
   * trailing spaces yield empty tokens (code 0), empty text is one
   * empty token. */
-case class SimHash16(child: Expression)
-  extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(t: Any): Any =
-    SimHash16.eval(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = SimHash16.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $cls.eval($t);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SimHash16 {
   def eval(t: UTF8String): Long = {
     val s = t.toString
@@ -2880,22 +1769,6 @@ object SimHash16 {
   * trailing spaces yield empty tokens). Gram key = tokens joined by
   * U+001F (unit separator); injective on any corpus whose tokens don't
   * contain control characters. */
-case class RepStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any =
-    RepStats.eval(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = RepStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $cls.eval($t);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RepStats {
   def eval(t: UTF8String): ArrayData = {
     val toks = t.toString.split(" ", -1)
@@ -2985,29 +1858,6 @@ case class DotF64(left: Expression, right: Expression)
   * original Column composition over every grid cell, and the DuckDB
   * oracles pin it independently). Integer-exact: all arithmetic is
   * Long, division only by positive constants on non-negative values. */
-case class D8Pick(child: Expression, rows: Int, cols: Int,
-    terrB: Int, terrCX: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("wdrop", LongType, nullable = false),
-    StructField("dir", IntegerType, nullable = false),
-    StructField("dst", LongType, nullable = false)))
-
-  override def nullSafeEval(id: Any): Any =
-    D8Pick.eval(id.asInstanceOf[Long], rows, cols, terrB, terrCX)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = D8Pick.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) " +
-        s"$cls.eval($id, $rows, $cols, $terrB, $terrCX);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object D8Pick {
   // (ESRI code, dx, dy, integer weight) in ascending-code order — the
   // iteration order IS the tie-break (first strict max wins, matching
@@ -3083,33 +1933,6 @@ object D8Pick {
   * only +0.0 (x - x = +0.0, dt > 0), so the double sort cannot drift
   * on signed zeros; ties in v group by primitive == (matching SQL
   * grouping — fixture values are never NaN). */
-case class MannKendall(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("s_stat", LongType, nullable = false),
-    StructField("n", LongType, nullable = false),
-    StructField("var18", LongType, nullable = false),
-    StructField("sen_slope", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(tus: Any, vs: Any): Any =
-    MannKendall.eval(tus.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = MannKendall.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (t, v) => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-        $cls.eval($t, $v);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object MannKendall {
   def eval(tusA: ArrayData, vsA: ArrayData): InternalRow = {
     val n = tusA.numElements()
@@ -3153,49 +1976,83 @@ object MannKendall {
 }
 
 object GraftFunctions {
-  import org.apache.spark.sql.GraftColumnBridge.{toColumn => column, toExpression => expression}
+  import org.apache.spark.sql.GraftColumnBridge.{AbstractType, toColumn => column, toExpression => expression}
+
+  /** The one kernel-call mechanism: Spark's StaticInvoke of `kernel.fn`.
+    * Generated code calls the object's static forwarder, so `kernel`
+    * must be a top-level object with no companion class; interpreted
+    * evaluation reflects the same method. `args` are columns or
+    * plan-time constants: Int/Long/Double/Boolean become typed literals,
+    * any other object (polygons, forest, cover, tables) an ObjectType
+    * literal. A null column argument yields null without a call;
+    * `nullable` marks kernels that return null themselves. */
+  private def invoke(kernel: AnyRef, dataType: DataType, args: Seq[Any],
+      fn: String = "eval", nullable: Boolean = false,
+      inputTypes: Seq[AbstractType] = Nil): Column =
+    column(StaticInvoke(kernel.getClass, dataType, fn, args.map {
+      case c: Column => expression(c)
+      case v @ (_: Int | _: Long | _: Double | _: Boolean) => Literal(v)
+      case o: AnyRef => Literal(o, ObjectType(o.getClass))
+    }, inputTypes, returnNullable = nullable))
+
+  /** A struct of non-nullable fields, the shape every stats kernel
+    * returns. */
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Ints = ArrayType(IntegerType, containsNull = false)
 
   /** Decode band `band` of an f32/png16 tile payload to array<float>. */
   def decode_band(bytes: Column, fmt: Column, nPixels: Int, band: Int): Column =
-    column(DecodeBand(expression(bytes), expression(fmt), nPixels, band))
+    invoke(DecodeBand, ArrayType(FloatType, containsNull = false),
+      Seq(bytes, fmt, nPixels, band))
 
   /** One-pass stats of frame `frame` of a multi-frame payload:
     * struct(mean_px, max_px, wsum). */
   def frame_stats(bytes: Column, fmt: Column, nPixels: Int,
       frame: Int): Column =
-    column(FrameStats(expression(bytes), expression(fmt), nPixels, frame))
+    invoke(FrameStats, struct("mean_px" -> DoubleType,
+      "max_px" -> DoubleType, "wsum" -> DoubleType),
+      Seq(bytes, fmt, nPixels, frame))
 
   /** 64-bit block-mean perceptual hash of frame `frame` of a
     * multi-frame payload (decodes only that frame's byte slice). */
   def frame_phash(bytes: Column, fmt: Column, nPixels: Int, frame: Int,
       w: Int, h: Int): Column =
-    column(FramePhash(expression(bytes), expression(fmt), nPixels, frame,
-      w, h))
+    invoke(FramePhash, LongType, Seq(bytes, fmt, nPixels, frame, w, h))
 
   /** One-pass per-tile histogram-equalization stats of band `band`:
     * struct(n, esum, ewsum) — all-integer, order-pinned. */
   def hist_eq_stats(bytes: Column, fmt: Column, nPixels: Int,
       band: Int): Column =
-    column(HistEqStats(expression(bytes), expression(fmt), nPixels, band))
+    invoke(HistEqStats, struct("n" -> IntegerType, "esum" -> LongType,
+      "ewsum" -> LongType), Seq(bytes, fmt, nPixels, band))
 
-  /** Morton z-value of (x, y) — the z-order layout curve key. */
+  /** Morton z-value of (x, y) — the z-order layout curve key
+    * (engine/Layout: x on even bits, y on odd; integer-exact, so q87's
+    * oracle re-derives it bit by bit). */
   def z_interleave(x: Column, y: Column): Column =
-    column(ZInterleave(expression(x), expression(y)))
+    invoke(graft.engine.Layout, LongType, Seq(x, y), "zInterleave")
 
   /** True iff `hash` (an `xxhash64(key)` column — the same hashing the
-    * filter was fitted with) might be in the fitted Bloom filter. */
+    * filter was fitted with) might be in the fitted Bloom filter: k
+    * integer bit tests against the bitmap, which rides the plan as a
+    * literal and ships once per executor with the task binary. No false
+    * negatives, so a pruned join is row-identical to the unpruned one
+    * (q86's oracle relies on this). */
   def bloom_might_contain(hash: Column, f: graft.engine.Bloom.Filter): Column =
-    column(BloomMightContain(expression(hash), f.bits, f.k))
+    invoke(graft.engine.Bloom, BooleanType, Seq(f.bits, hash, f.k),
+      "mightContain")
 
   /** Region id of point (px, py) among `polys`, null if none. */
   def region_of(px: Column, py: Column, polys: Array[Polygon]): Column =
-    column(RegionOf(expression(px), expression(py), polys))
+    invoke(RegionOf, IntegerType, Seq(polys, px, py), nullable = true)
 
   /** Region id of point (px, py) among `polys`, -1 if none (the
     * non-nullable sentinel form the fused classify uses). */
   def region_of_neg1(px: Column, py: Column, polys: Array[Polygon]): Column =
-    column(RegionOf(expression(px), expression(py), polys,
-      nullOnMiss = false))
+    invoke(Geom, IntegerType, Seq(polys, px, py), "regionOf")
 
   /** Generator: ONE row carrying the region id for points inside some
     * polygon, ZERO rows for points outside — with exactly one ray-cast
@@ -3223,24 +2080,31 @@ object GraftFunctions {
   /** One-pass repetition stats [n2,top2,dup2,n3,top3,dup3] over the
     * space-split token stream (Gopher-style repetition filters). */
   def rep_stats(text: Column): Column =
-    column(RepStats(expression(text)))
+    invoke(RepStats, Ints, Seq(text))
 
   /** Integer stats of window `win` of an s16le audio payload:
     * struct(sum_sq, peak, zero_cross). */
   def audio_window_stats(bytes: Column, win: Int, winSize: Int): Column =
-    column(AudioWindowStats(expression(bytes), win, winSize))
+    invoke(AudioWindowStats, struct("sum_sq" -> LongType,
+      "peak" -> IntegerType, "zero_cross" -> IntegerType),
+      Seq(bytes, win, winSize))
 
   /** Every k-th sample of an s16le payload (stride resample). */
-  def decimate_s16(bytes: Column, k: Int): Column =
-    column(DecimateS16(expression(bytes), k))
+  def decimate_s16(bytes: Column, k: Int): Column = {
+    require(k > 0, s"decimation factor must be positive, got $k")
+    invoke(DecimateS16, BinaryType, Seq(bytes, k))
+  }
 
   /** Whole-clip integer stats of an s16le payload, order-pinning. */
   def clip_stats_s16(bytes: Column): Column =
-    column(ClipStatsS16(expression(bytes)))
+    invoke(ClipStatsS16, struct("n" -> IntegerType, "sum_v" -> LongType,
+      "peak" -> IntegerType, "wsum" -> LongType), Seq(bytes))
 
   /** 64-bit circular energy-delta fingerprint of an s16le payload. */
-  def audio_fingerprint(bytes: Column, winSize: Int, nWin: Int): Column =
-    column(AudioFingerprint(expression(bytes), winSize, nWin))
+  def audio_fingerprint(bytes: Column, winSize: Int, nWin: Int): Column = {
+    require(nWin > 0 && nWin <= 64, s"fingerprint needs 1..64 windows, got $nWin")
+    invoke(AudioFingerprint, LongType, Seq(bytes, winSize, nWin))
+  }
 
   /** Per-pixel driver-class vote with the region PIP folded in, -1 for
     * points outside every polygon, over an f32 band payload whose band 0
@@ -3252,9 +2116,8 @@ object GraftFunctions {
       py: Column, polys: Array[Polygon], forest: Cart.PackedForest,
       blockConst: Array[Int], nbx: Int, blockB: Int, nPix: Int,
       lossFloor: Double, confFloor: Double): Column =
-    column(DriverClassifyAt(expression(bytes), expression(bytes),
-      expression(p), expression(px), expression(py), polys, forest, nPix,
-      lossFloor, confFloor, blockConst, nbx, blockB))
+    invoke(DriverClassifyAt, LongType, Seq(bytes, bytes, p, px, py, polys,
+      forest, nPix, lossFloor, confFloor, blockConst, nbx, blockB))
 
   /** driver_classify_at_covered() with the loss read from its own f32
     * payload `loss` (element p = pixel p's loss). The band payload
@@ -3265,10 +2128,9 @@ object GraftFunctions {
       px: Column, py: Column, polys: Array[Polygon],
       forest: Cart.PackedForest, blockConst: Array[Int], nbx: Int,
       blockB: Int, nPix: Int, lossFloor: Double, confFloor: Double): Column =
-    column(DriverClassifyAt(expression(loss),
-      expression(predictors(bytes, forest)), expression(p), expression(px),
-      expression(py), polys, forest, nPix, lossFloor, confFloor, blockConst,
-      nbx, blockB))
+    invoke(DriverClassifyAt, LongType, Seq(loss, predictors(bytes, forest),
+      p, px, py, polys, forest, nPix, lossFloor, confFloor, blockConst, nbx,
+      blockB))
 
   /** struct(class, confidence) of the packed-forest vote at pixel `p`,
     * for a cell already known to lie in `region`: loss from the f32
@@ -3277,9 +2139,9 @@ object GraftFunctions {
   def forest_vote(loss: Column, bytes: Column, p: Column, region: Column,
       forest: Cart.PackedForest, nPix: Int, lossFloor: Double,
       confFloor: Double): Column =
-    column(ForestVote(expression(loss),
-      expression(predictors(bytes, forest)), expression(p),
-      expression(region), forest, nPix, lossFloor, confFloor))
+    invoke(ForestVote, struct("class" -> LongType,
+      "confidence" -> DoubleType), Seq(forest, loss,
+      predictors(bytes, forest), p, region, nPix, lossFloor, confFloor))
 
   /** The band payload the forest walk reads: `bytes`, or an empty
     * literal when no tree has a split (the walk then reads no band). */
@@ -3292,40 +2154,54 @@ object GraftFunctions {
   def tile_encode(t: Column, pixs: Column, vs: Column, nPix: Int,
       tile: Int, tilesX: Int, gtiff: Boolean, cellSize: Double,
       xMin: Double, yMax: Double): Column =
-    column(TileEncode(expression(t), expression(pixs), expression(vs),
-      nPix, tile, tilesX, gtiff, cellSize, xMin, yMax))
+    invoke(TileEncode, BinaryType, Seq(t, pixs, vs, nPix, tile, tilesX,
+      gtiff, cellSize, xMin, yMax))
 
-  /** Float element at flat index `idx` of an f32 payload. */
+  /** Float element at flat index `idx` (band * nPixels + pixel) of an
+    * f32 payload. Pairs with an exploded pixel index to give the fused
+    * scan->decode->classify pipeline zero per-cell allocation. */
   def float_at(bytes: Column, idx: Column): Column =
-    column(FloatAt(expression(bytes), expression(idx)))
+    invoke(Codec, FloatType, Seq(bytes, idx), "floatAt")
 
   /** 2x box-average downscale of band 0 of an f32 payload. */
-  def resize2x(bytes: Column, w: Int, h: Int): Column =
-    column(Resize2x(expression(bytes), w, h))
+  def resize2x(bytes: Column, w: Int, h: Int): Column = {
+    require(w % 2 == 0 && h % 2 == 0, s"Resize2x needs even dims, got ${w}x$h")
+    invoke(Resize2x, BinaryType, Seq(bytes, w, h))
+  }
 
   /** Bilinear 2x upsample of band 0 of a wxh f32 payload (edge clamp). */
   def upsample2x(bytes: Column, w: Int, h: Int): Column =
-    column(Upsample2x(expression(bytes), w, h))
+    invoke(Upsample2x, BinaryType, Seq(bytes, w, h))
 
   /** Flip/rotate band 0 of an f32 payload (0=flipH, 1=flipV, 2=rot180). */
-  def mirror(bytes: Column, w: Int, h: Int, mode: Int): Column =
-    column(Mirror(expression(bytes), w, h, mode))
+  def mirror(bytes: Column, w: Int, h: Int, mode: Int): Column = {
+    require(mode >= 0 && mode <= 2, s"Mirror mode must be 0|1|2, got $mode")
+    invoke(Mirror, BinaryType, Seq(bytes, w, h, mode))
+  }
 
   /** [top, bottom, left, right] constant-border widths of band 0. */
   def border_stats(bytes: Column, w: Int, h: Int): Column =
-    column(BorderStats(expression(bytes), w, h))
+    invoke(BorderStats, Ints, Seq(bytes, w, h))
 
   /** Strip the detected constant border from band 0; real payload out. */
   def auto_crop(bytes: Column, w: Int, h: Int): Column =
-    column(AutoCrop(expression(bytes), w, h))
+    invoke(AutoCrop, BinaryType, Seq(bytes, w, h))
 
-  /** H3-lite id at `res` of a grid cell id (grid spans the Goode extent). */
-  def grid_h3(cellId: Column, rows: Int, cols: Int, res: Int): Column =
-    column(GridH3(expression(cellId), rows, cols, res))
+  /** H3-lite id at `res` of a grid cell id (grid spans the Goode extent;
+    * SURVEY.md §2.8 G1): centroid, interrupted-homolosine inverse, then
+    * the hierarchical encode. The per-row Goode-inverse tables are
+    * resolved ONCE here and ride the plan as literals, so the per-pixel
+    * path is arithmetic + table reads (no cache lookup). */
+  def grid_h3(cellId: Column, rows: Int, cols: Int, res: Int): Column = {
+    val (packed, inv) = H3Lite.table(rows, cols, res)
+    invoke(H3Lite, LongType, Seq(cellId, cols, res, packed, inv),
+      "encodeFromTable")
+  }
 
   /** struct(lat, lng) of a grid cell centroid via the Goode inverse. */
   def grid_latlng(cellId: Column, rows: Int, cols: Int): Column =
-    column(GridLatLng(expression(cellId), rows, cols))
+    invoke(GridLatLng, struct("lat" -> DoubleType, "lng" -> DoubleType),
+      Seq(cellId, rows, cols))
 
   /** Parent of an H3-lite id at coarser `toRes`, as pure Column bit
     * arithmetic (H3Lite.parent semantics; the id layout is
@@ -3341,166 +2217,193 @@ object GraftFunctions {
       .bitwiseOR(shiftright(c, shift))
   }
 
-  /** S2 cell id at `level` of a (lat, lng) point in degrees. */
+  /** S2 cell id at `level` of a (lat, lng) point in degrees — the S2
+    * half of the north rule's "H3/S2 index" (core/S2Lite: cube face +
+    * quadratic ST + Hilbert order). */
   def s2_cell(lat: Column, lng: Column, level: Int): Column =
-    column(S2Cell(expression(lat), expression(lng), level))
+    invoke(graft.core.S2Lite, LongType, Seq(lat, lng, level), "encode",
+      inputTypes = Seq(DoubleType, DoubleType, IntegerType))
 
   /** Ancestor of an S2 cell id at coarser `level` (partition key). */
-  def s2_parent(id: Column, level: Int): Column =
-    column(S2Parent(expression(id), level))
+  def s2_parent(id: Column, level: Int): Column = {
+    import graft.core.S2Lite.{MaxLevel, lsbForLevel}
+    require(level >= 0 && level <= MaxLevel,
+      s"s2_parent level $level out of [0, $MaxLevel]")
+    invoke(S2Parent, LongType, Seq(id, lsbForLevel(level), level),
+      inputTypes = Seq(LongType, LongType, IntegerType))
+  }
 
   /** The four edge-adjacent S2 cells at the id's own level. */
   def s2_neighbors(id: Column): Column =
-    column(S2Neighbors(expression(id)))
+    invoke(S2Neighbors, Longs, Seq(id), inputTypes = Seq(LongType))
 
   /** One-pass decode + media feature stats over a binary payload. */
   def media_stats(bytes: Column, fmt: Column, w: Column, h: Column,
       frameK: Int): Column =
-    column(MediaStats(expression(bytes), expression(fmt), expression(w),
-      expression(h), frameK))
+    invoke(MediaStats, struct("mean_px" -> DoubleType,
+      "max_px" -> DoubleType, "thumb_hash" -> LongType,
+      "n_frames" -> IntegerType), Seq(bytes, fmt, w, h, frameK))
 
   /** 3x3 focal stats over a tile's halo-padded (pos, value) patch:
     * array of tile*tile packed longs (fsum<<5 | ncnt<<1 | peak). */
   def focal3x3(pixs: Column, vs: Column, tile: Int): Column =
-    column(Focal3x3(expression(pixs), expression(vs), tile))
+    invoke(Focal3x3, Longs, Seq(pixs, vs, tile))
 
   /** 3x3 Sobel gradient over a halo-padded patch: packed
     * (gx+1020)<<12 | (gy+1020), -1 where the window is not full. */
   def sobel3x3(pixs: Column, vs: Column, tile: Int): Column =
-    column(Sobel3x3(expression(pixs), expression(vs), tile))
+    invoke(Sobel3x3, Longs, Seq(pixs, vs, tile))
 
   /** 3x3 majority filter over `div`-quantized levels: packed
     * (mode_level << 4) | count, ties to the smaller level. */
   def mode3x3(pixs: Column, vs: Column, tile: Int, div: Int): Column =
-    column(Mode3x3(expression(pixs), expression(vs), tile, div))
+    invoke(Mode3x3, Longs, Seq(pixs, vs, tile, div))
 
   /** Harris corner response over a PAD-2 halo patch: one exact scaled
     * long R20 per core pixel, Long.MinValue where the 5x5 world
     * support is incomplete. */
   def harris5x5(pixs: Column, vs: Column, tile: Int): Column =
-    column(Harris5x5(expression(pixs), expression(vs), tile))
+    invoke(Harris5x5, Longs, Seq(pixs, vs, tile))
 
   /** 5x5 binomial Gaussian blur over a PAD-2 halo patch: one exact
     * 256-scaled long per core pixel, Long.MinValue where the support
     * is incomplete. */
   def gauss5x5(pixs: Column, vs: Column, tile: Int): Column =
-    column(Gauss5x5(expression(pixs), expression(vs), tile))
+    invoke(Gauss5x5, Longs, Seq(pixs, vs, tile))
 
   /** Fused per-tile edge-density stats over a pad-1 halo patch:
     * struct(nx, ex, ny, ey) of valid/differing right- and down-pair
     * counts at binarization threshold `thr`. */
   def edge_stats(pixs: Column, vs: Column, tile: Int, thr: Int): Column =
-    column(EdgeStats(expression(pixs), expression(vs), tile, thr))
+    invoke(EdgeStats, struct("nx" -> IntegerType, "ex" -> IntegerType,
+      "ny" -> IntegerType, "ey" -> IntegerType), Seq(pixs, vs, tile, thr))
 
   /** 3x3 lower-median filter over a pad-1 halo patch: packed
     * (median << 4) | cnt, -1 where the core pixel is absent. */
   def median3x3(pixs: Column, vs: Column, tile: Int): Column =
-    column(Median3x3(expression(pixs), expression(vs), tile))
+    invoke(Median3x3, Longs, Seq(pixs, vs, tile))
 
   /** Per-tile viewshed from the tile center over the DEM band:
     * tile² longs (1 visible / 0 blocked / -1 unevaluable), exact
     * integer angle comparisons, deterministic rounded ray walk. */
   def viewshed(bytes: Column, fmt: Column, nPixels: Int, band: Int,
       tile: Int): Column =
-    column(Viewshed(expression(bytes), expression(fmt), nPixels, band, tile))
+    invoke(Viewshed, Longs, Seq(bytes, fmt, nPixels, band, tile))
 
   /** Fused Laplacian stencil + per-tile reduction over a halo-padded
     * patch: struct(n, lsum, lsumsq) of L = 4c−n−s−e−w, interior only. */
   def lap_stats(pixs: Column, vs: Column, tile: Int): Column =
-    column(LapStats(expression(pixs), expression(vs), tile))
+    invoke(LapStats, struct("n" -> IntegerType, "lsum" -> LongType,
+      "lsumsq" -> LongType), Seq(pixs, vs, tile))
 
   /** Per-tile local clump labels over sorted (pix, cls) arrays: one
     * packed (pix << 20 | localRootPix) long per pixel (engine/Clump
     * level one — union-find over same-class 4-neighbors of ONE tile). */
-  def clump_local(pixs: Column, clss: Column, tile: Int): Column =
-    column(ClumpLocal(expression(pixs), expression(clss), tile))
+  def clump_local(pixs: Column, clss: Column, tile: Int): Column = {
+    require(tile.toLong * tile <= (1L << 20),
+      s"ClumpLocal supports tiles up to 1024x1024, got $tile")
+    invoke(ClumpLocal, Longs, Seq(pixs, clss, tile))
+  }
 
   /** Mann-Kendall trend stats over one user's time-ordered (tus, v)
     * arrays: struct(s_stat, n, var18, sen_slope), NULL when no
     * positive-dt pair — see [[MannKendall]]. */
   def mann_kendall(tus: Column, vs: Column): Column =
-    column(MannKendall(expression(tus), expression(vs)))
+    invoke(MannKendall, struct("s_stat" -> LongType, "n" -> LongType,
+      "var18" -> LongType, "sen_slope" -> DoubleType), Seq(tus, vs),
+      nullable = true)
 
   /** D8 steepest-descent pick over the bilinear value-noise terrain:
     * struct(wdrop, dir, dst) — see [[D8Pick]]'s codegen-size rationale. */
   def d8_pick(id: Column, rows: Int, cols: Int, terrB: Int,
       terrCX: Int): Column =
-    column(D8Pick(expression(id), rows, cols, terrB, terrCX))
+    invoke(D8Pick, struct("wdrop" -> LongType, "dir" -> IntegerType,
+      "dst" -> LongType), Seq(id, rows, cols, terrB, terrCX))
 
   /** Per-tile summed-area table over (pos, value) arrays: tile² longs,
     * out[r·t+c] = box sum from the tile origin (absent pixels = 0). */
   def sat(pixs: Column, vs: Column, tile: Int): Column =
-    column(Sat(expression(pixs), expression(vs), tile))
+    invoke(Sat, Longs, Seq(pixs, vs, tile))
 
   /** Greedy NMS over rank-ordered packed boxes (x1<<24|y1<<16|w<<8|h):
     * 0/1 kept flag per box, IoU >= thrNum/thrDen suppresses. */
-  def greedy_nms(boxes: Column, thrNum: Int, thrDen: Int): Column =
-    column(GreedyNms(expression(boxes), thrNum, thrDen))
+  def greedy_nms(boxes: Column, thrNum: Int, thrDen: Int): Column = {
+    require(thrNum > 0 && thrDen > 0, "NMS threshold must be positive")
+    invoke(GreedyNms, Longs, Seq(boxes, thrNum, thrDen))
+  }
 
   /** Exact polygon-INTERSECT-tile-rect area + clipped vertex count:
-    * struct(area, nv) via Sutherland-Hodgman + shoelace, one codegen
-    * call per (tile, region) pair. */
+    * struct(area, nv) via Sutherland-Hodgman + shoelace, one call per
+    * (tile, region) pair. */
   def rect_clip_area(tileId: Column, regionId: Column,
       polys: Array[Polygon], tile: Int, tilesX: Int): Column =
-    column(RectClipArea(expression(tileId), expression(regionId),
-      polys, tile, tilesX))
+    invoke(RectClipArea, struct("area" -> DoubleType, "nv" -> IntegerType),
+      Seq(polys, tileId, regionId, tile, tilesX))
 
   /** Exact polygon-INTERSECT-protected-area-rect area (two-layer
     * overlay): struct(area, nv), rect derived from World.paRect. */
   def pa_clip_area(paId: Column, regionId: Column,
       polys: Array[Polygon], cols: Int, rows: Int): Column =
-    column(PaClipArea(expression(paId), expression(regionId),
-      polys, cols, rows))
+    invoke(PaClipArea, struct("area" -> DoubleType, "nv" -> IntegerType),
+      Seq(polys, paId, regionId, cols, rows))
 
   /** Per-tile run-length stats over sorted (pix, cls) arrays:
     * struct(n_runs, max_run, n_vruns) of same-class runs, absent
     * pixels terminating runs (the ClumpLocal input contract). */
   def run_stats(pixs: Column, clss: Column, tile: Int): Column =
-    column(RunStats(expression(pixs), expression(clss), tile))
+    invoke(RunStats, struct("n_runs" -> IntegerType,
+      "max_run" -> IntegerType, "n_vruns" -> IntegerType),
+      Seq(pixs, clss, tile))
 
   /** Per-tile level-1 integer Haar energy fused with the decode:
     * struct(ll_sum, lh_abs, hl_abs, hh_abs, n_blocks) over complete
     * 2x2 blocks of the band (NaN-touching blocks skipped). */
   def haar_stats(bytes: Column, fmt: Column, nPixels: Int, band: Int,
-      tile: Int): Column =
-    column(HaarStats(expression(bytes), expression(fmt), nPixels, band, tile))
+      tile: Int): Column = {
+    require(tile % 2 == 0, s"HaarStats needs an even tile, got $tile")
+    invoke(HaarStats, struct("ll_sum" -> LongType, "lh_abs" -> LongType,
+      "hl_abs" -> LongType, "hh_abs" -> LongType, "n_blocks" -> IntegerType),
+      Seq(bytes, fmt, nPixels, band, tile))
+  }
 
-  /** Region id under the nonzero (winding) fill rule; -1 outside. */
+  /** Region id under the nonzero (winding) fill rule, -1 outside — the
+    * q194 dual of region_of's even-odd parity (Geom.windRegionOf). */
   def wind_region(px: Column, py: Column, polys: Array[Polygon]): Column =
-    column(WindRegion(expression(px), expression(py), polys))
+    invoke(Geom, IntegerType, Seq(polys, px, py), "windRegionOf")
 
   /** Per-pixel 8-bit local binary pattern codes over a halo-padded
     * tile patch; -1 for out-of-grid cores. */
   def lbp(pixs: Column, vs: Column, tile: Int): Column =
-    column(Lbp(expression(pixs), expression(vs), tile))
+    invoke(Lbp, Longs, Seq(pixs, vs, tile))
 
   /** Per-tile exact squared Euclidean distance transform: dense
     * tile²-long array of d2-to-nearest-feature (band >= thresh), -1
     * when the tile holds no feature. */
   def edt(pixs: Column, vs: Column, tile: Int, thresh: Int): Column =
-    column(Edt(expression(pixs), expression(vs), tile, thresh))
+    invoke(Edt, Longs, Seq(pixs, vs, tile, thresh))
 
   /** Convex hull of distinct packed (x << 16 | y) points:
     * struct(area2, verts) in canonical order (lex-min start, positive
     * shoelace). Serves both levels of the partial-hull shape. */
   def convex_hull(ps: Column): Column =
-    column(ConvexHull(expression(ps)))
+    invoke(ConvexHull, struct("area2" -> LongType, "verts" -> Longs),
+      Seq(ps))
 
   /** 16-bit SimHash over space-separated tokens in one pass. */
   def simhash16(text: Column): Column =
-    column(SimHash16(expression(text)))
+    invoke(SimHash16, LongType, Seq(text))
 
   /** k MinHash signatures over 3-char shingles in one pass. */
   def minhash_sigs(text: Column, params: Seq[(Long, Long)],
       prime: Long): Column =
-    column(MinHashSigs(expression(text), params.map(_._1).toArray,
-      params.map(_._2).toArray, prime))
+    invoke(MinHashSigs, Longs, Seq(text, params.map(_._1).toArray,
+      params.map(_._2).toArray, prime), nullable = true)
 
   /** Distinct 3-char-shingle set as a sorted packed-long array. */
   def sh3_set(text: Column): Column =
-    column(Sh3Set(expression(text)))
+    invoke(Sh3Set, Longs, Seq(text), nullable = true)
 
   /** |A ∩ B| of two sorted distinct long arrays (zero allocation). */
   def sorted_inter_size(a: Column, b: Column): Column =
-    column(SortedInterSize(expression(a), expression(b)))
+    invoke(SortedInterSize, IntegerType, Seq(a, b))
 }

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
+import scala.util.matching.Regex
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -14,7 +15,8 @@ import graft.queries.TextOps
   * perfbench harness):
   * {{{
   * sbt "runMain graft.tools.Probe <subcommand> <args>"
-  *   plan <name|headline>...   formatted physical plan, AQE off
+  *   plan <name|headline>...   formatted physical plan, AQE off, with
+  *                             run-dependent ids renumbered
   *   sql <name>                oracle SQL (runs q52-style fits first)
   *   verify <name> [outDir]    parquet + one-entry oracle_sql.json
   *   time [k=v,...] <name>...  best-of-3 noop-sink seconds + job count
@@ -64,7 +66,8 @@ object Probe {
               Headline.ensureTiles(s)
               Headline.plan(s, Headline.loadOrFitTrees(s))
             } else queries(n)(s, sfDir)
-          println(s"## $n\n${df.queryExecution.explainString(FormattedMode)}")
+          val plan = df.queryExecution.explainString(FormattedMode)
+          println(s"## $n\n${canonical(plan)}")
         }
         0
       case List("sql", n) if SparkEntry.oracleSql.contains(n) =>
@@ -99,6 +102,18 @@ object Probe {
       case _ => usage(queries.keys)
     }
   }
+
+  /** `plan` with its run-dependent numbers renumbered by order of first
+    * appearance: expression ids (`#123`), exchange `plan_id`s, RDD ids
+    * and the JVM identity hashes of object literals (`[I@1ad83fd7`). Each
+    * kind counts from 1, so two runs of one plan print the same text. */
+  private def canonical(plan: String): String =
+    Seq("(#)(\\d+)", "(plan_id=)(\\d+)", "(RDD\\[)(\\d+)",
+      "([\\w;$\\]]@)([0-9a-f]+)\\b").foldLeft(plan) { (text, pattern) =>
+      val seen = scala.collection.mutable.Map[String, Int]()
+      pattern.r.replaceAllIn(text, m => Regex.quoteReplacement(
+        m.group(1) + seen.getOrElseUpdate(m.group(2), seen.size + 1)))
+    }
 
   private def usage(names: Iterable[String]): Int = {
     Console.err.println(

@@ -75,14 +75,14 @@ class AudioSpec extends SparkSpec {
       val audio = Multimodal.syntheticAudio(spark)
       // the op bodies, pre-presentation-sort: per-row work, no shuffle
       Seq(
-        "q81" -> "audiowindowstats(" ->
+        "q81" -> "AudioWindowStats.eval(" ->
           Multimodal.audioWindows(audio, Multimodal.AudioSamples,
             Multimodal.AudioWindow),
-        "q82" -> "clipstatss16(" ->
+        "q82" -> "ClipStatsS16.eval(" ->
           Multimodal.audioResample(audio, Multimodal.AudioStride)
       ).foreach { case ((name, needle), df) =>
         val plan = df.queryExecution.executedPlan.toString
-        val line = plan.linesIterator.find(_.toLowerCase.contains(needle))
+        val line = plan.linesIterator.find(_.contains(needle))
         assert(line.nonEmpty, s"no $needle in the $name plan:\n$plan")
         assert(line.get.contains("*("),
           s"$name audio projection fell out of codegen:\n${line.get}")

@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.engine.Bloom
-import graft.sql.{BloomMightContain, GraftFunctions}
+import graft.sql.GraftFunctions
 
 /** engine/Bloom: distributed Bloom-filter build (typed Aggregator,
   * bitmap-OR merge) + codegen probe, and the q86 semi-join-prune
@@ -95,7 +96,11 @@ class BloomSpec extends SparkSpec {
       val plan = pruned.queryExecution.executedPlan
       val probeFilter = plan.collectFirst {
         case fe: FilterExec
-            if fe.condition.find(_.isInstanceOf[BloomMightContain]).isDefined =>
+            if fe.condition.find {
+              case si: StaticInvoke => si.functionName == "mightContain" &&
+                si.staticObject == Bloom.getClass
+              case _ => false
+            }.isDefined =>
           fe
       }.getOrElse(fail(s"no bloom probe Filter in plan:\n$plan"))
       assert(probeFilter.find(_.isInstanceOf[ShuffleExchangeExec]).isEmpty,

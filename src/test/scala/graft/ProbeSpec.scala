@@ -24,6 +24,14 @@ class ProbeSpec extends SparkSpec {
     assert(code == 0)
     assert(out.contains("== Physical Plan =="), out)
     assert(!out.contains("AdaptiveSparkPlan"), out)
+    // a second build of a plan gets fresh expression ids, plan ids, RDD
+    // ids and forest/polygon arrays; the printed plans must not differ
+    val q29 = "q29_tree_fit_predict"
+    val (code2, twice, _) = probe("plan", q29, q29)
+    assert(code2 == 0)
+    val sections = twice.split(s"## $q29\n").toSeq.filter(_.nonEmpty)
+    assert(sections.size == 2, twice)
+    assert(sections(0) == sections(1), twice)
   }
 
   test("sql prints the registered oracle SQL") {

@@ -411,13 +411,20 @@ class SparkEngineSpec extends SparkSpec {
     assert(all(store2b, "loaded"), store2b.log.toString)
     assert(out2b.orderBy("cell_id").collect().toSeq == result1)
 
-    // the deliverable stage (R:510-551) wrote the six per-class CSVs
-    (0 to 5).foreach { k =>
+    // the deliverable stage (R:510-551) wrote the six per-class CSVs,
+    // one row per cell carrying that cell's loss
+    val maskRows = (0 to 5).map { k =>
       val csv = spark.read.option("header", "true")
         .schema("cell_id LONG, loss_mean DOUBLE")
         .csv(s"$dir/csv/LossMask_class$k.csv")
       assert(csv.columns.toSeq == Seq("cell_id", "loss_mean"))
-    }
+      csv.collect().map { r =>
+        assert(r.getDouble(1) == World.loss(r.getLong(0)),
+          s"class $k cell ${r.getLong(0)}")
+        r.getLong(0)
+      }
+    }.flatten
+    assert(maskRows.nonEmpty && maskRows.distinct.size == maskRows.size)
     // raster fan-out covers exactly the non-NoData classes the expanded
     // frame holds (the tiny fixture's CART vote can legitimately leave
     // all cells uncertain — the per-class spread is pinned by q35/q37's
@@ -726,9 +733,10 @@ class SparkEngineSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       def count(needle: String): Int =
         plan.sliding(needle.length).count(_ == needle)
-      assert(count("driverclassifyat(") == 1,
+      assert(count("DriverClassifyAt.eval(") == 1,
         s"classify must appear exactly once:\n$plan")
-      assert(!plan.contains("regionof("),
+      assert(!plan.contains("Geom.regionOf(") &&
+        !plan.contains("RegionOf.eval("),
         "no separate PIP evaluation may exist in the headline plan")
       assert(count("Exchange") == 2,
         s"salted zonal agg = exactly two exchanges:\n$plan")
@@ -738,7 +746,7 @@ class SparkEngineSpec extends SparkSpec {
       // per-pixel loop to interpreted eval — the round-4 q74 regression
       // class, guarded here for the headline.
       val classifyLine =
-        plan.linesIterator.find(_.contains("driverclassifyat(")).get
+        plan.linesIterator.find(_.contains("DriverClassifyAt.eval(")).get
       assert(classifyLine.contains("*("),
         s"classify projection fell out of whole-stage codegen:\n$classifyLine")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
@@ -754,7 +762,7 @@ class SparkEngineSpec extends SparkSpec {
     try {
       val df = graft.SparkEntry.queries("q74_image_resize")(spark, "ignored")
       val plan = df.queryExecution.executedPlan.toString
-      val line = plan.linesIterator.find(_.toLowerCase.contains("resize2x("))
+      val line = plan.linesIterator.find(_.contains("Resize2x.eval("))
       assert(line.nonEmpty, s"no resize2x in the q74 plan:\n$plan")
       assert(line.get.contains("*("),
         s"resize projection fell out of whole-stage codegen:\n${line.get}")
@@ -767,7 +775,7 @@ class SparkEngineSpec extends SparkSpec {
     val polys = World.polygons(spec)
     def countRegionof(df: DataFrame): Int = {
       val plan = df.queryExecution.executedPlan.toString
-      val needle = "regionof("
+      val needle = "Geom.regionOf("
       plan.sliding(needle.length).count(_ == needle)
     }
     // the q21 shape: spine -> region rows
@@ -790,7 +798,8 @@ class SparkEngineSpec extends SparkSpec {
     val scored = Pipeline.fitPredictVote(spark, spec)
     val plan = scored.queryExecution.executedPlan.toString
     assert(countRegionof(scored) == 1, s"one ray-cast per row:\n$plan")
-    assert(plan.sliding("forestvote(".length).count(_ == "forestvote(") == 1,
+    assert(plan.sliding("ForestVote.eval(".length)
+      .count(_ == "ForestVote.eval(") == 1,
       s"one forest expression:\n$plan")
     assert(!plan.contains("CASE WHEN"), s"no when-chain trees:\n$plan")
   }
@@ -803,7 +812,8 @@ class SparkEngineSpec extends SparkSpec {
       val plan = graft.SparkEntry.queries("q29_tree_fit_predict")(spark,
         "ignored").queryExecution.executedPlan.toString
       val generate = plan.linesIterator
-        .filter(l => l.contains("Generate ") && l.contains("regionof(")).toSeq
+        .filter(l => l.contains("Generate ") && l.contains("Geom.regionOf("))
+        .toSeq
       assert(generate.size == 1, s"one region explode:\n$plan")
       assert(generate.head.contains("*("),
         s"Generate fell out of whole-stage codegen:\n${generate.head}")
@@ -832,7 +842,7 @@ class SparkEngineSpec extends SparkSpec {
     val viaCol = docs.select(col("doc_id"),
         GraftFunctions.simhash16(col("text")).as("sh"),
         GraftFunctions.minhash_sigs(col("text"),
-          GraftExtensions.MinHashParams, GraftExtensions.MinHashPrime)
+          graft.sql.MinHashSigs.Params, graft.sql.MinHashSigs.Prime)
           .as("mh"))
       .orderBy("doc_id").collect().toSeq.map(_.toSeq)
     assert(viaSql == viaCol)
