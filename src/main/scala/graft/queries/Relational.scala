@@ -441,7 +441,7 @@ object Relational {
   // broadcastable bitmap but the dim rows do not fit a broadcast hash
   // table: fit a Bloom filter over the filtered dim's keys (typed
   // Aggregator, map-side partial = bitmap OR), probe the fact side
-  // with the codegen BloomMightContain BEFORE its shuffle, then join.
+  // with the codegen bloom_might_contain BEFORE its shuffle, then join.
   // No false negatives, so the result is row-identical to the plain
   // join — the oracle below is the UNPRUNED join, and the hash compare
   // proves the prune dropped nothing. At this fixture scale Catalyst

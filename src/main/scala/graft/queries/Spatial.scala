@@ -1477,7 +1477,7 @@ object Spatial {
   }
 
   // ---- q75: the Goode projection chain under the oracle — the
-  // headline's own spatial index (GridH3 = Goode inverse -> H3-lite
+  // headline's own spatial index (grid_h3 = Goode inverse -> H3-lite
   // encode) cross-checked end to end on the REAL 1737x4008 geometry:
   // cell_id -> centroid x/y -> interrupted-homolosine inverse (12-lobe
   // central meridians, sinusoidal below 40d44'11.8", Mollweide above
@@ -3483,7 +3483,7 @@ object Spatial {
   // the 20-bit lat/lng bisection fractions are closed-form integer
   // floor-divisions of the cell's row/col (no float ever — latb =
   // (2r+1)·2^13 exactly, lngb = (2c+1)·2^19 // 96), the 40-bit code is
-  // one codegen ZInterleave (lng at odd bits = geohash's
+  // one codegen z_interleave (lng at odd bits = geohash's
   // longitude-first MSB order), and the 8 characters are substr picks
   // off the base-32 alphabet. The oracle interleaves with a flat
   // 40-term shift/mask expression instead — independent arithmetic for
@@ -6507,8 +6507,8 @@ object Spatial {
   // empties the 10×10 overlap, nonzero keeps it at winding 2), region
   // 2's outer-CCW + hole-CW is the agreeing case (winding 0 in the
   // hole — both rules exclude it), region 3 is the disjoint control.
-  // Both rules evaluate in ONE projection over the spine (RegionOf and
-  // the new WindRegion expression share the broadcast layer); counts
+  // Both rules evaluate in ONE projection over the spine (region_of and
+  // the wind_region kernel share the broadcast layer); counts
   // per (rule, region) plus the per-region differ count pin the exact
   // disagreement set. Oracle: the same edge VALUES with parity HAVING
   // for even-odd and SUM of signed crossings for nonzero. -------------------

@@ -145,7 +145,7 @@ class ClumpSpec extends SparkSpec {
 
   test("q146 geohash equals a textbook bisection encoder on every cell") {
     // third algorithm (loop-based float bisection) vs the engine's
-    // integer floor-div + ZInterleave and the oracle's 40-term
+    // integer floor-div + z_interleave and the oracle's 40-term
     // shift/mask — all three must agree. Ties at dyadic bisection
     // boundaries go to the upper half in both formulations (>= mid
     // <=> floor(frac * 2^20) has the bit set), and the centroid

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Layout
 
 /** engine/Layout: Morton interleave round-trips, the codegen
-  * ZInterleave expression vs the static eval, and the clusterBy
+  * z_interleave kernel call vs the static eval, and the clusterBy
   * write-layout contract — globally disjoint, internally sorted
   * per-partition curve ranges (what parquet min/max pruning needs) and
   * the locality win over a row-major layout.

@@ -773,10 +773,12 @@ class SparkEngineSpec extends SparkSpec {
     "once per row (q21/q25/q39 and the features stage were 2x before)") {
     import graft.sql.GraftFunctions.region_explode
     val polys = World.polygons(spec)
+    // both point-in-polygon call forms: the -1 sentinel (Geom.regionOf)
+    // and the null-on-miss kernel (RegionOf.eval)
     def countRegionof(df: DataFrame): Int = {
       val plan = df.queryExecution.executedPlan.toString
-      val needle = "Geom.regionOf("
-      plan.sliding(needle.length).count(_ == needle)
+      Seq("Geom.regionOf(", "RegionOf.eval(")
+        .map(n => plan.sliding(n.length).count(_ == n)).sum
     }
     // the q21 shape: spine -> region rows
     val px = ((col("cell_id") - 1) % spec.cols).cast("double") + 0.5
@@ -812,7 +814,8 @@ class SparkEngineSpec extends SparkSpec {
       val plan = graft.SparkEntry.queries("q29_tree_fit_predict")(spark,
         "ignored").queryExecution.executedPlan.toString
       val generate = plan.linesIterator
-        .filter(l => l.contains("Generate ") && l.contains("Geom.regionOf("))
+        .filter(l => l.contains("Generate ") &&
+          (l.contains("Geom.regionOf(") || l.contains("RegionOf.eval(")))
         .toSeq
       assert(generate.size == 1, s"one region explode:\n$plan")
       assert(generate.head.contains("*("),
