@@ -112,7 +112,14 @@ object H3Lite {
     val row0 = ((id - 1) / cols).toInt
     val x = XMin + (col0 + 0.5) * (XMax - XMin) / cols
     val lon = Igh.lonDegAt(inv(row0), x)
-    val lngW = ((lon + 180.0) % 360.0 + 360.0) % 360.0 - 180.0
+    // The wrap of gridCellToH3Direct without its two fmods on the usual
+    // range: fmod(a, 360) = a for 0 <= a < 360, and fmod(b, 360) =
+    // b - 360 exactly for 360 <= b < 720 (Sterbenz), so both forms give
+    // the same bits; anything else (and NaN) takes the % chain.
+    val a = lon + 180.0
+    val b = a + 360.0
+    val lngW = if (a >= 0.0 && a < 360.0 && b < 720.0) (b - 360.0) - 180.0
+      else ((lon + 180.0) % 360.0 + 360.0) % 360.0 - 180.0
     val nc = colsAt(res)
     val c0 = math.floor((lngW + 180.0) / 360.0 * nc).toInt
     val c = ((c0 % nc) + nc) % nc

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.core.Cart
@@ -20,32 +20,36 @@ import graft.world.{World, WorldSpec}
   * materialized once to parquet so the timed job starts from a real
   * columnar scan.
   *
-  * The timed pipeline is FUSED: only the pixel index is exploded; every
-  * band value is read lazily from a binary payload with the
-  * zero-allocation `float_at` kernel. Within the single whole-stage-
-  * codegen stage each payload stays one byte[] reference per tile — no
-  * band arrays, no per-cell structs, no 86-field rows are ever
-  * materialized (the naive arrays_zip + posexplode formulation was
-  * measured GC-bound and scaled at ~0.5 efficiency; this shape is
-  * compute-bound). The loss band has its own payload column (`loss`,
-  * 16 KB a tile) beside the 86-band `bytes` (1.41 MB): the plan reads
-  * `bytes` only when the forest has a split, so for a split-free
-  * forest the scan neither decompresses nor copies the band payload.
-  * Stages:
+  * The timed pipeline is ONE kernel call per tile (TileZonal): no
+  * pixel becomes a Spark row. Within the tile loop every band value is
+  * read lazily from a binary payload, and the tile's zonal partials are
+  * accumulated in dense per-parent slots, so the plan moves 5.7
+  * partial rows per tile on average (39 at most) instead of up to 4096
+  * pixel rows (the per-pixel explode + hash aggregate spent most of
+  * the pass moving rows; the naive arrays_zip + posexplode formulation
+  * before it was GC-bound).
+  * The loss band has its own payload column (`loss`, 16 KB a tile)
+  * beside the 86-band `bytes` (1.41 MB): the plan reads `bytes` only
+  * when the forest has a split, so for a split-free forest the scan
+  * neither decompresses nor copies the band payload. This is GeoBlocks'
+  * shape (EDBT 2021): pre-aggregate per block, then merge the block
+  * partials. Stages:
   *   scan (parquet; column pruning reads only tile_id + loss, and
   *      bytes when the forest has a split)
-  *   -> explode pixel index (in-grid guard drops edge padding)
-  *   -> grid_h3 (Goode inverse projection + hierarchical encode)
-  *   -> DriverClassifyAt: block-covered PIP (97% of 8x8 blocks are
-  *      region-constant on this geometry, resolved by one broadcast
-  *      array read; boundary blocks pay the exact banded ray-cast,
-  *      ONCE per pixel) + packed 7x5 CART forest walk + vote (argmax,
-  *      0.5 confidence, 0.005 loss floor, R:362-411) in one kernel
-  *      call; -1 = outside every region
-  *   -> salted zonal aggregation by H3 res-4 parent (Salted), agg
-  *      inputs gated on class >= 0 so no Filter re-evaluates the PIP
-  *      (Catalyst pushes filter conditions through projections, which
-  *      would ray-cast every pixel twice).
+  *   -> TileZonal, per tile, per in-grid pixel (the in-grid guard
+  *      skips edge padding):
+  *        DriverClassifyAt's fused classify: block-covered PIP (97% of
+  *        8x8 blocks are region-constant on this geometry, resolved by
+  *        one broadcast array read; boundary blocks pay the exact
+  *        banded ray-cast, ONCE per pixel) + packed 7x5 CART forest
+  *        walk + vote (argmax, 0.5 confidence, 0.005 loss floor,
+  *        R:362-411); -1 = outside every region, skipped
+  *        -> H3 encode (Goode inverse projection + hierarchical encode)
+  *        -> res-4 parent slot: n_cells, n_classified, loss_sum,
+  *           max_class
+  *   -> explode the tile's partials (one row per touched parent)
+  *   -> salted zonal aggregation by H3 res-4 parent (Salted, salted by
+  *      tile id): partial aggregate, then the merge.
   */
 object Headline {
 
@@ -136,13 +140,6 @@ object Headline {
     }
   }
 
-  /** H3 res-4 parent of a res-9 H3-lite id: pure bit arithmetic,
-    * stays in codegen. Delegates to the shared generalized form so the
-    * headline and the oracle-checked q75 chain can never diverge on
-    * the id layout. */
-  private def h3Parent4(h3: Column): Column =
-    graft.sql.GraftFunctions.h3_parent_col(h3, 9, 4)
-
   /** Plan over input slice `slice` of `nSlices` (slice directories, so
     * the filter is pure partition pruning). slice 0 of 1 = the full
     * table; the executor-fleet scaling run gives each of the 4N-level
@@ -158,8 +155,8 @@ object Headline {
   /** Per-cell class frame over the full tile table: (cell_id,
     * final_class) with -1 = NoData (zero loss, or outside every region
     * — the reference's NA cells, absent from its rasters) — the input
-    * to the Expand stage of the full model run. Same fused
-    * single-ray-cast projection as the benchmark plan. */
+    * to the Expand stage of the full model run. The same fused
+    * single-ray-cast classify as the benchmark plan's tile kernel. */
   def cellClasses(s: SparkSession, trees: Map[(Int, Int), Cart.Tree]): DataFrame =
     Pipeline.classes(readTiles(s), spec, polys, cover, trees,
       Pipeline.Config())
@@ -173,32 +170,17 @@ object Headline {
   def planFrom(tiles: DataFrame, trees: Map[(Int, Int), Cart.Tree]): DataFrame = {
     val cfg = Pipeline.Config()
     val forest = Cart.PackedForest(trees, spec.nRegions, Pipeline.NumDrivers)
-    // ONE projection: the PIP runs exactly once per pixel, inside
-    // DriverClassifyAt (class = -1 marks no-region). No Filter touches
-    // the expensive expression — a filter on a projected column is
-    // pushed below the projection by Catalyst and re-evaluates it; the
-    // no-region rows are instead excluded by gating every aggregate
-    // input on class >= 0 and dropping all-padding zones post-agg
-    // (a filter on tiny final-aggregate output).
-    val classed = Pipeline.cells(tiles, spec)
-      .select(col("cell_id"),
-        grid_h3(col("cell_id"), spec.rows, spec.cols, H3Res).as("h3"),
-        driver_classify_at_covered(col("loss"), col("bytes"), col("p"),
-          Pipeline.px(spec), Pipeline.py(spec), polys, forest, cover.const,
-          cover.nbx, CoverB, spec.pixPerTile, cfg.lossFloor,
-          cfg.confidenceFloor).as("class"),
-        Pipeline.band(spec, 0).as("loss"))
-    val inRegion = col("class") >= 0
-    Salted.aggregate(classed,
-      keys = Seq("h3r4" -> h3Parent4(col("h3"))),
-      saltSrc = col("cell_id"), salts = SaltBuckets,
+    val zones = tiles.select(col("tile_id"),
+      explode(tile_zonal(col("tile_id"), col("loss"), col("bytes"), spec,
+        H3Res, polys, forest, cover, cfg.lossFloor, cfg.confidenceFloor))
+        .as("z"))
+    Salted.aggregate(zones,
+      keys = Seq("h3r4" -> col("z.h3r4")),
+      saltSrc = col("tile_id"), salts = SaltBuckets,
       aggs = Seq(
-        Salted.Agg("n_cells", "sum", when(inRegion, 1L).otherwise(0L)),
-        Salted.Agg("n_classified", "sum",
-          when(col("class") > 0, 1L).otherwise(0L)),
-        Salted.Agg("loss_sum", "sum",
-          when(inRegion, col("loss")).otherwise(lit(0.0))),
-        Salted.Agg("max_class", "max", when(inRegion, col("class")))))
-      .filter(col("n_cells") > 0)
+        Salted.Agg("n_cells", "sum", col("z.n_cells")),
+        Salted.Agg("n_classified", "sum", col("z.n_classified")),
+        Salted.Agg("loss_sum", "sum", col("z.loss_sum")),
+        Salted.Agg("max_class", "max", col("z.max_class"))))
   }
 }

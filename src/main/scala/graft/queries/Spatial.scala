@@ -250,7 +250,7 @@ object Spatial {
        |region_of AS (
        |  SELECT cell_id, MIN(region_id) AS region_id FROM pip GROUP BY 1)""".stripMargin
 
-  /** Spark-side PIP lookup via the codegen'd RegionOf expression.
+  /** Spark-side PIP lookup via the codegen'd Geom.regionOf call.
     * region_explode evaluates the ray-cast ONCE per cell and drops
     * no-region rows in the same Generate (a projection + filter would
     * ray-cast twice; plan-pinned in SparkEngineSpec). */
@@ -6507,7 +6507,7 @@ object Spatial {
   // empties the 10×10 overlap, nonzero keeps it at winding 2), region
   // 2's outer-CCW + hole-CW is the agreeing case (winding 0 in the
   // hole — both rules exclude it), region 3 is the disjoint control.
-  // Both rules evaluate in ONE projection over the spine (region_of and
+  // Both rules evaluate in ONE projection over the spine (region_of_neg1 and
   // the wind_region kernel share the broadcast layer); counts
   // per (rule, region) plus the per-region differ count pin the exact
   // disagreement set. Oracle: the same edge VALUES with parity HAVING

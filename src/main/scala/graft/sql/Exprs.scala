@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.core.{Cart, Codec, Geom, H3Lite, Polygon}
+import graft.core.{Cart, Codec, Geom, H3Lite, Igh, Polygon}
 
 /** The engine's per-row kernels for the operators Spark lacks
   * (SURVEY.md §2.11): tile decode and encode, point-in-polygon, the
@@ -34,19 +34,6 @@ object DecodeBand {
       Codec.decodeBand(fmt.toString, bytes, nPixels, band))
 }
 
-/** Ray-cast point-in-polygon region lookup over a broadcast-style packed
-  * polygon set (SURVEY.md §2.8 G3): the lowest containing region id, or
-  * null when no polygon contains the point (the reference then drops the
-  * row, R:273-274). Boxed so the miss can be null; region ids are small,
-  * so Integer.valueOf hands back cached boxes and a hit allocates
-  * nothing. */
-object RegionOf {
-  def eval(polys: Array[Polygon], px: Double, py: Double): Integer = {
-    val r = Geom.regionOf(polys, px, py)
-    if (r < 0) null else Integer.valueOf(r)
-  }
-}
-
 /** The driver-class vote (per-pixel CART packed-forest walk + argmax +
   * confidence/loss floors, Cart.PackedForest.classify) fused with the
   * region lookup, over `loss`, an f32 payload holding pixel p's loss at
@@ -57,10 +44,10 @@ object RegionOf {
   * `blockB` grid units per block) when its block is region-constant,
   * else by an exact ray-cast against the packed polygon set — and
   * either classifies (0..nDrivers) or returns -1 for points outside
-  * every polygon. The fused form exists because the natural
-  * `withColumn("region_id", region_of(...)).filter(isNotNull)` shape
-  * makes Catalyst evaluate the ray-cast twice per pixel (once in the
-  * pushed-down Filter, once in the collapsed Project) — with 1280-edge
+  * every polygon. The fused form exists because the natural shape, a
+  * nullable region column then `.filter(isNotNull)`, makes Catalyst
+  * evaluate the ray-cast twice per pixel (once in the pushed-down
+  * Filter, once in the collapsed Project) — with 1280-edge
   * polygons the PIP is the compute core of the headline metric, so the
   * double evaluation halves throughput. A top-level forwarder, because
   * a call needs a static method and Cart.PackedForest is nested. */
@@ -99,6 +86,79 @@ object ForestVote {
     val cls = if (Codec.floatAt(loss, p).toDouble < lossFloor ||
       best < confFloor) 0L else bestD.toLong
     new GenericInternalRow(Array[Any](cls, best))
+  }
+}
+
+/** The headline's zonal pass over ONE tile: for every in-grid pixel
+  * (the in-grid guard skips the padding of partial edge tiles), the
+  * fused PIP + vote of DriverClassifyAt, then for in-region pixels the
+  * res-`res` H3-lite id (H3Lite.encodeFromTable over the row tables
+  * `packed`/`inv`) and its res-4 parent. Accumulates per parent
+  * n_cells, n_classified (class > 0), loss_sum and max_class, and
+  * returns one struct(h3r4, n_cells, n_classified, loss_sum, max_class)
+  * per parent the tile touches, in first-touch order, so the plan
+  * moves a few partials per tile, not one row per pixel. Pixels outside
+  * every region (class -1) add nothing. The accumulators are dense over
+  * the whole res-4 grid, (1 << 4) x (1 << 5) = 512 slots: a 64x64 tile
+  * of the true grid touches up to 39 parents, 5.7 on average. `loss`
+  * and `bytes` as in DriverClassifyAt; the tile is `tile` x `tile`
+  * pixels over a `rows` x `cols` grid. */
+object TileZonal {
+  val ZoneRes = 4
+  private val ColBits = ZoneRes + 1
+  private val Slots = 1 << (ZoneRes + ColBits)
+
+  def eval(tileId: Int, loss: Array[Byte], bytes: Array[Byte], rows: Int,
+      cols: Int, tile: Int, res: Int, packed: Array[Long],
+      inv: Array[Igh.RowInv], polys: Array[Polygon],
+      forest: Cart.PackedForest, blockConst: Array[Int], nbx: Int,
+      blockB: Int, lossFloor: Double, confFloor: Double): ArrayData = {
+    val tilesX = (cols + tile - 1) / tile
+    val row0 = tileId / tilesX * tile
+    val col0 = tileId % tilesX * tile
+    val nPix = tile * tile
+    val shift = res - ZoneRes
+    val nCells = new Array[Long](Slots)
+    val nClassified = new Array[Long](Slots)
+    val lossSum = new Array[Double](Slots)
+    val maxClass = new Array[Long](Slots)
+    val touched = new Array[Int](Slots)
+    var nTouched = 0
+    var p = 0
+    while (p < nPix) {
+      val r = row0 + p / tile
+      val c = col0 + p % tile
+      if (r < rows && c < cols) {
+        val cls = Cart.PackedForest.classifyAtCovered(forest, polys,
+          blockConst, nbx, blockB, loss, bytes, p, c + 0.5, r + 0.5, nPix,
+          lossFloor, confFloor)
+        if (cls >= 0) {
+          val h3 = H3Lite.encodeFromTable(r.toLong * cols + c + 1, cols, res,
+            packed, inv)
+          val slot = ((H3Lite.row(h3) >> shift) << ColBits) |
+            (H3Lite.col(h3) >> shift)
+          if (nCells(slot) == 0) {
+            touched(nTouched) = slot
+            nTouched += 1
+          }
+          nCells(slot) += 1
+          if (cls > 0) nClassified(slot) += 1
+          lossSum(slot) += Codec.floatAt(loss, p).toDouble
+          if (cls > maxClass(slot)) maxClass(slot) = cls
+        }
+      }
+      p += 1
+    }
+    val out = new Array[Any](nTouched)
+    var i = 0
+    while (i < nTouched) {
+      val slot = touched(i)
+      out(i) = new GenericInternalRow(Array[Any](
+        H3Lite.pack(ZoneRes, slot >> ColBits, slot & ((1 << ColBits) - 1)),
+        nCells(slot), nClassified(slot), lossSum(slot), maxClass(slot)))
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 }
 
@@ -2045,10 +2105,6 @@ object GraftFunctions {
     invoke(graft.engine.Bloom, BooleanType, Seq(f.bits, hash, f.k),
       "mightContain")
 
-  /** Region id of point (px, py) among `polys`, null if none. */
-  def region_of(px: Column, py: Column, polys: Array[Polygon]): Column =
-    invoke(RegionOf, IntegerType, Seq(polys, px, py), nullable = true)
-
   /** Region id of point (px, py) among `polys`, -1 if none (the
     * non-nullable sentinel form the fused classify uses). */
   def region_of_neg1(px: Column, py: Column, polys: Array[Polygon]): Column =
@@ -2056,7 +2112,7 @@ object GraftFunctions {
 
   /** Generator: ONE row carrying the region id for points inside some
     * polygon, ZERO rows for points outside — with exactly one ray-cast
-    * per input row. The natural `withColumn(region_of).filter(...)`
+    * per input row. The natural `withColumn(region).filter(...)`
     * shape makes Catalyst evaluate the PIP twice per row (the pushed
     * Filter and the Project each evaluate it; Catalyst has no
     * cross-operator subexpression elimination), so row-dropping is
@@ -2142,6 +2198,28 @@ object GraftFunctions {
     invoke(ForestVote, struct("class" -> LongType,
       "confidence" -> DoubleType), Seq(forest, loss,
       predictors(bytes, forest), p, region, nPix, lossFloor, confFloor))
+
+  /** The headline's per-tile zonal partials (TileZonal): array of
+    * struct(h3r4, n_cells, n_classified, loss_sum, max_class), one per
+    * res-4 H3-lite parent that tile `tileId` of `spec` touches with an
+    * in-region pixel, H3 ids at res `res`. Regions, `forest`, `cover`
+    * and the floors as in driver_classify_at_covered; `bytes` is an
+    * input only when the forest has a split. */
+  def tile_zonal(tileId: Column, loss: Column, bytes: Column,
+      spec: graft.world.WorldSpec, res: Int, polys: Array[Polygon],
+      forest: Cart.PackedForest, cover: graft.engine.Covering.Blocks,
+      lossFloor: Double, confFloor: Double): Column = {
+    require(res >= TileZonal.ZoneRes && res <= H3Lite.MaxRes,
+      s"tile_zonal res $res out of [${TileZonal.ZoneRes}, ${H3Lite.MaxRes}]")
+    val (packed, inv) = H3Lite.table(spec.rows, spec.cols, res)
+    invoke(TileZonal, ArrayType(struct("h3r4" -> LongType,
+      "n_cells" -> LongType, "n_classified" -> LongType,
+      "loss_sum" -> DoubleType, "max_class" -> LongType),
+      containsNull = false),
+      Seq(tileId, loss, predictors(bytes, forest), spec.rows, spec.cols,
+        spec.tile, res, packed, inv, polys, forest, cover.const, cover.nbx,
+        cover.b, lossFloor, confFloor))
+  }
 
   /** The band payload the forest walk reads: `bytes`, or an empty
     * literal when no tree has a split (the walk then reads no band). */
@@ -2367,7 +2445,7 @@ object GraftFunctions {
   }
 
   /** Region id under the nonzero (winding) fill rule, -1 outside — the
-    * q194 dual of region_of's even-odd parity (Geom.windRegionOf). */
+    * q194 dual of regionOf's even-odd parity (Geom.windRegionOf). */
   def wind_region(px: Column, py: Column, polys: Array[Polygon]): Column =
     invoke(Geom, IntegerType, Seq(polys, px, py), "windRegionOf")
 

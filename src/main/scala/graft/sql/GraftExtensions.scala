@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *  - runtime: `GraftExtensions.register(spark)` on a live session
   *    (what the tests use; also the shape for notebook users).
   *
-  * Kernels needing driver-side objects (region_of's polygon array,
+  * Kernels needing driver-side objects (region_of_neg1's polygon array,
   * driver_classify_at_covered's packed forest) stay Column-API-only:
   * SQL has no literal syntax for them, and resolving layer names to
   * broadcast geometry belongs to a catalog, not a function registry.

@@ -296,17 +296,18 @@ object World {
   def tilesDF(spark: SparkSession, spec: WorldSpec): DataFrame = {
     val rdd = spark.sparkContext
       .range(0, spec.nTiles, numSlices = math.min(spec.nTiles, 32))
-      .map { t =>
-        val ti = t.toInt
-        val bands = tileBands(spec, ti)
-        val bytes = Codec.encodeF32(bands)
-        val row0 = (ti / spec.tilesX) * spec.tile
-        val col0 = (ti % spec.tilesX) * spec.tile
-        Row(f"tile_$ti%05d", bytes, spec.tile, spec.tile, "f32",
-          s"tile r$row0 c$col0 ${spec.tile}x${spec.tile} bands=${spec.nBands}",
-          Codec.phash(bands(0), spec.tile, spec.tile), ti,
-          Codec.encodeF32(Array(bands(0))))
-      }
+      .map(t => tileRow(spec, t.toInt))
     spark.createDataFrame(rdd, tileSchema)
+  }
+
+  /** Row `t` of `tilesDF` (schema `tileSchema`). */
+  def tileRow(spec: WorldSpec, t: Int): Row = {
+    val bands = tileBands(spec, t)
+    val row0 = (t / spec.tilesX) * spec.tile
+    val col0 = (t % spec.tilesX) * spec.tile
+    Row(f"tile_$t%05d", Codec.encodeF32(bands), spec.tile, spec.tile, "f32",
+      s"tile r$row0 c$col0 ${spec.tile}x${spec.tile} bands=${spec.nBands}",
+      Codec.phash(bands(0), spec.tile, spec.tile), t,
+      Codec.encodeF32(Array(bands(0))))
   }
 }

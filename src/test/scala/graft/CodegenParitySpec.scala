@@ -6,7 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
-import graft.engine.{Covering, Pipeline}
+import graft.core.Cart
+import graft.engine.{Covering, Headline, Pipeline}
 import graft.world.World
 
 /** Codegen vs interpreted parity for every kernel GraftFunctions calls
@@ -82,15 +83,26 @@ class CodegenParitySpec extends SparkSpec {
 
   private val spec = World.tiny
 
-  /** The kernels no registry query calls, on the tiny world: region_of's
-    * null-on-miss (with null inputs too) and the headline's fused
-    * classify. */
+  /** The kernels no registry query calls: the model run's fused
+    * classify on the tiny world, and the headline's tile kernel over a
+    * few true-grid tiles (a region-boundary tile, a padded edge tile,
+    * the padded corner) with a forest that splits on band 1. */
   private val direct: Seq[(String, String, () => DataFrame)] = Seq(
-    ("graft.sql.RegionOf.eval", "region_of over the tiny grid", () =>
-      spark.range(1, spec.nCells + 1).toDF("cell_id").select(col("cell_id"),
-        graft.sql.GraftFunctions.region_of(
-          when(col("cell_id") % 5 =!= 0, Pipeline.px(spec)), Pipeline.py(spec),
-          World.polygons(spec)).as("region_id"))),
+    ("graft.sql.TileZonal.eval", "Headline.planFrom over three true-grid " +
+      "tiles", () => {
+      val hs = Headline.spec
+      val tiles = spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq(13 * hs.tilesX + 8, 5 * hs.tilesX + 62, hs.nTiles - 1)
+          .map(World.tileRow(hs, _)), 3), World.tileSchema)
+      val trees = (for (r <- 1 to hs.nRegions; d <- 1 to 5) yield {
+        val t: Cart.Tree =
+          if (d == 2) Cart.Split(0, 128.0, Cart.Leaf(0.9, 1, 0.0),
+            Cart.Leaf(0.1, 1, 0.0), 0.5, 2, 0.0)
+          else Cart.Leaf(0.3, 1, 0.0)
+        (r, d) -> t
+      }).toMap
+      Headline.planFrom(tiles, trees)
+    }),
     ("graft.sql.DriverClassifyAt.eval", "Pipeline.classes on the tiny world",
       () => {
         val tiles = World.tilesDF(spark, spec)

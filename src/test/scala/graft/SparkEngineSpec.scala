@@ -191,6 +191,69 @@ class SparkEngineSpec extends SparkSpec {
     assert(!lossOnly.contains("bytes"), lossOnly)
   }
 
+  test("headline tile kernel equals the per-pixel reference plan on " +
+    "true-grid edge and region-boundary tiles, with and without a split") {
+    import graft.engine.Headline
+    import graft.sql.GraftFunctions._
+    val hs = Headline.spec
+    val cover = Headline.cover
+    // tile 0 and tile 8 of row 13 cross region 1's edges (row 13 holds
+    // the polygons' mid-height vertex); 377 and 1709 are a right-edge and
+    // a bottom-edge padded tile, 1763 the padded corner; 192 lies inside
+    // region 1
+    val ids = Seq(0, 13 * hs.tilesX + 8, 192, 5 * hs.tilesX + 62,
+      27 * hs.tilesX + 8, hs.nTiles - 1)
+    def boundary(t: Int): Boolean = (0 until hs.pixPerTile).exists { p =>
+      hs.inGrid(t, p) && {
+        val id = hs.cellId(t, p)
+        val (r, c) = ((id - 1) / hs.cols, (id - 1) % hs.cols)
+        cover.const((r / cover.b).toInt * cover.nbx + (c / cover.b).toInt) ==
+          Covering.Boundary
+      }
+    }
+    assert(ids.count(boundary) >= 3, "tiles crossing a region boundary")
+    assert(!hs.inGrid(5 * hs.tilesX + 62, hs.tile - 1) &&
+      !hs.inGrid(27 * hs.tilesX + 8, hs.pixPerTile - 1),
+      "a right-edge and a bottom-edge padded tile")
+    val tiles = spark.createDataFrame(spark.sparkContext.parallelize(
+      ids.map(World.tileRow(hs, _)), 3), World.tileSchema)
+    val cfg = Pipeline.Config()
+    def reference(trees: Map[(Int, Int), Cart.Tree]): DataFrame = {
+      val forest = Cart.PackedForest(trees, hs.nRegions, Pipeline.NumDrivers)
+      val classed = Pipeline.cells(tiles, hs).select(col("cell_id"),
+        grid_h3(col("cell_id"), hs.rows, hs.cols, Headline.H3Res).as("h3"),
+        driver_classify_at_covered(col("loss"), col("bytes"), col("p"),
+          Pipeline.px(hs), Pipeline.py(hs), Headline.polys, forest,
+          cover.const, cover.nbx, cover.b, hs.pixPerTile, cfg.lossFloor,
+          cfg.confidenceFloor).as("class"),
+        Pipeline.band(hs, 0).as("loss"))
+      val inRegion = col("class") >= 0
+      Salted.aggregate(classed,
+        keys = Seq("h3r4" -> h3_parent_col(col("h3"), Headline.H3Res, 4)),
+        saltSrc = col("cell_id"), salts = Headline.SaltBuckets,
+        aggs = Seq(
+          Salted.Agg("n_cells", "sum", when(inRegion, 1L).otherwise(0L)),
+          Salted.Agg("n_classified", "sum",
+            when(col("class") > 0, 1L).otherwise(0L)),
+          Salted.Agg("loss_sum", "sum",
+            when(inRegion, col("loss")).otherwise(lit(0.0))),
+          Salted.Agg("max_class", "max", when(inRegion, col("class")))))
+        .filter(col("n_cells") > 0)
+    }
+    // loss values are multiples of 1/1024, so every loss_sum is exact
+    // whatever the summation order and the rows compare bit for bit
+    for (split <- Seq(false, true)) {
+      val trees = forest7x5(split)
+      val got = Headline.planFrom(tiles, trees).collect()
+        .map(_.toString).sorted.toSeq
+      val want = reference(trees).collect().map(_.toString).sorted.toSeq
+      assert(got.size > ids.size, s"split=$split: ${got.size} zones")
+      assert(got == want, s"split=$split")
+      if (split) assert(got.exists(_.endsWith(",2]")),
+        "the split forest classifies some zone's cells as driver 2")
+    }
+  }
+
   test("classes from the loss column equal oracleVote for a forest with " +
     "splits, under a loss floor that bites") {
     // the default 0.005 floor scores no tiny-world cell (no loss lies in
@@ -733,22 +796,24 @@ class SparkEngineSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       def count(needle: String): Int =
         plan.sliding(needle.length).count(_ == needle)
-      assert(count("DriverClassifyAt.eval(") == 1,
-        s"classify must appear exactly once:\n$plan")
-      assert(!plan.contains("Geom.regionOf(") &&
-        !plan.contains("RegionOf.eval("),
-        "no separate PIP evaluation may exist in the headline plan")
+      assert(count("TileZonal.eval(") == 1,
+        s"the tile kernel must appear exactly once:\n$plan")
+      assert(!plan.contains("DriverClassifyAt.eval(") &&
+        !plan.contains("Geom.regionOf(") && !plan.contains("RegionOf.eval("),
+        "no classify or PIP evaluation may exist outside the tile kernel")
+      assert(!plan.contains("explode(sequence"),
+        s"no per-pixel explode:\n$plan")
       assert(count("Exchange") == 2,
         s"salted zonal agg = exactly two exchanges:\n$plan")
-      // The classify projection must stay inside whole-stage codegen
+      // The kernel's Generate must stay inside whole-stage codegen
       // (tree-string spans carry a leading `*(id)`): a CodegenFallback
       // expression sneaking into the hot path would silently demote the
-      // per-pixel loop to interpreted eval — the round-4 q74 regression
+      // per-tile loop to interpreted eval — the round-4 q74 regression
       // class, guarded here for the headline.
-      val classifyLine =
-        plan.linesIterator.find(_.contains("DriverClassifyAt.eval(")).get
-      assert(classifyLine.contains("*("),
-        s"classify projection fell out of whole-stage codegen:\n$classifyLine")
+      val kernelLine =
+        plan.linesIterator.find(_.contains("TileZonal.eval(")).get
+      assert(kernelLine.contains("Generate ") && kernelLine.contains("*("),
+        s"tile kernel fell out of whole-stage codegen:\n$kernelLine")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
@@ -773,12 +838,10 @@ class SparkEngineSpec extends SparkSpec {
     "once per row (q21/q25/q39 and the features stage were 2x before)") {
     import graft.sql.GraftFunctions.region_explode
     val polys = World.polygons(spec)
-    // both point-in-polygon call forms: the -1 sentinel (Geom.regionOf)
-    // and the null-on-miss kernel (RegionOf.eval)
+    // the one point-in-polygon call form: the -1 sentinel (Geom.regionOf)
     def countRegionof(df: DataFrame): Int = {
       val plan = df.queryExecution.executedPlan.toString
-      Seq("Geom.regionOf(", "RegionOf.eval(")
-        .map(n => plan.sliding(n.length).count(_ == n)).sum
+      plan.sliding("Geom.regionOf(".length).count(_ == "Geom.regionOf(")
     }
     // the q21 shape: spine -> region rows
     val px = ((col("cell_id") - 1) % spec.cols).cast("double") + 0.5
@@ -787,11 +850,11 @@ class SparkEngineSpec extends SparkSpec {
       .select(col("cell_id"), region_explode(px, py, polys).as("region_id"))
     assert(countRegionof(q21Like) == 1,
       s"one ray-cast per row:\n${q21Like.queryExecution.executedPlan}")
-    // values must equal the nullable-projection + filter formulation
+    // values must equal the sentinel-projection + filter formulation
     val reference = spark.range(1, spec.nCells + 1).toDF("cell_id")
       .select(col("cell_id"),
-        graft.sql.GraftFunctions.region_of(px, py, polys).as("region_id"))
-      .filter(col("region_id").isNotNull)
+        graft.sql.GraftFunctions.region_of_neg1(px, py, polys).as("region_id"))
+      .filter(col("region_id") =!= -1)
     assert(q21Like.orderBy("cell_id").collect().toSeq ==
       reference.orderBy("cell_id").collect().toSeq)
     // the q29 scoring shape: fused cells -> region rows -> loss > 0 ->
@@ -814,8 +877,7 @@ class SparkEngineSpec extends SparkSpec {
       val plan = graft.SparkEntry.queries("q29_tree_fit_predict")(spark,
         "ignored").queryExecution.executedPlan.toString
       val generate = plan.linesIterator
-        .filter(l => l.contains("Generate ") &&
-          (l.contains("Geom.regionOf(") || l.contains("RegionOf.eval(")))
+        .filter(l => l.contains("Generate ") && l.contains("Geom.regionOf("))
         .toSeq
       assert(generate.size == 1, s"one region explode:\n$plan")
       assert(generate.head.contains("*("),

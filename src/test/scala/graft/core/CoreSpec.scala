@@ -576,6 +576,22 @@ class CartSpec extends AnyFunSuite {
           s"id $id in ${rows}x$cols res $res")
       }
     }
+    // every cell of the headline grid at its res 9: the row-table path
+    // wraps longitude without fmod where that is exact, and a sample
+    // cannot show that no cell of the grid takes the other branch wrong
+    val (rows, cols, res) = (1737, 4008, 9)
+    var mismatches = 0L
+    var first = 0L
+    var id = 1L
+    while (id <= rows.toLong * cols) {
+      if (H3Lite.gridCellToH3(id, rows, cols, res) !=
+          H3Lite.gridCellToH3Direct(id, rows, cols, res)) {
+        if (mismatches == 0) first = id
+        mismatches += 1
+      }
+      id += 1
+    }
+    assert(mismatches == 0, s"$mismatches cells differ, first id $first")
   }
 
   test("banded edge index: contains equals the linear scan on random " +
