@@ -74,8 +74,11 @@ final case class Polygon(regionId: Int, xs: Array[Double], ys: Array[Double],
     * only the O(edges / bands) edges that can straddle its y — the
     * structure a production polygon layer (continental boundaries run
     * to thousands of vertices) needs; the linear scan is O(edges) per
-    * point. @transient lazy: rebuilt after deserialization on each
-    * executor in microseconds, never shipped. Only edges with
+    * point. @transient lazy: never shipped, rebuilt after
+    * deserialization, about 0.05 ms a 1280-edge polygon once compiled
+    * and 1-3 ms on a cold JVM. In local mode every task
+    * deserializes its own copy of the plan's polygons, so every task
+    * pays that rebuild. Only edges with
     * min(y1,y2) <= py < max(y1,y2) can satisfy the straddle test, and
     * each edge is indexed into every band overlapping [min, max], so
     * the banded walk applies the IDENTICAL arithmetic to a superset of

@@ -1,5 +1,7 @@
 package graft.engine
 
+import java.io.{File, UncheckedIOException}
+import java.nio.file.{NoSuchFileException, Files => JFiles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -75,12 +77,35 @@ object Headline {
     * literal like the polygons themselves. */
   lazy val cover: Covering.Blocks =
     Covering.build(polys, spec.rows, spec.cols, CoverB)
-  /** Files in the materialized table: fine-grained input splits (64 per
-    * 8-core slice worker = 8 waves) so a straggling task — host steal is
-    * bursty on this box — costs ~1.5% of a pass, not 12% (16 splits per
-    * slice measured raw scaling 0.71; granularity is the cheap half of
-    * that gap, the rest is the shared-DRAM ceiling). */
-  val Files = 256
+  /** Files in the materialized table: 8 per slice directory, about 55
+    * tiles (5.5 MiB) a file. Most of a pass's fixed cost is paid per
+    * file and per task, not per tile: at local[1] a pass whose kernel
+    * returns nothing still took 1.0-1.2 s of the 2.2 s full pass over
+    * 256 files. Per file, the reader copies the Hadoop Configuration
+    * (about 20% of executor samples in JFR), reads the footer and
+    * builds a reader; per task, the plan's polygon, cover and H3
+    * literals are deserialized (about 7 ms) and `Polygon.bands` is
+    * rebuilt. Median headline pass on a 4-core VM at local[4] under
+    * Bench's split settings (16 MB maxPartitionBytes, 1 MB
+    * openCostInBytes), 21 passes a table in one JVM: 0.765 s at 256
+    * files (27 scan tasks), 0.621 s at 128, 0.584 s at 64, 0.554 s at
+    * 32 (16 scan tasks); 16 files was no faster than 32.
+    * Splits in graft.Bench under the same settings: a file under 128 MB
+    * is one row group, so a split holds whole files. A slice packs into 8 one-file splits on an
+    * 8-core worker, as at 256 files, and into 4 two-file splits on a
+    * 2- or 4-core worker, where 256 files gave 7. On the 4-core VM, in
+    * a reduced ladder that runs the quarter workers two at a time,
+    * every 2- and 4-core worker ran 41-65% more tiles/s at 32 files;
+    * the quarter-to-full-grid rate ratio fell from 1.02 to 0.92 at 2
+    * cores and rose from 1.00 to 1.10 at 4. Bench's own 32-core
+    * ladders were not run at 32 files. */
+  val Files = 32
+  // Bench's largest slice worker has 8 cores and one whole file is one
+  // split: fewer than 8 files a slice leaves its cores idle, and a file
+  // count that does not divide into the slices puts one file index in
+  // two slice directories.
+  require(Files % Slices == 0 && Files / Slices >= 8,
+    s"Files ($Files) must be a multiple of Slices ($Slices), 8 or more a slice")
   /** Tag of the table's column layout (World.tileSchema): a table
     * written with another layout sits at another path, so it is rebuilt,
     * never read. */
@@ -101,22 +126,68 @@ object Headline {
   def readTiles(s: SparkSession, path: String = tilesPath): DataFrame =
     s.read.schema(tableSchema).parquet(path)
 
-  /** Materialize the tile table to parquet once. */
+  /** Materialize the tile table to parquet once, after deleting the
+    * complete tables an earlier spec, file count or layout left beside
+    * it. */
   def ensureTiles(s: SparkSession): Unit = {
-    val done = new java.io.File(s"$tilesPath/_SUCCESS")
-    if (!done.exists()) {
-      // Hive-style partitioning on a slice directory (tile_id quarter):
-      // the executor-fleet scaling run reads one slice per executor via
-      // partition PRUNING — directories that are not touched at all —
-      // the same mechanism a production table would use. Range
-      // partitioning within a slice keeps files tile-contiguous.
-      World.tilesDF(s, spec)
-        .withColumn("slice",
-          (col("tile_id") * Slices / spec.nTiles).cast("int"))
-        .repartitionByRange(Files, col("tile_id"))
-        .sortWithinPartitions("tile_id")
-        .write.mode("overwrite").partitionBy("slice").parquet(tilesPath)
-    }
+    deleteStaleTables(tilesPath)
+    if (!new File(s"$tilesPath/_SUCCESS").exists())
+      writeTiles(World.tilesDF(s, spec), spec.nTiles, tilesPath)
+  }
+
+  /** Write `tiles` (`nTiles` of them, `World.tileSchema`) as the
+    * headline's table at `path`. Hive-style partitioning on a slice
+    * directory (tile_id quarter): the executor-fleet scaling run reads
+    * one slice per executor via partition PRUNING, directories that are
+    * not touched at all, the mechanism a production table would use.
+    * Shuffle partition k holds exactly the tiles of file index
+    * k = floor(tile_id * Files / nTiles), whatever the input's
+    * partitioning (no range sampling). The slice is
+    * floor(k / (Files / Slices)), so each file is one contiguous tile_id
+    * range inside one slice directory, and with nTiles >= Files every
+    * slice directory holds exactly Files / Slices files. The partitioned
+    * write needs its rows sorted by `slice` and would replace a
+    * tile_id-only sort with its own, so the sort is (slice, tile_id). */
+  def writeTiles(tiles: DataFrame, nTiles: Int, path: String): Unit =
+    tiles
+      .withColumn("slice", (col("tile_id") * Slices / nTiles).cast("int"))
+      .repartitionById(Files, (col("tile_id") * Files / nTiles).cast("int"))
+      .sortWithinPartitions("slice", "tile_id")
+      .write.mode("overwrite").partitionBy("slice").parquet(path)
+
+  /** The names `tilesPath` takes: `graft_bench_tiles_<R>x<C>x<B>_f<N>`
+    * with an optional `_<tag>`. */
+  private val TableName = """graft_bench_tiles_\d+x\d+x\d+_f\d+(_[A-Za-z0-9]+)?""".r
+
+  /** Delete every complete table beside `current` whose name is another
+    * `tilesPath`, with its `.trees.bin`. Complete means written through
+    * (`_SUCCESS`) and sliced (`slice=0/`). The current table, other
+    * names, cut-outs without slice directories (such as perfbench's
+    * `<table>_model32`) and tables still being written are left alone.
+    * Nothing marks a table as in use: a process of another checkout
+    * that is reading a stale table loses it. Two processes deleting the
+    * same table at once is no error. Returns the names deleted. */
+  def deleteStaleTables(current: String): Seq[String] = {
+    val cur = new File(current).getAbsoluteFile
+    Option(cur.getParentFile.listFiles).toSeq.flatten
+      .filter(f => f.getName != cur.getName &&
+        TableName.matches(f.getName) &&
+        new File(f, "_SUCCESS").isFile && new File(f, "slice=0").isDirectory)
+      .map { f =>
+        try {
+          val walk = JFiles.walk(f.toPath)
+          try walk.sorted(java.util.Comparator.reverseOrder())
+            .forEach(p => JFiles.deleteIfExists(p))
+          finally walk.close()
+        } catch {
+          // another process deleted (part of) the table first
+          case _: NoSuchFileException =>
+          case e: UncheckedIOException
+            if e.getCause.isInstanceOf[NoSuchFileException] =>
+        }
+        JFiles.deleteIfExists(new File(s"$f.trees.bin").toPath)
+        f.getName
+      }
   }
 
   private val treesPath = s"$tilesPath.trees.bin"

@@ -68,9 +68,7 @@ class JobCountSpec extends SparkSpec {
     "table and on a cut-out without slice directories") {
     val spec = World.tiny
     val sliced = graft.util.TempDirs.create("graft_jobs_tiles").toString
-    World.tilesDF(spark, spec)
-      .withColumn("slice", (col("tile_id") * 4 / spec.nTiles).cast("int"))
-      .write.mode("overwrite").partitionBy("slice").parquet(sliced)
+    Headline.writeTiles(World.tilesDF(spark, spec), spec.nTiles, sliced)
     val cut = graft.util.TempDirs.create("graft_jobs_cut").toString
     spark.read.parquet(sliced).filter(col("tile_id") < 5).drop("slice")
       .write.mode("overwrite").parquet(cut)
@@ -80,7 +78,8 @@ class JobCountSpec extends SparkSpec {
     assert(jobs { tiles = Headline.readTiles(spark, sliced) } == 0)
     assert(jobs { cutTiles = Headline.readTiles(spark, cut) } == 0)
     assert(tiles.schema.fieldNames.toSeq == Headline.tableSchema.fieldNames.toSeq)
-    assert(tiles.filter(col("slice") === 1).count() == spec.nTiles / 4)
+    assert(tiles.filter(col("slice") === 1).count() ==
+      spec.nTiles / Headline.Slices)
     assert(cutTiles.filter(col("slice").isNull).count() == 5)
     def rows(df: DataFrame) = df.collect().map(_.toSeq.map {
       case b: Array[Byte] => b.toSeq
