@@ -10,7 +10,7 @@ import graft.engine.{Headline, Pipeline}
   * checkpointed stages, ending in the reference's actual deliverables:
   * the expanded class map as georeferenced GeoTIFF tiles (R:425-441 +
   * the ArcGIS Expand step R:445-454) and the six per-class loss-mask
-  * CSVs + rasters (R:510-551). Writes RUNMODEL.md with per-stage
+  * CSVs + rasters (R:510-551). Writes `dir`/RUNMODEL.md with per-stage
   * provenance (seconds per stage exclude the row count).
   *
   * Scale shape: classification uses the FUSED per-pixel path (one
@@ -60,7 +60,7 @@ object RunModel {
     report ++= s"Artifacts under $dir: stages/ (parquet snapshots), "
     report ++= "csv/LossMask_class{0..5}.csv, meta/ (fingerprint + "
     report ++= "per-partition write lineage per stage).\n"
-    Files.writeString(Paths.get("RUNMODEL.md"), report.toString)
+    Files.writeString(Paths.get(dir, "RUNMODEL.md"), report.toString)
     println(report.toString)
     s.stop()
   }

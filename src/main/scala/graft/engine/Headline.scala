@@ -1,10 +1,11 @@
 package graft.engine
 
-import java.io.{File, UncheckedIOException}
-import java.nio.file.{NoSuchFileException, Files => JFiles}
+import java.io.{File, FileInputStream, FileOutputStream, ObjectInputStream, ObjectOutputStream}
+import java.nio.file.{Paths, Files => JFiles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import scala.util.Using
 import graft.core.Cart
 import graft.sql.GraftFunctions._
 import graft.world.{World, WorldSpec}
@@ -106,14 +107,16 @@ object Headline {
   // two slice directories.
   require(Files % Slices == 0 && Files / Slices >= 8,
     s"Files ($Files) must be a multiple of Slices ($Slices), 8 or more a slice")
-  /** Tag of the table's column layout (World.tileSchema): a table
-    * written with another layout sits at another path, so it is rebuilt,
-    * never read. */
+  /** Version tag of the table's bytes (World.tileSchema, world generator):
+    * bump it on any change to what `ensureTiles` writes. */
   val Layout = "loss"
-  /** Spec- and layout-keyed path so a spec or schema change invalidates
-    * the materialization. */
-  val tilesPath: String = s"/tmp/graft_bench_tiles_${spec.rows}x" +
-    s"${spec.cols}x${spec.nBands}_f${Files}_$Layout"
+  /** The one path of the materialized table, whose `_KEY` file holds
+    * its `tableKey`; the fitted trees sit beside it in `.trees.bin`. */
+  val tilesPath: String = "/tmp/graft_headline_tiles"
+
+  /** What a tile table is written from: spec, file count and layout. */
+  private[graft] def tableKey(spec: WorldSpec, files: Int, layout: String): String =
+    s"$spec|f$files|$layout"
 
   /** Schema of the materialized table: the tile columns plus the
     * `slice` partition column. */
@@ -126,13 +129,23 @@ object Headline {
   def readTiles(s: SparkSession, path: String = tilesPath): DataFrame =
     s.read.schema(tableSchema).parquet(path)
 
-  /** Materialize the tile table to parquet once, after deleting the
-    * complete tables an earlier spec, file count or layout left beside
-    * it. */
-  def ensureTiles(s: SparkSession): Unit = {
-    deleteStaleTables(tilesPath)
-    if (!new File(s"$tilesPath/_SUCCESS").exists())
-      writeTiles(World.tilesDF(s, spec), spec.nTiles, tilesPath)
+  /** Materialize the tile table unless `tilesPath` holds its key. */
+  def ensureTiles(s: SparkSession): Unit =
+    ensureTable(tilesPath, tableKey(spec, Files, Layout),
+      World.tilesDF(s, spec), spec.nTiles)
+
+  /** Rewrite the table at `path` from `tiles` unless its `_KEY` file
+    * holds `key`, writing the key last: the overwrite deletes the
+    * directory first, so an interrupted write leaves no key and is
+    * redone. A process still reading the replaced table loses it. */
+  private[graft] def ensureTable(path: String, key: String,
+      tiles: => DataFrame, nTiles: Int): Unit = {
+    val keyFile = Paths.get(path, "_KEY")
+    if (!JFiles.isRegularFile(keyFile) || JFiles.readString(keyFile) != key) {
+      System.err.println(s"Headline: writing tile table $path ($key)")
+      writeTiles(tiles, nTiles, path)
+      JFiles.writeString(keyFile, key)
+    }
   }
 
   /** Write `tiles` (`nTiles` of them, `World.tileSchema`) as the
@@ -155,59 +168,41 @@ object Headline {
       .sortWithinPartitions("slice", "tile_id")
       .write.mode("overwrite").partitionBy("slice").parquet(path)
 
-  /** The names `tilesPath` takes: `graft_bench_tiles_<R>x<C>x<B>_f<N>`
-    * with an optional `_<tag>`. */
-  private val TableName = """graft_bench_tiles_\d+x\d+x\d+_f\d+(_[A-Za-z0-9]+)?""".r
-
-  /** Delete every complete table beside `current` whose name is another
-    * `tilesPath`, with its `.trees.bin`. Complete means written through
-    * (`_SUCCESS`) and sliced (`slice=0/`). The current table, other
-    * names, cut-outs without slice directories (such as perfbench's
-    * `<table>_model32`) and tables still being written are left alone.
-    * Nothing marks a table as in use: a process of another checkout
-    * that is reading a stale table loses it. Two processes deleting the
-    * same table at once is no error. Returns the names deleted. */
-  def deleteStaleTables(current: String): Seq[String] = {
-    val cur = new File(current).getAbsoluteFile
-    Option(cur.getParentFile.listFiles).toSeq.flatten
-      .filter(f => f.getName != cur.getName &&
-        TableName.matches(f.getName) &&
-        new File(f, "_SUCCESS").isFile && new File(f, "slice=0").isDirectory)
-      .map { f =>
-        try {
-          val walk = JFiles.walk(f.toPath)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => JFiles.deleteIfExists(p))
-          finally walk.close()
-        } catch {
-          // another process deleted (part of) the table first
-          case _: NoSuchFileException =>
-          case e: UncheckedIOException
-            if e.getCause.isInstanceOf[NoSuchFileException] =>
-        }
-        JFiles.deleteIfExists(new File(s"$f.trees.bin").toPath)
-        f.getName
-      }
-  }
-
   private val treesPath = s"$tilesPath.trees.bin"
+  /** One tile in `SampleEvery` (by tile_id) trains the trees. */
+  val SampleEvery = 37
 
-  /** Fitted trees, cached to disk so repeated bench workers skip the
-    * (untimed) sample-collect + fit. */
-  def loadOrFitTrees(s: SparkSession): Map[(Int, Int), Cart.Tree] = {
-    val f = new java.io.File(treesPath)
-    if (f.exists()) {
-      val in = new java.io.ObjectInputStream(new java.io.FileInputStream(f))
-      try in.readObject().asInstanceOf[Map[(Int, Int), Cart.Tree]]
-      finally in.close()
-    } else {
-      // the ~1/37 tile sample: prep, not part of the timed job
-      val trees = Pipeline.fit(
-        readTiles(s).filter(col("tile_id") % 37 === 0), spec,
-        polys, Pipeline.Config())
-      val out = new java.io.ObjectOutputStream(new java.io.FileOutputStream(f))
-      try out.writeObject(trees) finally out.close()
-      trees
+  /** Fingerprint of the fitted trees: table key, fit configuration (with
+    * `Cart.Params`) and sample rule. Built from constants only, never
+    * read from the table, so a cut-out of the table shares its trees. */
+  private[graft] def treesFingerprint(cfg: Pipeline.Config,
+      key: String = tableKey(spec, Files, Layout)): String =
+    Checkpoint.fingerprint(key, cfg, s"1-in-$SampleEvery")
+
+  /** Fitted trees, cached beside the table so repeated bench workers
+    * skip the (untimed) sample-collect + fit. */
+  def loadOrFitTrees(s: SparkSession): Map[(Int, Int), Cart.Tree] =
+    loadOrFit(treesPath, treesFingerprint(Pipeline.Config())) {
+      Pipeline.fit(readTiles(s).filter(col("tile_id") % SampleEvery === 0),
+        spec, polys, Pipeline.Config())
+    }
+
+  /** The trees at `path` if stored as `(fp, trees)`; otherwise (no file,
+    * another fingerprint, or the older bare-Map format) `fit`, stored
+    * under `fp`, with one line to stderr. */
+  private[graft] def loadOrFit(path: String, fp: String)(
+      fit: => Map[(Int, Int), Cart.Tree]): Map[(Int, Int), Cart.Tree] = {
+    val f = new File(path)
+    val stored = Option.when(f.exists())(
+      Using.resource(new ObjectInputStream(new FileInputStream(f)))(_.readObject()))
+    stored match {
+      case Some((`fp`, trees: Map[(Int, Int), Cart.Tree] @unchecked)) => trees
+      case _ =>
+        System.err.println(s"Headline: fitting trees to $path")
+        val trees = fit
+        Using.resource(new ObjectOutputStream(new FileOutputStream(f)))(
+          _.writeObject((fp, trees)))
+        trees
     }
   }
 

@@ -1,13 +1,15 @@
 package graft
 
-import java.io.File
-import java.nio.file.Files
-import graft.engine.Headline
-import graft.world.World
+import java.io.{File, FileOutputStream, ObjectOutputStream}
+import java.nio.file.{Files, Paths}
+import graft.core.Cart
+import graft.engine.{Headline, Pipeline}
+import graft.world.{World, WorldSpec}
 
-/** The headline tile table's on-disk layout (`Headline.writeTiles`) and
-  * the removal of tables an earlier spec, file count or layout left
-  * beside it (`Headline.deleteStaleTables`). */
+/** The headline tile table's on-disk layout (`Headline.writeTiles`), its
+  * rewrite when the `_KEY` beside the part files differs
+  * (`Headline.ensureTable`), and the refit of its cached trees when
+  * their fingerprint differs (`Headline.loadOrFit`). */
 class HeadlineTableSpec extends SparkSpec {
 
   /** Parquet files of `dir`, by slice directory. */
@@ -46,73 +48,63 @@ class HeadlineTableSpec extends SparkSpec {
       assert(ranges.toSet == expected && ranges.size == Headline.Files)
     }
 
-  test("deleteStaleTables deletes only complete, sliced, stale engine " +
-    "tables and their trees") {
-    val dir = graft.util.TempDirs.create("graft_stale_tables")
-    def table(name: String, success: Boolean = true,
-        sliced: Boolean = true, trees: Boolean = true): Unit = {
-      val t = dir.resolve(name)
-      Files.createDirectories(t)
-      if (sliced) Files.write(Files.createDirectories(t.resolve("slice=0"))
-        .resolve("part-0.parquet"), Array[Byte](1))
-      if (success) Files.write(t.resolve("_SUCCESS"), Array.emptyByteArray)
-      if (trees) Files.write(dir.resolve(s"$name.trees.bin"), Array[Byte](1))
-    }
-    val current = "graft_bench_tiles_10x20x3_f32_loss"
-    table(current)
-    table("graft_bench_tiles_10x20x3_f256_loss")           // older file count
-    table("graft_bench_tiles_10x20x3_f256", trees = false) // older layout
-    table("graft_bench_tiles_9x20x3_f32_loss")             // older spec
-    table("graft_bench_tiles_10x20x3_f64_loss", success = false) // writing
-    table("graft_bench_tiles_10x20x3_f256_loss_model32", sliced = false)
-    table("graft_bench_tiles_10x20x3_f256_model32", sliced = false)
-    table("graft_bench_tiles_10x20x3_f256_loss_copy")
-    table("other_tiles_f256")
-    Files.write(dir.resolve("graft_bench_tiles_1x1x1_f8"), Array[Byte](1))
+  private val tiny = World.tiny
+  private def key(spec: WorldSpec = tiny, files: Int = Headline.Files,
+      layout: String = Headline.Layout) = Headline.tableKey(spec, files, layout)
+  private def ensure(dir: String, k: String): Unit =
+    Headline.ensureTable(dir, k, World.tilesDF(spark, tiny), tiny.nTiles)
+  /** (path, mtime) of each part file: a rewrite names its files anew. */
+  private def parts(dir: String): Map[String, Long] =
+    filesBySlice(dir).values.flatten.map(f => f.getPath -> f.lastModified).toMap
 
-    val deleted = Headline.deleteStaleTables(dir.resolve(current).toString)
-    val gone = Set("graft_bench_tiles_10x20x3_f256_loss",
-      "graft_bench_tiles_10x20x3_f256", "graft_bench_tiles_9x20x3_f32_loss")
-    assert(deleted.toSet == gone && deleted.size == gone.size)
-    val left = dir.toFile.list.toSet
-    assert(gone.forall(n => !left(n) && !left(s"$n.trees.bin")), left)
-    assert(left == Set(current, s"$current.trees.bin",
-      "graft_bench_tiles_10x20x3_f64_loss",
-      "graft_bench_tiles_10x20x3_f64_loss.trees.bin",
-      "graft_bench_tiles_10x20x3_f256_loss_model32",
-      "graft_bench_tiles_10x20x3_f256_loss_model32.trees.bin",
-      "graft_bench_tiles_10x20x3_f256_model32",
-      "graft_bench_tiles_10x20x3_f256_model32.trees.bin",
-      "graft_bench_tiles_10x20x3_f256_loss_copy",
-      "graft_bench_tiles_10x20x3_f256_loss_copy.trees.bin",
-      "other_tiles_f256", "other_tiles_f256.trees.bin",
-      "graft_bench_tiles_1x1x1_f8"))
-    assert(new File(dir.toFile, s"$current/slice=0/part-0.parquet").isFile)
-    // a second call finds nothing; a missing directory is no error
-    assert(Headline.deleteStaleTables(dir.resolve(current).toString).isEmpty)
-    assert(Headline.deleteStaleTables(
-      dir.resolve("absent").resolve(current).toString).isEmpty)
+  test("ensureTable writes a table without _KEY, keeps one whose key matches") {
+    val dir = graft.util.TempDirs.create("graft_keyed_table").toString
+    val keyFile = Paths.get(dir, "_KEY")
+    ensure(dir, key())
+    assert(Files.readString(keyFile) == key())
+    val written = parts(dir)
+    assert(written.size == Headline.Files.min(tiny.nTiles))
+    ensure(dir, key())
+    assert(parts(dir) == written)
+    Files.delete(keyFile)
+    ensure(dir, key())
+    assert(Files.readString(keyFile) == key())
+    assert(parts(dir).keySet.intersect(written.keySet).isEmpty)
   }
 
-  test("deleteStaleTables in several threads at once: no error, table gone") {
-    val dir = graft.util.TempDirs.create("graft_stale_race")
-    val stale = dir.resolve("graft_bench_tiles_10x20x3_f256_loss")
-    for (sl <- 0 until 4; i <- 0 until 50)
-      Files.write(Files.createDirectories(stale.resolve(s"slice=$sl"))
-        .resolve(s"part-$i.parquet"), Array[Byte](1))
-    Files.write(stale.resolve("_SUCCESS"), Array.emptyByteArray)
-    val current = dir.resolve("graft_bench_tiles_10x20x3_f32_loss").toString
-    val start = new java.util.concurrent.CountDownLatch(1)
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val threads = (0 until 4).map { _ =>
-      val t = new Thread(() =>
-        try { start.await(); Headline.deleteStaleTables(current) }
-        catch { case e: Throwable => errors.add(e) })
-      t.start(); t
+  test("spec, Files and Layout each change the key; a changed key rewrites") {
+    val others = Seq(key(spec = tiny.copy(nBands = 7)),
+      key(files = Headline.Files * 2), key(layout = Headline.Layout + "2"))
+    assert((key() +: others).distinct.size == 4)
+    val dir = graft.util.TempDirs.create("graft_rekeyed_table").toString
+    ensure(dir, key())
+    for (k <- others) {
+      val before = parts(dir)
+      ensure(dir, k)
+      assert(Files.readString(Paths.get(dir, "_KEY")) == k)
+      assert(parts(dir).keySet.intersect(before.keySet).isEmpty, k)
     }
-    start.countDown()
-    threads.foreach(_.join())
-    assert(errors.isEmpty, errors)
-    assert(!Files.exists(stale))
+  }
+
+  test("loadOrFit loads trees of a matching fingerprint; another Config, " +
+    "table key or the old bare-Map format refits") {
+    val path = graft.util.TempDirs.create("graft_trees").resolve("t.bin").toString
+    def trees(v: Double): Map[(Int, Int), Cart.Tree] = Map((1, 1) -> Cart.Leaf(v, 1, 0))
+    var fits = 0
+    def load(fp: String, v: Double) = Headline.loadOrFit(path, fp) { fits += 1; trees(v) }
+    val fp = Headline.treesFingerprint(Pipeline.Config())
+    assert(load(fp, 0.25) == trees(0.25) && fits == 1) // no file yet
+    assert(load(fp, 0.5) == trees(0.25) && fits == 1)
+    for (other <- Seq(Pipeline.Config(pruneCp = 0.03),
+        Pipeline.Config(cartParams = Cart.Params(cp = 0.02)))) {
+      val n = fits
+      assert(load(Headline.treesFingerprint(other), 0.5) == trees(0.5) && fits == n + 1)
+    }
+    assert(Headline.treesFingerprint(Pipeline.Config(), key = key()) != fp)
+    // the older format: the bare Map, no fingerprint
+    val out = new ObjectOutputStream(new FileOutputStream(path))
+    try out.writeObject(trees(0.75)) finally out.close()
+    assert(load(fp, 0.25) == trees(0.25) && fits == 4)
+    assert(load(fp, 0.5) == trees(0.25) && fits == 4)
   }
 }

@@ -68,7 +68,10 @@ class JobCountSpec extends SparkSpec {
     "table and on a cut-out without slice directories") {
     val spec = World.tiny
     val sliced = graft.util.TempDirs.create("graft_jobs_tiles").toString
-    Headline.writeTiles(World.tilesDF(spark, spec), spec.nTiles, sliced)
+    // through the keyed writer: its _KEY file must not reach the reads
+    Headline.ensureTable(sliced, Headline.tableKey(spec, Headline.Files,
+      Headline.Layout), World.tilesDF(spark, spec), spec.nTiles)
+    assert(new java.io.File(sliced, "_KEY").isFile)
     val cut = graft.util.TempDirs.create("graft_jobs_cut").toString
     spark.read.parquet(sliced).filter(col("tile_id") < 5).drop("slice")
       .write.mode("overwrite").parquet(cut)
