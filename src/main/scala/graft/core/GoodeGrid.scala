@@ -93,20 +93,11 @@ object Igh {
     yBoundary - math.sqrt(2.0) * math.sin(t0)
   }
 
-  private def centralMeridian(lon: Double, lat: Double): Double =
-    if (lat >= 0) { if (lon < -40 * DEG) cmNW else cmNE }
-    else {
-      if (lon < -100 * DEG) cmS1
-      else if (lon < -20 * DEG) cmS2
-      else if (lon < 80 * DEG) cmS3
-      else cmS4
-    }
-
   /** Forward: (lonDeg, latDeg) -> projected meters (x, y). */
   def forward(lonDeg: Double, latDeg: Double): (Double, Double) = {
     val lon = lonDeg * DEG
     val lat = latDeg * DEG
-    val cm = centralMeridian(lon, lat)
+    val cm = lobeMeridian(lat >= 0, lon)
     val dl = lon - cm
     if (math.abs(lat) <= PhiBoundary) {
       // sinusoidal
@@ -126,7 +117,8 @@ object Igh {
     * exact lon divisor), so a row-major grid can compute it once per
     * ROW instead of once per cell. `lonDegAt` applies the IDENTICAL
     * double-operation sequence as `inverse`, so results are bit-equal
-    * (property-tested in CoreSpec). */
+    * (CoreSpec checks every cell of the headline grid through
+    * H3Lite's tables). */
   final case class RowInv(latDeg: Double, north: Boolean, sinu: Boolean,
       c: Double, mollD: Double)
 
@@ -148,18 +140,23 @@ object Igh {
     }
   }
 
-  /** Longitude (degrees) of projected x on a row described by `ri` —
-    * bit-identical to `inverse(x, y)._1`. */
-  def lonDegAt(ri: RowInv, x: Double): Double = {
-    val xs = x / R
-    val cm =
-      if (ri.north) { if (xs < -40 * DEG) cmNW else cmNE }
-      else {
-        if (xs < -100 * DEG) cmS1
-        else if (xs < -20 * DEG) cmS2
-        else if (xs < 80 * DEG) cmS3
-        else cmS4
-      }
+  /** Central meridian (radians) of the lobe that holds unit-sphere x
+    * (or longitude in radians) `xs` in the north or south hemisphere:
+    * the lobe choice of `inverse` and `forward`. */
+  def lobeMeridian(north: Boolean, xs: Double): Double =
+    if (north) { if (xs < -40 * DEG) cmNW else cmNE }
+    else {
+      if (xs < -100 * DEG) cmS1
+      else if (xs < -20 * DEG) cmS2
+      else if (xs < 80 * DEG) cmS3
+      else cmS4
+    }
+
+  /** Longitude (degrees) at unit-sphere x `xs` = x / R in the lobe of
+    * meridian `cm` = lobeMeridian(ri.north, xs) on the row described by
+    * `ri`: bit-identical to `inverse(x, y)._1`. H3Lite's tables hold
+    * `xs` and both meridians per grid column. */
+  @inline def lonDegAt(ri: RowInv, xs: Double, cm: Double): Double = {
     val lon =
       if (ri.sinu) {
         if (math.abs(ri.c) < 1e-12) cm else cm + (xs - cm) / ri.c
@@ -176,15 +173,7 @@ object Igh {
   def inverse(x: Double, y: Double): (Double, Double) = {
     val xs = x / R
     val ys = y / R
-    val north = ys >= 0
-    val cm =
-      if (north) { if (xs < -40 * DEG) cmNW else cmNE }
-      else {
-        if (xs < -100 * DEG) cmS1
-        else if (xs < -20 * DEG) cmS2
-        else if (xs < 80 * DEG) cmS3
-        else cmS4
-      }
+    val cm = lobeMeridian(ys >= 0, xs)
     if (math.abs(ys) <= yBoundary) {
       // sinusoidal: lat = y; lon = cm + (x - cm)/cos(lat)
       val lat = ys

@@ -59,21 +59,33 @@ object H3Lite {
   private val XMin = -20037506.5671; private val XMax = 20042493.4328
   private val YMin = -8683205.0209; private val YMax = 8686794.9791
 
-  /** Per-(rows, cols, res) row tables: everything the Goode inverse +
-    * encode derive from the ROW alone — packed row bits and the exact
-    * per-row longitude divisor — so the per-cell hot path is a table
-    * read + a handful of arithmetic ops instead of asin/cos per pixel.
-    * Bit-identical to the direct computation (same double-op sequence;
-    * property-tested). A 1737-row table is ~70 KB; built once per JVM. */
-  private val gridCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, Int), (Array[Long], Array[Igh.RowInv])]()
+  /** Everything the Goode inverse + encode of a rows x cols grid at `res`
+    * derive from the ROW or the COLUMN alone: per row the packed row bits
+    * and the Igh.RowInv (latitude and the exact longitude divisor), per
+    * column xs = x / R and the north and south lobe meridians. The per-
+    * cell hot path is then table reads + a handful of arithmetic ops,
+    * with no asin/cos, no x, no lobe if-chain. Bit-identical to the
+    * direct computation (same double-op sequence; CoreSpec checks every
+    * cell of the headline grid). The 1737x4008 table is about 190 KB in
+    * memory, but it serializes as its key (rows, cols, res) and
+    * deserializes to the JVM's cached table, so a plan literal adds a
+    * few bytes to each task, not the arrays. */
+  final class Table private[H3Lite] (rows: Int, cols: Int, res: Int,
+      @transient val packed: Array[Long],
+      @transient val inv: Array[Igh.RowInv],
+      @transient val xs: Array[Double], @transient val cmN: Array[Double],
+      @transient val cmS: Array[Double]) extends Serializable {
+    private def readResolve(): AnyRef = table(rows, cols, res)
+  }
 
-  /** Resolve the row table once (plan time for codegen callers: grid_h3
-    * carries the arrays as plan literals so the per-pixel hot path
-    * never touches this map — a boxed-tuple ConcurrentHashMap lookup
-    * per pixel was measurable). */
-  def table(rows: Int, cols: Int, res: Int)
-      : (Array[Long], Array[Igh.RowInv]) =
+  private val gridCache = new java.util.concurrent.ConcurrentHashMap[
+    (Int, Int, Int), Table]()
+
+  /** Resolve the table once per JVM (plan time for codegen callers:
+    * grid_h3 and tile_zonal carry it as a plan literal, so the per-pixel
+    * hot path never touches this map; a boxed-tuple ConcurrentHashMap
+    * lookup per pixel was measurable). */
+  def table(rows: Int, cols: Int, res: Int): Table =
     gridCache.computeIfAbsent((rows, cols, res), { _ =>
       val inv = new Array[Igh.RowInv](rows)
       val packed = new Array[Long](rows)
@@ -89,41 +101,72 @@ object H3Lite {
         packed(row0) = pack(res, r, 0)
         row0 += 1
       }
-      (packed, inv)
+      val xs = new Array[Double](cols)
+      val cmN = new Array[Double](cols)
+      val cmS = new Array[Double](cols)
+      var col0 = 0
+      while (col0 < cols) {
+        val x = XMin + (col0 + 0.5) * (XMax - XMin) / cols
+        xs(col0) = x / Igh.R
+        cmN(col0) = Igh.lobeMeridian(north = true, xs(col0))
+        cmS(col0) = Igh.lobeMeridian(north = false, xs(col0))
+        col0 += 1
+      }
+      new Table(rows, cols, res, packed, inv, xs, cmN, cmS)
     })
 
   /** Grid cell id (1-based row-major over a rows x cols grid spanning
     * the full Goode extent, like the reference's 1737x4008 global grid)
     * -> H3-lite id at `res`: centroid -> igh inverse projection ->
-    * encode. The per-cell hot path of the headline H3-encode stage —
-    * one static call (codegen-friendly) whose row-dependent work comes
-    * from the precomputed table. */
-  def gridCellToH3(id: Long, rows: Int, cols: Int, res: Int): Long = {
-    val (packed, inv) = table(rows, cols, res)
-    encodeFromTable(id, cols, res, packed, inv)
+    * encode, through the table of `table(rows, cols, res)`. */
+  def gridCellToH3(id: Long, rows: Int, cols: Int, res: Int): Long =
+    encodeFromTable(id, cols, res, table(rows, cols, res))
+
+  /** gridCellToH3 with the table already in hand: the static call
+    * grid_h3's generated code makes (the table rides the plan as a
+    * literal). Splits `id` into (row, col) and runs encodeAt. */
+  def encodeFromTable(id: Long, cols: Int, res: Int, t: Table): Long =
+    encodeAt(t, ((id - 1) / cols).toInt, ((id - 1) % cols).toInt, res)
+
+  /** The per-cell hot path: H3-lite id at `res` of the cell at 0-based
+    * (`row`, `col`) of table `t`'s grid, bit-identical to
+    * gridCellToH3Direct. The column floor-mod is a mask (the column
+    * count is a power of two, so `c0 & (nc - 1)` is `((c0 % nc) + nc) %
+    * nc` for every Int). TileZonal calls this per pixel. */
+  def encodeAt(t: Table, row: Int, col: Int, res: Int): Long = {
+    val ri = t.inv(row)
+    val lon = Igh.lonDegAt(ri, t.xs(col),
+      if (ri.north) t.cmN(col) else t.cmS(col))
+    val nc = colsAt(res)
+    val c0 = math.floor((wrapLng(lon) + 180.0) / 360.0 * nc).toInt
+    t.packed(row) | (c0 & (nc - 1))
   }
 
-  /** The per-cell hot path with the row table already in hand — the
-    * static call grid_h3's generated code makes (tables carried as
-    * plan literals, no map lookup per pixel). */
-  def encodeFromTable(id: Long, cols: Int, res: Int, packed: Array[Long],
-      inv: Array[Igh.RowInv]): Long = {
-    val col0 = (id - 1) % cols
-    val row0 = ((id - 1) / cols).toInt
-    val x = XMin + (col0 + 0.5) * (XMax - XMin) / cols
-    val lon = Igh.lonDegAt(inv(row0), x)
-    // The wrap of gridCellToH3Direct without its two fmods on the usual
-    // range: fmod(a, 360) = a for 0 <= a < 360, and fmod(b, 360) =
-    // b - 360 exactly for 360 <= b < 720 (Sterbenz), so both forms give
-    // the same bits; anything else (and NaN) takes the % chain.
+  /** `((lon + 180) % 360 + 360) % 360 - 180`, bit for bit, without `%`
+    * (a Java `%` on doubles is an fmod loop, and 11.6% of the headline
+    * grid's cells, the Goode lobe gaps, land outside [-180, 180)).
+    *  - m1 = fmod(a, 360) for a = lon + 180: a itself on [0, 360); else,
+    *    while |a| < 1e12, a - 360 q with q = trunc(a / 360). The quotient
+    *    never rounds across an integer k: a double a below 360 k lies at
+    *    least one spacing of 360 k's binade below it, and that spacing
+    *    over 360 exceeds half the spacing of the doubles just below k;
+    *    so q is exact. 360 q is an integer below 2^40, a multiple of
+    *    ulp(a), and |a - 360 q| < 360, so the subtraction is exact too.
+    *    Its zero is +0 where fmod's may be -0; b below absorbs the sign.
+    *  - m2 = fmod(b, 360) for b = m1 + 360 in [0, 720]: b below 360,
+    *    b - 360 (exact by Sterbenz) below 720, and `%` for b = 720, which
+    *    m1 just under 360 rounds to.
+    * NaN, the infinities and |a| >= 1e12 take the `%` chain. CoreSpec
+    * compares raw bits with the chain, and q with the exact quotient. */
+  def wrapLng(lon: Double): Double = {
     val a = lon + 180.0
-    val b = a + 360.0
-    val lngW = if (a >= 0.0 && a < 360.0 && b < 720.0) (b - 360.0) - 180.0
-      else ((lon + 180.0) % 360.0 + 360.0) % 360.0 - 180.0
-    val nc = colsAt(res)
-    val c0 = math.floor((lngW + 180.0) / 360.0 * nc).toInt
-    val c = ((c0 % nc) + nc) % nc
-    packed(row0) | c
+    val m1 =
+      if (a >= 0.0 && a < 360.0) a
+      else if (math.abs(a) < 1e12) a - 360.0 * (a / 360.0).toLong
+      else a % 360.0
+    val b = m1 + 360.0
+    val m2 = if (b < 360.0) b else if (b < 720.0) b - 360.0 else b % 360.0
+    m2 - 180.0
   }
 
   /** The (clamped lat, wrapped lng) degrees of a grid cell centroid —

@@ -39,15 +39,17 @@ import graft.world.{World, WorldSpec}
   * partials. Stages:
   *   scan (parquet; column pruning reads only tile_id + loss, and
   *      bytes when the forest has a split)
-  *   -> TileZonal, per tile, per in-grid pixel (the in-grid guard
-  *      skips edge padding):
+  *   -> TileZonal, per tile, row by row over its in-grid pixels (the
+  *      loop bounds stop at the grid edge, skipping the padding):
   *        DriverClassifyAt's fused classify: block-covered PIP (97% of
   *        8x8 blocks are region-constant on this geometry, resolved by
   *        one broadcast array read; boundary blocks pay the exact
   *        banded ray-cast, ONCE per pixel) + packed 7x5 CART forest
   *        walk + vote (argmax, 0.5 confidence, 0.005 loss floor,
   *        R:362-411); -1 = outside every region, skipped
-  *        -> H3 encode (Goode inverse projection + hierarchical encode)
+  *        -> H3 encode (H3Lite.encodeAt: Goode inverse from the grid's
+  *           per-row and per-column table, longitude wrap without `%`
+  *           (H3Lite.wrapLng), hierarchical encode)
   *        -> res-4 parent slot: n_cells, n_classified, loss_sum,
   *           max_class
   *   -> explode the tile's partials (one row per touched parent)

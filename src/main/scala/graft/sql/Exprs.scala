@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.core.{Cart, Codec, Geom, H3Lite, Igh, Polygon}
+import graft.core.{Cart, Codec, Geom, H3Lite, Polygon}
 
 /** The engine's per-row kernels for the operators Spark lacks
   * (SURVEY.md §2.11): tile decode and encode, point-in-polygon, the
@@ -90,32 +90,36 @@ object ForestVote {
 }
 
 /** The headline's zonal pass over ONE tile: for every in-grid pixel
-  * (the in-grid guard skips the padding of partial edge tiles), the
+  * (partial edge tiles stop at the grid's last row and column), the
   * fused PIP + vote of DriverClassifyAt, then for in-region pixels the
-  * res-`res` H3-lite id (H3Lite.encodeFromTable over the row tables
-  * `packed`/`inv`) and its res-4 parent. Accumulates per parent
-  * n_cells, n_classified (class > 0), loss_sum and max_class, and
-  * returns one struct(h3r4, n_cells, n_classified, loss_sum, max_class)
-  * per parent the tile touches, in first-touch order, so the plan
-  * moves a few partials per tile, not one row per pixel. Pixels outside
-  * every region (class -1) add nothing. The accumulators are dense over
-  * the whole res-4 grid, (1 << 4) x (1 << 5) = 512 slots: a 64x64 tile
-  * of the true grid touches up to 39 parents, 5.7 on average. `loss`
-  * and `bytes` as in DriverClassifyAt; the tile is `tile` x `tile`
-  * pixels over a `rows` x `cols` grid. */
+  * res-`res` H3-lite id (H3Lite.encodeAt over `table`, the grid's
+  * H3Lite.Table) and its res-4 parent. Walks the tile row by row, so
+  * the res-4 row slot is read once per row and the pixel's (row, col)
+  * need no id division. Accumulates per parent n_cells, n_classified
+  * (class > 0), loss_sum and max_class, and returns one struct(h3r4,
+  * n_cells, n_classified, loss_sum, max_class) per parent the tile
+  * touches, in first-touch order, so the plan moves a few partials per
+  * tile, not one row per pixel. Pixels outside every region (class -1)
+  * add nothing. The accumulators are dense over the whole res-4 grid,
+  * (1 << 4) x (1 << 5) = 512 slots: a 64x64 tile of the true grid
+  * touches up to 39 parents, 5.7 on average. `loss` and `bytes` as in
+  * DriverClassifyAt; the tile is `tile` x `tile` pixels over a `rows` x
+  * `cols` grid. */
 object TileZonal {
   val ZoneRes = 4
   private val ColBits = ZoneRes + 1
   private val Slots = 1 << (ZoneRes + ColBits)
 
   def eval(tileId: Int, loss: Array[Byte], bytes: Array[Byte], rows: Int,
-      cols: Int, tile: Int, res: Int, packed: Array[Long],
-      inv: Array[Igh.RowInv], polys: Array[Polygon],
-      forest: Cart.PackedForest, blockConst: Array[Int], nbx: Int,
-      blockB: Int, lossFloor: Double, confFloor: Double): ArrayData = {
+      cols: Int, tile: Int, res: Int, table: H3Lite.Table,
+      polys: Array[Polygon], forest: Cart.PackedForest,
+      blockConst: Array[Int], nbx: Int, blockB: Int, lossFloor: Double,
+      confFloor: Double): ArrayData = {
     val tilesX = (cols + tile - 1) / tile
     val row0 = tileId / tilesX * tile
     val col0 = tileId % tilesX * tile
+    val height = math.min(tile, rows - row0)
+    val width = math.min(tile, cols - col0)
     val nPix = tile * tile
     val shift = res - ZoneRes
     val nCells = new Array[Long](Slots)
@@ -124,19 +128,20 @@ object TileZonal {
     val maxClass = new Array[Long](Slots)
     val touched = new Array[Int](Slots)
     var nTouched = 0
-    var p = 0
-    while (p < nPix) {
-      val r = row0 + p / tile
-      val c = col0 + p % tile
-      if (r < rows && c < cols) {
+    var dy = 0
+    while (dy < height) {
+      val r = row0 + dy
+      val rowSlot = (H3Lite.row(table.packed(r)) >> shift) << ColBits
+      var dx = 0
+      while (dx < width) {
+        val c = col0 + dx
+        val p = dy * tile + dx
         val cls = Cart.PackedForest.classifyAtCovered(forest, polys,
           blockConst, nbx, blockB, loss, bytes, p, c + 0.5, r + 0.5, nPix,
           lossFloor, confFloor)
         if (cls >= 0) {
-          val h3 = H3Lite.encodeFromTable(r.toLong * cols + c + 1, cols, res,
-            packed, inv)
-          val slot = ((H3Lite.row(h3) >> shift) << ColBits) |
-            (H3Lite.col(h3) >> shift)
+          val slot = rowSlot |
+            (H3Lite.col(H3Lite.encodeAt(table, r, c, res)) >> shift)
           if (nCells(slot) == 0) {
             touched(nTouched) = slot
             nTouched += 1
@@ -146,8 +151,9 @@ object TileZonal {
           lossSum(slot) += Codec.floatAt(loss, p).toDouble
           if (cls > maxClass(slot)) maxClass(slot) = cls
         }
+        dx += 1
       }
-      p += 1
+      dy += 1
     }
     val out = new Array[Any](nTouched)
     var i = 0
@@ -2211,14 +2217,13 @@ object GraftFunctions {
       lossFloor: Double, confFloor: Double): Column = {
     require(res >= TileZonal.ZoneRes && res <= H3Lite.MaxRes,
       s"tile_zonal res $res out of [${TileZonal.ZoneRes}, ${H3Lite.MaxRes}]")
-    val (packed, inv) = H3Lite.table(spec.rows, spec.cols, res)
     invoke(TileZonal, ArrayType(struct("h3r4" -> LongType,
       "n_cells" -> LongType, "n_classified" -> LongType,
       "loss_sum" -> DoubleType, "max_class" -> LongType),
       containsNull = false),
       Seq(tileId, loss, predictors(bytes, forest), spec.rows, spec.cols,
-        spec.tile, res, packed, inv, polys, forest, cover.const, cover.nbx,
-        cover.b, lossFloor, confFloor))
+        spec.tile, res, H3Lite.table(spec.rows, spec.cols, res), polys,
+        forest, cover.const, cover.nbx, cover.b, lossFloor, confFloor))
   }
 
   /** The band payload the forest walk reads: `bytes`, or an empty
@@ -2267,14 +2272,14 @@ object GraftFunctions {
 
   /** H3-lite id at `res` of a grid cell id (grid spans the Goode extent;
     * SURVEY.md §2.8 G1): centroid, interrupted-homolosine inverse, then
-    * the hierarchical encode. The per-row Goode-inverse tables are
-    * resolved ONCE here and ride the plan as literals, so the per-pixel
-    * path is arithmetic + table reads (no cache lookup). */
-  def grid_h3(cellId: Column, rows: Int, cols: Int, res: Int): Column = {
-    val (packed, inv) = H3Lite.table(rows, cols, res)
-    invoke(H3Lite, LongType, Seq(cellId, cols, res, packed, inv),
+    * the hierarchical encode. The grid's H3Lite.Table (per-row Goode
+    * inverse, per-column x and lobe meridians) is resolved ONCE here and
+    * rides the plan as a literal, so the per-pixel path is arithmetic +
+    * table reads (no cache lookup). */
+  def grid_h3(cellId: Column, rows: Int, cols: Int, res: Int): Column =
+    invoke(H3Lite, LongType,
+      Seq(cellId, cols, res, H3Lite.table(rows, cols, res)),
       "encodeFromTable")
-  }
 
   /** struct(lat, lng) of a grid cell centroid via the Goode inverse. */
   def grid_latlng(cellId: Column, rows: Int, cols: Int): Column =

@@ -215,6 +215,22 @@ class SparkEngineSpec extends SparkSpec {
     assert(!hs.inGrid(5 * hs.tilesX + 62, hs.tile - 1) &&
       !hs.inGrid(27 * hs.tilesX + 8, hs.pixPerTile - 1),
       "a right-edge and a bottom-edge padded tile")
+    // in-region cells in the Goode lobe gaps, whose longitude wraps
+    // outside the encode's [0, 360) fast path
+    val h3t = graft.core.H3Lite.table(hs.rows, hs.cols, Headline.H3Res)
+    def lobeGap(t: Int): Int = (0 until hs.pixPerTile).count { p =>
+      hs.inGrid(t, p) && {
+        val id = hs.cellId(t, p)
+        val (r, c) = (((id - 1) / hs.cols).toInt, ((id - 1) % hs.cols).toInt)
+        val ri = h3t.inv(r)
+        val a = graft.core.Igh.lonDegAt(ri, h3t.xs(c),
+          if (ri.north) h3t.cmN(c) else h3t.cmS(c)) + 180.0
+        !(a >= 0.0 && a < 360.0) &&
+          Geom.regionOf(Headline.polys, c + 0.5, r + 0.5) >= 0
+      }
+    }
+    val gaps = ids.map(lobeGap)
+    assert(gaps.count(_ > 0) >= 3, s"in-region lobe-gap cells per tile: $gaps")
     val tiles = spark.createDataFrame(spark.sparkContext.parallelize(
       ids.map(World.tileRow(hs, _)), 3), World.tileSchema)
     val cfg = Pipeline.Config()

@@ -119,6 +119,92 @@ class H3LiteSpec extends AnyFunSuite with SeededChecks {
       assert(H3Lite.isValid(id) && H3Lite.res(id) == res)
     }
   }
+
+  test("a grid table serializes as its key and reads back as the " +
+    "JVM's cached table") {
+    val t = H3Lite.table(1737, 4008, 9)
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(t)
+    out.close()
+    assert(bytes.size < 1000, s"${bytes.size} bytes")
+    val back = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(bytes.toByteArray)).readObject()
+    assert(back eq t)
+  }
+
+  test("wrapLng is bit-identical to the % chain") {
+    def chain(lon: Double): Double =
+      ((lon + 180.0) % 360.0 + 360.0) % 360.0 - 180.0
+    var n = 0L
+    var bad = List.empty[Double]
+    def check(lon: Double): Unit = {
+      n += 1
+      if (java.lang.Double.doubleToRawLongBits(H3Lite.wrapLng(lon)) !=
+          java.lang.Double.doubleToRawLongBits(chain(lon)) && bad.size < 5)
+        bad ::= lon
+    }
+    // every lobe-gap cell of the headline grid, at the longitude its
+    // H3 encode wraps
+    val (rows, cols) = (1737, 4008)
+    val t = H3Lite.table(rows, cols, 9)
+    var gap = 0
+    for (r <- 0 until rows; c <- 0 until cols) {
+      val ri = t.inv(r)
+      val lon = Igh.lonDegAt(ri, t.xs(c),
+        if (ri.north) t.cmN(c) else t.cmS(c))
+      if (!(lon + 180.0 >= 0.0 && lon + 180.0 < 360.0)) {
+        gap += 1
+        check(lon)
+      }
+    }
+    assert(gap == 809669, "lobe-gap cells of the 1737x4008 grid")
+    // signed zeros, NaN, infinities, the 1e12 cut-over
+    Seq(0.0, -0.0, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1e12, -1e12, 1e12 - 180.0, -1e12 - 180.0,
+      Double.MaxValue, Double.MinPositiveValue, -Double.MinPositiveValue)
+      .foreach(check)
+    // multiples of 360 (as a = lon + 180 and as lon) and their +-1-ulp
+    // neighbours, where a quotient a / 360 could round across an
+    // integer; wrapLng needs no correction step only because
+    // trunc(a / 360) is exact there (a * (1 / 360) is not: it gives
+    // q = 5 for a = 1800 - 1 ulp)
+    val rk = new scala.util.Random(360)
+    val ks = (-4000L to 4000L) ++
+      (0 to 31).flatMap(e => Seq(1L << e, (1L << e) - 1, 3L << e, 5L << e)) ++
+      Seq.fill(20000)(1L + rk.nextInt(Int.MaxValue).toLong) ++
+      Seq(2777777777L, 2777777778L)
+    var badQ = List.empty[Double]
+    for (k <- ks; s <- Seq(1L, -1L); base <- Seq(360.0 * k * s - 180.0,
+        360.0 * k * s); lon <- Seq(base, math.nextUp(base),
+        math.nextDown(base))) {
+      check(lon)
+      val a = lon + 180.0
+      if (math.abs(a) < 1e12 && (a / 360.0).toLong !=
+          new java.math.BigDecimal(a).divide(java.math.BigDecimal.valueOf(360),
+            0, java.math.RoundingMode.DOWN).longValueExact && badQ.size < 5)
+        badQ ::= a
+    }
+    assert(badQ.isEmpty, s"trunc(a / 360) inexact at ${badQ.mkString(", ")}")
+    // m1 just under 360: m1 + 360 rounds to 720
+    val edge = 180.0 - math.pow(2, -44)
+    assert((edge + 180.0) + 360.0 == 720.0)
+    check(edge)
+    // seeded random doubles: raw bit patterns, and values spread over
+    // the exact range and just past it
+    val rnd = new scala.util.Random(12)
+    for (_ <- 0 until 1000000)
+      check(java.lang.Double.longBitsToDouble(rnd.nextLong()))
+    for (_ <- 0 until 1000000) {
+      val mag = math.pow(10, rnd.nextDouble() * 13)
+      check(if (rnd.nextBoolean()) mag else -mag)
+    }
+    for (_ <- 0 until 200000) check(rnd.nextDouble() * 2160.0 - 1080.0)
+    assert(n > 2000000)
+    assert(bad.isEmpty, s"wrapLng differs at " +
+      bad.map(l => f"$l%s (0x${java.lang.Double.doubleToRawLongBits(l)}%x)")
+        .mkString(", "))
+  }
 }
 
 class GeomSpec extends AnyFunSuite with SeededChecks {
