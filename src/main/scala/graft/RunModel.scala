@@ -13,9 +13,12 @@ import graft.engine.{Headline, Pipeline}
   * CSVs + rasters (R:510-551). Writes `dir`/RUNMODEL.md with per-stage
   * provenance (seconds per stage exclude the row count).
   *
-  * Scale shape: classification uses the FUSED per-pixel path (one
-  * whole-stage-codegen stage, one ray-cast per pixel — same plan as the
-  * benchmark); the wide feature table is never materialized. NA
+  * Scale shape: the classified stage is `Pipeline.classes` over the
+  * fused cell frame, one whole-stage-codegen stage in which each pixel
+  * takes its region from the block cover (`Covering`, a ray-cast only
+  * in blocks a region boundary crosses) and votes the packed forest
+  * (the headline benchmark instead makes one `TileZonal` call per
+  * tile); the wide feature table is never materialized. NA
   * semantics follow the reference: cells with zero loss or outside all
   * regions are NoData (-1) — Expand fills only uncertain (0) cells and
   * leaves NoData untouched.

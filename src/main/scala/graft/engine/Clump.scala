@@ -51,17 +51,15 @@ object Clump {
     val T = spec.tile
     val C = spec.cols
     val id = col("cell_id")
-    val row0 = floor((id - 1) / C).cast("long")
-    val col0 = (id - 1) % C
-    val (tileId, pix) = Rasterize.derive(spec)
+    val row0 = spec.row0Of(id)
+    val col0 = spec.col0Of(id)
 
     // ---- level 1: per-tile local labels (one Exchange on tile_id; the
     // union-find runs once per TILE inside the aggregation's output
     // projection, then a codegen'd unpack derives global cell ids)
-    def cellOf(tile: Column, p: Column): Column =
-      Rasterize.cellOf(spec, tile, p)
     val packed = cells
-      .select(tileId.as("tile_id"), pix.as("pix"), col("cls"))
+      .select(spec.tileOf(id).as("tile_id"), spec.pixOf(id).as("pix"),
+        col("cls"))
       .groupBy("tile_id")
       .agg(sort_array(collect_list(struct(col("pix"), col("cls")))).as("pc"))
       .select(col("tile_id"),
@@ -71,8 +69,8 @@ object Clump {
     // edge sides + the final re-attach join) — without it the tile
     // aggregation recomputes per consumer
     val local = Checkpoint.truncateOnce(s, packed.select(
-      cellOf(col("tile_id"), shiftright(col("pl"), 20)).as("cell_id"),
-      cellOf(col("tile_id"), col("pl").bitwiseAND(lit((1L << 20) - 1)))
+      spec.cellOf(col("tile_id"), shiftright(col("pl"), 20)).as("cell_id"),
+      spec.cellOf(col("tile_id"), col("pl").bitwiseAND(lit((1L << 20) - 1)))
         .as("loc")))
 
     // ---- level 2: cross-tile merge graph. Both edge endpoints sit on

@@ -79,8 +79,8 @@ object Expand {
     def candidates(frame: DataFrame): DataFrame =
       frame.filter(col("final_class") === 0)
         .select(col("cell_id"),
-          (floor((col("cell_id") - 1) / C) + 1).as("row"),
-          ((col("cell_id") - 1) % C + 1).as("col"))
+          (spec.row0Of(col("cell_id")) + 1).as("row"),
+          (spec.col0Of(col("cell_id")) + 1).as("col"))
         .crossJoin(offDF)
         .filter((col("row") + col("dr")).between(1, spec.rows) &&
           (col("col") + col("dc")).between(1, C))

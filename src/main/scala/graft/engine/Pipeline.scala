@@ -51,19 +51,12 @@ object Pipeline {
     * band 0 leaves `bytes` unreferenced, so the scan drops it. The
     * in-grid guard (two integer compares, trivial beside the ray-cast)
     * drops the NaN padding of partial edge tiles. */
-  def cells(tiles: DataFrame, spec: WorldSpec): DataFrame = {
-    val T = spec.tile
-    val TX = spec.tilesX
-    val C = spec.cols
-    val gr = floor(col("tile_id") / TX) * T + floor(col("p") / T)
-    val gc = (col("tile_id") % TX) * T + col("p") % T
-    val exploded = tiles.select(col("tile_id"), col("bytes"), col("loss"),
-      explode(sequence(lit(0), lit(spec.pixPerTile - 1))).as("p"))
-    val inGrid = if (!spec.padded) exploded
-      else exploded.filter(gr < spec.rows && gc < spec.cols)
-    inGrid.select((gr * C + gc + 1).cast("long").as("cell_id"),
-      col("bytes"), col("loss"), col("p"))
-  }
+  def cells(tiles: DataFrame, spec: WorldSpec): DataFrame =
+    tiles.select(col("tile_id"), col("bytes"), col("loss"),
+        explode(sequence(lit(0), lit(spec.pixPerTile - 1))).as("p"))
+      .filter(spec.inGridAt(col("tile_id"), col("p")))
+      .select(spec.cellOf(col("tile_id"), col("p")).as("cell_id"),
+        col("bytes"), col("loss"), col("p"))
 
   /** Band b of the current `cells` pixel, read straight from its
     * payload: band 0 (the loss) from `loss`, bands >= 1 from `bytes`. */
@@ -71,12 +64,6 @@ object Pipeline {
     if (b == 0) float_at(col("loss"), col("p")).cast("double")
     else float_at(col("bytes"), col("p") + lit(b * spec.pixPerTile))
       .cast("double")
-
-  /** Centroid of the `cell_id` column's cell (World.px / World.py). */
-  def px(spec: WorldSpec): Column = ((col("cell_id") - 1) % spec.cols)
-    .cast("double") + 0.5
-  def py(spec: WorldSpec): Column = floor((col("cell_id") - 1) / spec.cols)
-    .cast("double") + 0.5
 
   /** `cells` with bands read out as doubles: (cell_id, loss, b<k> for
     * each k in `bands`) — the raster->vector scan (S3). */
@@ -111,7 +98,8 @@ object Pipeline {
     val nf = spec.nBands - 1
     val training = cells(tiles, spec)
       .select(col("*"),
-        region_explode(px(spec), py(spec), polys).as("region_id"))
+        region_explode(spec.pxOf(col("cell_id")), spec.pyOf(col("cell_id")),
+          polys).as("region_id"))
       .withColumn("tclass", World.trainingClassCol(col("cell_id")))
       .filter(col("tclass") > 0 &&
         !col("tclass").isInCollection(cfg.dropClasses))
@@ -136,7 +124,8 @@ object Pipeline {
       spec.nRegions, NumDrivers)
     cells(tiles, spec)
       .select(col("cell_id"), col("bytes"), col("loss"), col("p"),
-        region_explode(px(spec), py(spec), polys).as("region_id"))
+        region_explode(spec.pxOf(col("cell_id")), spec.pyOf(col("cell_id")),
+          polys).as("region_id"))
       .filter(band(spec, 0) > 0)
       .select(col("cell_id"), col("region_id"),
         forest_vote(col("loss"), col("bytes"), col("p"), col("region_id"),
@@ -160,8 +149,9 @@ object Pipeline {
       .select(col("cell_id"),
         when(band(spec, 0) <= 0.0, -1L)
           .otherwise(driver_classify_at_covered(col("loss"), col("bytes"),
-            col("p"), px(spec), py(spec), polys, forest, cover.const,
-            cover.nbx, cover.b, spec.pixPerTile, cfg.lossFloor,
+            col("p"), spec.pxOf(col("cell_id")), spec.pyOf(col("cell_id")),
+            polys, forest, cover.const, cover.nbx, cover.b, spec.pixPerTile,
+            cfg.lossFloor,
             cfg.confidenceFloor)).as("final_class"))
   }
 

@@ -20,31 +20,6 @@ import graft.world.WorldSpec
   */
 object Rasterize {
 
-  /** cell_id -> (tile_id, in-tile pixel index) columns — THE grid
-    * layout arithmetic, shared by every tile-keyed aggregation
-    * (rasterize sinks, engine/Clump level one, q147's SAT). */
-  private[graft] def derive(spec: WorldSpec): (Column, Column) = {
-    val C = spec.cols
-    val T = spec.tile
-    val TX = spec.tilesX
-    val id = col("cell_id")
-    val row0 = floor((id - 1) / C) // 0-based
-    val col0 = (id - 1) % C
-    ((floor(row0 / T) * TX + floor(col0 / T)).cast("int"),
-      ((row0 % T) * T + col0 % T).cast("int"))
-  }
-
-  /** Inverse of [[derive]]: the global cell id of in-tile pixel `pix`
-    * of tile `tile`. */
-  private[graft] def cellOf(spec: WorldSpec, tile: Column,
-      pix: Column): Column = {
-    val C = spec.cols
-    val T = spec.tile
-    val TX = spec.tilesX
-    ((floor(tile / TX).cast("long") * T + floor(pix / T)) * C +
-      (tile % TX).cast("long") * T + pix % T + 1).cast("long")
-  }
-
   /** Sparse (pix, value) pairs of one tile -> encoded payload; missing
     * pixels become NaN. `fmt` "f32" (raw) or "gtiff" (real LZW GeoTIFF
     * bytes stamped with the tile's georeference — the `writeRaster`
@@ -63,11 +38,10 @@ object Rasterize {
 
   def apply(spec: WorldSpec, df: DataFrame, valueCol: String,
       fmt: String = "f32"): DataFrame = {
-    val (tileId, pix) = derive(spec)
     val encode = encoder(spec, fmt)
     df.select(col("cell_id"), col(valueCol).cast("double").as("v"))
-      .withColumn("tile_id", tileId)
-      .withColumn("pix", pix)
+      .withColumn("tile_id", spec.tileOf(col("cell_id")))
+      .withColumn("pix", spec.pixOf(col("cell_id")))
       .groupBy("tile_id")
       .agg(sort_array(collect_list(struct(col("pix"), col("v")))).as("pv"))
       .select(col("tile_id"),
@@ -84,12 +58,11 @@ object Rasterize {
     * (and upstream recompute) per class. */
   def byClass(spec: WorldSpec, df: DataFrame, valueCol: String,
       classCol: String, fmt: String = "f32"): DataFrame = {
-    val (tileId, pix) = derive(spec)
     val encode = encoder(spec, fmt)
     df.select(col(classCol).cast("long").as("class"), col("cell_id"),
         col(valueCol).cast("double").as("v"))
-      .withColumn("tile_id", tileId)
-      .withColumn("pix", pix)
+      .withColumn("tile_id", spec.tileOf(col("cell_id")))
+      .withColumn("pix", spec.pixOf(col("cell_id")))
       .groupBy("class", "tile_id")
       .agg(sort_array(collect_list(struct(col("pix"), col("v")))).as("pv"))
       .select(col("class"), col("tile_id"),

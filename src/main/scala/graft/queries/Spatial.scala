@@ -149,14 +149,6 @@ object Spatial {
   private def probCol(id: Column, cls: Int): Column =
     (hc(id * 11 + cls) % 64).cast("double") / 64.0
 
-  private def rowCol(id: Column): Column = floor((id - 1) / C).cast("long") + 1
-  private def colCol(id: Column): Column = (id - 1) % C + 1
-  private def pxCol(id: Column): Column = ((id - 1) % C).cast("double") + 0.5
-  private def pyCol(id: Column): Column =
-    floor((id - 1) / C).cast("double") + 0.5
-  private def tileCol(id: Column): Column =
-    (floor(floor((id - 1) / C) / T) * TX +
-      floor(((id - 1) % C) / T)).cast("long")
 
   // Oracle fragments (identical formulas in DuckDB SQL).
   private val cellsCte =
@@ -255,16 +247,22 @@ object Spatial {
     * no-region rows in the same Generate (a projection + filter would
     * ray-cast twice; plan-pinned in SparkEngineSpec). */
   private def regionDF(s: SparkSession): DataFrame =
+    regionSpine(s, World.polygons(spec))
+
+  /** (cell_id, region_id) of every cell of the spine inside `polys`. */
+  private def regionSpine(s: SparkSession, polys: Array[graft.core.Polygon])
+      : DataFrame =
     spine(s).select(cellCol,
-      region_explode(pxCol(cellCol), pyCol(cellCol), World.polygons(spec))
+      region_explode(spec.pxOf(cellCol), spec.pyOf(cellCol), polys)
         .as("region_id"))
 
   // ---- q20: grid indexing (G1): id <-> row/col/tile/centroid ------------
   private def q20(s: SparkSession, dir: String): DataFrame =
     spine(s).select(cellCol,
-        rowCol(cellCol).as("row"), colCol(cellCol).as("col"),
-        tileCol(cellCol).as("tile_id"),
-        pxCol(cellCol).as("px"), pyCol(cellCol).as("py"))
+        (spec.row0Of(cellCol) + 1).as("row"),
+        (spec.col0Of(cellCol) + 1).as("col"),
+        spec.tileOf(cellCol).cast("long").as("tile_id"),
+        spec.pxOf(cellCol).as("px"), spec.pyOf(cellCol).as("py"))
       .orderBy("cell_id")
 
   private def q20Sql =
@@ -286,7 +284,7 @@ object Spatial {
   // ---- q22: decode -> explode -> zonal aggregation (S3/G5/A6) ------------
   private def q22(s: SparkSession, dir: String): DataFrame =
     graft.engine.Pipeline.cellBands(World.tilesDF(s, spec), spec, Seq(1))
-      .groupBy(tileCol(cellCol).as("tile_id"))
+      .groupBy(spec.tileOf(cellCol).cast("long").as("tile_id"))
       .agg(
         sum(when(col("loss") > 0, 1).otherwise(0)).as("n_loss_cells"),
         sum("loss").as("loss_sum"),
@@ -357,7 +355,8 @@ object Spatial {
     import s.implicits._
     val offDF = offsets.toDF("dr", "dc")
     val uncertain = cls.filter(col("final_class") === 0)
-      .select(cellCol, rowCol(cellCol).as("row"), colCol(cellCol).as("col"))
+      .select(cellCol, (spec.row0Of(cellCol) + 1).as("row"),
+        (spec.col0Of(cellCol) + 1).as("col"))
     val nbr = uncertain.crossJoin(broadcast(offDF))
       .filter((col("col") + col("dc")).between(1, C) &&
         (col("row") + col("dr")).between(1, spec.rows))
@@ -471,8 +470,8 @@ object Spatial {
   // ---- q27: hierarchical partition-key derivation (G1/north_rule: the
   // H3-res-4-parent partitioning, expressed as pure id arithmetic) --------
   private def q27(s: SparkSession, dir: String): DataFrame = {
-    val r4 = floor((rowCol(cellCol) - 1) * 16 / spec.rows)
-    val c4 = floor((colCol(cellCol) - 1) * 32 / C)
+    val r4 = floor(spec.row0Of(cellCol) * 16 / spec.rows)
+    val c4 = floor(spec.col0Of(cellCol) * 32 / C)
     spine(s)
       .groupBy((r4 * 32 + c4).cast("long").as("h3r4_key"))
       .agg(count(lit(1)).as("n_cells"),
@@ -654,7 +653,7 @@ object Spatial {
     import s.implicits._
     val TY = spec.tilesY
     val tileLoss = spine(s)
-      .groupBy(tileCol(cellCol).as("tile_id"))
+      .groupBy(spec.tileOf(cellCol).cast("long").as("tile_id"))
       .agg(sum(lossCol(cellCol)).as("loss_sum"))
     val offs = Seq(-1, 0, 1).flatMap(dr => Seq(-1, 0, 1).map(dc => (dr, dc)))
       .filterNot { case (dr, dc) => dr == 0 && dc == 0 }.toDF("dr", "dc")
@@ -817,11 +816,9 @@ object Spatial {
         posexplode(decode_band(col("bytes"), col("fmt"), spec.pixPerTile, 0))
           .as(Seq("p", "v")))
       .select(
-        (((floor(col("tile_id") / TX) * T + floor(col("p") / T)) * C +
-          (col("tile_id") % TX) * T + col("p") % T + 1).cast("long")
-          .as("cell_id")),
+        spec.cellOf(col("tile_id"), col("p")).as("cell_id"),
         col("v").cast("double").as("v"))
-    decoded.groupBy(tileCol(cellCol).as("tile_id"))
+    decoded.groupBy(spec.tileOf(cellCol).cast("long").as("tile_id"))
       .agg(count(lit(1)).as("n_px"), sum("v").as("v_sum"),
         max("v").as("v_max"))
       .orderBy("tile_id")
@@ -888,8 +885,8 @@ object Spatial {
   // is exact. ------------------------------------------------------------
   private def q36(s: SparkSession, dir: String): DataFrame = {
     val C1 = C / 4 // level-1 zone grid width (4x4 cells per zone)
-    val k1 = (floor((rowCol(cellCol) - 1) / 4) * C1 +
-      floor((colCol(cellCol) - 1) / 4)).cast("long")
+    val k1 = (floor(spec.row0Of(cellCol) / 4) * C1 +
+      floor(spec.col0Of(cellCol) / 4)).cast("long")
     val level1 = spine(s)
       .groupBy(k1.as("k1"))
       .agg(avg(bandCol(cellCol, 2)).as("mean1"),
@@ -1007,9 +1004,7 @@ object Spatial {
 
   private def q39(s: SparkSession, dir: String): DataFrame = {
     val polys = graft.sources.Ingest.wktPolygons(s, wktFixture)
-    spine(s)
-      .select(cellCol,
-        region_explode(pxCol(cellCol), pyCol(cellCol), polys).as("region_id"))
+    regionSpine(s, polys)
       .groupBy("region_id")
       .agg(count(lit(1)).as("n_cells"), min("cell_id").as("min_cell"),
         max("cell_id").as("max_cell"))
@@ -1039,9 +1034,7 @@ object Spatial {
 
   private def q186(s: SparkSession, dir: String): DataFrame = {
     val polys = graft.sources.Ingest.wkbPolygons(s, wkbFixture)
-    spine(s)
-      .select(cellCol,
-        region_explode(pxCol(cellCol), pyCol(cellCol), polys).as("region_id"))
+    regionSpine(s, polys)
       .groupBy("region_id")
       .agg(count(lit(1)).as("n_cells"), min("cell_id").as("min_cell"),
         max("cell_id").as("max_cell"))
@@ -1062,9 +1055,7 @@ object Spatial {
 
   private def q57(s: SparkSession, dir: String): DataFrame = {
     val polys = graft.sources.Ingest.shpPolygons(s, shpFixture)
-    spine(s)
-      .select(cellCol,
-        region_explode(pxCol(cellCol), pyCol(cellCol), polys).as("region_id"))
+    regionSpine(s, polys)
       .groupBy("region_id")
       .agg(count(lit(1)).as("n_cells"), min("cell_id").as("min_cell"),
         max("cell_id").as("max_cell"))
@@ -1108,9 +1099,7 @@ object Spatial {
 
   private def q65(s: SparkSession, dir: String): DataFrame = {
     val polys = graft.sources.Ingest.shpPolygons(s, holedShpFixture)
-    spine(s)
-      .select(cellCol,
-        region_explode(pxCol(cellCol), pyCol(cellCol), polys).as("region_id"))
+    regionSpine(s, polys)
       .groupBy("region_id")
       .agg(count(lit(1)).as("n_cells"), min("cell_id").as("min_cell"),
         max("cell_id").as("max_cell"))
@@ -1145,9 +1134,7 @@ object Spatial {
   private def q66(s: SparkSession, dir: String): DataFrame = {
     val polys =
       graft.sources.Ingest.shpPolygonsWithAttr(s, attrShpFixture, "REGID")
-    spine(s)
-      .select(cellCol,
-        region_explode(pxCol(cellCol), pyCol(cellCol), polys).as("region_id"))
+    regionSpine(s, polys)
       .groupBy("region_id")
       .agg(count(lit(1)).as("n_cells"), min("cell_id").as("min_cell"),
         max("cell_id").as("max_cell"))
@@ -1177,9 +1164,9 @@ object Spatial {
   private val S2ParentLvl = 4 // the north rule's res-4 partition key
 
   private def latDegCol: Column =
-    (rowCol(cellCol).cast("double") - 0.5) / spec.rows * 180.0 - 90.0
+    spec.pyOf(cellCol) / spec.rows * 180.0 - 90.0
   private def lngDegCol: Column =
-    (colCol(cellCol).cast("double") - 0.5) / C * 360.0 - 180.0
+    spec.pxOf(cellCol) / C * 360.0 - 180.0
 
   private def s2Frame(s: SparkSession): DataFrame =
     spine(s).select(cellCol,
@@ -1350,8 +1337,8 @@ object Spatial {
       (id.toLong, c == graft.engine.Covering.Boundary,
         if (c == graft.engine.Covering.Boundary) -1 else c)
     }.toDF("block_id", "boundary", "const_region")
-    val pts = spine(s).select(cellCol, pxCol(cellCol).as("px"),
-        pyCol(cellCol).as("py"))
+    val pts = spine(s).select(cellCol, spec.pxOf(cellCol).as("px"),
+        spec.pyOf(cellCol).as("py"))
       .withColumn("block_id", (floor(col("py") / CoverB) * blocks.nbx +
         floor(col("px") / CoverB)).cast("long"))
     val region = when(col("boundary"),
@@ -1640,17 +1627,16 @@ object Spatial {
   private val ZBucket = 256L
 
   private def q87(s: SparkSession, dir: String): DataFrame = {
-    val z = z_interleave((cellCol - 1) % C,
-      floor((cellCol - 1) / C).cast("long"))
+    val z = z_interleave(spec.col0Of(cellCol), spec.row0Of(cellCol))
     spine(s)
       .withColumn("z", z)
       .withColumn("bucket", (col("z") / ZBucket).cast("long"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_cells"), sum("z").as("sum_z"),
-        min((cellCol - 1) % C).as("min_c"),
-        max((cellCol - 1) % C).as("max_c"),
-        min(floor((cellCol - 1) / C).cast("long")).as("min_r"),
-        max(floor((cellCol - 1) / C).cast("long")).as("max_r"))
+        min(spec.col0Of(cellCol)).as("min_c"),
+        max(spec.col0Of(cellCol)).as("max_c"),
+        min(spec.row0Of(cellCol)).as("min_r"),
+        max(spec.row0Of(cellCol)).as("max_r"))
       .orderBy("bucket")
   }
 
@@ -1729,7 +1715,7 @@ object Spatial {
       .select(col("tile_id"),
         posexplode(decode_band(col("bytes"), col("fmt"), sp.pixPerTile, 1))
           .as(Seq("p", "v")))
-      .filter(!isnan(col("v"))) // edge-tile padding (no-op on dyadic specs)
+      .filter(sp.inGridAt(col("tile_id"), col("p")))
       .select(col("tile_id"), col("v").cast("double").as("v"),
         (col("p") / T2).cast("int").as("rr"),
         (col("p") % T2).cast("int").as("cc"))
@@ -1760,18 +1746,10 @@ object Spatial {
       .agg(sort_array(collect_list(struct(col("pos"), col("v")))).as("pv"))
   }
 
-  /** cell_id of a patch's core position `p` (row-major within the
-    * tile) — the inverse of the tiling. */
-  private def patchCellId(sp: WorldSpec): Column =
-    ((floor(col("dest_tile") / sp.tilesX) * sp.tile + floor(col("p") / sp.tile))
-      * sp.cols +
-      (col("dest_tile") % sp.tilesX) * sp.tile + col("p") % sp.tile + 1)
-      .cast("long")
-
   /** The halo-exchange 3x3 window stats over any WorldSpec (padded
-    * edge tiles included: NaN padding pixels are dropped at decode,
-    * and core positions outside the grid come back packed -1 from
-    * Focal3x3 and are filtered). Factored out so FocalSpec can drive a
+    * edge tiles included: the in-grid guard drops padding pixels at
+    * decode, and core positions outside the grid come back packed -1
+    * from Focal3x3 and are filtered). Factored out so FocalSpec can drive a
     * non-dyadic padded grid the registry's oracle can't express. */
   private[graft] def focalHalo(s: SparkSession, sp: WorldSpec): DataFrame =
     haloPatches(s, sp)
@@ -1780,7 +1758,7 @@ object Spatial {
           .as(Seq("p", "f")))
       .filter(col("f") >= 0) // edge-tile padding positions
       .select(
-        patchCellId(sp).as("cell_id"),
+        sp.cellOf(col("dest_tile"), col("p")).as("cell_id"),
         shiftright(col("f"), 5).as("fsum"),
         shiftright(col("f"), 1).bitwiseAND(lit(15L)).cast("int").as("ncnt"),
         col("f").bitwiseAND(lit(1L)).cast("int").as("peak"))
@@ -1832,7 +1810,7 @@ object Spatial {
         posexplode(sobel3x3(col("pv.pos"), col("pv.v"), sp.tile))
           .as(Seq("p", "g")))
       .filter(col("g") >= 0) // world-edge + padding: no full window
-      .select(patchCellId(sp).as("cell_id"),
+      .select(sp.cellOf(col("dest_tile"), col("p")).as("cell_id"),
         (shiftright(col("g"), 12) - 1020).as("gx"),
         (col("g").bitwiseAND(lit(4095L)) - 1020).as("gy"))
       .withColumn("gmag", abs(col("gx")) + abs(col("gy")))
@@ -1872,7 +1850,7 @@ object Spatial {
         posexplode(mode3x3(col("pv.pos"), col("pv.v"), sp.tile, ModeDiv))
           .as(Seq("p", "g")))
       .filter(col("g") >= 0) // edge-tile padding positions
-      .select(patchCellId(sp).as("cell_id"),
+      .select(sp.cellOf(col("dest_tile"), col("p")).as("cell_id"),
         shiftright(col("g"), 4).as("mode_lvl"),
         col("g").bitwiseAND(lit(15L)).cast("int").as("mode_cnt"))
       .orderBy("cell_id")
@@ -2143,7 +2121,7 @@ object Spatial {
     val hot = spine(s).filter(lossCol(cellCol) >= 0.5).select(cellCol)
     val right = hot.as("a").join(hot.as("b"),
         col("b.cell_id") === col("a.cell_id") + 1 &&
-          (col("a.cell_id") - 1) % C =!= (C - 1))
+          spec.col0Of(col("a.cell_id")) =!= (C - 1))
       .select(col("a.cell_id").as("ca"), col("b.cell_id").as("cb"))
     val down = hot.as("a").join(hot.as("b"),
         col("b.cell_id") === col("a.cell_id") + C)
@@ -2154,7 +2132,7 @@ object Spatial {
     hot.join(labels, Seq("cell_id"), "left")
       .select(coalesce(col("lbl"), col("cell_id")).as("cluster"),
         (hc(cellCol) % 1024).as("loss_u"),
-        rowCol(cellCol).as("r"), colCol(cellCol).as("c"))
+        (spec.row0Of(cellCol) + 1).as("r"), (spec.col0Of(cellCol) + 1).as("c"))
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_cells"), sum("loss_u").as("loss_units"),
         min("r").as("r0"), max("r").as("r1"),
@@ -2270,8 +2248,8 @@ object Spatial {
         explode(array(offs.map { case (dx, dy) =>
           struct(lit(dx).as("dx"), lit(dy).as("dy"))
         }: _*)).as("o"))
-      .filter((colCol(cellCol) + col("o.dx")).between(1, C) &&
-        (rowCol(cellCol) + col("o.dy")).between(1, spec.rows))
+      .filter(((spec.col0Of(cellCol) + 1) + col("o.dx")).between(1, C) &&
+        ((spec.row0Of(cellCol) + 1) + col("o.dy")).between(1, spec.rows))
       .select(cellCol.as("src"),
         (cellCol + col("o.dx") + col("o.dy") * C).as("dst"))
       .select(col("src"), col("dst"),
@@ -2416,8 +2394,8 @@ object Spatial {
     * depth-30 flow chains, 25 multi-cell basins, all 8 directions
     * winning somewhere (fixture-checked in GraphGeoSpec). */
   private def elevCol(id: Column): Column = {
-    val x = (id - 1) % C
-    val y = floor((id - 1) / C).cast("long")
+    val x = spec.col0Of(id)
+    val y = spec.row0Of(id)
     val cx = floor(x / TerrB).cast("long")
     val cy = floor(y / TerrB).cast("long")
     val fx = x % TerrB
@@ -2462,8 +2440,8 @@ object Spatial {
         elevCol(cellCol + dx + dy * C).as(s"e$code")
       }: _*)
     val cols = D8.flatMap { case (code, dx, dy, w) =>
-      val inGrid = (colCol(cellCol) + dx).between(1, C) &&
-        (rowCol(cellCol) + dy).between(1, spec.rows)
+      val inGrid = ((spec.col0Of(cellCol) + 1) + dx).between(1, C) &&
+        ((spec.row0Of(cellCol) + 1) + dy).between(1, spec.rows)
       val drop = col("ec") - col(s"e$code")
       Seq(when(inGrid && drop > 0, drop * w).otherwise(0L).as(s"wd$code"),
         when(inGrid, cellCol + dx + dy * C).otherwise(-1L).as(s"n$code"))
@@ -2821,8 +2799,8 @@ object Spatial {
   }
 
   private def q131(s: SparkSession, dir: String): DataFrame = {
-    val x = (cellCol - 1) % C
-    val y = floor((cellCol - 1) / C).cast("long")
+    val x = spec.col0Of(cellCol)
+    val y = spec.row0Of(cellCol)
     // corner elevations staged once per block (top-left = this cell)
     val blk = spine(s)
       .filter(x < C - 1 && y < spec.rows - 1)
@@ -3088,9 +3066,9 @@ object Spatial {
     * (crop): planted per-side pads 0-4, nonlinear-h2 interior, encoded
     * through the q73-oracled Rasterize sink. */
   private def letterboxTiles(s: SparkSession): DataFrame = {
-    val tid = tileCol(cellCol)
-    val r0 = (rowCol(cellCol) - 1) % T
-    val c0 = (colCol(cellCol) - 1) % T
+    val tid = spec.tileOf(cellCol).cast("long")
+    val r0 = spec.row0Of(cellCol) % T
+    val c0 = spec.col0Of(cellCol) % T
     def pad(k: Int): Column = World.h2Col(tid * 43 + k) % 5
     val v = when(r0 < pad(1) || r0 >= lit(T) - pad(2) ||
         c0 < pad(3) || c0 >= lit(T) - pad(4), 0.0)
@@ -3268,8 +3246,8 @@ object Spatial {
   private val CosZ45 = "0.7071067811865476"
 
   private def q141(s: SparkSession, dir: String): DataFrame = {
-    val x = (cellCol - 1) % C
-    val y = floor((cellCol - 1) / C).cast("long")
+    val x = spec.col0Of(cellCol)
+    val y = spec.row0Of(cellCol)
     val staged = spine(s)
       .filter(x >= 1 && x <= C - 2 && y >= 1 && y <= spec.rows - 2)
       .select(cellCol,
@@ -3321,8 +3299,8 @@ object Spatial {
   // mask CTE, 4 guarded left self-joins for erosion, 4 more for
   // dilation — join-heavy but oracle-scale-only. --------------------------
   private def q142(s: SparkSession, dir: String): DataFrame = {
-    val x = (cellCol - 1) % C
-    val y = floor((cellCol - 1) / C).cast("long")
+    val x = spec.col0Of(cellCol)
+    val y = spec.row0Of(cellCol)
     // the 13-cell diamond of mask values (radius-2 cross + diagonals)
     val diamond = Seq((0, 0), (1, 0), (-1, 0), (0, 1), (0, -1), (2, 0),
       (-2, 0), (0, 2), (0, -2), (1, 1), (1, -1), (-1, 1), (-1, -1))
@@ -3447,12 +3425,13 @@ object Spatial {
   // closed-form here; with payload tiles the same projection reads the
   // q93 halo patch, horizontal pairs never crossing the tile). --------------
   private def q145(s: SparkSession, dir: String): DataFrame = {
-    val x = (cellCol - 1) % C
+    val x = spec.col0Of(cellCol)
     val lvl = shiftright(isoCol(cellCol), 15)
     val lvlR = shiftright(isoCol(cellCol + 1), 15)
     spine(s)
       .filter(x % T < T - 1) // horizontal pair stays inside the tile
-      .select(tileCol(cellCol).as("tile_id"), lvl.as("la"), lvlR.as("lb"))
+      .select(spec.tileOf(cellCol).cast("long").as("tile_id"), lvl.as("la"),
+        lvlR.as("lb"))
       .groupBy("tile_id", "la", "lb").agg(count(lit(1)).as("n"))
       .groupBy("tile_id")
       .agg(sum(col("n") * (col("la") - col("lb")) * (col("la") - col("lb")))
@@ -3503,8 +3482,8 @@ object Spatial {
   }
 
   private def q146(s: SparkSession, dir: String): DataFrame = {
-    val row0 = floor((cellCol - 1) / C).cast("long")
-    val col0 = (cellCol - 1) % C
+    val row0 = spec.row0Of(cellCol)
+    val col0 = spec.col0Of(cellCol)
     // 20-bit bisection fractions: floor(frac * 2^20) with
     // frac_lat = (row0 + 0.5) / rows, frac_lng = (col0 + 0.5) / cols
     val latb = (row0 * 2 + 1) * GhLatStep
@@ -3555,16 +3534,15 @@ object Spatial {
   // decomposition cross-check, all integer (band 0..255, SAT ≤
   // tile²·255), bit-exact. -------------------------------------------------
   private def q147(s: SparkSession, dir: String): DataFrame = {
-    val (tileId, pix) = graft.engine.Rasterize.derive(spec)
     spine(s)
-      .select(tileId.as("tile_id"), pix.as("pix"),
-        bandCol(cellCol, 0).as("v"))
+      .select(spec.tileOf(cellCol).as("tile_id"),
+        spec.pixOf(cellCol).as("pix"), bandCol(cellCol, 0).as("v"))
       .groupBy("tile_id")
       .agg(sort_array(collect_list(struct(col("pix"), col("v")))).as("pv"))
       .select(col("tile_id"),
         posexplode(graft.sql.GraftFunctions
           .sat(col("pv.pix"), col("pv.v"), T)).as(Seq("p", "s")))
-      .select(graft.engine.Rasterize.cellOf(spec, col("tile_id"), col("p"))
+      .select(spec.cellOf(col("tile_id"), col("p"))
           .as("cell_id"),
         col("s").as("sat"))
       .orderBy("cell_id")
@@ -3692,9 +3670,7 @@ object Spatial {
 
   private def q149(s: SparkSession, dir: String): DataFrame = {
     val polys = graft.sources.Ingest.geojsonPolygons(s, geojsonFixture)
-    spine(s)
-      .select(cellCol,
-        region_explode(pxCol(cellCol), pyCol(cellCol), polys).as("region_id"))
+    regionSpine(s, polys)
       .groupBy("region_id")
       .agg(count(lit(1)).as("n_cells"), min("cell_id").as("min_cell"),
         max("cell_id").as("max_cell"))
@@ -3734,7 +3710,7 @@ object Spatial {
       .select(col("dest_tile"),
         posexplode(focal3x3(col("pv.pos"), col("pv.v"), T)).as(Seq("p", "f")))
       .filter(col("f") >= 0)
-      .select(patchCellId(spec).as("cell_id"),
+      .select(spec.cellOf(col("dest_tile"), col("p")).as("cell_id"),
         shiftright(col("f"), 5).as("fsum"),
         (shiftright(col("f"), 1).bitwiseAND(lit(15L)) - 1).as("nn"))
       .select(col("nn"),
@@ -3811,9 +3787,9 @@ object Spatial {
     val ws = tmplVals.map(t => 16 * t - tsum)
     val k = col("k")
     val px = spine(s).select(
-      tileCol(cellCol).as("tile_id"),
-      (floor((cellCol - 1) / C) % T).cast("int").as("rr"),
-      ((cellCol - 1) % C % T).cast("int").as("cc"),
+      spec.tileOf(cellCol).cast("long").as("tile_id"),
+      (spec.row0Of(cellCol) % T).cast("int").as("rr"),
+      (spec.col0Of(cellCol) % T).cast("int").as("cc"),
       bandCol(cellCol, 0).cast("long").as("v"))
     px
       .select(col("tile_id"), col("rr"), col("cc"), col("v"),
@@ -3880,7 +3856,7 @@ object Spatial {
       .select(col("dest_tile"),
         posexplode(focal3x3(col("pv.pos"), col("pv.v"), T)).as(Seq("p", "f")))
       .filter(col("f") >= 0)
-      .select(patchCellId(spec).as("cell_id"),
+      .select(spec.cellOf(col("dest_tile"), col("p")).as("cell_id"),
         shiftright(col("f"), 5).as("fsum"),
         (shiftright(col("f"), 1).bitwiseAND(lit(15L)) - 1).as("nn"))
       .select(col("cell_id"),
@@ -3947,7 +3923,7 @@ object Spatial {
       .select(col("tile_id").cast("long").as("tile_id"),
         posexplode(decode_band(col("bytes"), col("fmt"), spec.pixPerTile, 1))
           .as(Seq("p", "v")))
-      .filter(!isnan(col("v")))
+      .filter(spec.inGridAt(col("tile_id"), col("p")))
       .select(col("tile_id"), col("v").cast("long").as("lvl"))
     val w = Window.partitionBy("tile_id").orderBy("lvl")
     val wAll = Window.partitionBy("tile_id")
@@ -4013,7 +3989,7 @@ object Spatial {
     import org.apache.spark.sql.expressions.{Window, WindowSpec}
     val H = 4
     val px = spine(s).select(
-      floor((cellCol - 1) / C).as("r0"), ((cellCol - 1) % C).as("c0"),
+      spec.row0Of(cellCol).as("r0"), spec.col0Of(cellCol).as("c0"),
       bandCol(cellCol, 1).cast("long").as("v"))
     def lags(w: WindowSpec, axis: String): DataFrame =
       px.select(col("v") +:
@@ -4142,7 +4118,7 @@ object Spatial {
   private def q157(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window, WindowSpec}
     val px = spine(s).select(
-      floor((cellCol - 1) / C).as("r0"), ((cellCol - 1) % C).as("c0"),
+      spec.row0Of(cellCol).as("r0"), spec.col0Of(cellCol).as("c0"),
       bandCol(cellCol, 1).cast("long").as("v"))
     def pass(w: WindowSpec): DataFrame =
       px.select((col("v") - lead("v", 1).over(w)).as("d"))
@@ -4215,7 +4191,8 @@ object Spatial {
         posexplode(gauss5x5(col("pv.pos"), col("pv.v"), sp.tile))
           .as(Seq("p", "g")))
       .filter(col("g") =!= Long.MinValue) // incomplete 5x5 support
-      .select(patchCellId(sp).as("cell_id"), col("g").as("blur_scaled"))
+      .select(sp.cellOf(col("dest_tile"), col("p")).as("cell_id"),
+        col("g").as("blur_scaled"))
       .orderBy("cell_id")
 
   /** Oracle: the 25 weighted band terms written directly, interior
@@ -4250,7 +4227,7 @@ object Spatial {
     val scales = (0 to 4).map(k =>
       struct(lit(k.toLong).as("k"), lit(1L << k).as("bs")))
     spine(s).select(
-        floor((cellCol - 1) / C).as("r0"), ((cellCol - 1) % C).as("c0"),
+        spec.row0Of(cellCol).as("r0"), spec.col0Of(cellCol).as("c0"),
         (lossCol(cellCol) > 0).cast("int").as("occ"))
       .select(col("r0"), col("c0"), col("occ"),
         explode(array(scales: _*)).as("s"))
@@ -4387,7 +4364,7 @@ object Spatial {
 
   private def q162(s: SparkSession, dir: String): DataFrame = {
     sobelHalo(s, spec)
-      .select(tileCol(col("cell_id")).as("tile_id"),
+      .select(spec.tileOf(col("cell_id")).cast("long").as("tile_id"),
         octantBin(col("gx"), col("gy")).as("bin"),
         (abs(col("gx")) + abs(col("gy"))).as("w"))
       .groupBy("tile_id", "bin")
@@ -4429,7 +4406,7 @@ object Spatial {
         posexplode(median3x3(col("pv.pos"), col("pv.v"), T))
           .as(Seq("p", "g")))
       .filter(col("g") >= 0) // edge-tile padding positions
-      .select(patchCellId(spec).as("cell_id"),
+      .select(spec.cellOf(col("dest_tile"), col("p")).as("cell_id"),
         shiftright(col("g"), 4).as("med"),
         col("g").bitwiseAND(lit(15L)).cast("int").as("ncnt"))
       .orderBy("cell_id")
@@ -4482,7 +4459,7 @@ object Spatial {
       .select(col("tile_id").cast("long").as("tile_id"),
         posexplode(decode_band(col("bytes"), col("fmt"), spec.pixPerTile, 1))
           .as(Seq("p", "v")))
-      .filter(!isnan(col("v")))
+      .filter(spec.inGridAt(col("tile_id"), col("p")))
       .select(col("tile_id"), col("p"),
         expr("CAST(v AS BIGINT) * CAST(v AS BIGINT) DIV 256").as("lvl"))
     val cdf = px.groupBy("lvl").agg(count(lit(1)).as("cnt"))
@@ -4539,11 +4516,7 @@ object Spatial {
         posexplode(viewshed(col("bytes"), col("fmt"), sp.pixPerTile, 1,
           sp.tile)).as(Seq("p", "vis")))
       .filter(col("vis") >= 0) // padding / NaN-poisoned rays
-      .select(
-        ((floor(col("tile_id") / sp.tilesX) * sp.tile +
-          floor(col("p") / sp.tile)) * sp.cols +
-          (col("tile_id") % sp.tilesX) * sp.tile + col("p") % sp.tile + 1)
-          .cast("long").as("cell_id"),
+      .select(sp.cellOf(col("tile_id"), col("p")).as("cell_id"),
         col("vis").cast("int").as("vis"))
       .orderBy("cell_id")
 
@@ -4617,8 +4590,8 @@ object Spatial {
   // aggregates the same integers. ------------------------------------------
   private def q166(s: SparkSession, dir: String): DataFrame = {
     val cells = spine(s).select(cellCol, patchClsCol(cellCol).as("cls"))
-    val r0 = floor((col("cell_id") - 1) / C).cast("long")
-    val c0 = ((col("cell_id") - 1) % C).cast("long")
+    val r0 = spec.row0Of(cellCol)
+    val c0 = spec.col0Of(cellCol)
     graft.engine.Clump.label(s, spec, cells, "q166_patch_props")
       .select(col("patch"), r0.as("r0"), c0.as("c0"))
       .groupBy("patch")
@@ -4666,9 +4639,9 @@ object Spatial {
   // by gaps-and-islands windows — a different algorithm, the same
   // integers. ----------------------------------------------------------------
   private def q167(s: SparkSession, dir: String): DataFrame = {
-    val (tileId, pix) = graft.engine.Rasterize.derive(spec)
     spine(s).select(cellCol, patchClsCol(cellCol).as("cls"))
-      .select(tileId.as("tile_id"), pix.as("pix"), col("cls"))
+      .select(spec.tileOf(cellCol).as("tile_id"),
+        spec.pixOf(cellCol).as("pix"), col("cls"))
       .groupBy("tile_id")
       .agg(sort_array(collect_list(struct(col("pix"), col("cls"))))
         .as("pc"))
@@ -4860,7 +4833,7 @@ object Spatial {
   // float columns. ----------------------------------------------------------
   private def q170(s: SparkSession, dir: String): DataFrame = {
     val sums = spine(s)
-      .select(tileCol(cellCol).as("tile_id"),
+      .select(spec.tileOf(cellCol).cast("long").as("tile_id"),
         bandCol(cellCol, 1).cast("long").as("v"))
       .groupBy("tile_id")
       .agg(sum("v").as("s"), count(lit(1)).as("npx"))
@@ -5186,16 +5159,15 @@ object Spatial {
   private val EdtThresh = 254
 
   private def q175(s: SparkSession, dir: String): DataFrame = {
-    val (tileId, pix) = graft.engine.Rasterize.derive(spec)
     spine(s)
-      .select(tileId.as("tile_id"), pix.as("pix"),
-        bandCol(cellCol, 0).as("v"))
+      .select(spec.tileOf(cellCol).as("tile_id"),
+        spec.pixOf(cellCol).as("pix"), bandCol(cellCol, 0).as("v"))
       .groupBy("tile_id")
       .agg(sort_array(collect_list(struct(col("pix"), col("v")))).as("pv"))
       .select(col("tile_id"),
         posexplode(graft.sql.GraftFunctions
           .edt(col("pv.pix"), col("pv.v"), T, EdtThresh)).as(Seq("p", "d2")))
-      .select(graft.engine.Rasterize.cellOf(spec, col("tile_id"), col("p"))
+      .select(spec.cellOf(col("tile_id"), col("p"))
           .as("cell_id"),
         col("d2"))
       .orderBy("cell_id")
@@ -5564,7 +5536,7 @@ object Spatial {
         posexplode(graft.sql.GraftFunctions
           .lbp(col("pv.pos"), col("pv.v"), T)).as(Seq("p", "lbp")))
       .filter(col("lbp") >= 0)
-      .select(patchCellId(spec).as("cell_id"), col("lbp"))
+      .select(spec.cellOf(col("dest_tile"), col("p")).as("cell_id"), col("lbp"))
       .withColumn("u", u)
       .orderBy("cell_id")
   }
@@ -5608,15 +5580,15 @@ object Spatial {
   private val QtTau = 4000L
 
   private def q180(s: SparkSession, dir: String): DataFrame = {
-    val x = (cellCol - 1) % C
-    val y = floor((cellCol - 1) / C).cast("long")
+    val x = spec.col0Of(cellCol)
+    val y = spec.row0Of(cellCol)
     val regime = (shiftright(x, 4) + shiftright(y, 4)) % 4
     val v = when(regime === 0, lit(7L))
       .when(regime === 1, (x + y) * 10L)
       .when(regime === 2, (x + y) * 20L)
       .otherwise(World.h2Col(cellCol * 3 + 11) % 256)
-    val (tileId, pix) = graft.engine.Rasterize.derive(spec)
-    val px = spine(s).select(tileId.as("tile_id"),
+    val pix = spec.pixOf(cellCol)
+    val px = spine(s).select(spec.tileOf(cellCol).as("tile_id"),
       shiftright(pix, 4).as("r"), (pix % T).as("c"), v.as("v"))
     def roll(child: DataFrame): DataFrame = child
       .groupBy(col("tile_id"), shiftright(col("br"), 1).as("nbr"),
@@ -6296,7 +6268,7 @@ object Spatial {
   private def q190(s: SparkSession, dir: String): DataFrame = {
     val hot = spine(s).filter(bandCol(cellCol, 1) >= EdgeThr)
       .select(cellCol)
-    val notRightEdge = (col("a.cell_id") - 1) % C =!= (C - 1)
+    val notRightEdge = spec.col0Of(col("a.cell_id")) =!= (C - 1)
     val right = hot.as("a").join(hot.as("b"),
       col("b.cell_id") === col("a.cell_id") + 1 && notRightEdge)
       .select(col("a.cell_id").as("cell_id"))
@@ -6309,7 +6281,7 @@ object Spatial {
       col("b.cell_id") === col("a.cell_id") + C)
       .select(col("a.cell_id").as("cell_id"))
     def perTile(df: DataFrame, name: String): DataFrame = df
-      .groupBy(tileCol(col("cell_id")).as("tile_id"))
+      .groupBy(spec.tileOf(col("cell_id")).cast("long").as("tile_id"))
       .agg(count(lit(1)).as(name))
     perTile(hot, "v")
       .join(perTile(right.union(down), "e_adj"), Seq("tile_id"), "left")
@@ -6527,9 +6499,11 @@ object Spatial {
 
   private def q194(s: SparkSession, dir: String): DataFrame = {
     val both = spine(s).select(
-      region_of_neg1(pxCol(cellCol), pyCol(cellCol), fillPolys).as("eo"),
+      region_of_neg1(spec.pxOf(cellCol), spec.pyOf(cellCol), fillPolys)
+        .as("eo"),
       graft.sql.GraftFunctions
-        .wind_region(pxCol(cellCol), pyCol(cellCol), fillPolys).as("wn"))
+        .wind_region(spec.pxOf(cellCol), spec.pyOf(cellCol), fillPolys)
+        .as("wn"))
     val eo = both.filter(col("eo") >= 0).groupBy(col("eo").as("region_id"))
       .agg(count(lit(1)).as("n")).withColumn("rule", lit("evenodd"))
     val wn = both.filter(col("wn") >= 0).groupBy(col("wn").as("region_id"))

@@ -1,6 +1,7 @@
 package graft.world
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{floor, lit}
 import org.apache.spark.sql.types._
 import graft.core.{Codec, GridSpec, Polygon}
 
@@ -62,6 +63,43 @@ final case class WorldSpec(rows: Int, cols: Int, tile: Int, nRegions: Int,
     val col0 = ((id - 1) % cols).toInt
     (row0 / tile) * tilesX + col0 / tile
   }
+
+  // ---- the same layout as Spark Columns: the one home of every
+  // cell <-> (tile, pixel) / row / column / centroid conversion in the
+  // engine and the query registry (WorldSpecSpec checks each against
+  // the scalar forms above). Tile and pixel are int; cell id, row and
+  // column are long; centroids are double. Divisions floor a double
+  // quotient, exact for every id below 2^52.
+
+  private def row0At(t: Column, p: Column): Column =
+    floor(t / tilesX) * tile + floor(p / tile)
+  private def col0At(t: Column, p: Column): Column =
+    (t % tilesX) * tile + p % tile
+
+  /** `cellId` of in-tile pixel `p` of tile `t`. */
+  def cellOf(t: Column, p: Column): Column =
+    (row0At(t, p) * cols + col0At(t, p) + 1).cast("long")
+
+  /** `inGrid`: false only on the padding of partial edge tiles; a
+    * literal true (pruned by the optimizer) when the tiling pads
+    * nothing. */
+  def inGridAt(t: Column, p: Column): Column =
+    if (!padded) lit(true) else row0At(t, p) < rows && col0At(t, p) < cols
+
+  /** 0-based row and column of cell `id` (World.py / World.px - 0.5). */
+  def row0Of(id: Column): Column = floor((id - 1) / cols)
+  def col0Of(id: Column): Column = ((id - 1) % cols).cast("long")
+
+  /** `tileOfCell`, and the in-tile pixel (row-major) of cell `id`. */
+  def tileOf(id: Column): Column =
+    (floor(row0Of(id) / tile) * tilesX + floor(col0Of(id) / tile))
+      .cast("int")
+  def pixOf(id: Column): Column =
+    ((row0Of(id) % tile) * tile + col0Of(id) % tile).cast("int")
+
+  /** Centroid of cell `id` in grid coords (World.px / World.py). */
+  def pxOf(id: Column): Column = col0Of(id).cast("double") + 0.5
+  def pyOf(id: Column): Column = row0Of(id).cast("double") + 0.5
 }
 
 object World {

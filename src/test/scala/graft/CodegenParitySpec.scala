@@ -92,8 +92,8 @@ class CodegenParitySpec extends SparkSpec {
       "tiles", () => {
       val hs = Headline.spec
       val tiles = spark.createDataFrame(spark.sparkContext.parallelize(
-        Seq(13 * hs.tilesX + 8, 5 * hs.tilesX + 62, hs.nTiles - 1)
-          .map(World.tileRow(hs, _)), 3), World.tileSchema)
+        Seq(13 * hs.tilesX + 8, 5 * hs.tilesX + 62, hs.nTiles - 1), 3)
+          .map(World.tileRow(hs, _)), World.tileSchema)
       val trees = (for (r <- 1 to hs.nRegions; d <- 1 to 5) yield {
         val t: Cart.Tree =
           if (d == 2) Cart.Split(0, 128.0, Cart.Leaf(0.9, 1, 0.0),

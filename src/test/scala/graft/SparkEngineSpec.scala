@@ -231,15 +231,17 @@ class SparkEngineSpec extends SparkSpec {
     }
     val gaps = ids.map(lobeGap)
     assert(gaps.count(_ > 0) >= 3, s"in-region lobe-gap cells per tile: $gaps")
-    val tiles = spark.createDataFrame(spark.sparkContext.parallelize(
-      ids.map(World.tileRow(hs, _)), 3), World.tileSchema)
+    val tiles = spark.createDataFrame(
+      spark.sparkContext.parallelize(ids, 3).map(World.tileRow(hs, _)),
+      World.tileSchema)
     val cfg = Pipeline.Config()
     def reference(trees: Map[(Int, Int), Cart.Tree]): DataFrame = {
       val forest = Cart.PackedForest(trees, hs.nRegions, Pipeline.NumDrivers)
       val classed = Pipeline.cells(tiles, hs).select(col("cell_id"),
         grid_h3(col("cell_id"), hs.rows, hs.cols, Headline.H3Res).as("h3"),
         driver_classify_at_covered(col("loss"), col("bytes"), col("p"),
-          Pipeline.px(hs), Pipeline.py(hs), Headline.polys, forest,
+          hs.pxOf(col("cell_id")), hs.pyOf(col("cell_id")), Headline.polys,
+          forest,
           cover.const, cover.nbx, cover.b, hs.pixPerTile, cfg.lossFloor,
           cfg.confidenceFloor).as("class"),
         Pipeline.band(hs, 0).as("loss"))
@@ -646,11 +648,13 @@ class SparkEngineSpec extends SparkSpec {
     val T = spec.tile; val C = spec.cols
     val got = Pipeline.cells(World.tilesDF(spark, spec), spec)
       .select(col("cell_id"),
-        driver_classify_at_covered(col("bytes"), col("p"), Pipeline.px(spec),
-          Pipeline.py(spec), polys, pf, blocks.const, blocks.nbx, B,
+        driver_classify_at_covered(col("bytes"), col("p"),
+          spec.pxOf(col("cell_id")), spec.pyOf(col("cell_id")), polys, pf,
+          blocks.const, blocks.nbx, B,
           spec.pixPerTile, cfg.lossFloor, cfg.confidenceFloor).as("c"),
         driver_classify_at_covered(col("loss"), col("bytes"), col("p"),
-          Pipeline.px(spec), Pipeline.py(spec), polys, pf, blocks.const,
+          spec.pxOf(col("cell_id")), spec.pyOf(col("cell_id")), polys, pf,
+          blocks.const,
           blocks.nbx, B, spec.pixPerTile, cfg.lossFloor,
           cfg.confidenceFloor).as("c_loss"))
       .collect().map { r =>
