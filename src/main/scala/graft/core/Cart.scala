@@ -159,13 +159,13 @@ object Cart {
     }
 
     /** classifyAt() with the block-covering short circuit (the q72 scale
-      * path folded into the fused vote): points in a region-constant
-      * block read the region from the broadcast block map in O(1);
-      * only boundary-block points pay the exact ray-cast. `blockConst`
-      * is Covering.Blocks.const (Int.MinValue = boundary), `nbx` its
-      * block-grid width, `b` the block size in grid units. Bit-equal to
-      * classifyAt by Covering's parity argument (proven vs the exact
-      * oracle by q72; re-asserted over the real geometry in CoreSpec). */
+      * path folded into the fused vote): the region comes from
+      * Geom.regionOfCovered, so points in a region-constant block read
+      * it from the block map in O(1) and only boundary-block points pay
+      * the exact ray-cast. `blockConst`, `nbx` and `b` as in
+      * regionOfCovered. Bit-equal to classifyAt by Covering's parity
+      * argument (proven vs the exact oracle by q72; re-asserted over the
+      * real geometry in CoreSpec). */
     def classifyAtCovered(pf: PackedForest, polys: Array[Polygon],
         blockConst: Array[Int], nbx: Int, b: Int,
         bytes: Array[Byte], p: Int, px: Double, py: Double, nPix: Int,
@@ -179,8 +179,7 @@ object Cart {
         blockConst: Array[Int], nbx: Int, b: Int, loss: Array[Byte],
         bytes: Array[Byte], p: Int, px: Double, py: Double, nPix: Int,
         lossFloor: Double, confFloor: Double): Long = {
-      val c = blockConst((py / b).toInt * nbx + (px / b).toInt)
-      val r = if (c != Int.MinValue) c else Geom.regionOf(polys, px, py)
+      val r = Geom.regionOfCovered(polys, blockConst, nbx, b, px, py)
       if (r < 0) -1L
       else classify(pf, loss, bytes, p, r, nPix, lossFloor, confFloor)
     }

@@ -233,6 +233,21 @@ object Geom {
     best
   }
 
+  /** The block-cover entry of a block some polygon edge crosses: its
+    * points need the exact ray-cast (engine/Covering.Boundary). */
+  val CoverBoundary: Int = Int.MinValue
+
+  /** [[regionOf]] through a block cover (engine/Covering.Blocks): the
+    * region of the point's `b` x `b` block when the block is
+    * region-constant, else the exact ray-cast. `blockConst` is the
+    * cover's per-block region (`CoverBoundary` = ray-cast), `nbx` its
+    * block-grid width. Equal to regionOf by Covering's parity argument. */
+  def regionOfCovered(polys: Array[Polygon], blockConst: Array[Int],
+      nbx: Int, b: Int, px: Double, py: Double): Int = {
+    val c = blockConst((py / b).toInt * nbx + (px / b).toInt)
+    if (c != CoverBoundary) c else regionOf(polys, px, py)
+  }
+
   /** Region of a point under the NONZERO (winding-number) fill rule;
     * lowest region id wins ties, -1 when no polygon's winding is
     * nonzero. The q194 dual of [[regionOf]]'s even-odd rule. */

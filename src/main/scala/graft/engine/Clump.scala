@@ -57,14 +57,10 @@ object Clump {
     // ---- level 1: per-tile local labels (one Exchange on tile_id; the
     // union-find runs once per TILE inside the aggregation's output
     // projection, then a codegen'd unpack derives global cell ids)
-    val packed = cells
-      .select(spec.tileOf(id).as("tile_id"), spec.pixOf(id).as("pix"),
-        col("cls"))
-      .groupBy("tile_id")
-      .agg(sort_array(collect_list(struct(col("pix"), col("cls")))).as("pc"))
+    val packed = Rasterize.tilePixels(spec, cells, col("cls"))
       .select(col("tile_id"),
         explode(graft.sql.GraftFunctions
-          .clump_local(col("pc.pix"), col("pc.cls"), T)).as("pl"))
+          .clump_local(col("pv.pix"), col("pv.v"), T)).as("pl"))
     // truncate ONCE: the local frame is read three times (two boundary
     // edge sides + the final re-attach join) — without it the tile
     // aggregation recomputes per consumer

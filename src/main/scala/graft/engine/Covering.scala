@@ -35,7 +35,7 @@ object Covering {
     def nConst: Int = const.length - nBoundary
   }
 
-  val Boundary: Int = Int.MinValue
+  val Boundary: Int = Geom.CoverBoundary
 
   /** Does segment (x1,y1)-(x2,y2) intersect the closed axis-aligned
     * rect [xmin,xmax] x [ymin,ymax]? Liang-Barsky parametric clip. */

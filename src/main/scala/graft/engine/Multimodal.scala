@@ -5,27 +5,16 @@ import graft.core.{Codec, GeoTiff}
 import graft.world.World
 
 /** Multimodal-column plumbing: image/audio/video carried as opaque
-  * `binary` columns with typed metadata, processed per-partition in
-  * batches (the Scala analog of `mapInPandas`: one iterator pass per
-  * partition, decode amortized across the batch, no per-row round-trips
-  * to a model server).
+  * `binary` columns with typed metadata, processed by one kernel
+  * expression per row (decode + stats inside whole-stage codegen, no
+  * pixel array column, no typed-row round trip).
   *
-  * Decode is REAL for the formats this engine carries: `f32` raw tiles,
-  * `png16` (16-bit grayscale PNG via javax.imageio), `jpeg` (baseline
-  * grayscale via the JDK's ImageIO JPEG codec) and `gtiff` (the
-  * pure-JVM GeoTIFF reader) all decode actual bytes. Only formats whose
-  * codecs do not exist in this container (mp3/h264/webp) fall back to a
-  * clearly-named deterministic stub so the batching/feature plumbing is
-  * still exercised end to end.
+  * Decode is REAL for every format this engine carries: `f32` raw
+  * tiles, `png16` (16-bit grayscale PNG via javax.imageio), `jpeg`
+  * (baseline grayscale via the JDK's ImageIO JPEG codec) and `gtiff`
+  * (the pure-JVM GeoTIFF reader) all decode actual bytes.
   */
 object Multimodal {
-
-  final case class Media(image_id: String, bytes: Array[Byte], w: Int,
-      h: Int, fmt: String, caption: String, phash: Long)
-
-  final case class MediaFeatures(image_id: String, fmt: String,
-      n_bytes: Int, mean_px: Double, max_px: Double, thumb_hash: Long,
-      n_frames: Int)
 
   /** Synthetic media table: the world's tiles re-encoded in each real
     * format the codec layer supports (f32 multiband raw, png16, gtiff
@@ -210,31 +199,9 @@ object Multimodal {
         col("fr.s.wsum").as("wsum"))
   }
 
-  /** Real decode dispatch: band 0 of the payload in its actual format.
-    * `stub` formats (absent codecs) fake pixels deterministically. */
-  private def decodeBand0(m: Media): Array[Float] = m.fmt match {
-    case "f32" | "png16" | "gtiff" | "jpeg" =>
-      Codec.decodeBand(m.fmt, m.bytes, m.w * m.h, 0)
-    case _ => stubDecode(m) // mp3/h264/webp: codec not in this container
-  }
-
-  /** STUB for codecs absent from the sandbox: deterministic fake pixels
-    * derived from the payload hash (clearly marked; never used for the
-    * formats above). floorMod keeps the fake pixels in [0, 256) — plain
-    * % on a negative hash would emit negative "pixels". */
-  private def stubDecode(m: Media): Array[Float] = {
-    val seed = java.util.Arrays.hashCode(m.bytes)
-    Array.tabulate(m.w * m.h)(i => Math.floorMod(seed * 31 + i, 256).toFloat)
-  }
-
-  /** Frame-sample stub for "video" payloads: every k-th row block. */
-  private def frameSampleStub(px: Array[Float], w: Int, k: Int): Int =
-    (px.length / w + k - 1) / k
-
   /** Feature extraction via the one-pass MediaStats expression: decode
     * + stats stay inside whole-stage codegen, no pixel array column and
-    * no typed-row round trip. Use this when the per-row math is pure
-    * JVM; `featuresBatched` below is the mapInPandas-analog shape. */
+    * no typed-row round trip. */
   def features(media: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.sql.GraftFunctions.media_stats
@@ -246,32 +213,5 @@ object Multimodal {
         col("__s.mean_px").as("mean_px"), col("__s.max_px").as("max_px"),
         col("__s.thumb_hash").as("thumb_hash"),
         col("__s.n_frames").as("n_frames"))
-  }
-
-  /** Per-partition BATCHED decode + feature extraction — the Scala
-    * analog of `mapInPandas`: one iterator pass per partition, the
-    * shape for codecs/models that amortize over a batch (and the only
-    * path for stub formats whose codecs are absent here). Semantically
-    * identical to `features` on real formats (asserted in tests). */
-  def featuresBatched(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[Media].mapPartitions { rows =>
-      rows.map { m =>
-        val px = decodeBand0(m)
-        var sum = 0.0
-        var mx = Double.MinValue
-        var i = 0
-        while (i < px.length) {
-          sum += px(i)
-          if (px(i) > mx) mx = px(i)
-          i += 1
-        }
-        MediaFeatures(m.image_id, m.fmt, m.bytes.length,
-          sum / px.length, mx,
-          Codec.phash(px, m.w, m.h), // 8x8 thumbnail hash = resize stub
-          frameSampleStub(px, m.w, k = 4))
-      }
-    }.toDF()
   }
 }

@@ -45,18 +45,19 @@ object Pipeline {
       cartParams: Cart.Params = Cart.Params(),
       pruneCp: Double = 0.02) // R:313
 
-  /** The fused cell frame: (cell_id, bytes, loss, p), one row per
-    * in-grid pixel of `tiles`. Band values are NOT decoded here;
-    * consumers read them lazily via `band`, and a plan that reads only
-    * band 0 leaves `bytes` unreferenced, so the scan drops it. The
-    * in-grid guard (two integer compares, trivial beside the ray-cast)
-    * drops the NaN padding of partial edge tiles. */
+  /** The fused cell frame: (cell_id, tile_id, bytes, loss, p), one row
+    * per in-grid pixel of `tiles`, p its index in tile `tile_id`. Band
+    * values are NOT decoded here; consumers read them lazily via
+    * `band`, and a plan that reads only band 0 leaves `bytes`
+    * unreferenced, so the scan drops it. The in-grid guard (two integer
+    * compares, trivial beside the ray-cast) drops the NaN padding of
+    * partial edge tiles. */
   def cells(tiles: DataFrame, spec: WorldSpec): DataFrame =
     tiles.select(col("tile_id"), col("bytes"), col("loss"),
         explode(sequence(lit(0), lit(spec.pixPerTile - 1))).as("p"))
       .filter(spec.inGridAt(col("tile_id"), col("p")))
       .select(spec.cellOf(col("tile_id"), col("p")).as("cell_id"),
-        col("bytes"), col("loss"), col("p"))
+        col("tile_id"), col("bytes"), col("loss"), col("p"))
 
   /** Band b of the current `cells` pixel, read straight from its
     * payload: band 0 (the loss) from `loss`, bands >= 1 from `bytes`. */

@@ -36,14 +36,23 @@ object Rasterize {
         g.xMin, g.yMax)
   }
 
+  /** The tile regroup under every per-tile kernel: the cells of `cells`
+    * (a `cell_id` column) grouped by `keys` and their tile, one row per
+    * group, (keys..., tile_id, pv) with pv the group's array of
+    * struct(pix, v) sorted by in-tile index `pix`, v = `value` as given
+    * (no cast: ClumpLocal and RunStats read ints). One Exchange, on the
+    * group key. */
+  def tilePixels(spec: WorldSpec, cells: DataFrame, value: Column,
+      keys: Column*): DataFrame =
+    cells.withColumn("pix", spec.pixOf(col("cell_id")))
+      .groupBy(keys :+ spec.tileOf(col("cell_id")).as("tile_id"): _*)
+      .agg(sort_array(collect_list(struct(col("pix"), value.as("v"))))
+        .as("pv"))
+
   def apply(spec: WorldSpec, df: DataFrame, valueCol: String,
       fmt: String = "f32"): DataFrame = {
     val encode = encoder(spec, fmt)
-    df.select(col("cell_id"), col(valueCol).cast("double").as("v"))
-      .withColumn("tile_id", spec.tileOf(col("cell_id")))
-      .withColumn("pix", spec.pixOf(col("cell_id")))
-      .groupBy("tile_id")
-      .agg(sort_array(collect_list(struct(col("pix"), col("v")))).as("pv"))
+    tilePixels(spec, df, col(valueCol).cast("double"))
       .select(col("tile_id"),
         format_string("tile_%05d", col("tile_id")).as("image_id"),
         encode(col("tile_id"), col("pv.pix"), col("pv.v")).as("bytes"),
@@ -59,12 +68,8 @@ object Rasterize {
   def byClass(spec: WorldSpec, df: DataFrame, valueCol: String,
       classCol: String, fmt: String = "f32"): DataFrame = {
     val encode = encoder(spec, fmt)
-    df.select(col(classCol).cast("long").as("class"), col("cell_id"),
-        col(valueCol).cast("double").as("v"))
-      .withColumn("tile_id", spec.tileOf(col("cell_id")))
-      .withColumn("pix", spec.pixOf(col("cell_id")))
-      .groupBy("class", "tile_id")
-      .agg(sort_array(collect_list(struct(col("pix"), col("v")))).as("pv"))
+    tilePixels(spec, df, col(valueCol).cast("double"),
+        col(classCol).cast("long").as("class"))
       .select(col("class"), col("tile_id"),
         format_string("class%d_tile_%05d", col("class"), col("tile_id"))
           .as("image_id"),

@@ -2,7 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.{Pipeline, Rasterize}
 import graft.world.{World, WorldSpec}
+import graft.world.World.{bandCol, hCol, lossCol, probCol}
 import graft.sql.GraftFunctions._
 
 /** Spatial operator queries over the deterministic synthetic mini-Goode
@@ -137,17 +139,7 @@ object Spatial {
   private def spine(s: SparkSession): DataFrame =
     s.range(1, N + 1).toDF("cell_id")
 
-  /** Knuth 32-bit counter hash as a Column (matches World.h). */
-  private def hc(k: Column): Column = (k * World.Knuth) % World.M32
-
   private def cellCol: Column = col("cell_id")
-  private def lossCol(id: Column): Column =
-    when(hc(id) % 16 < 6, 0.0)
-      .otherwise((hc(id) % 1024).cast("double") / 1024.0)
-  private def bandCol(id: Column, b: Int): Column =
-    (hc(id * 7 + b) % 256).cast("double")
-  private def probCol(id: Column, cls: Int): Column =
-    (hc(id * 11 + cls) % 64).cast("double") / 64.0
 
 
   // Oracle fragments (identical formulas in DuckDB SQL).
@@ -283,7 +275,7 @@ object Spatial {
 
   // ---- q22: decode -> explode -> zonal aggregation (S3/G5/A6) ------------
   private def q22(s: SparkSession, dir: String): DataFrame =
-    graft.engine.Pipeline.cellBands(World.tilesDF(s, spec), spec, Seq(1))
+    Pipeline.cellBands(World.tilesDF(s, spec), spec, Seq(1))
       .groupBy(spec.tileOf(cellCol).cast("long").as("tile_id"))
       .agg(
         sum(when(col("loss") > 0, 1).otherwise(0)).as("n_loss_cells"),
@@ -337,8 +329,8 @@ object Spatial {
   }
 
   // ---- q24: one expand step (G4): uncertain cells adopt the minimum
-  // positive class among their 8 neighbors, via 8 equi-joins on derived
-  // neighbor ids (the shuffle-friendly formulation; no theta join) --------
+  // positive class among their 8 neighbors — one ring of the model
+  // run's Expand.run (8 derived-key equi-joins, no theta join) ------------
   private def classifiedDF(s: SparkSession): DataFrame = {
     val ps = (1 to 5).map(c => probCol(cellCol, c))
     val mx = greatest(ps: _*)
@@ -348,32 +340,11 @@ object Spatial {
           .otherwise(array_position(array(ps: _*), mx))).as("final_class"))
   }
 
-  private def q24(s: SparkSession, dir: String): DataFrame = {
-    val cls = classifiedDF(s)
-    val offsets = Seq(-1, 0, 1).flatMap(dr => Seq(-1, 0, 1).map(dc => (dr, dc)))
-      .filterNot { case (dr, dc) => dr == 0 && dc == 0 }
-    import s.implicits._
-    val offDF = offsets.toDF("dr", "dc")
-    val uncertain = cls.filter(col("final_class") === 0)
-      .select(cellCol, (spec.row0Of(cellCol) + 1).as("row"),
-        (spec.col0Of(cellCol) + 1).as("col"))
-    val nbr = uncertain.crossJoin(broadcast(offDF))
-      .filter((col("col") + col("dc")).between(1, C) &&
-        (col("row") + col("dr")).between(1, spec.rows))
-      .select(cellCol, ((col("row") + col("dr") - 1) * C + col("col") + col("dc"))
-        .cast("long").as("nbr_id"))
-    val adopted = nbr
-      .join(cls.filter(col("final_class") > 0)
-          .withColumnRenamed("cell_id", "nbr_id")
-          .withColumnRenamed("final_class", "nbr_class"),
-        Seq("nbr_id"))
-      .groupBy("cell_id").agg(min("nbr_class").as("adopted"))
-    cls.join(adopted, Seq("cell_id"), "left")
-      .select(cellCol,
-        when(col("final_class") === 0, coalesce(col("adopted"), lit(0L)))
-          .otherwise(col("final_class")).as("class_expanded"))
+  private def q24(s: SparkSession, dir: String): DataFrame =
+    graft.engine.Expand.run(s, spec, classifiedDF(s), maxIters = 1,
+        requireConvergence = false)
+      .select(cellCol, col("final_class").as("class_expanded"))
       .orderBy("cell_id")
-  }
 
   private def q24Sql = {
     val ps = (1 to 5).map(c => s"${probSql("cell_id", c)} AS p$c").mkString(", ")
@@ -406,8 +377,7 @@ object Spatial {
   // join chain R:209-228; mask-by-loss first R:236-242; NA->0 R:247;
   // region join + drop-null R:270-274) ------------------------------------
   private def q25(s: SparkSession, dir: String): DataFrame = {
-    val cells = graft.engine.Pipeline
-      .cellBands(World.tilesDF(s, spec), spec, Seq(1, 2))
+    val cells = Pipeline.cellBands(World.tilesDF(s, spec), spec, Seq(1, 2))
       .filter(col("loss") > 0)
     val training = spine(s)
       .select(cellCol, World.trainingClassCol(cellCol).as("tclass"))
@@ -493,7 +463,7 @@ object Spatial {
     * ordered pixel collect + f32 encode; emits tile checksums. */
   private def q28(s: SparkSession, dir: String): DataFrame = {
     val cls = classifiedDF(s)
-    graft.engine.Rasterize(spec, cls, "final_class")
+    Rasterize(spec, cls, "final_class")
       .select(col("tile_id"), col("image_id"), length(col("bytes")).as("n_bytes"),
         crc32(col("bytes")).as("crc"))
       .orderBy("tile_id")
@@ -507,7 +477,7 @@ object Spatial {
     * `tinyTrees`) and emits them as CASE chains in q29Sql, putting
     * fit AND predict under the driver's DuckDB compare end to end. */
   private def q29(s: SparkSession, dir: String): DataFrame =
-    graft.engine.Pipeline.fitPredictVote(s, spec).orderBy("cell_id")
+    Pipeline.fitPredictVote(s, spec).orderBy("cell_id")
 
   /** The (region x driver) tree matrix fitted from the pure-Scala
     * transcription of the training construction — the same multiset the
@@ -518,7 +488,7 @@ object Spatial {
     * (independently pinned by SparkEngineSpec's golden e2e test). */
   private lazy val tinyTrees: Map[(Int, Int), graft.core.Cart.Tree] = {
     import graft.core.Geom
-    val cfg = graft.engine.Pipeline.Config()
+    val cfg = Pipeline.Config()
     val polys = World.polygons(spec)
     val training = (1L to N).flatMap { id =>
       val r = Geom.regionOf(polys, World.px(spec, id), World.py(spec, id))
@@ -530,7 +500,7 @@ object Spatial {
         case _ => None
       }
     }.toArray
-    graft.engine.Pipeline.fitTrees(training, spec.nRegions, cfg)
+    Pipeline.fitTrees(training, spec.nRegions, cfg)
   }
 
   /** A fitted tree as a nested SQL CASE chain over b1..b5. Leaf values
@@ -554,7 +524,7 @@ object Spatial {
     * reused by q192's confusion matrix with the deployment floors
     * disabled (`floors = false` scores the raw argmax). */
   private def classCte(floors: Boolean): String = {
-    val probCols = (1 to graft.engine.Pipeline.NumDrivers).map { d =>
+    val probCols = (1 to Pipeline.NumDrivers).map { d =>
       val cases = (1 to spec.nRegions)
         .map(r => s"WHEN $r THEN ${treeSql(tinyTrees((r, d)))}")
         .mkString(" ")
@@ -839,7 +809,7 @@ object Spatial {
   private def lossObs(s: SparkSession): DataFrame = {
     val o1 = spine(s).select(cellCol, lossCol(cellCol).as("loss"))
     val o2 = spine(s).select(cellCol,
-      ((hc(cellCol * 17) % 1024).cast("double") / 1024.0).as("loss"))
+      ((hCol(cellCol * 17) % 1024).cast("double") / 1024.0).as("loss"))
     o1.unionByName(o2)
   }
 
@@ -928,8 +898,7 @@ object Spatial {
     val dedup = lossObs(s).groupBy("cell_id")
       .agg(avg("loss").as("loss_mean"))
     val joined = dedup.join(classifiedDF(s), Seq("cell_id"))
-    graft.engine.Rasterize
-      .byClass(spec, joined, "loss_mean", "final_class")
+    Rasterize.byClass(spec, joined, "loss_mean", "final_class")
       .select(col("class"), col("tile_id"),
         length(col("bytes")).as("n_bytes"), crc32(col("bytes")).as("crc"))
       .orderBy("class", "tile_id")
@@ -1322,31 +1291,18 @@ object Spatial {
   // 8x8 point blocks once driver-side (engine/Covering): blocks no
   // polygon edge crosses carry a constant region id and skip the
   // ray-cast entirely; only boundary-block points pay the exact test.
-  // The block map broadcasts (rows*cols/64 ints) and the conditional
-  // ray-cast folds into the same single-eval Generate shape as q21.
-  // Oracle: q21's exact SQL ray-cast — the covering must be invisible
-  // in the output. ------------------------------------------------------
-  private val CoverB = 8
-
+  // The lookup is Geom.regionOfCovered, the one the fused classify
+  // runs, with the block map as a plan literal, in the same single-eval
+  // Generate shape as q21 (region_explode). Oracle: q21's exact SQL
+  // ray-cast — the covering must be invisible in the output. ------------
   private def q72(s: SparkSession, dir: String): DataFrame = {
     val polys = World.polygons(spec)
-    val blocks = graft.engine.Covering.build(polys, spec.rows, spec.cols,
-      CoverB)
-    import s.implicits._
-    val blockDf = blocks.const.zipWithIndex.toSeq.map { case (c, id) =>
-      (id.toLong, c == graft.engine.Covering.Boundary,
-        if (c == graft.engine.Covering.Boundary) -1 else c)
-    }.toDF("block_id", "boundary", "const_region")
-    val pts = spine(s).select(cellCol, spec.pxOf(cellCol).as("px"),
-        spec.pyOf(cellCol).as("py"))
-      .withColumn("block_id", (floor(col("py") / CoverB) * blocks.nbx +
-        floor(col("px") / CoverB)).cast("long"))
-    val region = when(col("boundary"),
-        region_of_neg1(col("px"), col("py"), polys))
-      .otherwise(col("const_region"))
-    pts.join(broadcast(blockDf), "block_id")
-      .select(cellCol,
-        explode(array_remove(array(region), lit(-1))).as("region_id"))
+    val cover = graft.engine.Covering.build(polys, spec.rows, spec.cols,
+      Pipeline.CoverB)
+    spine(s)
+      .select(cellCol, explode(array_remove(array(region_of_covered(
+        spec.pxOf(cellCol), spec.pyOf(cellCol), polys, cover)), lit(-1)))
+        .as("region_id"))
       .orderBy("cell_id")
   }
 
@@ -1358,7 +1314,7 @@ object Spatial {
   // corruption (pixel order, NaN holes, value mangling) breaks the
   // hash compare. ------------------------------------------------------
   private def q73(s: SparkSession, dir: String): DataFrame = {
-    val ras = graft.engine.Rasterize(spec, classifiedDF(s), "final_class")
+    val ras = Rasterize(spec, classifiedDF(s), "final_class")
     ras.select(col("tile_id"),
         posexplode(decode_band(col("bytes"), col("fmt"), spec.pixPerTile, 0))
           .as(Seq("p", "v")))
@@ -1711,12 +1667,8 @@ object Spatial {
     val P = T2 + 2 * pad
     val offs = for { dy <- -1 to 1; dx <- -1 to 1 }
       yield struct(lit(dy).as("dty"), lit(dx).as("dtx"))
-    val px = World.tilesDF(s, sp)
-      .select(col("tile_id"),
-        posexplode(decode_band(col("bytes"), col("fmt"), sp.pixPerTile, 1))
-          .as(Seq("p", "v")))
-      .filter(sp.inGridAt(col("tile_id"), col("p")))
-      .select(col("tile_id"), col("v").cast("double").as("v"),
+    val px = Pipeline.cells(World.tilesDF(s, sp), sp)
+      .select(col("tile_id"), Pipeline.band(sp, 1).as("v"),
         (col("p") / T2).cast("int").as("rr"),
         (col("p") % T2).cast("int").as("cc"))
     val fanned = px
@@ -2131,7 +2083,7 @@ object Spatial {
       .withColumnRenamed("node_id", "cell_id")
     hot.join(labels, Seq("cell_id"), "left")
       .select(coalesce(col("lbl"), col("cell_id")).as("cluster"),
-        (hc(cellCol) % 1024).as("loss_u"),
+        (hCol(cellCol) % 1024).as("loss_u"),
         (spec.row0Of(cellCol) + 1).as("r"), (spec.col0Of(cellCol) + 1).as("c"))
       .groupBy("cluster")
       .agg(count(lit(1)).as("n_cells"), sum("loss_u").as("loss_units"),
@@ -2253,9 +2205,9 @@ object Spatial {
       .select(cellCol.as("src"),
         (cellCol + col("o.dx") + col("o.dy") * C).as("dst"))
       .select(col("src"), col("dst"),
-        (hc(col("dst") * 29) % 9 + 1).as("w"))
+        (hCol(col("dst") * 29) % 9 + 1).as("w"))
     val dist0 = spine(s).select(cellCol.as("node"),
-      when(hc(cellCol * 31) % 512 === 0, lit(0L))
+      when(hCol(cellCol * 31) % 512 === 0, lit(0L))
         .otherwise(lit(CdInf)).as("d"))
     graft.engine.MinPlus.relax(s, dist0, edges, CdRounds, CdInf)
       .select(col("node").as("cell_id"),
@@ -2306,14 +2258,14 @@ object Spatial {
   private def q123(s: SparkSession, dir: String): DataFrame = {
     val j = col("id")
     val segs = s.range(0, SegN).select(
-        when(hc(j * 5 + 1) % 3 === 0, lit(8L))
-          .when(hc(j * 5 + 1) % 3 === 1, lit(16L))
+        when(hCol(j * 5 + 1) % 3 === 0, lit(8L))
+          .when(hCol(j * 5 + 1) % 3 === 1, lit(16L))
           .otherwise(lit(32L)).as("dxe"),
-        (hc(j * 5 + 3) % spec.rows + 1).as("y0"),
-        (hc(j * 5 + 4) % spec.rows + 1).as("y1"),
+        (hCol(j * 5 + 3) % spec.rows + 1).as("y0"),
+        (hCol(j * 5 + 4) % spec.rows + 1).as("y1"),
         j)
       .select(col("dxe"),
-        (hc(j * 5 + 2) % (lit(C.toLong) - col("dxe")) + 1).as("x0"),
+        (hCol(j * 5 + 2) % (lit(C.toLong) - col("dxe")) + 1).as("x0"),
         col("y0"), (col("y1") - col("y0")).as("dy"))
       .filter(abs(col("dy")) <= col("dxe"))
     segs.select(col("x0"), col("y0"), col("dy"), col("dxe"),
@@ -2649,7 +2601,7 @@ object Spatial {
       graft.world.World.h2Col(col("lid") * 13 + jj * 53 + 7) % 4000
     v0.select(col("lid"), seqC, (seqC * 4).as("x"),
       (lat(j) * (lit(8L) - f) + lat(j + 1) * f +
-        (hc(col("lid") * 31 + seqC) % 5 - 2)).as("y"))
+        (hCol(col("lid") * 31 + seqC) % 5 - 2)).as("y"))
   }
 
   private def q129(s: SparkSession, dir: String): DataFrame =
@@ -2977,9 +2929,9 @@ object Spatial {
   private val ChiF = 10
 
   private def chiFeat(b: Int): Column =
-    if (b == 0) (col("cls") * 36 + hc(cellCol * 17) % 36) % 256
-    else if (b == 1) (col("cls") * 32 + hc(cellCol * 17 + 1) % 224) % 256
-    else hc(cellCol * 17 + b) % 256
+    if (b == 0) (col("cls") * 36 + hCol(cellCol * 17) % 36) % 256
+    else if (b == 1) (col("cls") * 32 + hCol(cellCol * 17 + 1) % 224) % 256
+    else hCol(cellCol * 17 + b) % 256
 
   private def q134(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -3073,7 +3025,7 @@ object Spatial {
     val v = when(r0 < pad(1) || r0 >= lit(T) - pad(2) ||
         c0 < pad(3) || c0 >= lit(T) - pad(4), 0.0)
       .otherwise((World.h2Col(cellCol * 7 + 9) % 1024).cast("double") / 1024.0)
-    graft.engine.Rasterize(spec, spine(s).select(cellCol, v.as("v")), "v")
+    Rasterize(spec, spine(s).select(cellCol, v.as("v")), "v")
   }
 
   private def q135(s: SparkSession, dir: String): DataFrame =
@@ -3534,11 +3486,7 @@ object Spatial {
   // decomposition cross-check, all integer (band 0..255, SAT ≤
   // tile²·255), bit-exact. -------------------------------------------------
   private def q147(s: SparkSession, dir: String): DataFrame = {
-    spine(s)
-      .select(spec.tileOf(cellCol).as("tile_id"),
-        spec.pixOf(cellCol).as("pix"), bandCol(cellCol, 0).as("v"))
-      .groupBy("tile_id")
-      .agg(sort_array(collect_list(struct(col("pix"), col("v")))).as("pv"))
+    Rasterize.tilePixels(spec, spine(s), bandCol(cellCol, 0))
       .select(col("tile_id"),
         posexplode(graft.sql.GraftFunctions
           .sat(col("pv.pix"), col("pv.v"), T)).as(Seq("p", "s")))
@@ -3919,12 +3867,9 @@ object Spatial {
   // histogram is proportional to pixels. ------------------------------------
   private def q153(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val px = World.tilesDF(s, spec)
+    val px = Pipeline.cells(World.tilesDF(s, spec), spec)
       .select(col("tile_id").cast("long").as("tile_id"),
-        posexplode(decode_band(col("bytes"), col("fmt"), spec.pixPerTile, 1))
-          .as(Seq("p", "v")))
-      .filter(spec.inGridAt(col("tile_id"), col("p")))
-      .select(col("tile_id"), col("v").cast("long").as("lvl"))
+        Pipeline.band(spec, 1).cast("long").as("lvl"))
     val w = Window.partitionBy("tile_id").orderBy("lvl")
     val wAll = Window.partitionBy("tile_id")
     px.groupBy("tile_id", "lvl").agg(count(lit(1)).as("cnt"))
@@ -4455,13 +4400,10 @@ object Spatial {
   // remap. --------------------------------------------------------------------
   private def q164(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val px = World.tilesDF(s, spec)
-      .select(col("tile_id").cast("long").as("tile_id"),
-        posexplode(decode_band(col("bytes"), col("fmt"), spec.pixPerTile, 1))
-          .as(Seq("p", "v")))
-      .filter(spec.inGridAt(col("tile_id"), col("p")))
-      .select(col("tile_id"), col("p"),
-        expr("CAST(v AS BIGINT) * CAST(v AS BIGINT) DIV 256").as("lvl"))
+    val v = Pipeline.band(spec, 1).cast("long")
+    val px = Pipeline.cells(World.tilesDF(s, spec), spec)
+      .select(col("tile_id").cast("long").as("tile_id"), col("p"),
+        (v * v).divide(256).cast("long").as("lvl"))
     val cdf = px.groupBy("lvl").agg(count(lit(1)).as("cnt"))
       .withColumn("c", sum("cnt").over(
         Window.orderBy("lvl").rowsBetween(Window.unboundedPreceding, 0)))
@@ -4639,14 +4581,9 @@ object Spatial {
   // by gaps-and-islands windows — a different algorithm, the same
   // integers. ----------------------------------------------------------------
   private def q167(s: SparkSession, dir: String): DataFrame = {
-    spine(s).select(cellCol, patchClsCol(cellCol).as("cls"))
-      .select(spec.tileOf(cellCol).as("tile_id"),
-        spec.pixOf(cellCol).as("pix"), col("cls"))
-      .groupBy("tile_id")
-      .agg(sort_array(collect_list(struct(col("pix"), col("cls"))))
-        .as("pc"))
+    Rasterize.tilePixels(spec, spine(s), patchClsCol(cellCol))
       .select(col("tile_id").cast("long").as("tile_id"),
-        run_stats(col("pc.pix"), col("pc.cls"), T).as("rs"))
+        run_stats(col("pv.pix"), col("pv.v"), T).as("rs"))
       .select(col("tile_id"), col("rs.n_runs").as("n_runs"),
         col("rs.max_run").as("max_run"), col("rs.n_vruns").as("n_vruns"))
       .orderBy("tile_id")
@@ -5159,11 +5096,7 @@ object Spatial {
   private val EdtThresh = 254
 
   private def q175(s: SparkSession, dir: String): DataFrame = {
-    spine(s)
-      .select(spec.tileOf(cellCol).as("tile_id"),
-        spec.pixOf(cellCol).as("pix"), bandCol(cellCol, 0).as("v"))
-      .groupBy("tile_id")
-      .agg(sort_array(collect_list(struct(col("pix"), col("v")))).as("pv"))
+    Rasterize.tilePixels(spec, spine(s), bandCol(cellCol, 0))
       .select(col("tile_id"),
         posexplode(graft.sql.GraftFunctions
           .edt(col("pv.pix"), col("pv.v"), T, EdtThresh)).as(Seq("p", "d2")))
@@ -6398,8 +6331,8 @@ object Spatial {
   // joined to the label formula — fit, vote and label filtering
   // cross-checked end-to-end in one query. -----------------------------------
   private def q192(s: SparkSession, dir: String): DataFrame = {
-    val preds = graft.engine.Pipeline.fitPredictVote(s, spec,
-        graft.engine.Pipeline.Config(confidenceFloor = 0.0, lossFloor = 0.0))
+    val preds = Pipeline.fitPredictVote(s, spec,
+        Pipeline.Config(confidenceFloor = 0.0, lossFloor = 0.0))
       .select(col("cell_id"), col("region_id"), col("class"))
     val labels = spine(s)
       .select(cellCol, World.trainingClassCol(cellCol).as("label"))

@@ -172,8 +172,7 @@ object TileZonal {
   * band 0 in its ACTUAL format (f32/png16/gtiff via Codec) and emit
   * struct(mean_px, max_px, thumb_hash, n_frames) without materializing
   * the pixel array as a column — the per-row feature math lives in one
-  * codegen'd expression (the batched mapPartitions variant remains for
-  * model-server-style ops; see Multimodal). Inputs: (bytes, fmt, w,
+  * codegen'd expression (Multimodal.features). Inputs: (bytes, fmt, w,
   * h); `frameK` is the frame-sampling stride. */
 object MediaStats {
   def eval(bytes: Array[Byte], fmt: UTF8String, w: Int, h: Int,
@@ -2115,6 +2114,14 @@ object GraftFunctions {
     * non-nullable sentinel form the fused classify uses). */
   def region_of_neg1(px: Column, py: Column, polys: Array[Polygon]): Column =
     invoke(Geom, IntegerType, Seq(polys, px, py), "regionOf")
+
+  /** region_of_neg1 through the block cover `cover` of `polys`
+    * (Geom.regionOfCovered, the lookup the fused classify runs): O(1) in
+    * region-constant blocks, one exact ray-cast in boundary blocks. */
+  def region_of_covered(px: Column, py: Column, polys: Array[Polygon],
+      cover: graft.engine.Covering.Blocks): Column =
+    invoke(Geom, IntegerType, Seq(polys, cover.const, cover.nbx, cover.b, px,
+      py), "regionOfCovered")
 
   /** Generator: ONE row carrying the region id for points inside some
     * polygon, ZERO rows for points outside — with exactly one ray-cast

@@ -146,8 +146,19 @@ object World {
   def loss(id: Long): Double =
     if (h(id) % 16 < 6) 0.0 else (h(id) % 1024).toDouble / 1024.0
 
+  /** `loss` as a Spark Column over a cell-id column. */
+  def lossCol(id: Column): Column = {
+    import org.apache.spark.sql.functions.when
+    when(hCol(id) % 16 < 6, 0.0)
+      .otherwise((hCol(id) % 1024).cast("double") / 1024.0)
+  }
+
   /** Predictor band b (1..5): small integer 0..255 (f32-exact). */
   def band(id: Long, b: Int): Double = (h(id * 7 + b) % 256).toDouble
+
+  /** `band` as a Spark Column over a cell-id column. */
+  def bandCol(id: Column, b: Int): Column =
+    (hCol(id * 7 + b) % 256).cast("double")
 
   /** Synthetic "protected area" rectangle k: integer (x0, y0, x1, y1)
     * inside the grid, NOT tile-aligned (the q171 second vector layer —
@@ -203,6 +214,10 @@ object World {
   /** Synthetic per-class probability c (1..5): dyadic k/64 — coarse on
     * purpose so argmax ties occur and pin first-max semantics (R:370). */
   def prob(id: Long, c: Int): Double = (h(id * 11 + c) % 64).toDouble / 64.0
+
+  /** `prob` as a Spark Column over a cell-id column. */
+  def probCol(id: Column, c: Int): Column =
+    (hCol(id * 11 + c) % 64).cast("double") / 64.0
 
   /** Training label: ~6% of cells carry a class 1..7 (6 and 7 present to
     * pin the exclusion rule, R:204-205 vs notebook cell 36). */

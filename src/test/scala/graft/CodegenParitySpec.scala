@@ -38,6 +38,7 @@ class CodegenParitySpec extends SparkSpec {
     "graft.sql.GridLatLng.eval" -> "q75_goode_chain",
     "graft.core.Codec.floatAt" -> "q29_tree_fit_predict",
     "graft.core.Geom.regionOf" -> "q29_tree_fit_predict",
+    "graft.core.Geom.regionOfCovered" -> "q72_pip_covered",
     "graft.sql.ForestVote.eval" -> "q29_tree_fit_predict",
     "graft.sql.RectClipArea.eval" -> "q169_overlay_area",
     "graft.sql.BorderStats.eval" -> "q135_border_detect",

@@ -683,14 +683,6 @@ class SparkEngineSpec extends SparkSpec {
     val feats = Multimodal.features(media)
       .collect().map(r => r.getAs[String]("image_id") -> r).toMap
     assert(feats.size == 4 * spec.nTiles)
-    // the codegen expression path and the batched mapPartitions path
-    // (the mapInPandas analog) agree exactly
-    val batched = Multimodal.featuresBatched(media)
-      .orderBy("image_id").collect().toSeq
-      .map(r => r.toSeq)
-    val exprPath = Multimodal.features(media)
-      .orderBy("image_id").collect().toSeq.map(r => r.toSeq)
-    assert(exprPath == batched)
     (0 until spec.nTiles).foreach { t =>
       val band0 = World.tileBands(spec, t)(0)
       def expectStats(px: Array[Float], suffix: String): Unit = {

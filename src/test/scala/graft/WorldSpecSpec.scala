@@ -73,6 +73,32 @@ class WorldSpecSpec extends SparkSpec {
           (0 until spec.pixPerTile).count(spec.inGrid(ti, _))).sum)
     }
 
+  test("the world's Column formulas equal their scalars on every cell " +
+    "of World.tiny") {
+    val spec = World.tiny
+    val id = col("cell_id")
+    val bands = 0 to 5
+    val classes = 1 to 5
+    val rows = spark.range(1, spec.nCells + 1).toDF("cell_id")
+      .select(id +: World.hCol(id).as("h") +: World.lossCol(id).as("loss") +:
+        World.trainingClassCol(id).as("tclass") +:
+        (bands.map(b => World.bandCol(id, b).as(s"b$b")) ++
+          classes.map(c => World.probCol(id, c).as(s"p$c"))): _*)
+      .collect()
+    assert(rows.length == spec.nCells)
+    rows.foreach { r =>
+      val c = r.getLong(0)
+      val at = s"cell $c"
+      assert(r.getLong(1) == World.h(c), at)
+      assert(r.getDouble(2) == World.loss(c), at)
+      assert(r.getInt(3) == World.trainingClass(c).getOrElse(0), at)
+      bands.foreach(b =>
+        assert(r.getDouble(4 + b) == World.band(c, b), s"$at band $b"))
+      classes.foreach(k => assert(
+        r.getDouble(3 + bands.size + k) == World.prob(c, k), s"$at class $k"))
+    }
+  }
+
   test("inGridAt is a literal true on a tiling without padding") {
     assert(!World.tiny.padded)
     assert(World.tiny.inGridAt(col("t"), col("p")).toString == "true")

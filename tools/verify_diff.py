@@ -4,8 +4,10 @@
 Usage: verify_diff.py <dirA> <dirB>
 
 For every query directory on either side it compares the parquet schema
-(column names and Arrow types, in order) and an order-insensitive row
-digest (SHA-256 over the sorted per-row reprs, so duplicate rows count).
+(column names, Arrow types and each field's nullable flag, in order; a
+nested field's nullability is part of its Arrow type string) and an
+order-insensitive row digest (SHA-256 over the sorted per-row reprs, so
+duplicate rows count).
 It also byte-compares the two `oracle_sql.json` files. Prints one line
 per query that differs or exists on one side only, then `N/N identical`;
 exits 1 on any difference, 0 otherwise.
@@ -22,9 +24,10 @@ def queries(d):
 
 
 def load(path):
-    """(schema as [(name, type)], row count, row digest) of one query."""
+    """(schema as [(name, type, nullable)], row count, row digest) of one
+    query."""
     table = pq.read_table(path)
-    schema = [(f.name, str(f.type)) for f in table.schema]
+    schema = [(f.name, str(f.type), f.nullable) for f in table.schema]
     rows = sorted(repr(tuple(r.values())) for r in table.to_pylist())
     h = hashlib.sha256()
     for r in rows:
