@@ -146,8 +146,9 @@ object Checkpoint {
   /** Lineage truncation for iterative/two-phase operators: a RELIABLE
     * checkpoint when the session has a checkpoint dir (on a real
     * cluster a localCheckpoint dies with any executor, killing a long
-    * run), else localCheckpoint (single-JVM test/bench mode). Shared by
-    * Expand and StableRowId so the reliability policy lives once. */
+    * run), else localCheckpoint (single-JVM test/bench mode). Round
+    * loops reach it through [[endRound]]; one-shot sites call it
+    * directly. */
   def truncate(s: SparkSession, df: DataFrame): DataFrame =
     // Re-leaf: checkpoint keeps the child plan's STATS even though it
     // truncates lineage, so iterative callers would compound the
@@ -158,6 +159,28 @@ object Checkpoint {
     // kept) — AQE recovers true sizes at runtime, so no plan-quality
     // loss for the loop frame itself.
     org.apache.spark.sql.GraftColumnBridge.freshLeaf(reliableCk(s, df))
+
+  /** The one round loop of the fixed-round iterative operators
+    * (PageRank, MinPlus, Propagate, Simplify): `step` folded over
+    * `init` for `rounds` rounds, each round's frame passed through
+    * [[endRound]]. `rounds = 0` returns `init` untouched. */
+  def iterate(s: SparkSession, init: DataFrame, rounds: Int)(
+      step: DataFrame => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(init)((df, r) => endRound(s, step(df), r, rounds))
+
+  /** The lineage-truncation cadence of every round loop, once: round
+    * `r` of `rounds` (1-based) is truncated after every second round
+    * and after the last, so the loop returns a leaf. A loop frame is
+    * referenced two or three times per round (PageRank: contributions
+    * and dangling mass; Expand: uncertain cells, positive neighbours,
+    * fold join), so one deferred level costs re-reading materialized
+    * leaves a few extra times, which is cheap, while it halves the
+    * loop's eager checkpoint jobs. Deeper deferral would compound those
+    * references per level, hence never more than one. Expand, which
+    * stops early, calls this from its own loop. */
+  private[engine] def endRound(s: SparkSession, next: DataFrame, r: Int,
+      rounds: Int): DataFrame =
+    if (r % 2 == 0 || r == rounds) truncate(s, next) else next
 
   /** The reliability policy, once: reliable checkpoint when a dir is
     * configured, else localCheckpoint (single-JVM test/bench mode). */

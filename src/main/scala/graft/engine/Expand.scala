@@ -23,12 +23,11 @@ import graft.world.WorldSpec
   *
   * Scale design: each step is 8 derived-key equi-joins expressed as one
   * explode+join (shuffle on cell id, broadcast of the 8-offset table),
-  * never a theta/range join; lineage is truncated every iteration —
-  * with a RELIABLE checkpoint when the session has a checkpoint dir
-  * (on a real cluster a localCheckpoint dies with any executor,
-  * killing a long fixed-point run), falling back to localCheckpoint
-  * otherwise (single-JVM test/bench mode); convergence = zero adopted
-  * cells (a count on the adopted side only, not the full frame).
+  * never a theta/range join; each round's adopted cells are truncated
+  * ([[Checkpoint.truncate]]) and the folded frame follows the round
+  * cadence of [[Checkpoint.endRound]] (every other round and the
+  * last); convergence = zero adopted cells (a count on the adopted
+  * side only, not the full frame).
   */
 object Expand {
   import Checkpoint.truncate
@@ -105,15 +104,8 @@ object Expand {
           .select(col("cell_id"),
             when(col("final_class") === 0, coalesce(col("adopted"), lit(0L)))
               .otherwise(col("final_class")).as("final_class"))
-        // truncate every OTHER round: cur is referenced three times per
-        // round (uncertain, positive neighbors, fold join), so one
-        // deferred level costs re-reading materialized leaves a few
-        // extra times — cheap — while halving the loop's eager
-        // checkpoint actions; deeper deferral would compound 3^k
-        // references, hence never more than one level
-        cur = if (iters % 2 == 1 || iters == maxIters - 1) truncate(s, folded)
-              else folded
         iters += 1
+        cur = Checkpoint.endRound(s, folded, iters, maxIters)
       }
     }
     if (requireConvergence && !converged) {

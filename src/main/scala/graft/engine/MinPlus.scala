@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * side broadcasts or co-partitions), propose `d + w` to each
   * destination, and ONE partial-aggregated MIN over the union of the
   * running frame and the proposals folds everything — a single
-  * exchange per round, no fold-back join. Lineage is truncated every
-  * other round ([[Checkpoint.truncate]]) so k rounds never re-plan a
-  * k-deep tree.
+  * exchange per round, no fold-back join. The rounds run through
+  * [[Checkpoint.iterate]], whose lineage truncation keeps k rounds from
+  * re-planning a k-deep tree.
   */
 object MinPlus {
 
@@ -39,7 +39,6 @@ object MinPlus {
     * @return `(node, d)` after `rounds` relaxations */
   def relax(s: SparkSession, dist0: DataFrame, edges: DataFrame,
             rounds: Int, inf: Long): DataFrame = {
-    var dist = dist0
     // no per-round fold-back join means edges whose dst is outside
     // dist0's node set would grow the frame (and relax paths through
     // nodes the caller excluded) — restrict once, up front; truncated
@@ -47,7 +46,7 @@ object MinPlus {
     val es = Checkpoint.truncateOnce(s,
       edges.join(dist0.select(col("node").as("dst")),
         Seq("dst"), "left_semi"))
-    for (r <- 1 to rounds) {
+    Checkpoint.iterate(s, dist0, rounds) { dist =>
       // d'(v) = min(d(v), proposals) as ONE aggregation over the union
       // of the running frame and the propagated d+w terms — no
       // per-round fold-back join, so each round is a single
@@ -55,11 +54,7 @@ object MinPlus {
       // co-partitions; it adds no exchange of dist itself)
       val prop = dist.join(es, col("node") === col("src"))
         .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-      val next = dist.unionByName(prop)
-        .groupBy("node").agg(min("d").as("d"))
-      dist = if (r % 2 == 0 || r == rounds) Checkpoint.truncate(s, next)
-             else next
+      dist.unionByName(prop).groupBy("node").agg(min("d").as("d"))
     }
-    dist
   }
 }

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   *   1. ranks ⋈ edges on src (co-partitioned after the first pass),
   *   2. groupBy(dst) partial-aggregated sum of contributions,
   *   3. dangling mass folded in via a one-row cross join (broadcast).
-  * Lineage is truncated per iteration ([[Checkpoint.truncate]]) so k
-  * iterations never re-plan a k-deep join tree — the q56 connected-
-  * components loop discipline.
+  * The iterations run through [[Checkpoint.iterate]], which truncates
+  * lineage every other iteration and after the last, so k iterations
+  * never re-plan a k-deep join tree.
   */
 object PageRank {
 
@@ -55,8 +55,8 @@ object PageRank {
         .select(col("src"), col("dst"), col("outdeg")))
     val dangNodes = Checkpoint.truncate(s,
       deg.filter(col("outdeg") === 0).select(col("node")))
-    var ranks = nodes.select(col("node"), lit(1000000L).as("r"))
-    for (i <- 1 to iters) {
+    Checkpoint.iterate(s, nodes.select(col("node"), lit(1000000L).as("r")),
+        iters) { ranks =>
       val contrib = ranks
         .join(edgesDeg, col("node") === col("src"))
         .select(col("dst"),
@@ -65,20 +65,11 @@ object PageRank {
       val dang = ranks.join(dangNodes, Seq("node"), "left_semi")
         .agg(coalesce(sum("r"), lit(0L)).as("ds"))
         .select(expr(s"(ds * 85) div (100 * $nV)").as("share"))
-      val next = nodes.join(contrib, Seq("node"), "left")
+      nodes.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(dang))
         .select(col("node"),
           (lit(150000L) + coalesce(col("cs"), lit(0L)) + col("share"))
             .as("r"))
-      // truncate every OTHER iteration: ranks is referenced twice per
-      // iteration (contrib + dangling), so one un-truncated level costs
-      // at most a double evaluation of one small join over materialized
-      // leaves, while halving the eager checkpoint jobs of the loop;
-      // deeper un-truncated nesting would compound 2^k references,
-      // hence never more than one deferred level
-      ranks = if (i % 2 == 0 || i == iters) Checkpoint.truncate(s, next)
-              else next
     }
-    ranks
   }
 }

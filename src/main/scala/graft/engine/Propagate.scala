@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   *    union-find halving, linked-list ranking): O(log D) shuffles
   *    total, vs one shuffle per hop for naive iteration.
   *
-  * Both kernels truncate lineage every other round
-  * ([[Checkpoint.truncate]] — which also re-leafs the frame so
-  * inherited size stats cannot compound across rounds).
+  * Both kernels run their rounds through [[Checkpoint.iterate]], whose
+  * lineage truncation also re-leafs the frame so inherited size stats
+  * cannot compound across rounds.
   */
 object Propagate {
 
@@ -41,7 +41,6 @@ object Propagate {
     *         `acc = 1` where nothing flows in */
   def sumRounds(s: SparkSession, nodes: DataFrame, edges: DataFrame,
                 rounds: Int): DataFrame = {
-    var acc = nodes.select(col("node"), lit(1L).as("acc"))
     // the union-fold below has no per-round join back onto the node
     // spine, so edges pointing OUTSIDE the node set would leak rows
     // (without the +1 base) into the output — restrict once, up front;
@@ -49,7 +48,8 @@ object Propagate {
     // semi-join is planned once, not inside every round's lineage
     val es = Checkpoint.truncateOnce(s,
       edges.join(nodes, edges("dst") === nodes("node"), "left_semi"))
-    for (r <- 1 to rounds) {
+    Checkpoint.iterate(s, nodes.select(col("node"), lit(1L).as("acc")),
+        rounds) { acc =>
       // a'(v) = 1 + sum of in-flows, computed as ONE aggregation over
       // the union of the per-node base (1) and the propagated terms —
       // no per-round left join back onto the node spine, so each round
@@ -57,13 +57,10 @@ object Propagate {
       // broadcasts or co-partitions; it adds no exchange of acc itself)
       val contrib = acc.join(es, col("node") === col("src"))
         .select(col("dst").as("node"), col("acc"))
-      val next = nodes.select(col("node"), lit(1L).as("acc"))
+      nodes.select(col("node"), lit(1L).as("acc"))
         .unionByName(contrib)
         .groupBy("node").agg(sum("acc").as("acc"))
-      acc = if (r % 2 == 0 || r == rounds) Checkpoint.truncate(s, next)
-            else next
     }
-    acc
   }
 
   /** [[sumRounds]] specialized to a FUNCTIONAL graph (<= 1 out-edge per
@@ -124,15 +121,9 @@ object Propagate {
     *         2^rounds steps down the chain (the terminal, once the
     *         chain is exhausted) */
   def pointerDouble(s: SparkSession, ptr0: DataFrame,
-                    rounds: Int): DataFrame = {
-    var ptr = ptr0
-    for (r <- 1 to rounds) {
+                    rounds: Int): DataFrame =
+    Checkpoint.iterate(s, ptr0, rounds) { ptr =>
       val hop = ptr.select(col("node").as("p"), col("p").as("pp"))
-      val next = ptr.join(hop, Seq("p"))
-        .select(col("node"), col("pp").as("p"))
-      ptr = if (r % 2 == 0 || r == rounds) Checkpoint.truncate(s, next)
-            else next
+      ptr.join(hop, Seq("p")).select(col("node"), col("pp").as("p"))
     }
-    ptr
-  }
 }

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * round count is the operator contract (like Propagate's): two engines
   * running the same rounds agree on the kept set whether or not the
   * recursion has converged, and the spec separately proves convergence
-  * to scalar DP on the fixture.
+  * to scalar DP on the fixture. The rounds run through
+  * [[Checkpoint.iterate]].
   *
   * All-integer geometry keeps the compare exact: with integer
   * coordinates, `dist_perp(p, chord)^2 > eps^2` is equivalent to
@@ -65,13 +66,13 @@ object Simplify {
         col("h.seq").as("hi"),
         col("h.x").as("hix"), col("h.y").as("hiy"))
 
-    var st = verts.join(broadcast(anchors), Seq("lid"))
+    val st0 = verts.join(broadcast(anchors), Seq("lid"))
       .select(col("lid"), col("seq"), col("x"), col("y"),
         col("lo"), col("lox"), col("loy"),
         col("hi"), col("hix"), col("hiy"),
         (col("seq") === col("lo") || col("seq") === col("hi")).as("kept"))
 
-    for (r <- 1 to rounds) {
+    Checkpoint.iterate(s, st0, rounds) { st =>
       val dx = col("hix") - col("lox")
       val dy = col("hiy") - col("loy")
       val cross = dx * (col("y") - col("loy")) - dy * (col("x") - col("lox"))
@@ -100,7 +101,7 @@ object Simplify {
       // winners re-label each vertex to its half; the split vertex
       // itself becomes a kept anchor (its stale segment key can never
       // collide — segment intervals only ever narrow)
-      val next = st.join(broadcast(win), Seq("lid", "lo", "hi"), "left")
+      st.join(broadcast(win), Seq("lid", "lo", "hi"), "left")
         .select(col("lid"), col("seq"), col("x"), col("y"),
           when(col("m").isNotNull && col("seq") > col("m"), col("m"))
             .otherwise(col("lo")).as("lo"),
@@ -116,9 +117,6 @@ object Simplify {
             .otherwise(col("hiy")).as("hiy"),
           (col("kept") ||
             coalesce(col("seq") === col("m"), lit(false))).as("kept"))
-      st = if (r % 2 == 0 || r == rounds) Checkpoint.truncate(s, next)
-           else next
     }
-    st
   }
 }

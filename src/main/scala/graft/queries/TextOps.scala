@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Checkpoint
 import graft.sql.GraftFunctions.dot_f64
 import graft.sql.MinHashSigs.{Params => mhParams, Prime => MersennePrime}
 
@@ -19,15 +20,6 @@ import graft.sql.MinHashSigs.{Params => mhParams, Prime => MersennePrime}
   */
 object TextOps {
   import Tables.t
-
-  /** Lineage truncation via the engine-wide reliability policy
-    * (Checkpoint.truncate): RELIABLE checkpoint when the session has a
-    * checkpoint dir — a bare localCheckpoint dies with any executor on
-    * a real cluster — else localCheckpoint (single-JVM test/bench). */
-  implicit private class Truncated(df: DataFrame) {
-    def truncated(s: SparkSession): DataFrame =
-      graft.engine.Checkpoint.truncate(s, df)
-  }
 
   def all: Seq[Q] = Seq(
     Q("q40_dedup_exact", q40, Some(q40Sql)),
@@ -189,12 +181,11 @@ object TextOps {
   private def q54(s: SparkSession, dir: String): DataFrame = {
     val sig = graft.sql.GraftFunctions
       .minhash_sigs(col("text"), mhParams, MersennePrime)
-    val docs = t(s, dir, "documents")
+    val docs = Checkpoint.truncate(s, t(s, dir, "documents")
       .select(col("doc_id"), sig.as("sig"),
         shPacked(col("text")).as("sh"))
       .select(col("doc_id"), col("sig").getItem(0).as("mh0"),
-        col("sig").getItem(1).as("mh1"), col("sh"))
-      .truncated(s)
+        col("sig").getItem(1).as("mh1"), col("sh")))
     val a = docs.select(col("mh0"), col("mh1"), col("doc_id").as("doc_a"),
       col("sh").as("sha"))
     val b = docs.select(col("mh0"), col("mh1"), col("doc_id").as("doc_b"),
@@ -388,7 +379,7 @@ object TextOps {
     // Materialize the (tiny) signature frame before self-joining: both
     // sides of the bucket join would otherwise recompute the full
     // minhash pipeline over every document.
-    val all = b0.unionByName(b1).truncated(s)
+    val all = Checkpoint.truncate(s, b0.unionByName(b1))
     val l = all.select(col("band"), col("key"), col("doc_id").as("doc_a"))
     val r = all.select(col("band"), col("key"), col("doc_id").as("doc_b"))
     // Shuffled self-join on the (band, key) bucket — the bucket id IS
@@ -461,7 +452,7 @@ object TextOps {
   }
 
   private def q47(s: SparkSession, dir: String): DataFrame = {
-    val e = normedEmb(s, dir).truncated(s)
+    val e = Checkpoint.truncate(s, normedEmb(s, dir))
     val a = e.select(col("vec_id").as("vec_id"), col("v").as("va"),
       col("norm").as("na"))
     val b = e.select(col("vec_id").as("nn_id"), col("v").as("vb"),
@@ -525,7 +516,7 @@ object TextOps {
 
   // --- q49: embedding-cosine near-duplicate pairs --------------------------
   private def q49(s: SparkSession, dir: String): DataFrame = {
-    val e = normedEmb(s, dir).truncated(s)
+    val e = Checkpoint.truncate(s, normedEmb(s, dir))
     val a = e.select(col("vec_id").as("vec_a"), col("v").as("va"),
       col("norm").as("na"))
     val b = e.select(col("vec_id").as("vec_b"), col("v").as("vb"),
@@ -594,7 +585,7 @@ object TextOps {
           .otherwise(lit(0))
       }.reduce(_ + _).as(s"bk$b")
     }
-    val e = t(s, dir, "embeddings")
+    val e = Checkpoint.truncate(s, t(s, dir, "embeddings")
       .select(col("vec_id") +: v.as("v") +:
         sqrt(dot_f64(v, v)).as("norm") +: bucketCols: _*)
       // all 24 band keys packed 2 bits each into one long, carried
@@ -603,8 +594,7 @@ object TextOps {
       // exactly once: the verify below is gated on band == the pair's
       // FIRST colliding band, a few ALU ops on sig_a XOR sig_b.
       .withColumn("sig", (0 until NdBands).map(b =>
-        shiftleft(col(s"bk$b").cast("long"), 2 * b)).reduce(_ bitwiseOR _))
-      .truncated(s)
+        shiftleft(col(s"bk$b").cast("long"), 2 * b)).reduce(_ bitwiseOR _)))
     val banded = e.select(col("vec_id"), col("v"), col("norm"), col("sig"),
         explode(array((0 until NdBands).map(b =>
           struct(lit(b).as("band"), col(s"bk$b").as("key"))): _*)).as("bk"))
@@ -748,9 +738,8 @@ object TextOps {
     // nearest centroid by max cosine — the SAME ivfCellCol q89 builds
     // its coarse stage from, so the two ANN paths can never drift on
     // normalization or the first-max tie-break
-    val cells = t(s, dir, "embeddings")
-      .select(col("vec_id"), v.as("v"), ivfCellCol(cents, v).as("ivf_cell"))
-      .truncated(s)
+    val cells = Checkpoint.truncate(s, t(s, dir, "embeddings")
+      .select(col("vec_id"), v.as("v"), ivfCellCol(cents, v).as("ivf_cell")))
     val a = cells.select(col("ivf_cell"), col("vec_id"), col("v").as("va"))
     val b = cells.select(col("ivf_cell"), col("vec_id").as("nn_id"),
       col("v").as("vb"))
@@ -945,10 +934,9 @@ object TextOps {
       (array_position(array(ds: _*), least(ds: _*)) - 1)
         .cast("int").as(s"c$m")
     }
-    val coded = t(s, dir, "embeddings")
+    val coded = Checkpoint.truncate(s, t(s, dir, "embeddings")
       .select(Seq(col("vec_id"), v.as("v"),
-        ivfCellCol(cents, v).cast("long").as("ivf_cell")) ++ codeCols: _*)
-      .truncated(s)
+        ivfCellCol(cents, v).cast("long").as("ivf_cell")) ++ codeCols: _*))
     // stage 1: SDC over codes only (the vector column is NOT carried)
     val codes = coded.select(Seq(col("ivf_cell"), col("vec_id")) ++
       (0 until PqM).map(m => col(s"c$m")): _*)
@@ -1074,7 +1062,7 @@ object TextOps {
   // --- q53: brute-force cosine top-k (k = 3) — the exhaustive ANN
   // baseline the bucketed/IVF variants are measured against -------------
   private def q53(s: SparkSession, dir: String): DataFrame = {
-    val e = normedEmb(s, dir).truncated(s)
+    val e = Checkpoint.truncate(s, normedEmb(s, dir))
     val a = e.select(col("vec_id").as("vec_id"), col("v").as("va"),
       col("norm").as("na"))
     val b = e.select(col("vec_id").as("nn_id"), col("v").as("vb"),
@@ -1126,12 +1114,11 @@ object TextOps {
   private def q56(s: SparkSession, dir: String): DataFrame = {
     val sig = graft.sql.GraftFunctions
       .minhash_sigs(col("text"), mhParams, MersennePrime)
-    val docs = t(s, dir, "documents")
+    val docs = Checkpoint.truncate(s, t(s, dir, "documents")
       .select(col("doc_id"), sig.as("sig"),
         shPacked(col("text")).as("sh"))
       .select(col("doc_id"), col("sig").getItem(0).as("mh0"),
-        col("sig").getItem(1).as("mh1"), col("sh"))
-      .truncated(s)
+        col("sig").getItem(1).as("mh1"), col("sh")))
     val a = docs.select(col("mh0"), col("mh1"), col("doc_id").as("doc_a"),
       col("sh").as("sha"))
     val b = docs.select(col("mh0"), col("mh1"), col("doc_id").as("doc_b"),
@@ -1207,9 +1194,8 @@ object TextOps {
       val dot = dot_f64(v, typedlit(planeWeights(p)))
       when(dot > 0, lit(1 << p)).otherwise(lit(0))
     }
-    val bucketed = t(s, dir, "embeddings")
-      .select(col("vec_id"), v.as("v"), bucketBits.reduce(_ + _).as("bucket"))
-      .truncated(s)
+    val bucketed = Checkpoint.truncate(s, t(s, dir, "embeddings")
+      .select(col("vec_id"), v.as("v"), bucketBits.reduce(_ + _).as("bucket")))
     val a = bucketed.select(col("bucket"), col("vec_id"), col("v").as("va"))
     val b = bucketed.select(col("bucket"), col("vec_id").as("nn_id"),
       col("v").as("vb"))

@@ -2,32 +2,21 @@ package graft.sinks
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CSV sink (SURVEY.md §2.2 K1) — the reference's only output format
-  * (`write_csv`, R:354,393,503,525-550). Headers on, deterministic row
-  * order via an explicit sort column (Spark has no implicit order,
-  * SURVEY §2.7 U2). `single = true` reproduces the reference's
-  * one-file-per-report shape (fine for reports; large frames should
-  * keep many part files). */
+  * (`write_csv`, R:354,393,503,525-550): headers on, rows in an
+  * explicit sort order (Spark has no implicit order, SURVEY §2.7 U2),
+  * one part file per report. */
 object Csv {
-
-  def write(df: DataFrame, path: String, sortCols: Seq[String],
-      single: Boolean = true): Unit = {
-    val sorted =
-      if (sortCols.isEmpty) df
-      else if (single) df.sort(sortCols.map(col): _*)
-      else df.sortWithinPartitions(sortCols.map(col): _*)
-    (if (single) sorted.coalesce(1) else sorted)
-      .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-  }
 
   /** The per-class loss-mask CSV fan-out (R:524-550): one
     * `LossMask_class<k>.csv` per class value `k` in `classes`, each
     * holding the (cell_id, <valueCol>) rows of class k sorted by cell_id
     * under a header, in one part file beside a `_SUCCESS` marker —
-    * byte for byte what one sorted single-file `write` per class gives.
+    * byte for byte what a sorted `coalesce(1)` CSV write per class
+    * gives.
     *
     * All classes come out of ONE pass over `df`: a hash repartition on
     * the class puts each class in one task, which writes it sorted into

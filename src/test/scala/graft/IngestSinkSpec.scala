@@ -354,11 +354,6 @@ class IngestSinkSpec extends SparkSpec {
       // exactly one part file (the reference's one-CSV-per-report shape)
       maskBytes(dir, k)
     }
-    // non-single mode keeps partitioning (scale path) but same rows
-    graft.sinks.Csv.write(df, s"$dir/all.csv", Seq("cell_id"), single = false)
-    assert(spark.read.option("header", "true")
-      .schema("cell_id LONG, final_class INT, loss_mean DOUBLE")
-      .csv(s"$dir/all.csv").count() == 100)
   }
 
   test("K1: the one-pass class fan-out writes the per-class writes' bytes, " +

@@ -4,14 +4,15 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.GraftSparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
-import graft.engine.{Checkpoint, Headline}
-import graft.world.World
+import org.apache.spark.sql.functions.{col, when}
+import graft.engine.{Checkpoint, Expand, Headline}
+import graft.world.{World, WorldSpec}
 
 /** Listener-counted Spark jobs, AQE off (with AQE on every shuffle
   * stage is a job of its own): the class fan-out is one write whatever
   * the class count, a computed checkpoint stage adds only its snapshot
-  * write to its body's jobs, and reading the tile table runs none. */
+  * write to its body's jobs, reading the tile table runs none, and the
+  * round loops truncate after every second round and the last. */
 class JobCountSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
@@ -89,5 +90,35 @@ class JobCountSpec extends SparkSpec {
       case v => v
     }).toSet
     assert(rows(tiles.drop("slice")) == rows(World.tilesDF(spark, spec)))
+  }
+
+  test("the round loops truncate after every second round and the last: " +
+    "Checkpoint.iterate's eager checkpoint jobs, Expand.run's jobs") {
+    val frame = spark.range(0, 16).toDF("v")
+    val perRounds = (1 to 5).map { r =>
+      var out: DataFrame = null
+      val n = jobs {
+        out = Checkpoint.iterate(spark, frame, r)(_.select((col("v") + 1)
+          .as("v")))
+      }
+      assert(out.collect().map(_.getLong(0)).toSeq == (r.toLong until 16L + r),
+        s"rounds $r")
+      n
+    }
+    assert(perRounds == Seq(1, 1, 2, 2, 3), perRounds.toString)
+    // SparkEngineSpec's one-seed 16x16 grid: each round adopts one more
+    // ring, so distance mode runs all maxIters rounds. Jobs: the input
+    // truncate, two per round for the adopted frame, and the folded
+    // frame's truncates after rounds 2 and 3: 6 jobs for two rounds,
+    // 9 for three
+    val mini = WorldSpec(rows = 16, cols = 16, tile = 16, nRegions = 1)
+    val cls = spark.range(1, mini.nCells + 1).toDF("cell_id")
+      .select(col("cell_id"),
+        when(col("cell_id") === 1, 3L).otherwise(0L).as("final_class"))
+    val expandJobs = Seq(2, 3).map { n =>
+      jobs(Expand.run(spark, mini, cls, maxIters = n,
+        requireConvergence = false))
+    }
+    assert(expandJobs == Seq(6, 9), expandJobs.toString)
   }
 }
