@@ -141,6 +141,10 @@ object Spatial {
 
   private def cellCol: Column = col("cell_id")
 
+  /** The fused cell frame of `sp`'s tile table (`Pipeline.cells`). */
+  private def tileCells(s: SparkSession, sp: WorldSpec): DataFrame =
+    Pipeline.cells(World.tilesDF(s, sp), sp)
+
 
   // Oracle fragments (identical formulas in DuckDB SQL).
   private val cellsCte =
@@ -1622,81 +1626,14 @@ object Spatial {
   // expand (R:418-470) is itself a neighborhood op). Per cell: integer
   // 3x3 window sum, in-grid window size, and a strict local-max flag
   // over band 1, world-edge cells using only their in-grid neighbors.
-  //
-  // Scale design — the whole point of the query: a per-pixel stencil
-  // over tiled image payloads must NOT become a per-pixel self-join
-  // (9x pixel replication through a shuffle keyed by 6.9M+ cells).
-  // Instead each decoded pixel fans out to the <=4 neighboring tiles
-  // whose 1-pixel-padded patch needs it (border pixels only — the
-  // Generate emits 9 candidate tile offsets, the filter keeps an
-  // offset only when the pixel sits on the matching border, so the
-  // average fanout is (1+2/T)^2 ~ 1.13 at T=16 and ~1.03 at T=64),
-  // then ONE shuffle keyed by DESTINATION TILE reassembles each tile's
-  // (T+2)^2 halo-padded patch and the codegen'd Focal3x3 expression
-  // computes every core pixel's stencil locally. Shuffle bytes =
-  // pixels x fanout x ~12 bytes; tile state = one (T+2)^2 patch. At
-  // 100 TB the same plan holds: halo fraction shrinks with T, the
-  // patch stays O(T^2), and no stage ever materializes per-pixel
-  // neighbor pairs. Packed all-integer outputs keep the oracle compare
-  // bit-exact (fsum<<5 | ncnt<<1 | peak, split by integer shifts in
-  // the projection above the aggregate). -------------------------------
+  // The stencil runs per tile over the pad-1 `Rasterize.tilePixels`
+  // patches (the halo exchange: one shuffle keyed by destination tile,
+  // never a per-pixel self-join), one codegen'd Focal3x3 call per tile.
+  // Packed all-integer outputs keep the oracle compare bit-exact
+  // (fsum<<5 | ncnt<<1 | peak, split by integer shifts in the
+  // projection above the aggregate). -----------------------------------
   private def q93(s: SparkSession, dir: String): DataFrame =
     focalHalo(s, spec)
-
-  /** Halo patch assembly shared by every focal (stencil) query —
-    * q93's window stats, q98's Sobel gradient, q99's majority filter:
-    * each decoded pixel fans out to the <=4 neighbor tiles whose
-    * 1-pixel-padded patch needs it, ONE shuffle keyed by destination
-    * tile reassembles each (T+2)^2 patch as sorted (pos, v) arrays.
-    * The per-stencil compute is a codegen expression over the patch. */
-  private[graft] def haloPatches(s: SparkSession, sp: WorldSpec): DataFrame =
-    haloPatches(s, sp, 1)
-
-  /** Pad-generalized halo assembly: each pixel fans out to the <= 8
-    * neighbor tiles whose `pad`-pixel-padded (T+2·pad)² patch needs it
-    * (a pixel within `pad` of a border feeds that side's neighbor), ONE
-    * shuffle keyed by destination tile. pad must stay <= T/2 so corner
-    * pixels reach only the 8 adjacent tiles. Shuffle volume is
-    * pixels × ~(1 + 2·pad/T)² — the halo fraction still vanishes as T
-    * grows, whatever the stencil radius. */
-  private[graft] def haloPatches(s: SparkSession, sp: WorldSpec,
-      pad: Int): DataFrame = {
-    require(pad >= 1 && 2 * pad <= sp.tile, s"pad $pad vs tile ${sp.tile}")
-    val T2 = sp.tile
-    val TX2 = sp.tilesX
-    val P = T2 + 2 * pad
-    val offs = for { dy <- -1 to 1; dx <- -1 to 1 }
-      yield struct(lit(dy).as("dty"), lit(dx).as("dtx"))
-    val px = Pipeline.cells(World.tilesDF(s, sp), sp)
-      .select(col("tile_id"), Pipeline.band(sp, 1).as("v"),
-        (col("p") / T2).cast("int").as("rr"),
-        (col("p") % T2).cast("int").as("cc"))
-    val fanned = px
-      .select(col("tile_id"), col("v"), col("rr"), col("cc"),
-        explode(array(offs: _*)).as("o"))
-      .select(col("tile_id"), col("v"), col("rr"), col("cc"),
-        col("o.dty").as("dty"), col("o.dtx").as("dtx"))
-      // a pixel feeds a neighbor tile's patch only from the matching
-      // pad-wide border band
-      .filter(
-        (col("dty") === 0 || (col("dty") === -1 && col("rr") < pad) ||
-          (col("dty") === 1 && col("rr") >= T2 - pad)) &&
-        (col("dtx") === 0 || (col("dtx") === -1 && col("cc") < pad) ||
-          (col("dtx") === 1 && col("cc") >= T2 - pad)))
-      .select(col("v"),
-        ((col("tile_id") / TX2).cast("int") + col("dty")).as("ty2"),
-        ((col("tile_id") % TX2).cast("int") + col("dtx")).as("tx2"),
-        col("rr"), col("cc"), col("dty"), col("dtx"))
-      .filter(col("ty2") >= 0 && col("ty2") < sp.tilesY &&
-        col("tx2") >= 0 && col("tx2") < TX2)
-      .select((col("ty2") * TX2 + col("tx2")).cast("long").as("dest_tile"),
-        ((col("rr") - col("dty") * T2 + pad) * P +
-          col("cc") - col("dtx") * T2 + pad).cast("int").as("pos"),
-        col("v"))
-    fanned
-      .groupBy("dest_tile")
-      .agg(sort_array(collect_list(struct(col("pos"), col("v")))).as("pv"))
-  }
 
   /** The halo-exchange 3x3 window stats over any WorldSpec (padded
     * edge tiles included: the in-grid guard drops padding pixels at
@@ -1704,13 +1641,13 @@ object Spatial {
     * from Focal3x3 and are filtered). Factored out so FocalSpec can drive a
     * non-dyadic padded grid the registry's oracle can't express. */
   private[graft] def focalHalo(s: SparkSession, sp: WorldSpec): DataFrame =
-    haloPatches(s, sp)
-      .select(col("dest_tile"),
-        posexplode(focal3x3(col("pv.pos"), col("pv.v"), sp.tile))
+    Rasterize.tilePixels(sp, tileCells(s, sp), Pipeline.band(sp, 1), pad = 1)
+      .select(col("tile_id"),
+        posexplode(focal3x3(col("pv.pix"), col("pv.v"), sp.tile))
           .as(Seq("p", "f")))
       .filter(col("f") >= 0) // edge-tile padding positions
       .select(
-        sp.cellOf(col("dest_tile"), col("p")).as("cell_id"),
+        sp.cellOf(col("tile_id"), col("p")).as("cell_id"),
         shiftright(col("f"), 5).as("fsum"),
         shiftright(col("f"), 1).bitwiseAND(lit(15L)).cast("int").as("ncnt"),
         col("f").bitwiseAND(lit(1L)).cast("int").as("peak"))
@@ -1751,18 +1688,18 @@ object Spatial {
   // kernels over band 1, interior cells only (the standard edge rule
   // for gradients — a one-sided derivative is a different operator),
   // packed bias-1020 so gx,gy survive the long round-trip losslessly.
-  // Same scale shape as q93: shuffle = pixels x ~(1+2/T)^2, per-tile
-  // state = one (T+2)^2 patch, Sobel3x3 codegen'd in the projection. --------
+  // Sobel3x3 runs once per pad-1 `tilePixels` patch, codegen'd in the
+  // projection. -------------------------------------------------------------
   private def q98(s: SparkSession, dir: String): DataFrame =
     sobelHalo(s, spec)
 
   private[graft] def sobelHalo(s: SparkSession, sp: WorldSpec): DataFrame =
-    haloPatches(s, sp)
-      .select(col("dest_tile"),
-        posexplode(sobel3x3(col("pv.pos"), col("pv.v"), sp.tile))
+    Rasterize.tilePixels(sp, tileCells(s, sp), Pipeline.band(sp, 1), pad = 1)
+      .select(col("tile_id"),
+        posexplode(sobel3x3(col("pv.pix"), col("pv.v"), sp.tile))
           .as(Seq("p", "g")))
       .filter(col("g") >= 0) // world-edge + padding: no full window
-      .select(sp.cellOf(col("dest_tile"), col("p")).as("cell_id"),
+      .select(sp.cellOf(col("tile_id"), col("p")).as("cell_id"),
         (shiftright(col("g"), 12) - 1020).as("gx"),
         (col("g").bitwiseAND(lit(4095L)) - 1020).as("gy"))
       .withColumn("gmag", abs(col("gx")) + abs(col("gy")))
@@ -1789,20 +1726,20 @@ object Spatial {
   // cell, the most frequent 32-wide quantized band level in the 3x3
   // in-grid window, ties to the SMALLER level (the which.max first-max
   // rule, W1). World-edge cells use their in-grid window like q93.
-  // Third rider on the haloPatches exchange: the stencil kernel is the
-  // only thing that changes, the shuffle shape does not. -------------------
+  // Mode3x3 over the same pad-1 `tilePixels` patches as q93: only the
+  // stencil kernel changes, the shuffle shape does not. --------------------
   private[graft] val ModeDiv = 32
 
   private def q99(s: SparkSession, dir: String): DataFrame =
     modeHalo(s, spec)
 
   private[graft] def modeHalo(s: SparkSession, sp: WorldSpec): DataFrame =
-    haloPatches(s, sp)
-      .select(col("dest_tile"),
-        posexplode(mode3x3(col("pv.pos"), col("pv.v"), sp.tile, ModeDiv))
+    Rasterize.tilePixels(sp, tileCells(s, sp), Pipeline.band(sp, 1), pad = 1)
+      .select(col("tile_id"),
+        posexplode(mode3x3(col("pv.pix"), col("pv.v"), sp.tile, ModeDiv))
           .as(Seq("p", "g")))
       .filter(col("g") >= 0) // edge-tile padding positions
-      .select(sp.cellOf(col("dest_tile"), col("p")).as("cell_id"),
+      .select(sp.cellOf(col("tile_id"), col("p")).as("cell_id"),
         shiftright(col("g"), 4).as("mode_lvl"),
         col("g").bitwiseAND(lit(15L)).cast("int").as("mode_cnt"))
       .orderBy("cell_id")
@@ -1844,9 +1781,9 @@ object Spatial {
   // ---- q104: PER-TILE SHARPNESS (variance of Laplacian) — the blur
   // gate of an image training pipeline: a defocused/blurred image has a
   // low-variance Laplacian response, so per-image var(L) thresholding
-  // is the standard quality filter before training. Fourth rider on the
-  // haloPatches exchange, but with a different output granularity: the
-  // LapStats expression FUSES the 5-point stencil with the per-tile
+  // is the standard quality filter before training. Over the pad-1
+  // `tilePixels` patches like q93, with a different output granularity:
+  // the LapStats expression FUSES the 5-point stencil with the per-tile
   // reduction, so each tile emits one 24-byte struct(n, lsum, lsumsq)
   // instead of T^2 per-pixel rows — per-image scores stay O(images),
   // not O(pixels), which is the only shape that survives 10^12 images.
@@ -1859,9 +1796,9 @@ object Spatial {
     lapHalo(s, spec)
 
   private[graft] def lapHalo(s: SparkSession, sp: WorldSpec): DataFrame =
-    haloPatches(s, sp)
-      .select(col("dest_tile").as("tile_id"),
-        lap_stats(col("pv.pos"), col("pv.v"), sp.tile).as("st"))
+    Rasterize.tilePixels(sp, tileCells(s, sp), Pipeline.band(sp, 1), pad = 1)
+      .select(col("tile_id").cast("long").as("tile_id"),
+        lap_stats(col("pv.pix"), col("pv.v"), sp.tile).as("st"))
       .filter(col("st.n") > 0) // padding-only tiles have no interior pixel
       .select(col("tile_id"), col("st.n").as("n_int"),
         col("st.lsum").as("lap_sum"), col("st.lsumsq").as("lap_sumsq"),
@@ -3636,7 +3573,7 @@ object Spatial {
   // statistic (the first question an analyst asks of a loss/driver map:
   // is the pattern clustered or random?) over band 1 with queen
   // contiguity, i.e. exactly the 8-neighbor weights the q93 stencil
-  // already materializes. Fourth rider on the haloPatches exchange:
+  // already materializes, over the pad-1 `tilePixels` patches:
   //   I = n/S0 · Σᵢ(vᵢ−m)(Sᵢ−nᵢm) / Σᵢ(vᵢ−m)²
   // needs only per-cell (v, neighbor-sum Sᵢ, neighbor-count nᵢ) — the
   // focal pass — and the cross terms EXPAND INTO 7 GLOBAL INTEGER
@@ -3654,11 +3591,12 @@ object Spatial {
   // values I ≈ −1/(n−1): the magnitude is not interesting, the pinned
   // arithmetic is. ---------------------------------------------------------
   private def q150(s: SparkSession, dir: String): DataFrame = {
-    val focal = haloPatches(s, spec)
-      .select(col("dest_tile"),
-        posexplode(focal3x3(col("pv.pos"), col("pv.v"), T)).as(Seq("p", "f")))
+    val focal = Rasterize.tilePixels(spec, tileCells(s, spec),
+        Pipeline.band(spec, 1), pad = 1)
+      .select(col("tile_id"),
+        posexplode(focal3x3(col("pv.pix"), col("pv.v"), T)).as(Seq("p", "f")))
       .filter(col("f") >= 0)
-      .select(spec.cellOf(col("dest_tile"), col("p")).as("cell_id"),
+      .select(spec.cellOf(col("tile_id"), col("p")).as("cell_id"),
         shiftright(col("f"), 5).as("fsum"),
         (shiftright(col("f"), 1).bitwiseAND(lit(15L)) - 1).as("nn"))
       .select(col("nn"),
@@ -3800,11 +3738,12 @@ object Spatial {
     val glob = spine(s).agg(
       count(lit(1)).as("n"),
       sum(bandCol(cellCol, 1).cast("long")).as("sv"))
-    val focal = haloPatches(s, spec)
-      .select(col("dest_tile"),
-        posexplode(focal3x3(col("pv.pos"), col("pv.v"), T)).as(Seq("p", "f")))
+    val focal = Rasterize.tilePixels(spec, tileCells(s, spec),
+        Pipeline.band(spec, 1), pad = 1)
+      .select(col("tile_id"),
+        posexplode(focal3x3(col("pv.pix"), col("pv.v"), T)).as(Seq("p", "f")))
       .filter(col("f") >= 0)
-      .select(spec.cellOf(col("dest_tile"), col("p")).as("cell_id"),
+      .select(spec.cellOf(col("tile_id"), col("p")).as("cell_id"),
         shiftright(col("f"), 5).as("fsum"),
         (shiftright(col("f"), 1).bitwiseAND(lit(15L)) - 1).as("nn"))
       .select(col("cell_id"),
@@ -3987,8 +3926,8 @@ object Spatial {
   // registration and keypoint extraction: Sobel gradients, the 3x3
   // structure tensor (Sxx, Syy, Sxy), response R = det − 0.05·tr²,
   // best response per tile (ties → first position, W1). Two stencil
-  // radii compose into a 5x5 support, so this is the first PAD-2 rider
-  // on the generalized halo exchange: still ONE shuffle keyed by
+  // radii compose into a 5x5 support, so this reads the pad-2
+  // `tilePixels` patches: still ONE shuffle keyed by
   // destination tile, volume pixels × ~(1+4/T)², and the whole
   // gradient→tensor→response chain runs inside one codegen expression
   // (Harris5x5) over the assembled patch — gradients at tile borders
@@ -4001,14 +3940,15 @@ object Spatial {
     harrisHalo(s, spec)
 
   private[graft] def harrisHalo(s: SparkSession, sp: WorldSpec): DataFrame =
-    haloPatches(s, sp, 2)
-      .select(col("dest_tile"),
-        posexplode(harris5x5(col("pv.pos"), col("pv.v"), sp.tile))
+    Rasterize.tilePixels(sp, tileCells(s, sp), Pipeline.band(sp, 1), pad = 2)
+      .select(col("tile_id"),
+        posexplode(harris5x5(col("pv.pix"), col("pv.v"), sp.tile))
           .as(Seq("p", "r20")))
       .filter(col("r20") =!= Long.MinValue) // incomplete 5x5 support
-      .groupBy(col("dest_tile").as("tile_id"))
+      .groupBy("tile_id") // the regroup's own key: no second shuffle
       .agg(max(struct(col("r20"), (-col("p")).as("np"))).as("b"))
-      .select(col("tile_id"), col("b.r20").as("best_r20"),
+      .select(col("tile_id").cast("long").as("tile_id"),
+        col("b.r20").as("best_r20"),
         floor((-col("b.np")) / sp.tile).cast("long").as("best_y"),
         (-col("b.np") % sp.tile).cast("long").as("best_x"))
       .orderBy("tile_id")
@@ -4131,12 +4071,12 @@ object Spatial {
     gaussHalo(s, spec)
 
   private[graft] def gaussHalo(s: SparkSession, sp: WorldSpec): DataFrame =
-    haloPatches(s, sp, 2)
-      .select(col("dest_tile"),
-        posexplode(gauss5x5(col("pv.pos"), col("pv.v"), sp.tile))
+    Rasterize.tilePixels(sp, tileCells(s, sp), Pipeline.band(sp, 1), pad = 2)
+      .select(col("tile_id"),
+        posexplode(gauss5x5(col("pv.pix"), col("pv.v"), sp.tile))
           .as(Seq("p", "g")))
       .filter(col("g") =!= Long.MinValue) // incomplete 5x5 support
-      .select(sp.cellOf(col("dest_tile"), col("p")).as("cell_id"),
+      .select(sp.cellOf(col("tile_id"), col("p")).as("cell_id"),
         col("g").as("blur_scaled"))
       .orderBy("cell_id")
 
@@ -4213,9 +4153,10 @@ object Spatial {
   private[graft] val EdgeThr = 128
 
   private def q160(s: SparkSession, dir: String): DataFrame =
-    haloPatches(s, spec)
-      .select(col("dest_tile").as("tile_id"),
-        edge_stats(col("pv.pos"), col("pv.v"), T, EdgeThr).as("e"))
+    Rasterize.tilePixels(spec, tileCells(s, spec), Pipeline.band(spec, 1),
+        pad = 1)
+      .select(col("tile_id").cast("long").as("tile_id"),
+        edge_stats(col("pv.pix"), col("pv.v"), T, EdgeThr).as("e"))
       .select(col("tile_id"), col("e.nx").as("nx"), col("e.ex").as("ex"),
         col("e.ny").as("ny"), col("e.ey").as("ey"))
       .withColumn("edge_density",
@@ -4346,12 +4287,13 @@ object Spatial {
   // fourth stencil rider on the pad-1 halo exchange, the ≤9-sample
   // insertion sort fused inside one codegen expression. ---------------------
   private def q163(s: SparkSession, dir: String): DataFrame =
-    haloPatches(s, spec)
-      .select(col("dest_tile"),
-        posexplode(median3x3(col("pv.pos"), col("pv.v"), T))
+    Rasterize.tilePixels(spec, tileCells(s, spec), Pipeline.band(spec, 1),
+        pad = 1)
+      .select(col("tile_id"),
+        posexplode(median3x3(col("pv.pix"), col("pv.v"), T))
           .as(Seq("p", "g")))
       .filter(col("g") >= 0) // edge-tile padding positions
-      .select(spec.cellOf(col("dest_tile"), col("p")).as("cell_id"),
+      .select(spec.cellOf(col("tile_id"), col("p")).as("cell_id"),
         shiftright(col("g"), 4).as("med"),
         col("g").bitwiseAND(lit(15L)).cast("int").as("ncnt"))
       .orderBy("cell_id")
@@ -5464,12 +5406,13 @@ object Spatial {
       shiftright(col("lbp"), i).bitwiseAND(lit(1L))
     val u = (0 until 8).map(i => abs(bit(i) - bit((i + 1) % 8)))
       .reduce(_ + _).cast("int")
-    haloPatches(s, spec)
-      .select(col("dest_tile"),
+    Rasterize.tilePixels(spec, tileCells(s, spec), Pipeline.band(spec, 1),
+        pad = 1)
+      .select(col("tile_id"),
         posexplode(graft.sql.GraftFunctions
-          .lbp(col("pv.pos"), col("pv.v"), T)).as(Seq("p", "lbp")))
+          .lbp(col("pv.pix"), col("pv.v"), T)).as(Seq("p", "lbp")))
       .filter(col("lbp") >= 0)
-      .select(spec.cellOf(col("dest_tile"), col("p")).as("cell_id"), col("lbp"))
+      .select(spec.cellOf(col("tile_id"), col("p")).as("cell_id"), col("lbp"))
       .withColumn("u", u)
       .orderBy("cell_id")
   }

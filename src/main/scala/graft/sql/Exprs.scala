@@ -470,9 +470,9 @@ object AutoCrop {
 }
 
 /** Shared sparse-patch densifier for the stencil expressions: scatters
-  * the (pos, value) pair arrays of a halo-padded tile patch into a p*p
-  * row-major Long grid, -1 marking absent positions (band values are
-  * small non-negative integers carried as doubles). One definition so
+  * the (pix, v) arrays of a padded `Rasterize.tilePixels` patch into a
+  * p*p row-major Long grid, -1 marking absent positions (band values
+  * are small non-negative integers carried as doubles). One definition so
   * the absent-marker and decode contract have a single home across all
   * stencils; `div` pre-buckets values during the fill (Mode3x3). */
 private[sql] object PatchGrid {
@@ -497,12 +497,12 @@ private[sql] object PatchGrid {
   * ~(1+2/T)^2 of the pixel count instead of a 9x-replicated per-pixel
   * self-join).
   *
-  * Inputs: the (pos, value) pairs of the padded (tile+2)^2 patch as
-  * two parallel arrays (pos ascending — the U2 sort-inside-agg
-  * pattern; order is irrelevant here but pinned for free by the shared
-  * shape). Values are small non-negative integers carried as doubles
-  * (band pixels); absent positions (outside the world) count as no
-  * neighbor. Returns tile*tile packed longs, one per core pixel, in
+  * Inputs: the (pix, v) pairs of the pad-1 `Rasterize.tilePixels`
+  * (tile+2)^2 patch as two parallel arrays (pix ascending — the U2
+  * sort-inside-agg pattern; order is irrelevant here but pinned for
+  * free by the shared shape). Values are small non-negative integers
+  * carried as doubles (band pixels); absent positions (outside the
+  * world) count as no neighbor. Returns tile*tile packed longs, one per core pixel, in
   * row-major order: (fsum << 5) | (ncnt << 1) | peak, where fsum =
   * integer sum of the in-grid 3x3 window (self included), ncnt = its
   * size (<= 9, 4 bits), peak = value strictly above every in-grid
@@ -550,7 +550,7 @@ object Focal3x3 {
   }
 }
 
-/** 3x3 Sobel gradient over a tile's halo-padded (pos, value) patch:
+/** 3x3 Sobel gradient over a tile's halo-padded (pix, v) patch:
   * array of tile*tile packed longs, (gx+1020)<<12 | (gy+1020), or -1
   * where any of the 9 window samples is absent (world edges and
   * edge-tile padding) — the standard interior-only rule for gradient
@@ -1087,7 +1087,7 @@ object ConvexHull {
   * the center. Out-of-grid neighbors contribute bit 0 (absent patch
   * positions, the same contract every stencil rider shares);
   * out-of-grid cores come back -1 and are filtered. One call per tile
-  * patch over the q93 halo-exchange frame. */
+  * over the pad-1 `Rasterize.tilePixels` patches. */
 object Lbp {
   // clockwise from top-left; bit k = neighbor k >= center
   private val Order: Array[(Int, Int)] = Array(
@@ -1263,7 +1263,7 @@ object GreedyNms {
 }
 
 /** Per-tile SUMMED-AREA TABLE (integral image): given one tile's
-  * (pos, value) pairs — same input contract as the tile aggregations,
+  * (pix, v) pairs — same input contract as the tile aggregations,
   * no halo — return tile² longs where out[r·t+c] = Σ v over all pixels
   * (r'≤r, c'≤c), the box-filter primitive (any axis-aligned box sum
   * becomes 4 SAT lookups). Absent pixels contribute 0 (padding of
@@ -1373,8 +1373,8 @@ object ClumpLocal {
   }
 }
 
-/** Per-tile Laplacian sharpness statistics over a halo-padded (pos,
-  * value) patch — the blur gate of an image training pipeline (a
+/** Per-tile Laplacian sharpness statistics over a halo-padded (pix,
+  * v) patch — the blur gate of an image training pipeline (a
   * blurry image has a low-variance Laplacian response; the classic
   * variance-of-Laplacian focus measure) expressed as ONE fused
   * stencil + reduction: the 5-point Laplacian L = 4·c − n − s − e − w
@@ -2334,7 +2334,7 @@ object GraftFunctions {
       "max_px" -> DoubleType, "thumb_hash" -> LongType,
       "n_frames" -> IntegerType), Seq(bytes, fmt, w, h, frameK))
 
-  /** 3x3 focal stats over a tile's halo-padded (pos, value) patch:
+  /** 3x3 focal stats over a tile's halo-padded (pix, v) patch:
     * array of tile*tile packed longs (fsum<<5 | ncnt<<1 | peak). */
   def focal3x3(pixs: Column, vs: Column, tile: Int): Column =
     invoke(Focal3x3, Longs, Seq(pixs, vs, tile))
@@ -2410,7 +2410,7 @@ object GraftFunctions {
     invoke(D8Pick, struct("wdrop" -> LongType, "dir" -> IntegerType,
       "dst" -> LongType), Seq(id, rows, cols, terrB, terrCX))
 
-  /** Per-tile summed-area table over (pos, value) arrays: tile² longs,
+  /** Per-tile summed-area table over (pix, v) arrays: tile² longs,
     * out[r·t+c] = box sum from the tile origin (absent pixels = 0). */
   def sat(pixs: Column, vs: Column, tile: Int): Column =
     invoke(Sat, Longs, Seq(pixs, vs, tile))

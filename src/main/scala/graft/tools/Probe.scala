@@ -23,7 +23,12 @@ import graft.queries.TextOps
   * }}}
   * Every subcommand runs in one session shape: local[SPARK_GRAFT_CPUS]
   * (default: all cores) with as many shuffle partitions, UI off, UTC,
-  * over the tables in SPARK_GRAFT_SF_DIR (default sf0.01). */
+  * over the tables in SPARK_GRAFT_SF_DIR (default sf0.01).
+  *
+  * `time`'s job counts are reproducible only with AQE off: with AQE on
+  * (the session default) the same code moves by a job or two from run
+  * to run (q30: 59-61, q115: 46-47). Compare job counts with
+  * `Probe time spark.sql.adaptive.enabled=false <name>...`. */
 object Probe {
 
   private def session(): SparkSession = {
@@ -121,6 +126,8 @@ object Probe {
         |       Probe sql <name>
         |       Probe verify <name> [outDir]
         |       Probe time [k=v,...] <name>...
+        |job counts repeat only with AQE off:
+        |       Probe time spark.sql.adaptive.enabled=false <name>...
         |registered queries:""".stripMargin)
     Console.err.println(names.toSeq.sorted.mkString("  ", "\n  ", ""))
     2

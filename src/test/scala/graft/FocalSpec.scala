@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.functions.col
+import graft.engine.{Pipeline, Rasterize}
 import graft.world.World
 
 /** q93 focal halo exchange: brute-force parity on a PADDED non-dyadic
@@ -131,16 +136,90 @@ class FocalSpec extends SparkSpec {
 
   test("plan: one dest-tile aggregation shuffle + the presentation " +
     "sort — no per-pixel join, no extra exchange") {
-    val df = graft.queries.Spatial.focalHalo(spark, World.tiny)
-    // string-count exchanges: AQE wraps the plan in AdaptiveSparkPlanExec,
-    // which TreeNode.collect does not descend into
-    val plan = df.queryExecution.executedPlan.toString
-    val exchanges = "Exchange (hash|range)partitioning".r
-      .findAllIn(plan).length
-    assert(exchanges == 2,
-      s"expected agg + sort exchanges only, got $exchanges:\n$plan")
-    assert(plan.toLowerCase.contains("focal3x3"), s"no Focal3x3 in:\n$plan")
-    assert(!plan.contains("Join"), "the stencil must not plan a join")
+    // focalHalo (pad 1), harrisHalo (pad 2) and q147 (pad 0). Below the
+    // regroup's partial aggregate, the lowest aggregate of the plan, sit
+    // the cell explode (halo callers) and, at pad > 0 only, the fan-out.
+    def generatesBelowRegroup(df: DataFrame): Int = {
+      val lowest = df.queryExecution.sparkPlan.collect {
+        case a: BaseAggregateExec
+            if a.children.forall(_.find(_.isInstanceOf[BaseAggregateExec])
+              .isEmpty) => a
+      }
+      assert(lowest.size == 1, df.queryExecution.sparkPlan.toString)
+      lowest.head.collect { case g: GenerateExec => g }.size
+    }
+    val cases = Seq(
+      ("focalHalo", graft.queries.Spatial.focalHalo(spark, World.tiny), 2),
+      ("harrisHalo", graft.queries.Spatial.harrisHalo(spark, World.tiny), 2),
+      ("q147", SparkEntry.queries("q147_integral_image")(spark, "unused"), 0))
+    cases.foreach { case (name, df, generates) =>
+      // string-count exchanges: AQE wraps the plan in AdaptiveSparkPlanExec,
+      // which TreeNode.collect does not descend into
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange (hash|range)partitioning".r
+        .findAllIn(plan).length
+      assert(exchanges == 2,
+        s"$name: expected agg + sort exchanges only, got $exchanges:\n$plan")
+      assert(!plan.contains("Join"), s"$name: the stencil must not plan a join")
+      assert(generatesBelowRegroup(df) == generates, s"$name:\n$plan")
+    }
+    val focal = cases.head._2.queryExecution.executedPlan.toString
+    assert(focal.toLowerCase.contains("focal3x3"), s"no Focal3x3 in:\n$focal")
+  }
+
+  test("tilePixels at pad 0, 1 and 2 equals the scalar patch reference " +
+    "on the tiny and the padded grid") {
+    for (sp <- Seq(World.tiny, padded); pad <- 0 to 2) {
+      val cells = Pipeline.cells(World.tilesDF(spark, sp), sp)
+      val got = Rasterize.tilePixels(sp, cells, Pipeline.band(sp, 1), pad)
+        .collect().map { r =>
+          val pv = r.getSeq[Row](1).map(x => x.getInt(0) -> x.getDouble(1))
+          assert(pv.map(_._1) == pv.map(_._1).sorted, "pv not sorted by pix")
+          r.getInt(0) -> pv
+        }.toMap
+      // reference: cell (r, c) sits in tile (ty, tx)'s (T+2·pad)² patch
+      // iff it lies inside that tile's square grown by pad on each side
+      val T = sp.tile
+      val P = T + 2 * pad
+      val placed = cells.select(col("cell_id"), Pipeline.band(sp, 1))
+        .collect().toSeq.flatMap { row =>
+          val id = row.getLong(0)
+          val (r, c) = (((id - 1) / sp.cols).toInt, ((id - 1) % sp.cols).toInt)
+          for {
+            ty <- 0 until sp.tilesY
+            tx <- 0 until sp.tilesX
+            (pr, pc) = (r - ty * T + pad, c - tx * T + pad)
+            if pr >= 0 && pr < P && pc >= 0 && pc < P
+          } yield (id, ty * sp.tilesX + tx, pr * P + pc, row.getDouble(1))
+        }
+      val want = placed.groupBy(_._2).map { case (t, xs) =>
+        t -> xs.map(x => x._3 -> x._4).sortBy(_._1)
+      }
+      assert(got == want, s"tile patches differ at pad $pad on $sp")
+      // the fixture exercises the edge cases the fan-out has to get right
+      val copies = placed.groupBy(_._1).map(_._2.size)
+      assert(copies.max == (if (pad == 0) 1 else 4),
+        "a corner pixel feeds its own tile and three neighbours")
+      // world-edge tile 0: the patch rows above the world are absent
+      assert(!want(0).exists(_._1 < pad * P) && want(0).nonEmpty)
+      if (sp.padded) { // the last tile is a partial edge tile
+        val core = want(sp.nTiles - 1).count { case (pix, _) =>
+          pix / P >= pad && pix / P < pad + T && pix % P >= pad &&
+            pix % P < pad + T
+        }
+        assert(core < T * T)
+      }
+    }
+  }
+
+  test("tilePixels keeps pad within 0 <= pad and 2·pad <= tile") {
+    val sp = World.tiny
+    val cells = spark.range(1, 10).toDF("cell_id")
+    for (pad <- Seq(-1, sp.tile / 2 + 1))
+      intercept[IllegalArgumentException](
+        Rasterize.tilePixels(sp, cells, col("cell_id"), pad))
+    // the largest legal pad plans
+    Rasterize.tilePixels(sp, cells, col("cell_id"), sp.tile / 2)
   }
 
   test("q145 GLCM texture equals the brute co-occurrence features and " +
